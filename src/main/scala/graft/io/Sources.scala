@@ -3,7 +3,11 @@ package graft.io
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
@@ -24,8 +28,11 @@ import org.apache.spark.util.CollectionAccumulator
   * driver — correct for the reference's bounded admin endpoints (≤11k
   * rows). The fan-out scan (S3) is the one that multiplies: one
   * request per key — so it fetches ON EXECUTORS via `mapPartitions`,
-  * giving fetch parallelism = partition count, with per-key failures
-  * recorded in an accumulator keyed by the ACTUAL failed id (the
+  * in at most one wave of tasks that each run their keys' requests on
+  * a task-local thread pool, so about `parallelism` requests are in
+  * flight whatever the number of task slots (the reference overlaps
+  * them with aiohttp + `as_completed`, LAT:129-164). Per-key failures
+  * are recorded in an accumulator keyed by the ACTUAL failed id (the
   * reference's `failed_ids.append(cont)` at LAT:162 records the loop
   * variable — a bug we fix, not port).
   */
@@ -44,7 +51,8 @@ object Sources {
   }
 
   /** Pluggable fetch function; must be serializable because S3 ships
-    * it to executors.
+    * it to executors, and thread-safe because S3 calls it concurrently
+    * from several threads of one task.
     */
   trait Transport extends (RestRequest => String) with Serializable
 
@@ -233,42 +241,70 @@ object Sources {
                           failedKeys: CollectionAccumulator[Long])
 
   /** S3 (LAT:129-164) — fan-out scan: one GET per key, fetched ON
-    * EXECUTORS. Keys are distributed round-robin so slow endpoints
-    * don't serialize behind each other; failures never kill the scan,
-    * they are collected per ACTUAL key in an accumulator (fixing the
-    * reference's loop-variable bug at LAT:162).
+    * EXECUTORS. Keys are dealt round-robin into
+    * `min(keys, parallelism, defaultParallelism)` tasks, so every task
+    * runs in the first wave; each task fetches its keys on a
+    * task-local pool, the pools' threads summing to `parallelism`.
+    * Failures never kill the scan: a key that fails every retry is
+    * collected in an accumulator under its ACTUAL id (fixing the
+    * reference's loop-variable bug at LAT:162). An interrupt does kill
+    * it — a cancelled job stops fetching instead of retrying.
     *
-    * @param parallelism fetch slots (≈ concurrent HTTP connections)
+    * @param parallelism concurrent HTTP requests, at most
     */
   def fanOutScan(spark: SparkSession, transport: Transport, keys: Seq[Long],
                  reqOf: Long => RestRequest, parallelism: Int = 16,
                  retries: Int = 2): FanOut = {
     import spark.implicits._
+    require(parallelism > 0, s"parallelism must be positive, got $parallelism")
     val acc = spark.sparkContext.collectionAccumulator[Long]("graft.s3.failedKeys")
-    val slots = math.max(1, math.min(parallelism, keys.size))
+    val tasks = math.max(1, Seq(keys.size, parallelism,
+      spark.sparkContext.defaultParallelism).min)
+    // transient endpoint hiccups are the norm at fan-out scale:
+    // bounded linear-backoff retries per key; None = every attempt failed
+    def fetch(key: Long): Option[String] = {
+      var attempt = 0
+      var result: Option[String] = None
+      while (result.isEmpty && attempt <= retries) {
+        try result = Some(transport(reqOf(key)))
+        catch {
+          case NonFatal(_) =>
+            attempt += 1
+            if (attempt <= retries) Thread.sleep(50L * attempt)
+        }
+      }
+      result
+    }
     // PINNED: downstream consumers run several actions over the
     // payloads (schema inference, the load, any validation pass) — an
     // unpersisted plan would re-execute every HTTP request per action
     // and double-count failures in the accumulator.
-    val payloads = spark.createDataset(keys).repartition(slots)
+    val payloads = spark.createDataset(keys).repartition(tasks)
       .mapPartitions { it =>
-        it.flatMap { key =>
-          // transient endpoint hiccups are the norm at fan-out scale:
-          // bounded linear-backoff retries per key; only a key that
-          // fails every attempt lands in the accumulator
-          var attempt = 0
-          var result: Option[(Long, String)] = None
-          while (result.isEmpty && attempt <= retries) {
-            try result = Some((key, transport(reqOf(key))))
-            catch {
-              case _: Exception =>
-                attempt += 1
-                if (attempt <= retries) Thread.sleep(50L * attempt)
-            }
+        // the first `parallelism % tasks` partitions take one extra
+        // thread, so the pools sum to exactly `parallelism`
+        val part = TaskContext.getPartitionId()
+        val threads = parallelism / tasks + (if (part < parallelism % tasks) 1 else 0)
+        // daemon: a call that ignores shutdownNow's interrupt cannot
+        // keep the executor JVM alive
+        val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+          val t = new Thread(r, s"graft-s3-fetch-$part")
+          t.setDaemon(true)
+          t
+        })
+        try {
+          val pending = it.map { key =>
+            key -> pool.submit(new Callable[Option[String]] { def call() = fetch(key) })
+          }.toVector
+          // joined in key order on the task thread, which must own the
+          // accumulator updates: Spark ships them when the task ends
+          val fetched = pending.flatMap { case (key, f) =>
+            val r = try f.get() catch { case e: ExecutionException => throw e.getCause }
+            if (r.isEmpty) acc.add(key)
+            r.map(key -> _)
           }
-          if (result.isEmpty) acc.add(key)
-          result.iterator
-        }
+          fetched.iterator
+        } finally pool.shutdownNow()
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     FanOut(payloads, acc)
   }
@@ -297,10 +333,12 @@ object Sources {
     */
   def concurrent(sources: Map[String, () => DataFrame],
                  timeoutSec: Int = 600): Map[String, DataFrame] = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.{Await, Future, ExecutionContext, blocking}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val futs = sources.map { case (name, thunk) => Future((name, thunk())) }
+    // blocking: lets the global pool add threads when more sources
+    // than cores wait on their transport at once
+    val futs = sources.map { case (name, thunk) => Future(blocking((name, thunk()))) }
     Await.result(Future.sequence(futs.toSeq), timeoutSec.seconds).toMap
   }
 

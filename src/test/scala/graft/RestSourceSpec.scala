@@ -1,12 +1,14 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.io.Sources
 import graft.io.Sources.{RestRequest, Transport}
 import graft.sources.rest.TransportRegistry
 
@@ -84,6 +86,33 @@ object RestSourceFixture {
       val capped = req.params.get("length").map(_.toInt).fold(sorted)(sorted.take)
       capped.map(i => s"""{"id": $i, "name": "user$i", "score": ${i * 10}}""")
         .mkString("[", ",", "]")
+    }
+  }
+
+  /** Echoes the key after ~20 ms and records the peak number of calls
+    * in flight at once, across every thread of every task.
+    */
+  object PeakTransport extends Transport {
+    val inFlight = new AtomicInteger(0)
+    val peak = new AtomicInteger(0)
+    def apply(req: RestRequest): String = {
+      val now = inFlight.incrementAndGet()
+      peak.accumulateAndGet(now, math.max)
+      try { Thread.sleep(20); s"""[{"k": ${req.params("k")}}]""" }
+      finally inFlight.decrementAndGet()
+    }
+  }
+
+  def keyedReq(k: Long): RestRequest = RestRequest("https://api.test/k", Map("k" -> k.toString))
+
+  /** Interrupts its caller on key 3 and counts calls per key. */
+  object InterruptingTransport extends Transport {
+    val calls = new ConcurrentHashMap[String, AtomicInteger]()
+    def apply(req: RestRequest): String = {
+      val k = req.params("k")
+      calls.computeIfAbsent(k, _ => new AtomicInteger()).incrementAndGet()
+      if (k == "3") throw new InterruptedException(s"interrupted on key $k")
+      s"""[{"k": $k}]"""
     }
   }
 
@@ -225,6 +254,32 @@ class RestSourceSpec extends AnyFunSuite {
     // exactly the 3 page windows, no empty probe needed
     val starts = RestSourceFixture.requests.asScala.map(_.params("start")).toSeq.sorted
     assert(starts == Seq("0", "2", "4"))
+  }
+
+  test("fan-out keeps up to `parallelism` requests in flight, more than the task slots") {
+    import RestSourceFixture.{PeakTransport, keyedReq}
+    def run(parallelism: Int): Int = {
+      PeakTransport.peak.set(0)
+      val fo = Sources.fanOutScan(spark, PeakTransport, 1L to 64L, keyedReq, parallelism)
+      assert(fo.payloads.collect().sortBy(_._1).toSeq ==
+        (1L to 64L).map(k => k -> s"""[{"k": $k}]"""))
+      assert(fo.failedKeys.value.isEmpty)
+      PeakTransport.peak.get
+    }
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val peak8 = run(8)
+    assert(peak8 <= 8 && peak8 > 4, s"peak in-flight $peak8 with parallelism 8")
+    assert(run(1) == 1)
+  }
+
+  test("an interrupted fetch fails the scan instead of retrying or losing the key") {
+    import RestSourceFixture.{InterruptingTransport, keyedReq}
+    InterruptingTransport.calls.clear()
+    val fo = Sources.fanOutScan(spark, InterruptingTransport, 1L to 8L, keyedReq)
+    val err = intercept[org.apache.spark.SparkException](fo.payloads.count())
+    assert(err.getMessage.contains("interrupted on key 3"), err.getMessage)
+    assert(fo.failedKeys.value.isEmpty)
+    assert(InterruptingTransport.calls.get("3").get == 1)
   }
 
   test("pageIsEmpty handles bare arrays, envelopes, and junk") {
