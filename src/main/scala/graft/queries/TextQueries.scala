@@ -87,27 +87,25 @@ object TextQueries {
       |     ELSE list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1]) END"""
       .stripMargin
 
-  /** Spark mirror of [[bigramsSql]] over a token-array column. */
-  private def bigramsOf(tk: org.apache.spark.sql.Column) =
-    when(size(tk) < 2, array().cast(ArrayType(StringType)))
-      .otherwise(transform(slice(tk, lit(1), size(tk) - 1),
-        (t, i) => concat_ws(" ", t, element_at(tk, i + 2))))
+  /** Spark mirror of [[bigramsSql]] over the token-array column named
+    * `tk`. Tokens must be a materialized column, never an inline
+    * expression: a lambda is interpreted and not subexpression-
+    * eliminated, so it re-evaluates any computed expression it
+    * captures once per element — an inline `toks(text)` here re-runs
+    * the regex split over the whole document for every bigram
+    * (O(tokens²) per row). Taking a name keeps the captured value an
+    * attribute; PlanShapeSpec guards the rule registry-wide.
+    */
+  private def bigramsOf(tk: String) = {
+    val t = col(tk)
+    when(size(t) < 2, array().cast(ArrayType(StringType)))
+      .otherwise(transform(slice(t, lit(1), size(t) - 1),
+        (x, i) => concat_ws(" ", x, element_at(t, i + 2))))
+  }
 
   private def votesSql(ws: Seq[String]) =
     s"len(list_filter($tkSql, t -> list_contains(${sqlList(ws)}, t)))"
 
-  /** The t8 cleaning stage as an unordered plan, shared by t8 and the
-    * composed c5 pipeline: (doc_id, lang, n_tokens) of every document
-    * that passes the quality gate (t2), repeats fewer than 20% of its
-    * bigrams (t6), and is the canonical survivor of its exact-dedup
-    * group (d1's rule, as a window min over `dup_key` — one scan).
-    * tk and bg materialize in their own projections so each heavy
-    * array expression evaluates ONCE per row — inlining them into the
-    * metrics select re-evaluates the token split 3× and the bigram
-    * build 2× per row (CollapseProject keeps multiply-referenced
-    * non-cheap expressions un-inlined, so the chain survives
-    * optimization; measured 6.6 → ~1 s/call at sf0.1).
-    */
   /** t16/v20 shared: integral BM25 (k1 = 1.2, b = 0.75) of every
     * document against a fixed conjunctive term set, EXACT e3 integer
     * arithmetic end to end — idf surrogate (N·1000) div df (the t11
@@ -184,12 +182,24 @@ object TextQueries {
        |  FROM bm_base, bm_st)""".stripMargin
   }
 
+  /** The t8 cleaning stage as an unordered plan, shared by t8 and the
+    * composed c5 pipeline: (doc_id, lang, n_tokens) of every document
+    * that passes the quality gate (t2), repeats fewer than 20% of its
+    * bigrams (t6), and is the canonical survivor of its exact-dedup
+    * group (d1's rule, as a window min over `dup_key` — one scan).
+    * tk and bg materialize in their own projections so each heavy
+    * array expression evaluates ONCE per row — inlining them into the
+    * metrics select re-evaluates the token split 3× and the bigram
+    * build 2× per row (CollapseProject keeps multiply-referenced
+    * non-cheap expressions un-inlined, so the chain survives
+    * optimization; measured 6.6 → ~1 s/call at sf0.1).
+    */
   private[queries] def cleanDocs(s: org.apache.spark.sql.SparkSession, d: String) = {
     val base = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("text"),
         TextFns.toks(col("text")).as("tk"))
       .select(col("doc_id"), col("lang"), col("text"), col("tk"),
-        bigramsOf(col("tk")).as("bg"))
+        bigramsOf("tk").as("bg"))
       .select(col("doc_id"), col("lang"),
         size(col("tk")).cast(LongType).as("n_tokens"),
         TextFns.vocabHits(col("tk"), stopEn).as("n_stop"),
@@ -336,15 +346,16 @@ object TextQueries {
     // T6 — repetition scoring: duplicate-bigram ratio (integer e6) —
     // the standard "looping text" filter in training-data cleaning
     // (boilerplate and degenerate generations repeat n-grams). Pure
-    // map stage: tokens → bigram list → distinct count vs total.
+    // map stage: tokens → bigram list → distinct count vs total, each
+    // in its own projection so tk and bg evaluate once per row.
     Q("t6_repetition",
       (s, d) => {
-        val tk = TextFns.toks(col("text"))
-        val bigrams = bigramsOf(tk)
         Tables.documents(s, d)
+          .select(col("doc_id"), TextFns.toks(col("text")).as("tk"))
+          .select(col("doc_id"), bigramsOf("tk").as("bg"))
           .select(col("doc_id"),
-            size(bigrams).cast(LongType).as("n_bigrams"),
-            size(array_distinct(bigrams)).cast(LongType).as("n_distinct"))
+            size(col("bg")).cast(LongType).as("n_bigrams"),
+            size(array_distinct(col("bg"))).cast(LongType).as("n_distinct"))
           .withColumn("rep_e6",
             when(col("n_bigrams") === 0, 0L)
               .otherwise(floor((col("n_bigrams") - col("n_distinct")) * 1000000.0
@@ -557,7 +568,7 @@ object TextQueries {
           x => size(filter(col("tk"), y => y === x)))
         Tables.documents(s, d)
           .select(col("doc_id"), TextFns.toks(col("text")).as("tk"))
-          .select(col("doc_id"), col("tk"), bigramsOf(col("tk")).as("bg"))
+          .select(col("doc_id"), col("tk"), bigramsOf("tk").as("bg"))
           .select(col("doc_id"),
             size(col("tk")).cast(LongType).as("n_tokens"),
             coalesce(array_max(freqs), lit(0)).cast(LongType).as("top_tok"),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, HigherOrderFunction, NamedLambdaVariable}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec}
@@ -322,6 +323,60 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected 3 ReusedExchange consumers of the shingle subtree, found $shingleReuses:\n$plan")
     assert(scans == 2,
       s"t15 must scan documents exactly twice (text + metadata), found $scans:\n$plan")
+  }
+
+  /** Outermost subexpressions of a lambda body that read the row but
+    * no lambda variable and are not plain attributes: values computed
+    * from the enclosing row. A lambda is interpreted and never
+    * subexpression-eliminated, so each one re-evaluates once per array
+    * element (an inline `toks(text)` under the bigram lambda re-runs
+    * the regex split for every bigram — O(tokens²) per document).
+    */
+  private def capturedIn(e: Expression): Seq[Expression] = e match {
+    case _: Attribute => Nil
+    case _ if e.references.nonEmpty &&
+      !e.exists(_.isInstanceOf[NamedLambdaVariable]) => Seq(e)
+    case _ => e.children.flatMap(capturedIn)
+  }
+
+  test("no higher-order-function lambda captures a computed row expression in any lazily built registry family") {
+    import graft.queries._
+    // stream and warehouse queries drain or write while they build, so
+    // they stay out of a build-only sweep
+    val families = ParityQueries.qs ++ AggQueries.qs ++ TextQueries.qs ++
+      SimilarityQueries.qs ++ MultimodalQueries.qs ++ CorpusQueries.qs
+    val flagged = families.flatMap { q =>
+      q.fn(spark, d).queryExecution.analyzed
+        .collectWithSubqueries { case p => p.expressions }.flatten
+        .flatMap(_.collect { case h: HigherOrderFunction => h })
+        .flatMap(_.functions.flatMap(capturedIn)).distinct
+        .map(e => s"${q.name}: ${e.sql}")
+    }
+    assert(flagged.isEmpty,
+      s"lambdas capture computed expressions (materialize them in a projection first):\n${flagged.mkString("\n")}")
+  }
+
+  /** t6 and t12 build the same bigram list independently, so their
+    * per-doc counts must agree — a value pin for t6 beside the lambda
+    * guard above, which constrains how t6 builds that list.
+    */
+  test("t6 bigram counts match t12's per doc at sf0.001, and n_distinct = n_bigrams - n_dup_bigrams") {
+    import spark.implicits._
+    val t12 = graft.queries.Registry.queries("t12_repetition")(spark, d)
+      .select("doc_id", "n_bigrams", "n_dup_bigrams")
+      .as[(Long, Long, Long)].collect()
+      .map { case (id, n, dup) => id -> (n, dup) }.toMap
+    val got = graft.queries.Registry.queries("t6_repetition")(spark, d)
+      .select("doc_id", "n_bigrams", "n_distinct")
+      .as[(Long, Long, Long)].collect()
+      .map { case (id, n, nd) => id -> (n, nd) }.toMap
+    assert(got.keySet == t12.keySet && got.nonEmpty)
+    assert(got.values.exists(_._1 > 0), "sf0.001 has no multi-token document")
+    got.foreach { case (id, (n, nd)) =>
+      val (n12, dup12) = t12(id)
+      assert(n == n12, s"doc $id: t6 n_bigrams $n vs t12 $n12")
+      assert(nd == n - dup12, s"doc $id: n_distinct $nd vs ${n12 - dup12}")
+    }
   }
 
   /** Exercises the generated code path end-to-end (doGenCode, not just
