@@ -52,7 +52,7 @@ object ChangeFeed {
           pageSize: Int, checkpoint: Option[String] = None)
          (pageFn: (DataFrame, Seq[Long]) => Unit): Unit = {
     require(pageSize >= 1, s"pageSize must be >= 1, got $pageSize")
-    Streaming.withEphemeralCheckpoint { tmpCkpt =>
+    Streaming.drain(spark, checkpoint, stateful = false) { ckpt =>
       // binaryFile (not text): a commit whose mapping is EMPTY (every
       // row deleted) is a 0-byte file — text would yield no row for
       // it and the version would silently vanish from the walk. The
@@ -88,7 +88,7 @@ object ChangeFeed {
           }
         }
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint.getOrElse(tmpCkpt))
+        .option("checkpointLocation", ckpt)
         .start()
       q.awaitTermination()
     }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,39 +40,19 @@ object Streaming {
   private def streamShufflePartitions: Int =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8").toInt
 
-  /** Run `body` with the streaming shuffle width, restoring the batch
-    * width after; then unload every state-store provider and stop the
-    * maintenance thread ([[org.apache.spark.sql.execution.streaming
-    * .state.StateStore.stop]]) — a drained AvailableNow query never
-    * reuses them, and leaving them loaded is a session-wide leak.
+  /** Where one-shot drains keep their checkpoint: a RAM disk when the
+    * host has one (`/dev/shm`), else the JVM temp dir. A drained and
+    * discarded query's checkpoint (offset log, commit log, state
+    * deltas) has no durability requirement: the query is gone when the
+    * method returns. Its per-file cost was never the write itself but
+    * the process Hadoop's local filesystem forked per file (`chmod`,
+    * `readlink`); [[LocalCheckpointFileManager]] removes those for
+    * scratch and durable checkpoints alike.
     */
-  private def drained[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, streamShufflePartitions.toString)
-    try body
-    finally {
-      spark.conf.set(key, prev)
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    }
-  }
-
-  /** Ephemeral checkpoint root for drained AvailableNow queries: a
-    * RAM disk when the host has one (`/dev/shm`), else the JVM temp
-    * dir. A drained-and-discarded query's checkpoint (offset log,
-    * commit log, per-partition state deltas — dozens of small fsynced
-    * files per micro-batch) has no durability requirement AT ALL: the
-    * query object is gone when the method returns. Paying ext4 fsyncs
-    * for it was pure fixed overhead on every streaming row — this is
-    * a harness-lifetime choice exactly like the memory sink; a
-    * production job passes its own durable `checkpoint` location (the
-    * resume property StreamingSpec pins).
-    */
-  private lazy val ephemeralCkptRoot: String = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) "/dev/shm"
-               else sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_stream_ckpt_${java.util.UUID.randomUUID().toString.take(8)}"
+  private[graft] lazy val scratchCheckpointBase: Path = {
+    val shm = Paths.get("/dev/shm")
+    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+    else Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
   }
 
   private def deleteRec(f: java.io.File): Unit = {
@@ -79,10 +60,38 @@ object Streaming {
     f.delete(): Unit
   }
 
-  private[streaming] def withEphemeralCheckpoint[T](body: String => T): T = {
-    val dir = s"$ephemeralCkptRoot/ckpt_${ctr.incrementAndGet()}"
-    try body(dir)
-    finally deleteRec(new java.io.File(dir))
+  /** Run one drain: `body` starts and awaits its query with the
+    * checkpoint location it is given — the caller's durable
+    * `checkpoint` (the resume contract StreamingSpec and
+    * ChangeFeedSpec pin), else a fresh scratch directory under
+    * [[scratchCheckpointBase]] deleted afterwards.
+    *
+    * For the query's start the session carries
+    * [[LocalCheckpointFileManager]] (unless it already names a manager)
+    * and, for a `stateful` drain, the streaming shuffle width. Both are
+    * restored afterwards, and a stateful drain then unloads every
+    * state-store provider and stops the maintenance thread
+    * ([[org.apache.spark.sql.execution.streaming.state.StateStore.stop]]):
+    * a drained AvailableNow query never reuses them, and leaving them
+    * loaded is a session-wide leak.
+    */
+  private[streaming] def drain[T](spark: SparkSession, checkpoint: Option[String],
+                                  stateful: Boolean = true)(body: String => T): T = {
+    val manager = LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName
+    val width = "spark.sql.shuffle.partitions" -> streamShufflePartitions.toString
+    val settings = Seq(manager).filter(kv => spark.conf.getOption(kv._1).isEmpty) ++
+      Seq(width).filter(_ => stateful)
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val scratch = if (checkpoint.isEmpty)
+      Some(Files.createTempDirectory(scratchCheckpointBase, "graft_stream_ckpt_"))
+    else None
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body(checkpoint.getOrElse(scratch.get.toString))
+    finally {
+      prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      if (stateful) org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      scratch.foreach(d => deleteRec(d.toFile))
+    }
   }
 
   /** Source schemas, resolved once per (session, path): streaming
@@ -137,33 +146,32 @@ object Streaming {
     *             tail windows never emit)
     */
   def runAvailableNow(spark: SparkSession, path: String,
-                      mode: String)(transform: DataFrame => DataFrame): DataFrame = drained(spark) {
-    withEphemeralCheckpoint { ckpt =>
-    val schema = sourceSchema(spark, path)
-    val src = spark.readStream.schema(schema).parquet(singlePathGlob(path))
-    val name = s"graft_stream_${ctr.incrementAndGet()}"
-    val q = transform(src).writeStream
-      .format("memory").queryName(name)
-      .outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // Copy the (already driver-resident) sink rows into a LocalRelation
-    // and drop the temp view + terminated query handle: a 66-query
-    // Verify/Bench run would otherwise accumulate every memory-sink
-    // table for the life of the session (clearCache doesn't free them),
-    // which is exactly the driver-heap pressure that slowed the round-3
-    // driver bench. Memory-sink results are small aggregates by
-    // construction; production plans write to Kafka/Delta instead.
-    val sunk = spark.table(name)
-    val rows = java.util.Arrays.asList(sunk.collect(): _*)
-    val out = spark.createDataFrame(rows, sunk.schema)
-    spark.catalog.dropTempView(name)
-    spark.streams.resetTerminated()
-    out
+                      mode: String)(transform: DataFrame => DataFrame): DataFrame =
+    drain(spark, None) { ckpt =>
+      val schema = sourceSchema(spark, path)
+      val src = spark.readStream.schema(schema).parquet(singlePathGlob(path))
+      val name = s"graft_stream_${ctr.incrementAndGet()}"
+      val q = transform(src).writeStream
+        .format("memory").queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // Copy the (already driver-resident) sink rows into a LocalRelation
+      // and drop the temp view + terminated query handle: a 66-query
+      // Verify/Bench run would otherwise accumulate every memory-sink
+      // table for the life of the session (clearCache doesn't free them),
+      // which is exactly the driver-heap pressure that slowed earlier
+      // full-registry bench runs. Memory-sink results are small aggregates by
+      // construction; production plans write to Kafka/Delta instead.
+      val sunk = spark.table(name)
+      val rows = java.util.Arrays.asList(sunk.collect(): _*)
+      val out = spark.createDataFrame(rows, sunk.schema)
+      spark.catalog.dropTempView(name)
+      spark.streams.resetTerminated()
+      out
     }
-  }
 
   /** Drain a streaming transform into an arbitrary batch sink via
     * `foreachBatch` — the production shape for streaming loads into
@@ -183,21 +191,18 @@ object Streaming {
   def runForeachBatch(spark: SparkSession, path: String, mode: String,
                       checkpoint: Option[String] = None)
                      (transform: DataFrame => DataFrame)
-                     (batchFn: (DataFrame, Long) => Unit): Unit = drained(spark) {
-    withEphemeralCheckpoint { tmpCkpt =>
+                     (batchFn: (DataFrame, Long) => Unit): Unit =
+    drain(spark, checkpoint) { ckpt =>
       val schema = sourceSchema(spark, path)
       val src = spark.readStream.schema(schema).parquet(singlePathGlob(path))
       val q = transform(src).writeStream
         .foreachBatch(batchFn)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
-        // caller-provided = durable (resume contract above); absent =
-        // the drain is one-shot and the checkpoint is RAM-disk scratch
-        .option("checkpointLocation", checkpoint.getOrElse(tmpCkpt))
+        .option("checkpointLocation", ckpt)
         .start()
       q.awaitTermination()
     }
-  }
 
   /** Drain a parquet-dir stream into a named SINK FORMAT (the
     * `writeStream.format(...)` route — e.g. the `graft-warehouse`
@@ -208,19 +213,18 @@ object Streaming {
   def runToSink(spark: SparkSession, path: String, format: String,
                 targetPath: String, options: Map[String, String],
                 checkpoint: Option[String] = None)
-               (transform: DataFrame => DataFrame): Unit = drained(spark) {
-    withEphemeralCheckpoint { tmpCkpt =>
+               (transform: DataFrame => DataFrame): Unit =
+    drain(spark, checkpoint) { ckpt =>
       val schema = sourceSchema(spark, path)
       val src = spark.readStream.schema(schema).parquet(singlePathGlob(path))
       val q = transform(src).writeStream
         .format(format)
         .options(options)
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint.getOrElse(tmpCkpt))
+        .option("checkpointLocation", ckpt)
         .start(targetPath)
       q.awaitTermination()
     }
-  }
 
   /** The `events` table as a stream: ts arrives as raw nanos (the
     * session reads parquet TIMESTAMP(NANOS) as long, see

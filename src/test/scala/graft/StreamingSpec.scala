@@ -74,13 +74,19 @@ class StreamingSpec extends AnyFunSuite {
     Seq((1L, 10L), (2L, 20L), (1L, 30L)).toDF("user_id", "v")
       .coalesce(1).write.parquet(dataDir)
 
+    // both runs write and re-read the checkpoint through the
+    // fork-free local checkpoint manager the drain installs
+    val managers = scala.collection.mutable.Set[Option[String]]()
     def runOnce(): (Seq[(Long, Long)], Seq[Long]) = {
       val rows = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
       val batches = scala.collection.mutable.ArrayBuffer[Long]()
       Streaming.runForeachBatch(spark, dataDir, "append", Some(ckpt))(identity) {
         (batch, id) =>
           val got = batch.collect().map(r => (r.getLong(0), r.getLong(1)))
-          synchronized { rows ++= got; batches += id }
+          synchronized {
+            rows ++= got; batches += id
+            managers += spark.conf.getOption(graft.streaming.LocalCheckpointFileManager.ConfKey)
+          }
       }
       (rows.toSeq.sorted, batches.toSeq)
     }
@@ -97,6 +103,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows2 == Seq((1L, 50L), (3L, 40L)), s"reprocessed seen files: $rows2")
     assert(batches2.nonEmpty && batches2.forall(_ > batches1.max),
       s"batch ids did not continue: $batches1 then $batches2")
+    assert(managers == Set(Some(classOf[graft.streaming.LocalCheckpointFileManager].getName)),
+      s"drains ran under $managers")
   }
 
   test("append mode withholds windows newer than the final watermark") {
