@@ -28,13 +28,16 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
-    * reader rejects (TimestampType is µs). The session must set
+  /** The test data stores `events.ts` as parquet TIMESTAMP(MICROS)
+    * (timestamp[us] at sf0.001, sf0.01 and sf0.1), which reads as
+    * TimestampType directly. The branch below serves an `events` file
+    * written as TIMESTAMP(NANOS), which Spark's vectorized reader
+    * rejects (TimestampType is µs): the session sets
     * `spark.sql.legacy.parquet.nanosAsLong=true` (done centrally in
     * [[Sessions.local]] — no conf mutation here, a reader must not
-    * change behavior of unrelated reads); the nanos arrive as long and
-    * `ts div 1000` converts exactly because the generator writes
-    * µs-granularity instants.
+    * change behavior of unrelated reads), the nanos arrive as long,
+    * and `ts div 1000` converts them exactly when the instants have µs
+    * granularity.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val raw = load(s, d, "events")

@@ -1,9 +1,12 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetFooters
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The create-exclusive commit point behind [[Warehouse]] version
   * publishes: atomically claim `target` with the content already
@@ -36,6 +39,15 @@ trait CommitPrimitive {
   * wording-sensitive catch was brittle).
   */
 class EmptyBatchException(msg: String) extends IllegalArgumentException(msg)
+
+/** TYPED signal that a read found no committed version to serve: the
+  * table was never created at the path, or the asked-for version was
+  * never committed. Subclasses IllegalStateException so existing
+  * catch blocks keep working, while the catalog and the scan match
+  * on the type — a vacuumed-data or schema-merge error raised by the
+  * same read stays what it is.
+  */
+class NoCommittedVersion(msg: String) extends IllegalStateException(msg)
 
 /** Partitioned parquet warehouse table with copy-on-write MERGE,
   * merge-on-read DELTA commits, small-file compaction and file-level
@@ -2162,7 +2174,7 @@ object Warehouse {
   def read(spark: SparkSession, path: String): DataFrame = {
     val fs = fsOf(spark, path)
     val (_, mapping, dvs) = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path"))
+      throw new NoCommittedVersion(s"no committed version under $path"))
     require(mapping.nonEmpty,
       s"table at $path has no live partitions (every row deleted) - " +
         "no schema to serve; re-create() to repopulate")
@@ -2227,8 +2239,8 @@ object Warehouse {
         val dirs = keys.flatMap { case (key, chain) =>
           chainOf(chain).map(b => s"$path/data/batch=$b/$key")
         }
-        val lined = withLineage(rawRead(spark, path, dirs,
-          widenedScanSchema(spark, path, dirs, widens))).drop("batch")
+        val lined = withLineage(rawRead(spark, path, dirs, widens))
+          .drop("batch")
         val alive = dv match {
           case None => lined
           case Some(d) => lined.join(d,
@@ -2338,51 +2350,106 @@ object Warehouse {
           .drop("_gdvf", "_gdvp")
     }
 
-  // mergeSchema: batches written before a schema-widening merge lack
-  // the new columns — footer merging surfaces the union schema and
-  // old rows read null there (the widening contract); the extra
-  // footer pass is per-file metadata, not data. A table with WIDENED
-  // column types instead passes an EXPLICIT schema (mergeSchema
-  // refuses int32-vs-int64 footers; the vectorized reader PROMOTES
-  // them in-scan when the requested schema is wider — SPARK-40876).
-  // Deletion vectors subtract HERE, on the raw scan itself, so every
-  // caller (plain read, fold, pruned scan) sees only live rows.
-  private def rawRead(spark: SparkSession, path: String,
-                      dirs: Seq[String],
-                      expected: Option[org.apache.spark.sql.types.StructType] = None,
-                      dv: Option[DataFrame] = None): DataFrame =
-    applyDv(expected match {
-      case Some(s) =>
-        spark.read.schema(s).option("basePath", s"$path/data").parquet(dirs: _*)
-      case None =>
-        spark.read.option("basePath", s"$path/data")
-          .option("mergeSchema", "true")
-          .parquet(dirs: _*)
-    }, dv)
-
-  /** The explicit scan schema for dirs/files spanning mixed TYPE
-    * generations (post-`ALTER COLUMN TYPE` reads): per BATCH, probe
-    * one schema (footer metadata — a batch is written atomically with
-    * one schema), map the widened columns to their declared target
-    * type, then merge by name — all types must now agree (a conflict
-    * beyond the declared widenings is a loud error, exactly where
-    * mergeSchema would have thrown). None when the table has no widen
-    * ops: the zero-probe mergeSchema fast path stays.
+  /** The scan of `targets` — (batch, partition) dirs or single data
+    * files — under the table's data root. The data schema is always
+    * explicit ([[scanSchema]]: one footer per immutable batch,
+    * memoized), so building the frame launches no Spark job; the
+    * partition columns and `batch` are inferred from the paths.
+    * Deletion vectors subtract HERE, on the raw scan itself, so every
+    * caller (plain read, fold, pruned scan) sees only live rows.
+    *
+    * A target set holding no data file has no schema to give: the read
+    * is left to Spark's own inference, which raises what it always
+    * raised (UNABLE_TO_INFER_SCHEMA; a missing target raises
+    * PATH_NOT_FOUND before that). Whether a data file exists is decided
+    * by the scan's own listing, never by the footer memo, so the
+    * answer does not depend on what the process read before.
     */
-  private def widenedScanSchema(spark: SparkSession, path: String,
-      dirs: Seq[String],
-      widens: Map[String, org.apache.spark.sql.types.DataType]):
-      Option[org.apache.spark.sql.types.StructType] =
-    if (widens.isEmpty || dirs.isEmpty) None
-    else {
-      import org.apache.spark.sql.types.StructType
-      val byBatch = dirs.groupBy { d =>
-        val i = d.indexOf("/batch=")
-        d.substring(i + 7).takeWhile(_ != '/')
+  private def rawRead(spark: SparkSession, path: String,
+                      targets: Seq[String],
+                      widens: Map[String, DataType],
+                      dv: Option[DataFrame] = None): DataFrame = {
+    def reader = spark.read.option("basePath", s"$path/data")
+    val scan = scanSchema(spark, path, targets, widens)
+      .map(reader.schema(_).parquet(targets: _*))
+      .filterNot(ParquetFooters.listsNoFiles)
+      .getOrElse(reader.parquet(targets: _*))
+    applyDv(scan, dv)
+  }
+
+  /** Bound on [[batchFooters]]: a miss costs one footer read, so the
+    * memo only has to hold the batches of the tables in active use.
+    */
+  private val BatchFooterMemoSize = 1024
+
+  /** Footer facts of immutable batches, keyed by the qualified batch
+    * directory: the parquet schema and key/value metadata of ONE data
+    * file (row groups are not kept). A batch directory is named by a
+    * fresh UUID and written once, by one writer with one schema, so an
+    * entry never goes stale; the conversion to a Spark schema runs per
+    * use, under the reading session's parquet settings. Least recently
+    * used entries leave first.
+    */
+  private val batchFooters =
+    new java.util.LinkedHashMap[String, (HPath, FileMetaData)](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (HPath, FileMetaData)]): Boolean =
+        size() > BatchFooterMemoSize
+    }
+
+  /** One footer of the batch at `batchDir`, from [[batchFooters]] or,
+    * on a miss, from the first data file among the batch's `targets`
+    * (a file target lists as itself). None, and nothing memoized, when
+    * those targets hold no data file.
+    */
+  private def batchFooter(spark: SparkSession, fs: FileSystem,
+      batchDir: String, targets: Seq[String]): Option[(HPath, FileMetaData)] = {
+    val key = fs.makeQualified(new HPath(batchDir)).toString
+    Option(batchFooters.synchronized(batchFooters.get(key))).orElse {
+      val conf = spark.sparkContext.hadoopConfiguration
+      targets.iterator.flatMap { t =>
+        try fs.listStatus(new HPath(t)).find { st =>
+          val n = st.getPath.getName
+          st.isFile && n.endsWith(".parquet") &&
+            !n.startsWith("_") && !n.startsWith(".")
+        } catch { case _: java.io.FileNotFoundException => None }
+      }.nextOption().map { st =>
+        val footer = (st.getPath, ParquetFooters.fileMetaData(conf, st))
+        batchFooters.synchronized(batchFooters.put(key, footer))
+        footer
       }
-      val schemas = byBatch.toSeq.sortBy(_._1).map { case (_, group) =>
-        val s = spark.read.option("basePath", s"$path/data")
-          .option("mergeSchema", "true").parquet(group: _*).schema
+    }
+  }
+
+  /** The explicit data schema of a scan over `targets`. One rule: one
+    * footer per immutable batch, memoized ([[batchFooter]]) — a batch
+    * is written atomically with one schema, so any of its files
+    * speaks for all of them. Per batch, in the order the targets first
+    * name it: the footer converts as Spark's schema inference converts
+    * it, and the declared widenings ([[widensOf]]) map a stored
+    * narrower type to its target type (the vectorized reader PROMOTES
+    * int32 files in-scan when the requested type is wider —
+    * SPARK-40876). The batch schemas then merge by name: equal types
+    * merge, a column only some batches hold is added (older batches
+    * read null there — the widening contract of a column-adding
+    * merge), and any other type conflict is a loud error. No Spark
+    * job; no file open for a batch already seen. None when no target
+    * holds a data file.
+    */
+  private def scanSchema(spark: SparkSession, path: String,
+      targets: Seq[String], widens: Map[String, DataType]): Option[StructType] = {
+    val fs = fsOf(spark, path)
+    // partition values escape '/', so the LAST "/data/batch=" is the
+    // table's own data root
+    def batchDirOf(t: String): String = {
+      val i = t.lastIndexOf("/data/batch=")
+      val j = t.indexOf('/', i + 12)
+      if (j < 0) t else t.substring(0, j)
+    }
+    val byBatch = targets.groupBy(batchDirOf)
+    targets.map(batchDirOf).distinct.flatMap { b =>
+      batchFooter(spark, fs, b, byBatch(b)).map { case (file, meta) =>
+        val s = ParquetFooters.sparkSchema(spark, file, meta)
         StructType(s.fields.map { f =>
           widens.get(f.name) match {
             case Some(t) if f.dataType != t =>
@@ -2394,24 +2461,24 @@ object Warehouse {
           }
         })
       }
-      Some(schemas.reduce { (a, b) =>
-        val bByName = b.fields.map(f => f.name -> f).toMap
-        val merged = a.fields.map { f =>
-          bByName.get(f.name) match {
-            case Some(g) if g.dataType == f.dataType =>
-              f.copy(nullable = f.nullable || g.nullable)
-            case Some(g) => throw new IllegalStateException(
-              s"cannot merge batch schemas at $path: column '${f.name}' " +
-                s"is ${f.dataType.sql} in one batch and ${g.dataType.sql} " +
-                "in another beyond the declared widenings - widen the " +
-                "column (ALTER COLUMN TYPE) or compact")
-            case None => f.copy(nullable = true)
-          }
-        } ++ b.fields.filterNot(g => a.fieldNames.contains(g.name))
-          .map(_.copy(nullable = true))
-        StructType(merged)
-      })
+    }.reduceOption { (a, b) =>
+      val bByName = b.fields.map(f => f.name -> f).toMap
+      val merged = a.fields.map { f =>
+        bByName.get(f.name) match {
+          case Some(g) if g.dataType == f.dataType =>
+            f.copy(nullable = f.nullable || g.nullable)
+          case Some(g) => throw new IllegalStateException(
+            s"cannot merge batch schemas at $path: column '${f.name}' " +
+              s"is ${f.dataType.sql} in one batch and ${g.dataType.sql} " +
+              "in another beyond the declared widenings - widen the " +
+              "column (ALTER COLUMN TYPE) or compact")
+          case None => f.copy(nullable = true)
+        }
+      } ++ b.fields.filterNot(g => a.fieldNames.contains(g.name))
+        .map(_.copy(nullable = true))
+      StructType(merged)
     }
+  }
 
   /** Resolve a (possibly chained) mapping to the table's logical rows:
     * chain-free partitions scan as-is, chained partitions fold. The
@@ -2442,12 +2509,11 @@ object Warehouse {
           // append-only chains scan every link plainly (no fold)
           chainOf(chain).map(b => s"$path/data/batch=$b/$key")
         }
-        rawRead(spark, path, dirs,
-          widenedScanSchema(spark, path, dirs, widens), dv).drop("batch")
+        rawRead(spark, path, dirs, widens, dv).drop("batch")
       }
     val parts = pureScans ++
       (if (chained.isEmpty) None
-       else Some(foldRead(spark, path, chained, partCols, dv)))
+       else Some(foldRead(spark, path, chained, partCols, widens, dv)))
     withOverlay(fs, path,
       parts.reduce(_.unionByName(_, allowMissingColumns = true)))
   }
@@ -2474,6 +2540,7 @@ object Warehouse {
   private def foldRead(spark: SparkSession, path: String,
                        chained: Map[String, String],
                        partCols: Seq[String],
+                       widens: Map[String, DataType],
                        dv: Option[DataFrame]): DataFrame = {
     val fs = fsOf(spark, path)
     val (keyCol, versionCol) = readMeta(fs, path)
@@ -2493,7 +2560,7 @@ object Warehouse {
     // WINNER would resurrect the superseded version beneath it, but
     // a partition may grow a chain AFTER its base files took DVs
     val ranked = byRank.map { case ((i, _), ds) =>
-      rawRead(spark, path, ds.distinct, None, dv).withColumn("_grank", lit(i))
+      rawRead(spark, path, ds.distinct, widens, dv).withColumn("_grank", lit(i))
     }.reduce(_.unionByName(_, allowMissingColumns = true)).drop("batch")
     val hasDel = ranked.columns.contains(DelCol)
     val del = if (hasDel) coalesce(col(DelCol), lit(false)) else lit(false)
@@ -2534,7 +2601,7 @@ object Warehouse {
                                  onlyParts: Option[Set[String]]): DataFrame = {
     val fs = fsOf(spark, path)
     val mapping = visibleMappingAt(fs, path, n)
-      .getOrElse(throw new IllegalStateException(
+      .getOrElse(throw new NoCommittedVersion(
         s"no committed version $n under $path"))
     require(mapping.nonEmpty, s"version $n of $path has no live partitions")
     mapping.toSeq.sorted.foreach { case (key, chain) =>
@@ -2886,7 +2953,8 @@ object Warehouse {
     // until rewritten) and may omit stored columns (its rows carry
     // null there if they win), but can never silently DROP a stored
     // column. Old files are never rewritten for a widening; readers
-    // merge footers (mergeSchema) so mixed-schema batches coexist.
+    // merge the batches' footer schemas by name (rawRead), so
+    // mixed-schema batches coexist.
     val reserved = Set(keyCol, versionCol) ++ partCols ++ deleteCol
     val dataCols = (changes.columns.filterNot(reserved) ++
       base0.map(_.columns.filterNot(reserved)).getOrElse(Array.empty[String]))
@@ -5062,7 +5130,7 @@ object Warehouse {
     val (fullMapping, dvs) = versionAsOf match {
       case Some(n) =>
         val m = visibleMappingAt(fs, path, n).getOrElse(
-          throw new IllegalStateException(
+          throw new NoCommittedVersion(
             s"no committed version $n under $path"))
         m.toSeq.sorted.foreach { case (key, chain) =>
           chainOf(chain).foreach { b =>
@@ -5075,7 +5143,7 @@ object Warehouse {
         (m, visibleDvAt(fs, path, n))
       case None =>
         val (_, m, dvs) = snapshot(fs, path).getOrElse(
-          throw new IllegalStateException(s"no committed version under $path"))
+          throw new NoCommittedVersion(s"no committed version under $path"))
         (m, dvs)
     }
     require(fullMapping.nonEmpty, s"table at $path has no live partitions")
@@ -5173,8 +5241,7 @@ object Warehouse {
     val widens = widensOf(readSchemaOverlay(fs, path))
     val dv = loadDv(spark, path, dvs)
     def readWidened(targets: Seq[String]) =
-      rawRead(spark, path, targets,
-        widenedScanSchema(spark, path, targets, widens), dv).drop("batch")
+      rawRead(spark, path, targets, widens, dv).drop("batch")
     // one scan per layout generation (readMapped's contract): the
     // target's key part sits between "batch=<b>/" and (for kept
     // FILES) the file name
@@ -5198,7 +5265,7 @@ object Warehouse {
           else readGrouped(wholeDirs, keptFiles)
       }) ++
       (if (chained.isEmpty) None
-       else Some(foldRead(spark, path, chained, partCols, dv)))
+       else Some(foldRead(spark, path, chained, partCols, widens, dv)))
     if (scans.isEmpty)
       // everything skipped (possibly every PARTITION): an empty frame
       // with the table's LOGICAL schema from the unpruned mapping

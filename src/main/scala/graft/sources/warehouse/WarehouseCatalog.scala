@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.io.Warehouse
+import graft.io.{NoCommittedVersion, Warehouse}
 
 /** SQL catalog for warehouse tables, registered centrally as `graft`
   * ([[graft.engine.Sessions]]), with TWO addressing planes:
@@ -160,7 +160,7 @@ class WarehouseCatalog extends TableCatalog with ProcedureCatalog {
         endingVersion = None, maxCommits = 64)
       val schema: StructType =
         try conf.frame(spark).schema
-        catch { case _: IllegalStateException => noSuch(ident) }
+        catch { case _: NoCommittedVersion => noSuch(ident) }
       new WarehouseTable(schema, conf)
     } else {
       val e = readEntry(spark, ident).getOrElse(noSuch(ident))
@@ -180,7 +180,7 @@ class WarehouseCatalog extends TableCatalog with ProcedureCatalog {
       // declared partition layout
       val schema: StructType =
         try conf.frame(spark).schema
-        catch { case _: IllegalStateException => e.schema }
+        catch { case _: NoCommittedVersion => e.schema }
       new WarehouseTable(schema, conf, createPartCols = Some(e.partCols))
     }
   }

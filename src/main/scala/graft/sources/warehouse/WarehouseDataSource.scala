@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{ByteType, DateType, LongType, IntegerType, ShortType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.io.Warehouse
+import graft.io.{NoCommittedVersion, Warehouse}
 
 /** DataSource V2 front door for [[graft.io.Warehouse]] tables —
   * `spark.read.format("graft-warehouse").load(path)` — making the
@@ -1374,8 +1374,7 @@ class WarehouseV1Scan(pruned: StructType,
         // a catalog-registered table nothing has written yet: an empty
         // snapshot with the declared schema (the first INSERT creates
         // version 1)
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("no committed version") =>
+        case _: NoCommittedVersion =>
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pruned)
       }

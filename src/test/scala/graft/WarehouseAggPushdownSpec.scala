@@ -191,8 +191,8 @@ class WarehouseAggPushdownSpec extends AnyFunSuite {
   }
 
   test("EXPLAIN of a pushed aggregate runs ZERO jobs: the partials pipeline is fully lazy") {
-    // resolve the table first (schema inference runs its own
-    // mergeSchema footer job, independent of the aggregate path)
+    // resolve the table first, so the count below sees only the
+    // aggregate path
     val t = load()
     t.schema
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length

@@ -180,6 +180,10 @@ class WarehouseAlterSpec extends AnyFunSuite {
     val rows = Warehouse.read(spark, path).orderBy("id")
       .select("id", "x").as[(Int, Long)].collect().toSeq
     assert(rows == Seq((1, 5L), (2, 7L)), s"got $rows")
+    val shape = Seq("id" -> "IntegerType", "x" -> "LongType", "dt" -> "StringType")
+    assert(Warehouse.read(spark, path).dtypes.toSeq == shape)
+    assert(Warehouse.readVersion(spark, path,
+      Warehouse.currentVersion(spark, path)).dtypes.toSeq == shape)
     // DML over the mixed generations works on the logical type
     spark.sql(s"UPDATE graft.`$path` SET x = x + 10 WHERE id = 1")
     assert(Warehouse.read(spark, path).orderBy("id")

@@ -284,6 +284,11 @@ class WarehouseDeltaSpec extends AnyFunSuite {
       .as[(Long, String, Option[Long])].collect().sortBy(_._1).toSeq
     assert(got == Seq((1L, "a", None), (2L, "b2", Some(77L))),
       s"widening delta fold: $got")
+    val shape = Seq("k" -> "LongType", "ver" -> "LongType",
+      "part" -> "StringType", "payload" -> "StringType", "score" -> "LongType")
+    assert(Warehouse.read(spark, path).dtypes.toSeq == shape)
+    assert(Warehouse.readVersion(spark, path,
+      Warehouse.currentVersion(spark, path)).dtypes.toSeq == shape)
   }
 
   test("racing delta commits rebase in O(1): the loser re-publishes the manifest without rewriting its batch") {

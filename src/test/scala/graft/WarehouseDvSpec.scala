@@ -76,6 +76,11 @@ class WarehouseDvSpec extends AnyFunSuite {
     val tableBytes = dataFiles(dv).keys.map(f => Files.size(Paths.get(f))).sum
     assert(sidecar > 0 && sidecar < tableBytes / 4)
     assert(activeDvIds(dv).size == 1)
+    val shape = Seq("k" -> "LongType", "name" -> "StringType",
+      "qty" -> "LongType", "part" -> "StringType")
+    assert(Warehouse.read(spark, dv).dtypes.toSeq == shape)
+    assert(Warehouse.readVersion(spark, dv,
+      Warehouse.currentVersion(spark, dv)).dtypes.toSeq == shape)
   }
 
   test("SQL surface subtracts the vector: filter, count(*) footer fallback, group-by") {

@@ -92,6 +92,13 @@ class WarehouseLayoutSpec extends AnyFunSuite {
     assert(n == 1)
     assert(layoutsOnDisk(path) == Set("dt", "dt,region"),
       "both generations must coexist in the snapshot")
+    // the old generation stores region in its files, the new one in
+    // its paths: one scan schema either way
+    val shape = Seq("k" -> "LongType", "name" -> "StringType",
+      "region" -> "StringType", "dt" -> "StringType")
+    assert(Warehouse.read(spark, path).dtypes.toSeq == shape)
+    assert(Warehouse.readVersion(spark, path,
+      Warehouse.currentVersion(spark, path)).dtypes.toSeq == shape)
     assert(rowsOf(path) == before)
     // pruning on dt drops whole generations' dirs; a region predicate
     // stays exact on BOTH generations (path-provided on the new, data-

@@ -198,6 +198,13 @@ class WarehouseSpec extends AnyFunSuite {
       s"the narrow change's winning row carries null payload: ${after(3)}")
     assert(after(2) == ((3L, Some("c2"), Some(77L))),
       "other rows keep their stored payload")
+    // the scan schema over batches on either side of the widening:
+    // names, types and order, current and time-travelled
+    val shape = Seq("k" -> "LongType", "payload" -> "StringType",
+      "ver" -> "LongType", "score" -> "LongType", "part" -> "StringType")
+    assert(Warehouse.read(spark, path).dtypes.toSeq == shape)
+    assert(Warehouse.readVersion(spark, path,
+      Warehouse.currentVersion(spark, path)).dtypes.toSeq == shape)
   }
 
   test("change feed reads only moved partitions, suppresses identical rewrites, nulls pre-widening images") {
