@@ -42,6 +42,39 @@ object Sessions {
         else math.max(bytes, AdvisoryBytes).toString
     }
 
+  /** Register the warehouse's planner additions that no
+    * SparkSessionExtensions seam can carry, in this order:
+    *  - statistics flow for warehouse scans (real bytes + footer row
+    *    counts instead of defaultSizeInBytes) — must run AFTER the
+    *    scan-pushdown batch, which only the experimental "User
+    *    Provided Optimizers" seam does; every extensions optimizer seam
+    *    runs before it;
+    *  - runtime (dynamic) file/partition pruning for warehouse fact ⋈
+    *    dim joins — must see the ScanRelations pushdown built AND the
+    *    real statistics the stats rule restores, so it rides the same
+    *    post-pushdown batch, after it;
+    *  - the native-path splice for fold-free/DV-free/uniform snapshots
+    *    — LAST, so the stats rewrap and probe attachment (same
+    *    fixed-point batch, earlier rules) take priority and only
+    *    probe-free scans splice;
+    *  - physical planning for the runtime-filter rule's localized dim
+    *    (ProbedDimRelation -> ProbedDimExec serving the probe's rows).
+    * Idempotent: a rule or strategy whose class is already registered
+    * (a reused getOrCreate session) is not added again.
+    */
+  def install(spark: SparkSession): Unit = {
+    val exp = spark.experimental
+    val rules = Seq(
+      new org.apache.spark.sql.graft.WarehouseStatsRule(spark),
+      new org.apache.spark.sql.graft.WarehouseRuntimeFilterRule(spark),
+      new org.apache.spark.sql.graft.WarehouseNativeScanRule(spark))
+    exp.extraOptimizations ++= rules.filterNot(r =>
+      exp.extraOptimizations.exists(r.getClass.isInstance))
+    if (!exp.extraStrategies.exists(
+        _.isInstanceOf[org.apache.spark.sql.graft.ProbedDimStrategy]))
+      exp.extraStrategies ++= Seq(new org.apache.spark.sql.graft.ProbedDimStrategy)
+  }
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -95,37 +128,7 @@ object Sessions {
         s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_named_catalog")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // statistics flow for warehouse scans (real bytes + footer row
-    // counts instead of defaultSizeInBytes) — must run AFTER the
-    // scan-pushdown batch, which only the experimental "User Provided
-    // Optimizers" seam does; every SparkSessionExtensions optimizer
-    // seam runs before it. Idempotent across getOrCreate reuse.
-    if (!spark.experimental.extraOptimizations.exists(
-        _.isInstanceOf[org.apache.spark.sql.graft.WarehouseStatsRule]))
-      spark.experimental.extraOptimizations ++=
-        Seq(new org.apache.spark.sql.graft.WarehouseStatsRule(spark))
-    // runtime (dynamic) file/partition pruning for warehouse fact ⋈
-    // dim joins — must see the ScanRelations pushdown built AND the
-    // real statistics the stats rule restores, so it rides the same
-    // post-pushdown batch, after it
-    if (!spark.experimental.extraOptimizations.exists(
-        _.isInstanceOf[org.apache.spark.sql.graft.WarehouseRuntimeFilterRule]))
-      spark.experimental.extraOptimizations ++=
-        Seq(new org.apache.spark.sql.graft.WarehouseRuntimeFilterRule(spark))
-    // native-path splice for fold-free/DV-free/uniform snapshots —
-    // LAST in the sequence, so the stats rewrap and probe attachment
-    // (same fixed-point batch, earlier rules) take priority and only
-    // probe-free scans splice
-    if (!spark.experimental.extraOptimizations.exists(
-        _.isInstanceOf[org.apache.spark.sql.graft.WarehouseNativeScanRule]))
-      spark.experimental.extraOptimizations ++=
-        Seq(new org.apache.spark.sql.graft.WarehouseNativeScanRule(spark))
-    // physical planning for the runtime-filter rule's localized dim
-    // (ProbedDimRelation -> ProbedDimExec serving the probe's rows)
-    if (!spark.experimental.extraStrategies.exists(
-        _.isInstanceOf[org.apache.spark.sql.graft.ProbedDimStrategy]))
-      spark.experimental.extraStrategies ++=
-        Seq(new org.apache.spark.sql.graft.ProbedDimStrategy)
+    install(spark)
     spark
   }
 }

@@ -8,7 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `SparkSession.builder.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.expressions.GraftExtensions`):
   * registers the engine's native expressions so both the Column API
-  * (`call_function`) and plain SQL can use them.
+  * (`call_function`) and plain SQL can use them. The warehouse's
+  * post-pushdown optimizer rules and its physical strategy have no
+  * seam here: a session built without [[graft.engine.Sessions.local]]
+  * gets them from [[graft.engine.Sessions.install]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -48,7 +51,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // injected here — every SparkSessionExtensions optimizer seam
     // (operator-optimization, pre-CBO) runs BEFORE the scan-pushdown
     // batch that creates the DataSourceV2ScanRelation it rewrites, so
-    // [[graft.engine.Sessions]] registers it through
+    // [[graft.engine.Sessions.install]] registers it through
     // `spark.experimental.extraOptimizations` (the "User Provided
     // Optimizers" batch, which runs last).
   }

@@ -49,6 +49,22 @@ class EmptyBatchException(msg: String) extends IllegalArgumentException(msg)
   */
 class NoCommittedVersion(msg: String) extends IllegalStateException(msg)
 
+/** TYPED lost claim: a racing writer committed the version this
+  * commit resolved. Nothing was published, so re-running the write
+  * against the winner's snapshot is safe — the one error
+  * [[Warehouse]]'s retrying writers retry.
+  */
+class CommitConflict(msg: String) extends IllegalStateException(msg)
+
+/** TYPED blocked slot: the version is held by a manifest STAGED by an
+  * in-flight or crashed cross-table transaction, whose marker file is
+  * `marker`. A retry would re-claim the same slot forever, so it is
+  * never retried: let the transaction finish, or
+  * `Warehouse.abortTransaction(marker, tables)` to clean up.
+  */
+class CommitBlocked(val marker: String, msg: String)
+  extends IllegalStateException(msg)
+
 /** Partitioned parquet warehouse table with copy-on-write MERGE,
   * merge-on-read DELTA commits, small-file compaction and file-level
   * data skipping — the file-plane analog of the reference's JDBC CDC
@@ -120,9 +136,10 @@ class NoCommittedVersion(msg: String) extends IllegalStateException(msg)
   * version create — the loser's commit fails loudly (the
   * [[CommitPrimitive]] claim is create-exclusive) and its batch dir is
   * swept later, never half-visible. [[mergeInto]] surfaces the race to
-  * the caller (single-writer deployments); [[mergeIntoRetrying]]
-  * rebases the loser onto the winner's snapshot and retries —
-  * optimistic concurrency control, the multi-writer contract.
+  * the caller as [[CommitConflict]] by default (single-writer
+  * deployments); with `maxAttempts > 1` it rebases the loser onto the
+  * winner's snapshot and retries — optimistic concurrency control, the
+  * multi-writer contract.
   *
   * Contract: a key's partition values are IMMUTABLE (the standard
   * event-date fact-table shape) and NON-NULL (a change batch with a
@@ -486,6 +503,11 @@ object Warehouse {
     * exactly-once cursor), so EVERY commit — merge, compact, vacuum's
     * survivor, an unrelated writer — preserves the records, and a
     * record is visible exactly when its data is.
+    *
+    * Failure contract (typed, never a message to match): a lost claim
+    * throws [[CommitConflict]]; a slot held by a staged cross-table
+    * transaction throws [[CommitBlocked]] naming its marker. Both
+    * leave every committed version as it was.
     */
   private[graft] def commit(fs: FileSystem, path: String, n: Long,
                             mapping: Map[String, String],
@@ -531,16 +553,51 @@ object Warehouse {
         try pendingMarkerOf(readSmallFile(fs, target))
           .filterNot(m => markerCommitted(fs, m))
         catch { case _: java.io.IOException => None }
-      throw new IllegalStateException(blockedBy match {
-        case Some(m) =>
+      throw (blockedBy match {
+        case Some(m) => new CommitBlocked(m,
           s"commit of version $n at $path is blocked by an in-flight or " +
             s"crashed cross-table transaction (marker $m) - let it finish, " +
-            "or Warehouse.abortTransaction(marker, tables) to clean up"
-        case None =>
-          s"commit of version $n at $path lost a race - retry the merge"
+            "or Warehouse.abortTransaction(marker, tables) to clean up")
+        case None => new CommitConflict(
+          s"commit of version $n at $path lost a race - retry the merge")
       })
     }
   }
+
+  /** Optimistic concurrency for every retrying writer: run `body` with
+    * attempt numbers 1, 2, … until it returns, re-running it only on
+    * a [[CommitConflict]] — each attempt re-snapshots, so a rerun
+    * rebases onto the winner's commit. [[CommitBlocked]] and every
+    * other error propagate at once; the last conflict propagates after
+    * `maxAttempts` bodies. The attempt number lets bodies fire
+    * per-attempt test seams.
+    */
+  private def withCommitRetry[T](maxAttempts: Int)(body: Int => T): T = {
+    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
+    var attempt = 1
+    var result: Option[T] = None
+    while (result.isEmpty)
+      try result = Some(body(attempt))
+      catch { case _: CommitConflict if attempt < maxAttempts => attempt += 1 }
+    result.get
+  }
+
+  /** The newest visible snapshot, or a typed [[NoCommittedVersion]]
+    * when the table at `path` was never created.
+    */
+  private def currentSnapshot(fs: FileSystem, path: String)
+      : (Long, Map[String, String], Seq[(String, Long)]) =
+    snapshot(fs, path).getOrElse(throw new NoCommittedVersion(
+      s"no committed version under $path - create() first"))
+
+  /** The mapping of exactly version `n`, or a typed
+    * [[NoCommittedVersion]] when `n` was never committed or is staged
+    * by an uncommitted transaction.
+    */
+  private def committedMappingAt(fs: FileSystem, path: String,
+                                 n: Long): Map[String, String] =
+    visibleMappingAt(fs, path, n).getOrElse(throw new NoCommittedVersion(
+      s"no committed version $n under $path"))
 
   // ---------------------------------------------------------------
   // partition keys (relative hive paths, possibly multi-column)
@@ -1119,18 +1176,15 @@ object Warehouse {
   def append(spark: SparkSession, path: String, df: DataFrame,
              maxAttempts: Int = 5,
              txn: Map[String, Long] = Map.empty): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val fs = fsOf(spark, path)
-    val mapping0 = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $path - create() first"))._2
+    val mapping0 = currentSnapshot(fs, path)._2
     require(mapping0.nonEmpty,
       s"table at $path has no live partitions - re-create() to repopulate")
     val partCols = writeLayout(fs, path, mapping0)
     if (fs.exists(metaPath(path))) {
       val (k, v) = readMeta(fs, path)
-      mergeIntoDeltaHooked(spark, path, df, k, v, partCols, None, maxAttempts,
-        _ => () => (), txn)
+      mergeIntoDeltaCore(spark, path, df, k, v, partCols, None, maxAttempts,
+        txn = txn)
     } else {
       if (partKeysOf(df, partCols).isEmpty)
         throw new EmptyBatchException("empty append batch")
@@ -1138,25 +1192,16 @@ object Warehouse {
       df.write.mode("overwrite").partitionBy(partCols: _*)
         .parquet(s"$path/data/batch=$batchId")
       val written = partDirs(fs, path, batchId, partCols)
-      var attempt = 1
-      while (true) {
-        val (v, mapping, _) = snapshot(fs, path).get
+      withCommitRetry(maxAttempts) { attempt =>
+        val (v, mapping, _) = currentSnapshot(fs, path)
         val newMapping = mapping ++ written.map(key =>
           key -> (mapping.get(key) match {
             case Some(chain) => s"$chain,+$batchId"
             case None        => s"+$batchId"
           }))
-        try {
-          commit(fs, path, v + 1, newMapping, txn)
-          return attempt
-        } catch {
-          case e: IllegalStateException if e.getMessage != null &&
-              e.getMessage.contains("lost a race") =>
-            if (attempt >= maxAttempts) throw e
-            attempt += 1
-        }
+        commit(fs, path, v + 1, newMapping, txn)
+        attempt
       }
-      attempt // unreachable
     }
   }
 
@@ -1229,9 +1274,7 @@ object Warehouse {
     // stage the data batches first (all invisible until the flip)
     val staged = writes.map { case TxnWrite(path, df, overwrite) =>
       val fs = fsOf(spark, path)
-      val mapping0 = snapshot(fs, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version under $path - create() first"))._2
+      val mapping0 = currentSnapshot(fs, path)._2
       require(mapping0.nonEmpty,
         s"table at $path has no live partitions - re-create() to repopulate")
       val partCols = writeLayout(fs, path, mapping0)
@@ -1270,10 +1313,8 @@ object Warehouse {
     // stages dropped) before rethrowing, so it never leaves blocked
     // slots behind
     try staged.foreach { case (path, fs, batchId, written, overwrite, isDelta) =>
-      var attempt = 1
-      var done = false
-      while (!done) {
-        val (v, mapping, _) = snapshot(fs, path).get
+      withCommitRetry(5) { _ =>
+        val (v, mapping, _) = currentSnapshot(fs, path)
         if (isDelta) {
           // same contract as mergeIntoDelta: a delta link must attach
           // to its OWN key's chain - partitions still under a previous
@@ -1294,15 +1335,7 @@ object Warehouse {
               case Some(chain) => s"$chain,$link$batchId"
               case None        => s"$link$batchId"
             }))
-        try {
-          commit(fs, path, v + 1, newMapping, pendingMarker = Some(marker))
-          done = true
-        } catch {
-          case e: IllegalStateException if e.getMessage != null &&
-              e.getMessage.contains("lost a race") =>
-            if (attempt >= 5) throw e
-            attempt += 1
-        }
+        commit(fs, path, v + 1, newMapping, pendingMarker = Some(marker))
       }
     } catch {
       case e: Throwable =>
@@ -1552,11 +1585,8 @@ object Warehouse {
   private def overwriteCommit(spark: SparkSession, path: String, df: DataFrame,
                               dynamic: Boolean, maxAttempts: Int,
                               txn: Map[String, Long]): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val fs = fsOf(spark, path)
-    val mapping0 = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed version under $path - create() first"))._2
+    val mapping0 = currentSnapshot(fs, path)._2
     require(mapping0.nonEmpty,
       s"table at $path has no live partitions - re-create() to repopulate")
     val partCols = writeLayout(fs, path, mapping0)
@@ -1575,9 +1605,8 @@ object Warehouse {
     df.write.mode("overwrite").partitionBy(partCols: _*)
       .parquet(s"$path/data/batch=$batchId")
     val written = partDirs(fs, path, batchId, partCols)
-    var attempt = 1
-    while (true) {
-      val (v, mapping, _) = snapshot(fs, path).get
+    withCommitRetry(maxAttempts) { attempt =>
+      val (v, mapping, _) = currentSnapshot(fs, path)
       if (dynamic) {
         // a dynamic overwrite REPLACES exactly the partitions the
         // batch names; a named partition still stored (wholly or
@@ -1594,21 +1623,13 @@ object Warehouse {
       val newMapping =
         if (dynamic) mapping ++ written.map(_ -> batchId)
         else written.map(_ -> batchId).toMap
-      try {
-        // a STATIC overwrite unreferences every previous file, so the
-        // active deletion vectors are all stale - clear them; dynamic
-        // mode keeps untouched partitions and carries the list forward
-        commit(fs, path, v + 1, newMapping, txn,
-          dvUpdate = if (dynamic) None else Some(Nil))
-        return attempt
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      // a STATIC overwrite unreferences every previous file, so the
+      // active deletion vectors are all stale - clear them; dynamic
+      // mode keeps untouched partitions and carries the list forward
+      commit(fs, path, v + 1, newMapping, txn,
+        dvUpdate = if (dynamic) None else Some(Nil))
+      attempt
     }
-    attempt // unreachable
   }
 
   /** RESTORE — Delta's `RESTORE TABLE … TO VERSION AS OF n`: roll the
@@ -1652,30 +1673,25 @@ object Warehouse {
                    zorderCols: Seq[String] = Nil,
                    targetBytes: Long = 64L << 20,
                    statsCols: Seq[String] = Nil): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     require(zorderCols.isEmpty || sortCol.isDefined,
       "evolveLayout zorderCols need a sortCol (compact's contract: the " +
         "sort key is the fallback single-dimension order)")
     requireSimpleCols(newPartCols)
     val fs = fsOf(spark, path)
-    var attempt = 1
-    while (true) {
-      val (v, mapping, dvs) = snapshot(fs, path).getOrElse(
-        throw new IllegalStateException(s"no committed version under $path"))
+    withCommitRetry(maxAttempts) { _ =>
+      val (v, mapping, dvs) = currentSnapshot(fs, path)
       require(mapping.nonEmpty,
         s"table at $path has no live partitions - nothing to evolve")
       val chosen = mapping.keySet.filter(key =>
         layoutColsOf(key) != newPartCols && pred(kvOf(key)))
-      val headerCurrent = writeLayout(fs, path, mapping) == newPartCols
-      if (chosen.isEmpty && headerCurrent) return 0
-      try {
-        if (chosen.isEmpty) {
-          // nothing selected to rewrite: flip the header only (new
-          // writes take the new spec; compact migrates the rest)
+      if (chosen.isEmpty) {
+        // nothing selected to rewrite: flip the header only (new
+        // writes take the new spec; compact migrates the rest)
+        if (writeLayout(fs, path, mapping) != newPartCols)
           commit(fs, path, v + 1, mapping,
             layoutUpdate = Some(Some(newPartCols)))
-          return 0
-        }
+        0
+      } else {
         // rewrite-collision closure: fresh new-layout dirs may collide
         // with live keys outside the selection - fold those in
         val selectedKeys = overlapClosure(mapping, chosen.toSeq.map(kvOf))
@@ -1728,22 +1744,14 @@ object Warehouse {
           "evolveLayout would leave the table empty - refusing")
         commit(fs, path, v + 1, newMapping,
           layoutUpdate = Some(Some(newPartCols)))
-        return selected.size
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
+        selected.size
       }
     }
-    -1 // unreachable
   }
 
   def restore(spark: SparkSession, path: String, n: Long): Long = {
     val fs = fsOf(spark, path)
-    val mapping = visibleMappingAt(fs, path, n)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed version $n under $path"))
+    val mapping = committedMappingAt(fs, path, n)
     mapping.toSeq.sorted.foreach { case (key, chain) =>
       chainOf(chain).foreach { b =>
         if (!fs.exists(new HPath(s"$path/data/batch=$b/$key")))
@@ -1788,30 +1796,13 @@ object Warehouse {
   def deletePartitionsWhere(spark: SparkSession, path: String,
                             pred: Map[String, String] => Boolean,
                             maxAttempts: Int = 5): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val fs = fsOf(spark, path)
-    var attempt = 1
-    while (true) {
-      val (v, mapping, _) = snapshot(fs, path).getOrElse(
-        throw new IllegalStateException(s"no committed version under $path"))
-      val dropped = mapping.keySet.filter { key =>
-        pred(key.split("/").toSeq.map { seg =>
-          val i = seg.indexOf('=')
-          seg.take(i) -> ExternalCatalogUtils.unescapePathName(seg.drop(i + 1))
-        }.toMap)
-      }
-      if (dropped.isEmpty) return 0
-      try {
-        commit(fs, path, v + 1, mapping -- dropped)
-        return dropped.size
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+    withCommitRetry(maxAttempts) { _ =>
+      val (v, mapping, _) = currentSnapshot(fs, path)
+      val dropped = mapping.keySet.filter(key => pred(kvOf(key)))
+      if (dropped.nonEmpty) commit(fs, path, v + 1, mapping -- dropped)
+      dropped.size
     }
-    0 // unreachable
   }
 
   /** ROW-LEVEL DELETE, copy-on-write at partition granularity: drop
@@ -1850,12 +1841,9 @@ object Warehouse {
                   bounds: Map[String, Bound],
                   maxAttempts: Int = 5,
                   hookFor: Int => () => Unit = _ => () => ()): Long = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val fs = fsOf(spark, path)
-    var attempt = 1
-    while (true) {
-      val (v, mapping, dvs) = snapshot(fs, path).getOrElse(
-        throw new IllegalStateException(s"no committed version under $path"))
+    def attemptOnce(attempt: Int): Long = {
+      val (v, mapping, dvs) = currentSnapshot(fs, path)
       if (mapping.isEmpty) return 0L
       val partCols = writeLayout(fs, path, mapping)
       val touchedKeys = overlapClosure(mapping, partTuplesOf(
@@ -1872,17 +1860,10 @@ object Warehouse {
       val written = partDirs(fs, path, batchId, partCols).toSet
       val newMapping = (mapping -- touchedKeys) ++ written.map(_ -> batchId)
       hookFor(attempt)()
-      try {
-        commit(fs, path, v + 1, newMapping)
-        return deleted
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      commit(fs, path, v + 1, newMapping)
+      deleted
     }
-    0L // unreachable
+    withCommitRetry(maxAttempts)(attemptOnce)
   }
 
   /** Distinct (batch, partition-key) pairs the given deletion vectors
@@ -1974,17 +1955,16 @@ object Warehouse {
                   bounds: Map[String, Bound],
                   maxAttempts: Int = 5,
                   hookFor: Int => () => Unit = _ => () => ()): Long = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val fs = fsOf(spark, path)
-    var attempt = 1
-    while (true) {
-      val (v, mapping, dvs) = snapshot(fs, path).getOrElse(
-        throw new IllegalStateException(s"no committed version under $path"))
-      if (mapping.isEmpty) return 0L
+    // None: the vector arm hit the size valve before anything was
+    // committed, and the statement runs copy-on-write instead
+    def attemptOnce(attempt: Int): Option[Long] = {
+      val (v, mapping, dvs) = currentSnapshot(fs, path)
+      if (mapping.isEmpty) return Some(0L)
       val partCols = writeLayout(fs, path, mapping)
       val touchedKeys = overlappingKeys(mapping, partTuplesOf(
         readForScan(spark, path, None, bounds).filter(pred), partCols))
-      if (touchedKeys.isEmpty) return 0L
+      if (touchedKeys.isEmpty) return Some(0L)
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
       val (chainedT0, pureT0) = touched.partition { case (_, c) => needsFold(c) }
       // the CoW arm rewrites chained partitions under the CURRENT
@@ -2012,9 +1992,8 @@ object Warehouse {
             // size valve: a delete this large is cheaper materialized
             // once (partition rewrite) than carried as a permanent
             // oversized anti-join build on every read - run the whole
-            // statement copy-on-write (nothing committed yet)
-            return deleteWhereBounded(spark, path, pred, bounds,
-              maxAttempts, hookFor)
+            // statement copy-on-write
+            return None
           case DvWritten(id, n) => dvAdd = Some((id, n)); dvDeleted = n
         }
       }
@@ -2034,35 +2013,13 @@ object Warehouse {
           newMapping = (mapping -- chainedT.keySet) ++ written.map(_ -> batchId)
         }
       }
-      if (dvDeleted == 0L && cowDeleted == 0L) return 0L
+      if (dvDeleted == 0L && cowDeleted == 0L) return Some(0L)
       hookFor(attempt)()
-      try {
-        commit(fs, path, v + 1, newMapping,
-          dvUpdate = Some(dvs ++ dvAdd.toSeq))
-        return dvDeleted + cowDeleted
-      } catch {
-        case ise: IllegalStateException if ise.getMessage != null &&
-            ise.getMessage.contains("lost a race") =>
-          // a lost race PROVABLY published nothing — drop the
-          // attempt's sidecar unconditionally, no history scan
-          // (review r20: the orphan proof is for AMBIGUOUS failures
-          // only, not the hot optimistic-concurrency retry)
-          dvAdd.foreach { case (id, _) =>
-            try { fs.delete(new HPath(dvDir(path, id)), true): Unit }
-            catch { case _: java.io.IOException => () }
-          }
-          if (attempt >= maxAttempts) throw ise
-          attempt += 1
-        case e if scala.util.control.NonFatal(e) =>
-          // ambiguous failure (the claim may have PUBLISHED before
-          // throwing): delete only after proving the sidecar
-          // unreferenced in every retained version (advisor r19 #4 +
-          // review r20). Fatal errors skip the cleanup entirely.
-          dvAdd.foreach { case (id, _) => dropOrphanDv(fs, path, id) }
-          throw e
-      }
+      commitDv(fs, path, v + 1, newMapping, dvs, dvAdd)
+      Some(dvDeleted + cowDeleted)
     }
-    0L // unreachable
+    withCommitRetry(maxAttempts)(attemptOnce).getOrElse(
+      deleteWhereBounded(spark, path, pred, bounds, maxAttempts, hookFor))
   }
 
   /** ROW-LEVEL UPDATE, copy-on-write at partition granularity — the
@@ -2108,13 +2065,10 @@ object Warehouse {
                   pred: Column, bounds: Map[String, Bound],
                   maxAttempts: Int = 5,
                   hookFor: Int => () => Unit = _ => () => ()): Long = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     val fs = fsOf(spark, path)
-    var attempt = 1
-    while (true) {
-      val (v, mapping, dvs) = snapshot(fs, path).getOrElse(
-        throw new IllegalStateException(s"no committed version under $path"))
+    def attemptOnce(attempt: Int): Long = {
+      val (v, mapping, dvs) = currentSnapshot(fs, path)
       if (mapping.isEmpty) return 0L
       val partCols = writeLayout(fs, path, mapping)
       assignments.foreach { case (c, _) =>
@@ -2152,17 +2106,10 @@ object Warehouse {
       val written = partDirs(fs, path, batchId, partCols).toSet
       val newMapping = (mapping -- touchedKeys) ++ written.map(_ -> batchId)
       hookFor(attempt)()
-      try {
-        commit(fs, path, v + 1, newMapping)
-        return updated
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      commit(fs, path, v + 1, newMapping)
+      updated
     }
-    0L // unreachable
+    withCommitRetry(maxAttempts)(attemptOnce)
   }
 
   /** The table's current rows. Chain-free partitions are read exactly
@@ -2173,8 +2120,7 @@ object Warehouse {
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val fs = fsOf(spark, path)
-    val (_, mapping, dvs) = snapshot(fs, path).getOrElse(
-      throw new NoCommittedVersion(s"no committed version under $path"))
+    val (_, mapping, dvs) = currentSnapshot(fs, path)
     require(mapping.nonEmpty,
       s"table at $path has no live partitions (every row deleted) - " +
         "no schema to serve; re-create() to repopulate")
@@ -2276,6 +2222,32 @@ object Warehouse {
       try { fs.delete(new HPath(dvDir(path, id)), true): Unit }
       catch { case _: java.io.IOException => () }
   }
+
+  /** Commit version `n` publishing the attempt's fresh deletion-vector
+    * sidecar `dvAdd` (if any) on top of the snapshot's vectors `dvs`.
+    * When the commit fails the sidecar goes: at once on a
+    * [[CommitConflict]] (a lost claim provably published nothing, so
+    * the hot retry path pays no history scan); on any other non-fatal
+    * error only once proved unreferenced ([[dropOrphanDv]] — the claim
+    * may have published before throwing). Fatal errors skip the
+    * cleanup. The error always propagates.
+    */
+  private def commitDv(fs: FileSystem, path: String, n: Long,
+                       mapping: Map[String, String], dvs: Seq[(String, Long)],
+                       dvAdd: Option[(String, Long)],
+                       txn: Map[String, Long] = Map.empty): Unit =
+    try commit(fs, path, n, mapping, txn, dvUpdate = Some(dvs ++ dvAdd.toSeq))
+    catch {
+      case e: CommitConflict =>
+        dvAdd.foreach { case (id, _) =>
+          try { fs.delete(new HPath(dvDir(path, id)), true): Unit }
+          catch { case _: java.io.IOException => () }
+        }
+        throw e
+      case e if scala.util.control.NonFatal(e) =>
+        dvAdd.foreach { case (id, _) => dropOrphanDv(fs, path, id) }
+        throw e
+    }
 
   /** Write a `(file, pos)` frame as ONE compact sidecar file and
     * adjudicate it: the repartition shuffles only the MATCHED rows
@@ -2600,9 +2572,7 @@ object Warehouse {
   private[graft] def readVersion(spark: SparkSession, path: String, n: Long,
                                  onlyParts: Option[Set[String]]): DataFrame = {
     val fs = fsOf(spark, path)
-    val mapping = visibleMappingAt(fs, path, n)
-      .getOrElse(throw new NoCommittedVersion(
-        s"no committed version $n under $path"))
+    val mapping = committedMappingAt(fs, path, n)
     require(mapping.nonEmpty, s"version $n of $path has no live partitions")
     mapping.toSeq.sorted.foreach { case (key, chain) =>
       chainOf(chain).foreach { b =>
@@ -2634,8 +2604,7 @@ object Warehouse {
   private[graft] def snapshotPageStats(spark: SparkSession, path: String,
                                        n: Long): Seq[(String, Long, Long)] = {
     val fs = fsOf(spark, path)
-    val mapping = visibleMappingAt(fs, path, n).getOrElse(
-      throw new IllegalStateException(s"no committed version $n under $path"))
+    val mapping = committedMappingAt(fs, path, n)
     mapping.toSeq.sorted.map { case (key, chain) =>
       val sized = chainOf(chain).map { b =>
         val fsts = fs.listStatus(new HPath(s"$path/data/batch=$b/$key"))
@@ -2660,7 +2629,7 @@ object Warehouse {
     * would sweep it and the merge would then commit a mapping
     * pointing at deleted files. The default therefore requires
     * EXCLUSIVE access (no writers in flight — the single-operator
-    * cadence); deployments using [[mergeIntoRetrying]] concurrently
+    * cadence); deployments running retrying merges concurrently
     * must pass a retention comfortably above their longest merge
     * (Delta's equivalent default is 7 days), which also bounds how
     * much recent time travel survives the vacuum.
@@ -2823,199 +2792,174 @@ object Warehouse {
     * partition. When that cost dominates (huge partitions, trickle
     * updates), use [[mergeIntoDelta]] — O(changes) writes, folded at
     * read — and [[compact]] on a cadence.
+    *
+    * Concurrency: with the default `maxAttempts = 1` a lost commit race
+    * surfaces to the caller as [[CommitConflict]] (single-writer
+    * deployments). A larger `maxAttempts` makes the merge OPTIMISTIC:
+    * on a lost race it re-snapshots and re-runs the whole merge against
+    * the winner's version — the Delta/Iceberg retry contract, the
+    * multi-writer mode. Rebasing is semantically safe because the
+    * merge algebra is latest-wins on (version, change beats stored):
+    * replaying the same change batch onto the other writer's result
+    * yields exactly the serialized outcome, whichever order the
+    * writers land. Each failed attempt orphans its batch dir (swept by
+    * the next [[vacuum]]) — space, never correctness. Returns the
+    * number of attempts used.
     */
-  def mergeInto(spark: SparkSession, path: String, changes: DataFrame,
-                keyCol: String, versionCol: String, partCol: String,
-                deleteCol: Option[String] = None,
-                dvRoute: Boolean = false): Unit =
-    mergeIntoHooked(spark, path, changes, keyCol, versionCol, Seq(partCol),
-      deleteCol, () => (), dvRoute = dvRoute)
-
   def mergeInto(spark: SparkSession, path: String, changes: DataFrame,
                 keyCol: String, versionCol: String, partCols: Seq[String],
-                deleteCol: Option[String]): Unit =
-    mergeIntoHooked(spark, path, changes, keyCol, versionCol, partCols,
-      deleteCol, () => ())
+                deleteCol: Option[String] = None,
+                maxAttempts: Int = 1,
+                dvRoute: Boolean = false): Int =
+    mergeIntoCore(spark, path, changes, keyCol, versionCol, partCols,
+      deleteCol, maxAttempts, dvRoute = dvRoute)
 
-  /** [[mergeInto]] with a test seam fired between the partition
-    * rewrite and the version commit — the window a concurrent
-    * writer's commit lands in. Production code never passes a hook.
+  /** [[mergeInto]] with a per-attempt test seam fired between the
+    * partition rewrite and the version commit — the window a
+    * concurrent writer's commit lands in — and the streaming sink's
+    * txn record. Production callers pass no hook.
     */
-  private[graft] def mergeIntoHooked(spark: SparkSession, path: String,
+  private[graft] def mergeIntoCore(spark: SparkSession, path: String,
                 changes: DataFrame, keyCol: String, versionCol: String,
                 partCols: Seq[String], deleteCol: Option[String],
-                beforeCommit: () => Unit,
+                maxAttempts: Int,
+                hookFor: Int => () => Unit = _ => () => (),
                 txn: Map[String, Long] = Map.empty,
-                dvRoute: Boolean = false): Unit = {
+                dvRoute: Boolean = false): Int = {
     requireSimpleCols(partCols)
     val fs = fsOf(spark, path)
-    val (v, mapping, dvs) = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path - create() first"))
-    require(partCols == writeLayout(fs, path, mapping),
-      s"merge partCols (${partCols.mkString(",")}) must equal the table's " +
-        s"current layout (${writeLayout(fs, path, mapping).mkString(",")}) - " +
-        "evolveLayout changed it")
-    val tuples = partTuplesOf(changes, partCols)
-    if (tuples.isEmpty) throw new EmptyBatchException("empty change batch")
-    // overlap CLOSURE, not key equality: mid layout evolution a change
-    // tuple's rows may live under a previous generation's key, and the
-    // rewrite (always in the current layout) must also fold in any
-    // live key its fresh dirs could collide with - the merge
-    // progressively migrates touched partitions to the new layout
-    val touched = overlapClosure(mapping, tuples)
-    // ---- deletion-vector routing (the mergeStatement block's API
-    // twin): a touched partition whose change rows are ALL tombstones
-    // takes O(deleted rows) (file, pos) sidecar entries instead of a
-    // copy-on-write rewrite — provided its chain is fold-free (a
-    // vector removes a PHYSICAL row; removing a fold winner would
-    // resurrect the version beneath) and it overlaps no rewritten key
-    // mid layout evolution. The vector deletes exactly the stored
-    // rows the fold's argmax would have dropped: a tombstone wins
-    // against a stored row iff its version is >= (struct-max ties
-    // favor the change row — the CDC arrival order); a stale
-    // tombstone deletes nothing. Assumes the merge contract's keyed
-    // table (unique keyCol) — the same assumption the read-path fold
-    // makes.
-    var dvKeys = Set.empty[String]
-    var dvAdd: Option[(String, Long)] = None
-    var dvOnlyChanges = false
-    val changeDel0 = deleteCol.fold(lit(false))(c => coalesce(col(c), lit(false)))
-    if (dvRoute && deleteCol.isDefined) {
-      val cowTuples = partTuplesOf(changes.filter(!changeDel0), partCols)
-      dvOnlyChanges = cowTuples.isEmpty
-      val cowSeed = cowTuples ++
-        touched.toSeq.filter(k => needsFold(mapping(k))).map(kvOf)
-      val cowClosure =
-        if (cowSeed.isEmpty) Set.empty[String]
-        else overlapClosure(mapping, cowSeed)
-      dvKeys = touched -- cowClosure
-      if (dvKeys.nonEmpty) {
-        val dvMap = mapping.filter { case (k, _) => dvKeys(k) }
-        // latest tombstone per key — change-sized, broadcast below; a
-        // tombstone wins against a stored row iff its version is >=
-        // (struct-max ties favor the change row, the CDC order)
-        val ts = changes.filter(changeDel0)
-          .select(col(keyCol).as("_gdvk"), col(versionCol).as("_gdvv"))
-          .groupBy(col("_gdvk")).agg(max(col("_gdvv")).as("_gdvv"))
-        val matches = dvLineageMatches(spark, path, dvMap, dvs)(b =>
-          b.join(broadcast(ts),
-            b(keyCol) === ts("_gdvk") && ts("_gdvv") >= b(versionCol),
-            "inner")
-            .select(col("_gdvf").as("file"), col("_gdvp").as("pos")))
-        writeDvSidecar(spark, path, matches) match {
-          case DvEmpty =>
-            // every tombstone was stale or keyless: nothing to
-            // delete, the partitions genuinely need no work
-            ()
-          case DvOversize =>
-            // the size valve (deleteWhereDvBounded's contract):
-            // rejoin the copy-on-write rewrite below
-            dvKeys = Set.empty
-          case DvWritten(id, n) => dvAdd = Some((id, n))
-        }
-      }
-    }
-    val cowTouched = touched -- dvKeys
-    val baseMap = mapping.filter { case (k, _) => cowTouched(k) }
-    // tombstone-only dvRoute merge (the CDC/GDPR shape this routing
-    // exists for): every change row was consumed by the vector arm
-    // and no partition rewrites - skip the fold entirely (it would
-    // shuffle the changes only to filter every row out and litter an
-    // orphan empty batch dir) and publish the vector as the commit
-    if (dvKeys.nonEmpty && baseMap.isEmpty && dvOnlyChanges) {
-      beforeCommit()
-      try commit(fs, path, v + 1, mapping, txn,
-        dvUpdate = dvAdd.map(a => dvs :+ a))
-      catch {
-        case ise: IllegalStateException if ise.getMessage != null &&
-            ise.getMessage.contains("lost a race") =>
-          // provably unpublished: unconditional drop, no history scan
-          dvAdd.foreach { case (id, _) =>
-            try { fs.delete(new HPath(dvDir(path, id)), true): Unit }
-            catch { case _: java.io.IOException => () }
+    withCommitRetry(maxAttempts) { attempt =>
+      val (v, mapping, dvs) = currentSnapshot(fs, path)
+      require(partCols == writeLayout(fs, path, mapping),
+        s"merge partCols (${partCols.mkString(",")}) must equal the table's " +
+          s"current layout (${writeLayout(fs, path, mapping).mkString(",")}) - " +
+          "evolveLayout changed it")
+      val tuples = partTuplesOf(changes, partCols)
+      if (tuples.isEmpty) throw new EmptyBatchException("empty change batch")
+      // overlap CLOSURE, not key equality: mid layout evolution a change
+      // tuple's rows may live under a previous generation's key, and the
+      // rewrite (always in the current layout) must also fold in any
+      // live key its fresh dirs could collide with - the merge
+      // progressively migrates touched partitions to the new layout
+      val touched = overlapClosure(mapping, tuples)
+      // ---- deletion-vector routing (the mergeStatement block's API
+      // twin): a touched partition whose change rows are ALL tombstones
+      // takes O(deleted rows) (file, pos) sidecar entries instead of a
+      // copy-on-write rewrite — provided its chain is fold-free (a
+      // vector removes a PHYSICAL row; removing a fold winner would
+      // resurrect the version beneath) and it overlaps no rewritten key
+      // mid layout evolution. The vector deletes exactly the stored
+      // rows the fold's argmax would have dropped: a tombstone wins
+      // against a stored row iff its version is >= (struct-max ties
+      // favor the change row — the CDC arrival order); a stale
+      // tombstone deletes nothing. Assumes the merge contract's keyed
+      // table (unique keyCol) — the same assumption the read-path fold
+      // makes.
+      var dvKeys = Set.empty[String]
+      var dvAdd: Option[(String, Long)] = None
+      var dvOnlyChanges = false
+      val changeDel0 = deleteCol.fold(lit(false))(c => coalesce(col(c), lit(false)))
+      if (dvRoute && deleteCol.isDefined) {
+        val cowTuples = partTuplesOf(changes.filter(!changeDel0), partCols)
+        dvOnlyChanges = cowTuples.isEmpty
+        val cowSeed = cowTuples ++
+          touched.toSeq.filter(k => needsFold(mapping(k))).map(kvOf)
+        val cowClosure =
+          if (cowSeed.isEmpty) Set.empty[String]
+          else overlapClosure(mapping, cowSeed)
+        dvKeys = touched -- cowClosure
+        if (dvKeys.nonEmpty) {
+          val dvMap = mapping.filter { case (k, _) => dvKeys(k) }
+          // latest tombstone per key — change-sized, broadcast below; a
+          // tombstone wins against a stored row iff its version is >=
+          // (struct-max ties favor the change row, the CDC order)
+          val ts = changes.filter(changeDel0)
+            .select(col(keyCol).as("_gdvk"), col(versionCol).as("_gdvv"))
+            .groupBy(col("_gdvk")).agg(max(col("_gdvv")).as("_gdvv"))
+          val matches = dvLineageMatches(spark, path, dvMap, dvs)(b =>
+            b.join(broadcast(ts),
+              b(keyCol) === ts("_gdvk") && ts("_gdvv") >= b(versionCol),
+              "inner")
+              .select(col("_gdvf").as("file"), col("_gdvp").as("pos")))
+          writeDvSidecar(spark, path, matches) match {
+            case DvEmpty =>
+              // every tombstone was stale or keyless: nothing to
+              // delete, the partitions genuinely need no work
+              ()
+            case DvOversize =>
+              // the size valve (deleteWhereDvBounded's contract):
+              // rejoin the copy-on-write rewrite below
+              dvKeys = Set.empty
+            case DvWritten(id, n) => dvAdd = Some((id, n))
           }
-          throw ise
-        case e if scala.util.control.NonFatal(e) =>
-          // ambiguous: only provably-unreferenced sidecars are
-          // dropped — a published-then-threw commit keeps its live
-          // sidecar (review r20)
-          dvAdd.foreach { case (id, _) => dropOrphanDv(fs, path, id) }
-          throw e
-      }
-      return
-    }
-    val base0 =
-      if (baseMap.isEmpty) None
-      else Some(readMapped(spark, path, baseMap, partCols, dvs))
-    // SCHEMA EVOLUTION: the merged schema is the by-name UNION of the
-    // change batch's and the stored table's data columns — a change
-    // batch may WIDEN the table (new column: stored rows read null
-    // until rewritten) and may omit stored columns (its rows carry
-    // null there if they win), but can never silently DROP a stored
-    // column. Old files are never rewritten for a widening; readers
-    // merge the batches' footer schemas by name (rawRead), so
-    // mixed-schema batches coexist.
-    val reserved = Set(keyCol, versionCol) ++ partCols ++ deleteCol
-    val dataCols = (changes.columns.filterNot(reserved) ++
-      base0.map(_.columns.filterNot(reserved)).getOrElse(Array.empty[String]))
-      .distinct
-    def dtypeOf(c: String) =
-      changes.schema.fields.find(_.name == c)
-        .orElse(base0.flatMap(_.schema.fields.find(_.name == c)))
-        .get.dataType
-    def aligned(df: DataFrame): DataFrame =
-      dataCols.foldLeft(df)((d, c) =>
-        if (d.columns.contains(c)) d
-        else d.withColumn(c, lit(null).cast(dtypeOf(c))))
-    def pick(df: DataFrame, src: Int, del: Column): DataFrame = df.select(
-      col(keyCol),
-      struct((col(versionCol) +: lit(src).as("_src") +: del.as("_del") +:
-        (partCols ++ dataCols).map(col).toSeq): _*).as("_m"))
-    val base = base0.map(b => pick(aligned(b), 0, lit(false)))
-    val changeDel = deleteCol.fold(lit(false))(c => coalesce(col(c), lit(false)))
-    // latest wins; _src breaks version ties in favor of the change
-    // row (struct max compares field-by-field in order); a winning
-    // tombstone drops the key from the rewrite entirely
-    val merged = base.fold(pick(aligned(changes), 1, changeDel))(
-        _.unionByName(pick(aligned(changes), 1, changeDel)))
-      .groupBy(keyCol)
-      .agg(max(col("_m")).as("_m"))
-      .filter(!col("_m._del"))
-      .select(col(keyCol) +: col(s"_m.$versionCol") +:
-        (partCols ++ dataCols).map(c => col(s"_m.$c").as(c)).toSeq: _*)
-    requireMigratableNonNull(merged, cowTouched, partCols, "MERGE")
-    val batchId = java.util.UUID.randomUUID().toString
-    merged.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$path/data/batch=$batchId")
-    // a touched partition whose every row was tombstoned produces NO
-    // rewritten dir — it must leave the mapping entirely, or the old
-    // batch's rows would resurrect. (Vector-routed partitions instead
-    // KEEP their entry: their files stay live under the new vector,
-    // and their tombstone rows pass through the union harmlessly — a
-    // winner or a stale loser alike is dropped by the !_del filter,
-    // never written.)
-    val written = partDirs(fs, path, batchId, partCols).toSet
-    val newMapping = (mapping -- cowTouched) ++ written.map(_ -> batchId)
-    beforeCommit()
-    try commit(fs, path, v + 1, newMapping, txn,
-      dvUpdate = dvAdd.map(a => dvs :+ a))
-    catch {
-      case ise: IllegalStateException if ise.getMessage != null &&
-          ise.getMessage.contains("lost a race") =>
-        // a lost race (the retrying wrapper re-runs against the
-        // winner's snapshot) provably published nothing:
-        // unconditional drop, no history scan
-        dvAdd.foreach { case (id, _) =>
-          try { fs.delete(new HPath(dvDir(path, id)), true): Unit }
-          catch { case _: java.io.IOException => () }
         }
-        throw ise
-      case e if scala.util.control.NonFatal(e) =>
-        // ambiguous commit failure: drop the sidecar only when
-        // provably unreferenced — a published-then-threw commit keeps
-        // its live sidecar (review r20)
-        dvAdd.foreach { case (id, _) => dropOrphanDv(fs, path, id) }
-        throw e
+      }
+      val cowTouched = touched -- dvKeys
+      val baseMap = mapping.filter { case (k, _) => cowTouched(k) }
+      // tombstone-only dvRoute merge (the CDC/GDPR shape this routing
+      // exists for): every change row was consumed by the vector arm
+      // and no partition rewrites - skip the fold entirely (it would
+      // shuffle the changes only to filter every row out and litter an
+      // orphan empty batch dir) and publish the vector as the commit
+      val newMapping =
+        if (dvKeys.nonEmpty && baseMap.isEmpty && dvOnlyChanges) mapping
+        else {
+          val base0 =
+            if (baseMap.isEmpty) None
+            else Some(readMapped(spark, path, baseMap, partCols, dvs))
+          // SCHEMA EVOLUTION: the merged schema is the by-name UNION of the
+          // change batch's and the stored table's data columns — a change
+          // batch may WIDEN the table (new column: stored rows read null
+          // until rewritten) and may omit stored columns (its rows carry
+          // null there if they win), but can never silently DROP a stored
+          // column. Old files are never rewritten for a widening; readers
+          // merge the batches' footer schemas by name (rawRead), so
+          // mixed-schema batches coexist.
+          val reserved = Set(keyCol, versionCol) ++ partCols ++ deleteCol
+          val dataCols = (changes.columns.filterNot(reserved) ++
+            base0.map(_.columns.filterNot(reserved)).getOrElse(Array.empty[String]))
+            .distinct
+          def dtypeOf(c: String) =
+            changes.schema.fields.find(_.name == c)
+              .orElse(base0.flatMap(_.schema.fields.find(_.name == c)))
+              .get.dataType
+          def aligned(df: DataFrame): DataFrame =
+            dataCols.foldLeft(df)((d, c) =>
+              if (d.columns.contains(c)) d
+              else d.withColumn(c, lit(null).cast(dtypeOf(c))))
+          def pick(df: DataFrame, src: Int, del: Column): DataFrame = df.select(
+            col(keyCol),
+            struct((col(versionCol) +: lit(src).as("_src") +: del.as("_del") +:
+              (partCols ++ dataCols).map(col).toSeq): _*).as("_m"))
+          val base = base0.map(b => pick(aligned(b), 0, lit(false)))
+          val changeDel = deleteCol.fold(lit(false))(c => coalesce(col(c), lit(false)))
+          // latest wins; _src breaks version ties in favor of the change
+          // row (struct max compares field-by-field in order); a winning
+          // tombstone drops the key from the rewrite entirely
+          val merged = base.fold(pick(aligned(changes), 1, changeDel))(
+              _.unionByName(pick(aligned(changes), 1, changeDel)))
+            .groupBy(keyCol)
+            .agg(max(col("_m")).as("_m"))
+            .filter(!col("_m._del"))
+            .select(col(keyCol) +: col(s"_m.$versionCol") +:
+              (partCols ++ dataCols).map(c => col(s"_m.$c").as(c)).toSeq: _*)
+          requireMigratableNonNull(merged, cowTouched, partCols, "MERGE")
+          val batchId = java.util.UUID.randomUUID().toString
+          merged.write.mode("overwrite").partitionBy(partCols: _*)
+            .parquet(s"$path/data/batch=$batchId")
+          // a touched partition whose every row was tombstoned produces NO
+          // rewritten dir — it must leave the mapping entirely, or the old
+          // batch's rows would resurrect. (Vector-routed partitions instead
+          // KEEP their entry: their files stay live under the new vector,
+          // and their tombstone rows pass through the union harmlessly — a
+          // winner or a stale loser alike is dropped by the !_del filter,
+          // never written.)
+          val written = partDirs(fs, path, batchId, partCols).toSet
+          (mapping -- cowTouched) ++ written.map(_ -> batchId)
+        }
+      hookFor(attempt)()
+      commitDv(fs, path, v + 1, newMapping, dvs, dvAdd, txn)
+      attempt
     }
   }
 
@@ -3048,53 +2992,32 @@ object Warehouse {
     * The first delta commit records the table's merge keys in
     * `_meta` (readers need them to fold); later commits must use the
     * same keys.
+    *
+    * Concurrency: `maxAttempts` as in [[mergeInto]], but a delta
+    * rebase is O(1): the appended batch dir is already on disk and
+    * versioned data is never mutated, so the loser only re-snapshots
+    * and re-publishes the manifest with its batch appended to the NEW
+    * current chains — retry cost is one manifest read + one commit.
+    * Whichever order racing deltas land in the chain is the order
+    * their equal-version rows tie-break, exactly as if they had
+    * committed sequentially. Returns the number of attempts used.
     */
-  def mergeIntoDelta(spark: SparkSession, path: String, changes: DataFrame,
-                     keyCol: String, versionCol: String, partCol: String,
-                     deleteCol: Option[String] = None): Unit =
-    mergeIntoDeltaHooked(spark, path, changes, keyCol, versionCol,
-      Seq(partCol), deleteCol, 1, _ => () => ()): Unit
-
   def mergeIntoDelta(spark: SparkSession, path: String, changes: DataFrame,
                      keyCol: String, versionCol: String, partCols: Seq[String],
-                     deleteCol: Option[String]): Unit =
-    mergeIntoDeltaHooked(spark, path, changes, keyCol, versionCol, partCols,
-      deleteCol, 1, _ => () => ()): Unit
+                     deleteCol: Option[String] = None,
+                     maxAttempts: Int = 1): Int =
+    mergeIntoDeltaCore(spark, path, changes, keyCol, versionCol, partCols,
+      deleteCol, maxAttempts)
 
-  /** OPTIMISTIC-CONCURRENCY [[mergeIntoDelta]]. Where a CoW rebase
-    * re-runs the whole reconcile-and-rewrite ([[mergeIntoRetrying]]),
-    * a delta rebase is O(1): the appended batch dir is already on
-    * disk and versioned data is never mutated, so the loser only
-    * re-snapshots and re-publishes the manifest with its batch
-    * appended to the NEW current chains — no data is rewritten,
-    * retry cost is one manifest read + one commit. Serialization
-    * safety is the same latest-wins algebra: whichever order racing
-    * deltas land in the chain is the order their equal-version rows
-    * tie-break, exactly as if they had committed sequentially.
-    * Returns the attempts used; throws the last race error after
-    * `maxAttempts`.
+  /** [[mergeIntoDelta]] with a per-attempt pre-commit test seam and
+    * the streaming sink's txn record.
     */
-  def mergeIntoDeltaRetrying(spark: SparkSession, path: String,
-                     changes: DataFrame, keyCol: String, versionCol: String,
-                     partCol: String, deleteCol: Option[String] = None,
-                     maxAttempts: Int = 5): Int =
-    mergeIntoDeltaHooked(spark, path, changes, keyCol, versionCol,
-      Seq(partCol), deleteCol, maxAttempts, _ => () => ())
-
-  def mergeIntoDeltaRetrying(spark: SparkSession, path: String,
+  private[graft] def mergeIntoDeltaCore(spark: SparkSession, path: String,
                      changes: DataFrame, keyCol: String, versionCol: String,
                      partCols: Seq[String], deleteCol: Option[String],
-                     maxAttempts: Int): Int =
-    mergeIntoDeltaHooked(spark, path, changes, keyCol, versionCol, partCols,
-      deleteCol, maxAttempts, _ => () => ())
-
-  /** Delta-commit core with a per-attempt pre-commit test seam. */
-  private[graft] def mergeIntoDeltaHooked(spark: SparkSession, path: String,
-                     changes: DataFrame, keyCol: String, versionCol: String,
-                     partCols: Seq[String], deleteCol: Option[String],
-                     maxAttempts: Int, hookFor: Int => () => Unit,
+                     maxAttempts: Int,
+                     hookFor: Int => () => Unit = _ => () => (),
                      txn: Map[String, Long] = Map.empty): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     requireSimpleCols(partCols)
     val fs = fsOf(spark, path)
     require(snapshot(fs, path).nonEmpty,
@@ -3114,9 +3037,8 @@ object Warehouse {
     toWrite.write.mode("overwrite").partitionBy(partCols: _*)
       .parquet(s"$path/data/batch=$batchId")
     val written = partDirs(fs, path, batchId, partCols).toSet
-    var attempt = 1
-    while (true) {
-      val (v, mapping, _) = snapshot(fs, path).get
+    withCommitRetry(maxAttempts) { attempt =>
+      val (v, mapping, _) = currentSnapshot(fs, path)
       // a delta link attaches to EXACTLY its own key's chain; a
       // touched logical partition still stored under a PREVIOUS
       // layout generation's key would sit outside the fold group and
@@ -3136,66 +3058,9 @@ object Warehouse {
           case None        => s"~$batchId"
         }))
       hookFor(attempt)()
-      try {
-        commit(fs, path, v + 1, newMapping, txn)
-        return attempt
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      commit(fs, path, v + 1, newMapping, txn)
+      attempt
     }
-    attempt // unreachable
-  }
-
-  /** OPTIMISTIC-CONCURRENCY [[mergeInto]]: on a commit race (another
-    * writer published the version this merge resolved), re-snapshot
-    * and re-run the whole merge against the NEW current version —
-    * the Delta/Iceberg retry contract, upgrading the table from
-    * single-writer to multi-writer. Rebasing is semantically safe
-    * because the merge algebra is latest-wins on (version, change
-    * beats stored): replaying the same change batch onto the other
-    * writer's result yields exactly the serialized outcome, whichever
-    * order the writers land. Each failed attempt orphans its batch
-    * dir (swept by the next [[vacuum]]) — space, never correctness.
-    * Returns the number of attempts used; throws the last race error
-    * after `maxAttempts`.
-    */
-  def mergeIntoRetrying(spark: SparkSession, path: String, changes: DataFrame,
-                keyCol: String, versionCol: String, partCol: String,
-                deleteCol: Option[String] = None,
-                maxAttempts: Int = 5): Int =
-    mergeIntoRetryingHooked(spark, path, changes, keyCol, versionCol,
-      Seq(partCol), deleteCol, maxAttempts, _ => () => ())
-
-  def mergeIntoRetrying(spark: SparkSession, path: String, changes: DataFrame,
-                keyCol: String, versionCol: String, partCols: Seq[String],
-                deleteCol: Option[String], maxAttempts: Int): Int =
-    mergeIntoRetryingHooked(spark, path, changes, keyCol, versionCol,
-      partCols, deleteCol, maxAttempts, _ => () => ())
-
-  /** [[mergeIntoRetrying]] with a per-attempt pre-commit test seam. */
-  private[graft] def mergeIntoRetryingHooked(spark: SparkSession, path: String,
-                changes: DataFrame, keyCol: String, versionCol: String,
-                partCols: Seq[String], deleteCol: Option[String],
-                maxAttempts: Int, hookFor: Int => () => Unit,
-                txn: Map[String, Long] = Map.empty): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    var attempt = 1
-    while (true) {
-      try {
-        mergeIntoHooked(spark, path, changes, keyCol, versionCol, partCols,
-          deleteCol, hookFor(attempt), txn)
-        return attempt
-      } catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    attempt // unreachable
   }
 
   /** SQL `MERGE INTO` statement semantics — SOURCE-WINS and
@@ -3326,7 +3191,6 @@ object Warehouse {
       residual: Option[Column] = None,
       hookFor: Int => () => Unit = _ => () => (),
       dvRoute: Boolean = false): Unit = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
     require(targetKeys.nonEmpty && targetKeys.length == sourceKeys.length,
@@ -3343,11 +3207,8 @@ object Warehouse {
           "values can reference the stored row")
     }
     val fs = fsOf(spark, path)
-    var attempt = 1
-    while (true) {
-      val (v, mapping, dvs) = snapshot(fs, path).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version under $path - create() first"))
+    def attemptOnce(attempt: Int): Unit = {
+      val (v, mapping, dvs) = currentSnapshot(fs, path)
       require(mapping.nonEmpty,
         s"table at $path has no live partitions - re-create() to repopulate")
       val partCols = writeLayout(fs, path, mapping)
@@ -3389,7 +3250,7 @@ object Warehouse {
       val reconcile = notMatchedBySource.nonEmpty
       val sourceTuples = partTuplesOf(source, partCols)
       if (sourceTuples.isEmpty && !reconcile) return // empty source: no-op
-      // overlap CLOSURE (see mergeIntoHooked): mid layout evolution
+      // overlap CLOSURE (see mergeIntoCore): mid layout evolution
       // the source's partitions may live under previous-generation
       // keys, and the rewrite must fold in every key its fresh dirs
       // could collide with
@@ -3834,32 +3695,9 @@ object Warehouse {
           "for an intended full wipe (restorable via restore()) or " +
           "overwrite() to replace the table")
       hookFor(attempt)()
-      try {
-        commit(fs, path, v + 1, newMapping,
-          dvUpdate = dvAdd.map(a => dvs :+ a))
-        return
-      } catch {
-        case ise: IllegalStateException if ise.getMessage != null &&
-            ise.getMessage.contains("lost a race") =>
-          // a lost race PROVABLY published nothing — drop the
-          // attempt's sidecar unconditionally, no history scan
-          // (review r20: the orphan proof is for AMBIGUOUS failures
-          // only, not the hot optimistic-concurrency retry)
-          dvAdd.foreach { case (id, _) =>
-            try { fs.delete(new HPath(dvDir(path, id)), true): Unit }
-            catch { case _: java.io.IOException => () }
-          }
-          if (attempt >= maxAttempts) throw ise
-          attempt += 1
-        case e if scala.util.control.NonFatal(e) =>
-          // ambiguous failure (the claim may have PUBLISHED before
-          // throwing): delete only after proving the sidecar
-          // unreferenced in every retained version (advisor r19 #4 +
-          // review r20). Fatal errors skip the cleanup entirely.
-          dvAdd.foreach { case (id, _) => dropOrphanDv(fs, path, id) }
-          throw e
-      }
+      commitDv(fs, path, v + 1, newMapping, dvs, dvAdd)
     }
+    withCommitRetry(maxAttempts)(attemptOnce)
   }
 
   /** CHANGE DATA FEED: the row-level difference between committed
@@ -3900,10 +3738,8 @@ object Warehouse {
               onlyParts: Option[Set[String]]): DataFrame = {
     require(fromV < toV, s"need fromV < toV, got $fromV >= $toV")
     val fs = fsOf(spark, path)
-    def mappingOf(n: Long) = visibleMappingAt(fs, path, n).getOrElse(
-      throw new IllegalStateException(s"no committed version $n under $path"))
-    val mapFrom = mappingOf(fromV)
-    val mapTo = mappingOf(toV)
+    val mapFrom = committedMappingAt(fs, path, fromV)
+    val mapTo = committedMappingAt(fs, path, toV)
     val dvFrom = visibleDvAt(fs, path, fromV)
     val dvTo = visibleDvAt(fs, path, toV)
     val anyMap = if (mapTo.nonEmpty) mapTo else mapFrom
@@ -4004,8 +3840,7 @@ object Warehouse {
                 fromV: Long = 1L, toV: Option[Long] = None,
                 maxCommits: Int = 64): DataFrame = {
     val fs = fsOf(spark, path)
-    val newest = newestVisible(fs, path).map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path"))
+    val newest = currentSnapshot(fs, path)._1
     val to = toV.getOrElse(newest)
     require(to <= newest, s"toV $to exceeds newest committed version $newest")
     val oldest = listVersions(fs, path).map(_._1).min
@@ -4032,10 +3867,8 @@ object Warehouse {
   private[graft] def commitPageStats(spark: SparkSession, path: String,
                                      n: Long): Seq[(String, Long, Long)] = {
     val fs = fsOf(spark, path)
-    def m(v: Long) = visibleMappingAt(fs, path, v).getOrElse(
-      throw new IllegalStateException(s"no committed version $v under $path"))
-    val mapFrom = m(n - 1)
-    val mapTo = m(n)
+    val mapFrom = committedMappingAt(fs, path, n - 1)
+    val mapTo = committedMappingAt(fs, path, n)
     val dvFrom = visibleDvAt(fs, path, n - 1).map(_._1)
     val dvTo = visibleDvAt(fs, path, n).map(_._1)
     val addedDv = dvTo.filterNot(dvFrom.toSet)
@@ -4088,8 +3921,7 @@ object Warehouse {
     */
   def partitionColumns(spark: SparkSession, path: String): Seq[String] = {
     val fs = fsOf(spark, path)
-    val mapping = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path"))._2
+    val mapping = currentSnapshot(fs, path)._2
     require(mapping.nonEmpty,
       s"table at $path has no live partitions - no layout to report")
     writeLayout(fs, path, mapping)
@@ -4108,13 +3940,9 @@ object Warehouse {
     val fs = fsOf(spark, path)
     val (mapping, dvs) = versionAsOf match {
       case Some(n) =>
-        (visibleMappingAt(fs, path, n).getOrElse(
-          throw new IllegalStateException(
-            s"no committed version $n under $path")),
-          visibleDvAt(fs, path, n))
+        (committedMappingAt(fs, path, n), visibleDvAt(fs, path, n))
       case None =>
-        val (_, m, dvs) = snapshot(fs, path).getOrElse(
-          throw new IllegalStateException(s"no committed version under $path"))
+        val (_, m, dvs) = currentSnapshot(fs, path)
         (m, dvs)
     }
     // active deletion vectors make footer row counts and raw file
@@ -4207,8 +4035,7 @@ object Warehouse {
     */
   def currentVersion(spark: SparkSession, path: String): Long = {
     val fs = fsOf(spark, path)
-    snapshot(fs, path).map(_._1).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path"))
+    currentSnapshot(fs, path)._1
   }
 
   /** The newest version committed at-or-before the given instant
@@ -4242,8 +4069,7 @@ object Warehouse {
     */
   def partitionStats(spark: SparkSession, path: String): Seq[(String, String, Int, Long)] = {
     val fs = fsOf(spark, path)
-    val (_, mapping, _) = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path"))
+    val (_, mapping, _) = currentSnapshot(fs, path)
     mapping.toSeq.sorted.map { case (key, chain) =>
       val files = chainOf(chain).flatMap { b =>
         fs.listStatus(new HPath(s"$path/data/batch=$b/$key"))
@@ -4457,23 +4283,14 @@ object Warehouse {
               bloomCols: Seq[String] = Nil,
               bloomExpectedItems: Long = 100000L): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     require(bloomExpectedItems > 0,
       s"bloomExpectedItems must be positive, got $bloomExpectedItems")
     val fs = fsOf(spark, path)
-    var attempt = 1
-    while (true) {
-      try return compactOnce(spark, fs, path, sortCol, targetBytes,
+    withCommitRetry(maxAttempts) { _ =>
+      compactOnce(spark, fs, path, sortCol, targetBytes,
         (sortCol +: (statsCols ++ zorderCols)).distinct, zorderCols,
         bloomCols, bloomExpectedItems)
-      catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost a race") =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
     }
-    -1 // unreachable
   }
 
   private def compactOnce(spark: SparkSession, fs: FileSystem, path: String,
@@ -4482,8 +4299,7 @@ object Warehouse {
                           zorderCols: Seq[String],
                           bloomCols: Seq[String] = Nil,
                           bloomExpectedItems: Long = 100000L): Int = {
-    val (v, mapping, dvs) = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path"))
+    val (v, mapping, dvs) = currentSnapshot(fs, path)
     val partCols = writeLayout(fs, path, mapping)
     val stats = partitionStats(spark, path)
     // which live (batch, partition) links carry deletion-vector
@@ -4601,8 +4417,7 @@ object Warehouse {
     require(everyNCommits >= 1, s"everyNCommits must be >= 1, got $everyNCommits")
     require(analyzeEvery >= 0, s"analyzeEvery must be >= 0, got $analyzeEvery")
     val fs = fsOf(spark, path)
-    val (v, _, _) = snapshot(fs, path).getOrElse(
-      throw new IllegalStateException(s"no committed version under $path"))
+    val (v, _, _) = currentSnapshot(fs, path)
     val compacted =
       v % everyNCommits == 0 && compact(spark, path, sortCol, targetBytes) > 0
     if (analyzeEvery > 0) colStatsVersion(spark, path).foreach { at =>
@@ -5129,9 +4944,7 @@ object Warehouse {
     val fs = fsOf(spark, path)
     val (fullMapping, dvs) = versionAsOf match {
       case Some(n) =>
-        val m = visibleMappingAt(fs, path, n).getOrElse(
-          throw new NoCommittedVersion(
-            s"no committed version $n under $path"))
+        val m = committedMappingAt(fs, path, n)
         m.toSeq.sorted.foreach { case (key, chain) =>
           chainOf(chain).foreach { b =>
             if (!fs.exists(new HPath(s"$path/data/batch=$b/$key")))
@@ -5142,8 +4955,7 @@ object Warehouse {
         }
         (m, visibleDvAt(fs, path, n))
       case None =>
-        val (_, m, dvs) = snapshot(fs, path).getOrElse(
-          throw new NoCommittedVersion(s"no committed version under $path"))
+        val (_, m, dvs) = currentSnapshot(fs, path)
         (m, dvs)
     }
     require(fullMapping.nonEmpty, s"table at $path has no live partitions")

@@ -649,7 +649,7 @@ object StreamQueries {
                 col("event_id"), col("value"))
           } { (batch, _) =>
             graft.io.Warehouse.mergeInto(s, p, latest(batch),
-              "user_id", "ts_us", "bucket")
+              "user_id", "ts_us", Seq("bucket"))
             // AUTO-MAINTENANCE: a streaming merge lands one batch dir
             // per micro-batch, so the table fragments at the trigger
             // cadence; folding every 4th commit keeps file count (and
@@ -714,7 +714,7 @@ object StreamQueries {
                 col("event_id"), col("value"))
           } { (batch, _) =>
             graft.io.Warehouse.mergeIntoDelta(s, p, latest(batch),
-              "user_id", "ts_us", "bucket")
+              "user_id", "ts_us", Seq("bucket"))
             graft.io.Warehouse.maintain(s, p, "user_id",
               targetBytes = 64L << 20, everyNCommits = 3): Unit
           }
@@ -822,7 +822,7 @@ object StreamQueries {
           Seq(0, 1).foreach { parity =>
             graft.io.Warehouse.mergeIntoDelta(s, wh,
               post.filter(pmod(col("event_id"), lit(2L)) === parity),
-              "event_id", "ts_us", "bucket")
+              "event_id", "ts_us", Seq("bucket"))
           }
           drain() // resumed: exactly the two commits' post-images
         }
@@ -868,7 +868,7 @@ object StreamQueries {
           // v2: an insert wave; v3: updates + deletes on present rows
           graft.io.Warehouse.mergeIntoDelta(s, a,
             ev.filter(col("event_id") % 3 === 1).withColumn("ver", lit(2L)),
-            "event_id", "ver", "dt")
+            "event_id", "ver", Seq("dt"))
           val present = ev.filter(col("event_id") % 3 <= 1)
           graft.io.Warehouse.mergeIntoDelta(s, a,
             present.filter(col("event_id") % 5 === 0 && col("event_id") % 7 =!= 0)

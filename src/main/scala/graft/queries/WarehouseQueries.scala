@@ -32,7 +32,7 @@ object WarehouseQueries {
         .filter(col("event_id") % 19 === 3 || col("event_id") % 23 === 5)
         .withColumn("user_id", col("user_id") + 1000000L)
         .withColumn("version", col("version") + 1L)
-      Warehouse.mergeInto(s, p, changes, "event_id", "version", "dt")
+      Warehouse.mergeInto(s, p, changes, "event_id", "version", Seq("dt"))
     }
 
   /** m2's table, built once per (sfDir, JVM): version 1 = full
@@ -56,7 +56,7 @@ object WarehouseQueries {
         .withColumn("version", col("version") + 1L)
         .withColumn("is_del", lit(false))
       Warehouse.mergeInto(s, p, dels.unionByName(ups),
-        "event_id", "version", "dt", deleteCol = Some("is_del"))
+        "event_id", "version", Seq("dt"), deleteCol = Some("is_del"))
     }
 
   /** m19's two-table pair under one root — a fact table (`/a`, keyed
@@ -78,7 +78,7 @@ object WarehouseQueries {
         .withColumn("event_type", lit("patched"))
         .withColumn("ver", lit(2L)).withColumn("is_del", lit(false))
       Warehouse.mergeInto(s, s"$p/a", aDel.unionByName(aUp),
-        "event_id", "ver", "dt", deleteCol = Some("is_del"))
+        "event_id", "ver", Seq("dt"), deleteCol = Some("is_del"))
       val us = Tables.events(s, d).select(col("user_id")).distinct()
         .select(col("user_id"), (col("user_id") % 5).as("tier"),
           pmod(col("user_id"), lit(4L)).cast("int").as("ub"), lit(1L).as("ver"))
@@ -89,7 +89,7 @@ object WarehouseQueries {
         .withColumn("tier", col("tier") + 10L)
         .withColumn("ver", lit(2L)).withColumn("is_del", lit(false))
       Warehouse.mergeInto(s, s"$p/b", bDel.unionByName(bUp),
-        "user_id", "ver", "ub", deleteCol = Some("is_del"))
+        "user_id", "ver", Seq("ub"), deleteCol = Some("is_del"))
     }
 
   /** m8's three-version table (create; CoW update merge; CoW
@@ -106,7 +106,7 @@ object WarehouseQueries {
       val a = ev.filter(col("event_id") % 41 === 1)
         .withColumn("user_id", col("user_id") + 3000000L)
         .withColumn("version", col("version") + 1L)
-      Warehouse.mergeInto(s, p, a, "event_id", "version", "dt")
+      Warehouse.mergeInto(s, p, a, "event_id", "version", Seq("dt"))
       val dels = ev.filter(col("event_id") % 43 === 2)
         .withColumn("version", col("version") + 2L)
         .withColumn("is_del", lit(true))
@@ -116,7 +116,7 @@ object WarehouseQueries {
         .withColumn("version", col("version") + 2L)
         .withColumn("is_del", lit(false))
       Warehouse.mergeInto(s, p, dels.unionByName(ups),
-        "event_id", "version", "dt", deleteCol = Some("is_del"))
+        "event_id", "version", Seq("dt"), deleteCol = Some("is_del"))
     }
 
   /** m9/m10's MERGE-ON-READ table, built once per (sfDir, JVM):
@@ -143,11 +143,11 @@ object WarehouseQueries {
           when(col("event_id") % 59 === 6, col("user_id") + 5000000L)
             .otherwise(col("user_id")))
         .withColumn("version", col("version") + 1L)
-      Warehouse.mergeIntoDelta(s, p, d1, "event_id", "version", "dt")
+      Warehouse.mergeIntoDelta(s, p, d1, "event_id", "version", Seq("dt"))
       val d2 = ev.filter(col("event_id") % 61 === 9)
         .withColumn("version", col("version") + 2L)
         .withColumn("is_del", lit(true))
-      Warehouse.mergeIntoDelta(s, p, d2, "event_id", "version", "dt",
+      Warehouse.mergeIntoDelta(s, p, d2, "event_id", "version", Seq("dt"),
         deleteCol = Some("is_del"))
     }
 
@@ -186,12 +186,12 @@ object WarehouseQueries {
         .withColumn("user_id", col("user_id") + 2000000L)
         .withColumn("version", col("version") + 1L)
         .withColumn("is_del", lit(false))
-      Warehouse.mergeInto(s, p, ups, "event_id", "version", "dt",
+      Warehouse.mergeInto(s, p, ups, "event_id", "version", Seq("dt"),
         deleteCol = Some("is_del"), dvRoute = true)
       val dels = ev.filter(col("event_id") % 31 === 7)
         .withColumn("version", col("version") + 2L)
         .withColumn("is_del", lit(true))
-      Warehouse.mergeInto(s, p, dels, "event_id", "version", "dt",
+      Warehouse.mergeInto(s, p, dels, "event_id", "version", Seq("dt"),
         deleteCol = Some("is_del"), dvRoute = true)
     }
 
@@ -343,7 +343,7 @@ object WarehouseQueries {
           val changes = ev.filter(col("event_id") % 37 === 2)
             .withColumn("version", col("version") + 1L)
             .withColumn("score", (col("event_id") % 100).cast("long"))
-          Warehouse.mergeInto(s, p, changes, "event_id", "version", "dt")
+          Warehouse.mergeInto(s, p, changes, "event_id", "version", Seq("dt"))
         }
         Warehouse.read(s, path)
           .select(col("event_id"), col("user_id"), col("event_type"),
@@ -856,7 +856,7 @@ object WarehouseQueries {
           val ups = ev.filter(col("event_id") % 13 === 4)
             .withColumn("user_id", col("user_id") + 7000000L)
             .withColumn("version", col("version") + 1L)
-          Warehouse.mergeInto(s, p, ups, "event_id", "version", "dt")
+          Warehouse.mergeInto(s, p, ups, "event_id", "version", Seq("dt"))
           Warehouse.restore(s, p, 1L): Unit
         }
         Warehouse.read(s, path)
@@ -1019,7 +1019,7 @@ object WarehouseQueries {
           Warehouse.mergeInto(s, p,
             ev.limit(500).withColumn("event_type", lit("oops"))
               .withColumn("ts_us", col("ts_us") + 1L),
-            "event_id", "ts_us", "bucket")
+            "event_id", "ts_us", Seq("bucket"))
           // ...and SQL repairs the table: rollback, bin-pack, reclaim
           s.sql(s"CALL graft.system.restore(table => '$p', version => 1)")
           s.sql(s"CALL graft.system.compact(table => '$p', " +

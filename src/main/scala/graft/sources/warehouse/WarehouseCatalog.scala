@@ -291,7 +291,7 @@ class WarehouseCatalog extends TableCatalog with ProcedureCatalog {
     val path = entry.fold(pathOf(ident))(_.path)
     val created =
       try { Warehouse.currentVersion(spark, path); true }
-      catch { case _: IllegalStateException => false }
+      catch { case _: NoCommittedVersion => false }
     val adds = changes.collect {
       case add: TableChange.AddColumn =>
         require(add.position() == null,

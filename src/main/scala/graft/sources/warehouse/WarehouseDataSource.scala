@@ -743,7 +743,7 @@ class WarehouseTable(tableSchema: StructType,
       try graft.io.Warehouse
         .partitionColumns(SparkSession.active, conf.path)
         .map(c => Expressions.identity(c)).toArray
-      catch { case _: IllegalStateException => Array.empty }
+      catch { case _: NoCommittedVersion => Array.empty }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(!conf.changeFeed,
@@ -772,7 +772,7 @@ class WarehouseTable(tableSchema: StructType,
         .partitionColumns(SparkSession.active, conf.path).toSet
       WarehouseDataSource.partitionPredicate(
         filters.toIndexedSeq, partCols, tableSchema)
-    } catch { case _: IllegalStateException => None }
+    } catch { case _: NoCommittedVersion => None }
 
   /** `DELETE FROM` routing: a predicate decidable from partition
     * values alone drops partitions METADATA-ONLY
@@ -857,7 +857,7 @@ class WarehouseWriteBuilder(path: String, overwriteModeOpt: Option[String],
           // version 1 with the declared partition layout
           val uncreated = createPartCols.nonEmpty && (
             try { graft.io.Warehouse.currentVersion(spark, path); false }
-            catch { case _: IllegalStateException => true })
+            catch { case _: NoCommittedVersion => true })
           if (uncreated)
             graft.io.Warehouse.create(spark, path, data, createPartCols.get)
           else if (!(truncateMode || overwrite))

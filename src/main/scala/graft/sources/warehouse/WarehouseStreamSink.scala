@@ -115,15 +115,15 @@ class WarehouseStreamSink(path: String, params: Map[String, String],
       else mode match {
         case "append" => Warehouse.append(spark, path, batch, txn = txn): Unit
         case "delta" =>
-          Warehouse.mergeIntoDeltaHooked(spark, path, batch,
+          Warehouse.mergeIntoDeltaCore(spark, path, batch,
             opt("keyCol"), opt("versionCol"),
             partCols, params.get("deleteCol"),
-            maxAttempts = 5, _ => () => (), txn): Unit
+            maxAttempts = 5, txn = txn): Unit
         case "merge" =>
-          Warehouse.mergeIntoRetryingHooked(spark, path, batch,
+          Warehouse.mergeIntoCore(spark, path, batch,
             opt("keyCol"), opt("versionCol"),
             partCols, params.get("deleteCol"),
-            maxAttempts = 5, _ => () => (), txn): Unit
+            maxAttempts = 5, txn = txn): Unit
       }
     } catch {
       // an all-filtered micro-batch carries nothing to commit; the

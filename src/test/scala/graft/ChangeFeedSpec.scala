@@ -28,16 +28,16 @@ class ChangeFeedSpec extends AnyFunSuite {
       .toDF("k", "payload", "ver", "part"), "part")
     Warehouse.mergeInto(spark, path,
       Seq((1L, "a2", 11L, "d1")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.mergeInto(spark, path,
       Seq((4L, "d", 11L, "d2")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, "b2", 12L, "d1")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((3L, "x", 12L, "d2", true)).toDF("k", "payload", "ver", "part", "is_del"),
-      "k", "ver", "part", deleteCol = Some("is_del"))
+      "k", "ver", Seq("part"), deleteCol = Some("is_del"))
     path
   }
 
@@ -83,10 +83,10 @@ class ChangeFeedSpec extends AnyFunSuite {
     // two more commits land after the first drain
     Warehouse.mergeInto(spark, path,
       Seq((5L, "e", 13L, "d2")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "a3", 14L, "d1")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val second = scala.collection.mutable.ArrayBuffer[(Seq[Long], Seq[(Long, String)])]()
     ChangeFeed.run(spark, path, "k", pageSize = 2,
       checkpoint = Some(ckpt)) { (page, vs) =>

@@ -160,7 +160,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite {
       val table = Files.createTempDirectory("graft_lcfm_cf").toString + "/t"
       Warehouse.create(spark, table, Seq((1L, "a", 10L, "d1")).toDF("k", "payload", "ver", "part"), "part")
       Warehouse.mergeInto(spark, table,
-        Seq((1L, "b", 11L, "d1")).toDF("k", "payload", "ver", "part"), "k", "ver", "part")
+        Seq((1L, "b", 11L, "d1")).toDF("k", "payload", "ver", "part"), "k", "ver", Seq("part"))
       intercept[Exception](ChangeFeed.run(spark, table, "k", pageSize = 1) {
         (_, _) => throw new IllegalStateException("page failed")
       })

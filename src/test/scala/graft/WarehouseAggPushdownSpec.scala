@@ -112,7 +112,7 @@ class WarehouseAggPushdownSpec extends AnyFunSuite {
     // the by-name widening contract, still zero data rows
     Warehouse.mergeInto(spark, path,
       Seq((1L, 2L, "d1", 7L)).toDF("k", "ver", "part", "extra"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     WarehouseDataSource.resetAggProbe()
     val got = spark.read.format("graft-warehouse").load(path)
       .groupBy("part").agg(min("extra").as("lo"), count(lit(1)).as("n"))
@@ -134,7 +134,7 @@ class WarehouseAggPushdownSpec extends AnyFunSuite {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("parquet.column.statistics.enabled", "false")
     try Warehouse.mergeInto(spark, path,
-      Seq((31L, 2L, "d2")).toDF("k", "ver", "part"), "k", "ver", "part")
+      Seq((31L, 2L, "d2")).toDF("k", "ver", "part"), "k", "ver", Seq("part"))
     finally hc.unset("parquet.column.statistics.enabled")
     WarehouseDataSource.resetAggProbe()
     val got = spark.read.format("graft-warehouse").load(path)
@@ -157,7 +157,7 @@ class WarehouseAggPushdownSpec extends AnyFunSuite {
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "newer", 2L, "d1"), (101L, "ins", 2L, "d1"))
         .toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     WarehouseDataSource.resetAggProbe()
     val n = spark.read.format("graft-warehouse").load(path)
       .agg(count(lit(1))).head().getLong(0)

@@ -96,7 +96,7 @@ class WarehouseAlterSpec extends AnyFunSuite {
       Seq((1L, 1L, "x", "a")).toDF("id", "ver", "v", "dt"), "dt")
     // make it a delta table so _meta records (id, ver)
     Warehouse.mergeIntoDelta(spark, path,
-      Seq((2L, 1L, "y", "a")).toDF("id", "ver", "v", "dt"), "id", "ver", "dt")
+      Seq((2L, 1L, "y", "a")).toDF("id", "ver", "v", "dt"), "id", "ver", Seq("dt"))
     assert(intercept[IllegalArgumentException](
       Warehouse.renameColumn(spark, path, "dt", "day"))
       .getMessage.contains("partition"))
@@ -139,7 +139,7 @@ class WarehouseAlterSpec extends AnyFunSuite {
     // chain into a delta so compact() has something to fold
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, 2L, "y2", "a")).toDF("id", "ver", "label", "dt"),
-      "id", "ver", "dt")
+      "id", "ver", Seq("dt"))
     Warehouse.compact(spark, path, "id", targetBytes = 64L * 1024 * 1024)
     val rows = Warehouse.read(spark, path).orderBy("id")
       .select("id", "label").as[(Long, String)].collect().toSeq
@@ -208,7 +208,7 @@ class WarehouseAlterSpec extends AnyFunSuite {
     Warehouse.create(spark, delta,
       Seq((1L, 1L, 5, "a")).toDF("id", "ver", "x", "dt"), "dt")
     Warehouse.mergeIntoDelta(spark, delta,
-      Seq((2L, 1L, 6, "a")).toDF("id", "ver", "x", "dt"), "id", "ver", "dt")
+      Seq((2L, 1L, 6, "a")).toDF("id", "ver", "x", "dt"), "id", "ver", Seq("dt"))
     assert(intercept[IllegalArgumentException](
       Warehouse.widenColumnType(spark, delta, "x", LongType))
       .getMessage.contains("compact"))

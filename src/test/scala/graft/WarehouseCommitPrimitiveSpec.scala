@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.Warehouse
+import graft.io.{CommitConflict, Warehouse}
 
 /** An EMULATED OBJECT STORE for the commit-primitive contract: a
   * local filesystem that reports an S3 scheme (so the warehouse's
@@ -55,10 +55,10 @@ class WarehouseCommitPrimitiveSpec extends AnyFunSuite {
         .toDF("k", "ver", "v", "part"), "part")
     Warehouse.mergeInto(spark, path,
       Seq((1L, 2L, "x2", "a")).toDF("k", "ver", "v", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, 2L, "y2", "b")).toDF("k", "ver", "v", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val rows = Warehouse.read(spark, path).orderBy("k")
       .select("k", "v").as[(Long, String)].collect().toSeq
     assert(rows == Seq((1L, "x2"), (2L, "y2")))
@@ -97,20 +97,19 @@ class WarehouseCommitPrimitiveSpec extends AnyFunSuite {
     // single-attempt merge with an injected racing writer landing a
     // commit in the rewrite-to-commit window: the conditional put
     // must LOSE (create-exclusive), not clobber
-    val racer = intercept[IllegalStateException] {
-      Warehouse.mergeIntoRetryingHooked(spark, path,
+    intercept[CommitConflict] {
+      Warehouse.mergeIntoCore(spark, path,
         Seq((1L, 2L, "mine", "a")).toDF("k", "ver", "v", "part"),
         "k", "ver", Seq("part"), None, maxAttempts = 1,
         hookFor = _ => () => {
           Warehouse.mergeInto(spark, path,
             Seq((1L, 3L, "theirs", "a")).toDF("k", "ver", "v", "part"),
-            "k", "ver", "part")
+            "k", "ver", Seq("part"))
         })
     }
-    assert(racer.getMessage.contains("lost a race"))
     // with retries the loser rebases: latest-wins algebra serializes
     // both merges (ver 3 'theirs' beats the replayed ver 2 'mine')
-    val attempts = Warehouse.mergeIntoRetrying(spark, path,
+    val attempts = Warehouse.mergeInto(spark, path,
       Seq((1L, 2L, "mine", "a")).toDF("k", "ver", "v", "part"),
       "k", "ver", Seq("part"), None, maxAttempts = 5)
     assert(attempts == 1)

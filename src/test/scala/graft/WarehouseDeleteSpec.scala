@@ -118,7 +118,7 @@ class WarehouseDeleteSpec extends AnyFunSuite {
         .toDF("k", "name", "ver", "part"), "part")
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "target", 2L, "d1"), (3L, "target", 1L, "d1"))
-        .toDF("k", "name", "ver", "part"), "k", "ver", "part")
+        .toDF("k", "name", "ver", "part"), "k", "ver", Seq("part"))
     val n = Warehouse.deleteWhere(spark, path, col("name") === "target")
     assert(n == 2L, s"the fold's latest-wins rows are what DELETE sees, got $n")
     val left = Warehouse.read(spark, path)

@@ -51,7 +51,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
       (6L, "f", 11L, "d9", false),  // insert creating a NEW partition
       (1L, "x", 11L, "d1", true))   // tombstone → key 1 deleted
       .toDF("k", "payload", "ver", "part", "is_del")
-    Warehouse.mergeIntoDelta(spark, path, delta1, "k", "ver", "part",
+    Warehouse.mergeIntoDelta(spark, path, delta1, "k", "ver", Seq("part"),
       deleteCol = Some("is_del"))
     assert(rows(path) == Seq(
       (2L, "b", 10L, "d1"), (3L, "c2", 11L, "d2"), (4L, "d", 10L, "d2"),
@@ -63,7 +63,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
       (3L, "c3", 11L, "d2", false), // same version as delta1's → later delta wins
       (1L, "a2", 11L, "d1", false)) // re-insert after the tombstone
       .toDF("k", "payload", "ver", "part", "is_del")
-    Warehouse.mergeIntoDelta(spark, path, delta2, "k", "ver", "part",
+    Warehouse.mergeIntoDelta(spark, path, delta2, "k", "ver", Seq("part"),
       deleteCol = Some("is_del"))
     assert(rows(path) == Seq(
       (1L, "a2", 11L, "d1"), (2L, "b", 10L, "d1"), (3L, "c3", 11L, "d2"),
@@ -85,7 +85,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
     Warehouse.create(spark, path, base, "part")
     val delta = Seq((1L, "a2", 11L, "07"), (3L, "c", 11L, "08"))
       .toDF("k", "payload", "ver", "part")
-    Warehouse.mergeIntoDelta(spark, path, delta, "k", "ver", "part")
+    Warehouse.mergeIntoDelta(spark, path, delta, "k", "ver", Seq("part"))
     val got = Warehouse.read(spark, path)
       .select(col("k"), col("payload"), col("part").cast("string"))
       .as[(Long, String, String)].collect().sortBy(_._1).toSeq
@@ -106,7 +106,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
     val baseBatch = stats0.head._2
     Warehouse.mergeIntoDelta(spark, path,
       Seq((7L, "tiny", 11L, "d1")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     // the delta batch dir holds ONE key's bytes; the base batch is untouched
     val deltaBatch = Warehouse.partitionStats(spark, path).head._2
       .split(",").last.stripPrefix("~")
@@ -130,18 +130,18 @@ class WarehouseDeltaSpec extends AnyFunSuite {
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, "b2", 11L, "d2", false), (3L, "x", 11L, "d2", true))
         .toDF("k", "payload", "ver", "part", "is_del"),
-      "k", "ver", "part", deleteCol = Some("is_del"))
+      "k", "ver", Seq("part"), deleteCol = Some("is_del"))
     // CoW merge ON TOP of the chain must fold the chain first (key 3
     // stays deleted, b2 is the base it reconciles against)
     Warehouse.mergeInto(spark, path,
       Seq((4L, "g", 12L, "d2")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     assert(rows(path) == Seq(
       (1L, "a", 10L, "d1"), (2L, "b2", 11L, "d2"), (4L, "g", 12L, "d2")))
     // another delta, then compact: chains collapse, rows identical
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "a3", 12L, "d1")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val before = rows(path)
     assert(Warehouse.compact(spark, path, "k", targetBytes = 1L << 30) >= 1)
     assert(rows(path) == before, "compaction must not change a visible row")
@@ -200,14 +200,14 @@ class WarehouseDeltaSpec extends AnyFunSuite {
     // dropped row 1 (the stored row of the touched partition)
     Warehouse.mergeInto(spark, path,
       Seq((3L, "c", 11L, "2024-01-01T00:00")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     assert(rows(path) == Seq(
       (1L, "a", 10L, "2024-01-01T00:00"), (2L, "b", 10L, "plain"),
       (3L, "c", 11L, "2024-01-01T00:00")))
     val nullPart = Seq((9L, "z", 11L)).toDF("k", "payload", "ver")
       .withColumn("part", lit(null).cast("string"))
     val e = intercept[IllegalArgumentException] {
-      Warehouse.mergeInto(spark, path, nullPart, "k", "ver", "part")
+      Warehouse.mergeInto(spark, path, nullPart, "k", "ver", Seq("part"))
     }
     assert(e.getMessage.contains("NULL"))
   }
@@ -218,7 +218,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
       .toDF("k", "payload", "ver", "part"), "part")
     Warehouse.mergeInto(spark, path,
       Seq((1L, "a2", 11L, "d1")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     // an in-flight writer's uncommitted batch dir (the merge-commit
     // window a concurrent vacuum must not sweep)
     val inflight = s"$path/data/batch=inflight-writer"
@@ -246,7 +246,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
       val del = i % 5 == 0
       Warehouse.mergeInto(spark, path,
         Seq((i % 6, s"p$i", i, "d1", del)).toDF("k", "payload", "ver", "part", "is_del"),
-        "k", "ver", "part", deleteCol = Some("is_del"))
+        "k", "ver", Seq("part"), deleteCol = Some("is_del"))
     }
     // the unbounded call is REFUSED above maxCommits
     val e = intercept[IllegalArgumentException] {
@@ -279,7 +279,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
       .toDF("k", "payload", "ver", "part"), "part")
     val widen = Seq((2L, "b2", 11L, "d1", 77L))
       .toDF("k", "payload", "ver", "part", "score")
-    Warehouse.mergeIntoDelta(spark, path, widen, "k", "ver", "part")
+    Warehouse.mergeIntoDelta(spark, path, widen, "k", "ver", Seq("part"))
     val got = Warehouse.read(spark, path).select("k", "payload", "score")
       .as[(Long, String, Option[Long])].collect().sortBy(_._1).toSeq
     assert(got == Seq((1L, "a", None), (2L, "b2", Some(77L))),
@@ -301,10 +301,10 @@ class WarehouseDeltaSpec extends AnyFunSuite {
     val ours = Seq((3L, "y", 11L, "d1")).toDF("k", "payload", "ver", "part")
     // the competing writer's delta commit fires INSIDE our commit
     // window (after our batch landed, before our manifest publish)
-    val attempts = Warehouse.mergeIntoDeltaHooked(spark, path, ours,
+    val attempts = Warehouse.mergeIntoDeltaCore(spark, path, ours,
       "k", "ver", Seq("part"), None, 3,
       attempt => () => if (attempt == 1)
-        Warehouse.mergeIntoDelta(spark, path, competing, "k", "ver", "part"))
+        Warehouse.mergeIntoDelta(spark, path, competing, "k", "ver", Seq("part")))
     assert(attempts == 2, s"one rebase expected, used $attempts")
     // both writers' rows are visible — the serialized outcome
     val got = Warehouse.read(spark, path).select("k", "payload")
@@ -327,7 +327,7 @@ class WarehouseDeltaSpec extends AnyFunSuite {
       Warehouse.mergeIntoDelta(spark, path,
         Seq((i, s"p$i", i, if (i % 2 == 0) "d1" else "d2"))
           .toDF("k", "payload", "ver", "part"),
-        "k", "ver", "part")
+        "k", "ver", Seq("part"))
       Warehouse.maintain(spark, path, "k", targetBytes = 1L << 30,
         everyNCommits = 4)
       val stats = Warehouse.partitionStats(spark, path)

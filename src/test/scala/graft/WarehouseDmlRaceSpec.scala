@@ -132,6 +132,19 @@ class WarehouseDmlRaceSpec extends AnyFunSuite {
     assert(deleted == 20L, s"the replay must not double-delete the overlap, got $deleted")
     val left = Warehouse.read(spark, path).select("k").as[Long].collect().sorted
     assert(left.toSeq == ((1L to 9L) ++ (61L to 100L)))
+    // the losing attempt's sidecar is gone: `_dv` holds exactly the
+    // vectors the manifests reference (the winner's and the replay's)
+    def lines(f: java.nio.file.Path) =
+      new String(Files.readAllBytes(f), "UTF-8").split("\n").toSeq
+    val referenced = Files.list(java.nio.file.Paths.get(s"$path/_versions"))
+      .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("v"))
+      .flatMap(lines).filter(_.startsWith("#dv\t")).map(_.split("\t")(1)).toSet
+    val onDisk = Files.list(java.nio.file.Paths.get(s"$path/_dv"))
+      .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .toSet
+    assert(referenced.size == 2, s"both vectors must be live: $referenced")
+    assert(onDisk == referenced, s"orphan sidecars: ${onDisk -- referenced}")
   }
 
   test("a loser exhausting maxAttempts surfaces the contention loudly, table intact") {

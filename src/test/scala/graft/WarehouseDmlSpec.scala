@@ -94,7 +94,7 @@ class WarehouseDmlSpec extends AnyFunSuite {
     // delta-commit a newer version of id=2 (v → 'y2'), then UPDATE it
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, 5L, "y2", "a")).toDF("id", "ver", "v", "dt"),
-      "id", "ver", "dt")
+      "id", "ver", Seq("dt"))
     val n = spark.sql(s"UPDATE graft.`$path` SET v = concat(v, '?') WHERE id = 2")
       .as[Long].head()
     assert(n == 1L)

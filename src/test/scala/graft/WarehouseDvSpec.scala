@@ -153,7 +153,7 @@ class WarehouseDvSpec extends AnyFunSuite {
         .toDF("k", "ver", "qty", "part"), "part")
     Warehouse.mergeIntoDelta(spark, path,
       Seq((5L, 2L, 5000L, "p1")).toDF("k", "ver", "qty", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val n = Warehouse.deleteWhereDv(spark, path, col("qty") >= 100 && col("qty") < 130)
     // qty in [100,130): stored keys 50..64 -> k 50..64 minus k=5 (now 5000)
     assert(n == 15L)
@@ -411,9 +411,9 @@ class WarehouseDvSpec extends AnyFunSuite {
     }).toDF("k", "name", "version", "part", "is_del")
     def p2Files(path: String) = dataFiles(path).filter(_._1.contains("/part=p2"))
     val before = p2Files(dvT)
-    Warehouse.mergeInto(spark, dvT, changes, "k", "version", "part",
+    Warehouse.mergeInto(spark, dvT, changes, "k", "version", Seq("part"),
       deleteCol = Some("is_del"), dvRoute = true)
-    Warehouse.mergeInto(spark, cowT, changes, "k", "version", "part",
+    Warehouse.mergeInto(spark, cowT, changes, "k", "version", Seq("part"),
       deleteCol = Some("is_del"))
     // NAME-sorted columns: the CoW rewrite lands its canonical
     // (key, version, part, data) column order while DV-routed files
@@ -452,7 +452,7 @@ class WarehouseDvSpec extends AnyFunSuite {
     val tombs = (1L to 120L).filter(_ % 10 == 0)
       .map(i => (i, s"n$i", i + 1L, s"p${(i % 3) + 1}", true))
       .toDF("k", "name", "version", "part", "is_del")
-    Warehouse.mergeInto(spark, path, tombs, "k", "version", "part",
+    Warehouse.mergeInto(spark, path, tombs, "k", "version", Seq("part"),
       deleteCol = Some("is_del"), dvRoute = true)
     assert(Warehouse.currentVersion(spark, path) == v0 + 1)
     assert(batchDirs() == before,

@@ -205,9 +205,9 @@ class WarehouseMultiSpec extends AnyFunSuite {
     }
     Warehouse.primitiveOverride = Some(racer)
     try {
-      val attempts = Warehouse.mergeIntoRetrying(spark, path,
+      val attempts = Warehouse.mergeInto(spark, path,
         Seq((1L, "a2", 11L, "d1")).toDF("k", "payload", "ver", "part"),
-        "k", "ver", "part")
+        "k", "ver", Seq("part"), maxAttempts = 5)
       assert(attempts == 2, s"one lost claim → one rebase, got $attempts")
     } finally Warehouse.primitiveOverride = None
     assert(stolen.get() >= 2, "both attempts must claim THROUGH the seam")

@@ -89,7 +89,7 @@ class WarehouseNamedCatalogSpec extends AnyFunSuite {
     // a merge carrying the column stores it; other rows stay NULL
     Warehouse.mergeInto(spark, path,
       Seq((1L, 2L, "x2", "a", 99L)).toDF("k", "ver", "v", "dt", "score"),
-      "k", "ver", "dt")
+      "k", "ver", Seq("dt"))
     val after = Warehouse.read(spark, path).orderBy("k")
       .select("k", "score").as[(Long, Option[Long])].collect().toSeq
     assert(after == Seq((1L, Some(99L)), (2L, None)))

@@ -116,7 +116,7 @@ class WarehouseNativeScanSpec extends AnyFunSuite {
       Seq((1L, "a", 1L, "d1")).toDF("k", "name", "ver", "part"), "part")
     Warehouse.mergeIntoDelta(spark, delta,
       Seq((1L, "a2", 2L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val foldDf = spark.read.format("graft-warehouse").load(delta)
     assert(planOf(foldDf).contains("WarehouseV1Scan"),
       "a folded snapshot needs the bridge's keyed aggregation")

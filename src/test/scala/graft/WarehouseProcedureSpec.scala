@@ -65,7 +65,7 @@ class WarehouseProcedureSpec extends AnyFunSuite {
     val path = fragmentedTable() // v1
     Warehouse.mergeInto(spark, path,
       Seq((1L, 0L, "changed", 2L, "d1")).toDF("k", "v", "name", "ver", "part"),
-      "k", "ver", "part") // v2
+      "k", "ver", Seq("part")) // v2
     val restored = spark.sql(
       s"CALL graft.system.restore(table => '$path', version => 1)").head()
     assert(restored.getAs[Long]("version") == 3L,
@@ -94,7 +94,7 @@ class WarehouseProcedureSpec extends AnyFunSuite {
     (1 to 4).foreach { i =>
       Warehouse.mergeInto(spark, path,
         Seq((i.toLong, 0L, s"c$i", 2L, "d1")).toDF("k", "v", "name", "ver", "part"),
-        "k", "ver", "part")
+        "k", "ver", Seq("part"))
     } // v5
     val due = spark.sql(
       s"CALL graft.system.maintain(table => '$path', sort_col => 'k', " +
@@ -107,7 +107,7 @@ class WarehouseProcedureSpec extends AnyFunSuite {
     val path = fragmentedTable()
     Warehouse.mergeInto(spark, path,
       Seq((1L, 99L, "n1b", 2L, "d1")).toDF("k", "v", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val rows = spark.sql(s"CALL graft.system.history(table => '$path')")
       .collect()
     assert(rows.map(_.getAs[Long]("version")).toSeq == Seq(2L, 1L),

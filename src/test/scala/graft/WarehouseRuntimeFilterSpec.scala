@@ -438,4 +438,15 @@ class WarehouseRuntimeFilterSpec extends AnyFunSuite {
     assert(WarehouseDataSource.lastPlanned.isDefined,
       "execution must resolve the scan")
   }
+
+  test("Sessions.install is idempotent: installed twice, each rule and the strategy is registered once, in order") {
+    val fresh = spark.newSession()
+    graft.engine.Sessions.install(fresh)
+    graft.engine.Sessions.install(fresh)
+    val rules = fresh.experimental.extraOptimizations.map(_.getClass.getSimpleName)
+    assert(rules == Seq("WarehouseStatsRule", "WarehouseRuntimeFilterRule",
+      "WarehouseNativeScanRule"), s"rules: $rules")
+    val strategies = fresh.experimental.extraStrategies.map(_.getClass.getSimpleName)
+    assert(strategies == Seq("ProbedDimStrategy"), s"strategies: $strategies")
+  }
 }

@@ -102,7 +102,7 @@ class WarehouseScanSchemaSpec extends AnyFunSuite {
     Warehouse.create(spark, path, Seq((1L, "a", 10L, "d1")).toDF("k", "v", "ver", "d"), "d")
     val v1Batch = new java.io.File(s"$path/data").list().find(_.startsWith("batch=")).get
     Warehouse.mergeInto(spark, path,
-      Seq((1L, "b", 11L, "d1")).toDF("k", "v", "ver", "d"), "k", "ver", "d")
+      Seq((1L, "b", 11L, "d1")).toDF("k", "v", "ver", "d"), "k", "ver", Seq("d"))
     intercept[NoCommittedVersion](Warehouse.readVersion(spark, path, 9L))
     intercept[NoCommittedVersion](Warehouse.read(spark, freshDir()))
     // a crash between vacuum's two sweep steps: the superseded batch is

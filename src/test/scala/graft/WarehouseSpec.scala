@@ -79,7 +79,7 @@ class WarehouseSpec extends AnyFunSuite {
       (6L, "f", 11L, "d3"),   // insert into existing partition
       (7L, "g", 11L, "d4"))   // insert creating a NEW partition
       .toDF("k", "payload", "ver", "part")
-    Warehouse.mergeInto(spark, path, changes, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, changes, "k", "ver", Seq("part"))
     val got = Warehouse.read(spark, path)
       .select("k", "payload", "ver", "part")
       .as[(Long, String, Long, String)].collect().sortBy(_._1).toSeq
@@ -112,7 +112,7 @@ class WarehouseSpec extends AnyFunSuite {
     val path = freshTable()
     val changes = Seq((3L, "c2", 11L, "d2"), (7L, "g", 11L, "d4"))
       .toDF("k", "payload", "ver", "part")
-    Warehouse.mergeInto(spark, path, changes, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, changes, "k", "ver", Seq("part"))
     // version 1 = the pre-merge table, cell-exact
     val v1 = Warehouse.readVersion(spark, path, 1L)
       .select("k", "payload", "ver", "part")
@@ -136,7 +136,7 @@ class WarehouseSpec extends AnyFunSuite {
   test("mergeInto ties go to the change row") {
     val path = freshTable()
     val changes = Seq((5L, "e2", 10L, "d3")).toDF("k", "payload", "ver", "part")
-    Warehouse.mergeInto(spark, path, changes, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, changes, "k", "ver", Seq("part"))
     val got = Warehouse.read(spark, path).filter(col("k") === 5)
       .select("payload").as[String].collect().toSeq
     assert(got == Seq("e2"))
@@ -147,7 +147,7 @@ class WarehouseSpec extends AnyFunSuite {
     val changes = Seq(
       (3L, "mid", 12L, "d2"), (3L, "new", 13L, "d2"), (3L, "old", 11L, "d2"))
       .toDF("k", "payload", "ver", "part")
-    Warehouse.mergeInto(spark, path, changes, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, changes, "k", "ver", Seq("part"))
     val got = Warehouse.read(spark, path).filter(col("k") === 3)
       .select("payload", "ver").as[(String, Long)].collect().toSeq
     assert(got == Seq(("new", 13L)))
@@ -163,7 +163,7 @@ class WarehouseSpec extends AnyFunSuite {
       (1L, "x", 11L, "d1", true),   // d1 fully emptied by these two...
       (2L, "x", 11L, "d1", true))   // ...must drop from the mapping
       .toDF("k", "payload", "ver", "part", "is_del")
-    Warehouse.mergeInto(spark, path, changes, "k", "ver", "part",
+    Warehouse.mergeInto(spark, path, changes, "k", "ver", Seq("part"),
       deleteCol = Some("is_del"))
     val got = Warehouse.read(spark, path)
       .select("k", "payload", "ver", "part")
@@ -179,7 +179,7 @@ class WarehouseSpec extends AnyFunSuite {
     // widening: `score` never existed; only d2 is touched
     val widen = Seq((3L, "c2", 11L, "d2", 77L))
       .toDF("k", "payload", "ver", "part", "score")
-    Warehouse.mergeInto(spark, path, widen, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, widen, "k", "ver", Seq("part"))
     val got = Warehouse.read(spark, path)
       .select("k", "payload", "score")
       .as[(Long, String, Option[Long])].collect().sortBy(_._1).toSeq
@@ -189,7 +189,7 @@ class WarehouseSpec extends AnyFunSuite {
     // narrowing attempt: a change batch WITHOUT `payload` must not
     // drop it — its winning row carries null there instead
     val narrow = Seq((4L, 12L, "d2", 88L)).toDF("k", "ver", "part", "score")
-    Warehouse.mergeInto(spark, path, narrow, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, narrow, "k", "ver", Seq("part"))
     val after = Warehouse.read(spark, path)
       .select("k", "payload", "score")
       .as[(Long, Option[String], Option[Long])].collect().sortBy(_._1).toSeq
@@ -215,7 +215,7 @@ class WarehouseSpec extends AnyFunSuite {
                                   // tie but only score differs across the widening
       (7L, "g", 11L, "d4", 7L))   // insert creating a new partition
       .toDF("k", "payload", "ver", "part", "score")
-    Warehouse.mergeInto(spark, path, changes, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, changes, "k", "ver", Seq("part"))
     val feed = Warehouse.changes(spark, path, 1L, 2L, "k")
     // physical claim: d1 never moved between the versions, so the
     // feed's plan must not read a single d1 file
@@ -236,7 +236,7 @@ class WarehouseSpec extends AnyFunSuite {
     // row-identical — the feed across it is EMPTY
     val stale = Seq((3L, "zzz", 1L, "d2", 99L))
       .toDF("k", "payload", "ver", "part", "score")
-    Warehouse.mergeInto(spark, path, stale, "k", "ver", "part")
+    Warehouse.mergeInto(spark, path, stale, "k", "ver", Seq("part"))
     assert(Warehouse.changes(spark, path, 2L, 3L, "k").count() == 0,
       "a merge that loses every race produces an empty feed")
   }
@@ -245,11 +245,11 @@ class WarehouseSpec extends AnyFunSuite {
     val path = freshTable()
     Warehouse.mergeInto(spark, path,
       Seq((3L, "c2", 11L, "d2"), (7L, "g", 11L, "d4")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.mergeInto(spark, path,
       Seq((3L, "x", 12L, "d2", true), (1L, "a2", 12L, "d1", false))
         .toDF("k", "payload", "ver", "part", "is_del"),
-      "k", "ver", "part", deleteCol = Some("is_del"))
+      "k", "ver", Seq("part"), deleteCol = Some("is_del"))
     // fold: per commit in order, delete/update/insert against a map
     val log = Warehouse.changeLog(spark, path, "k")
       .select("commit_version", "change_type", "k", "payload")
@@ -286,7 +286,7 @@ class WarehouseSpec extends AnyFunSuite {
       // rewrite — data loss)
       val widen = (201L to 400L).map(i => (i, s"w$i", 11L, "d2", i * 2))
         .toDF("k", "payload", "ver", "part", "score")
-      Warehouse.mergeInto(spark, path, widen, "k", "ver", "part")
+      Warehouse.mergeInto(spark, path, widen, "k", "ver", Seq("part"))
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     val before = Warehouse.partitionStats(spark, path)
     assert(before.forall(_._3 > 1), s"both partitions must be fragmented: $before")
@@ -306,10 +306,10 @@ class WarehouseSpec extends AnyFunSuite {
     // interleaving the single-shot mergeInto surfaces as an error
     val competing = Seq((1L, "a9", 12L, "d1")).toDF("k", "payload", "ver", "part")
     val ours = Seq((3L, "c9", 12L, "d2")).toDF("k", "payload", "ver", "part")
-    val attempts = Warehouse.mergeIntoRetryingHooked(spark, path, ours,
+    val attempts = Warehouse.mergeIntoCore(spark, path, ours,
       "k", "ver", Seq("part"), None, 3,
       attempt => () => if (attempt == 1)
-        Warehouse.mergeInto(spark, path, competing, "k", "ver", "part"))
+        Warehouse.mergeInto(spark, path, competing, "k", "ver", Seq("part")))
     assert(attempts == 2, s"one rebase expected, used $attempts attempts")
     val got = Warehouse.read(spark, path)
       .select("k", "payload").as[(Long, String)].collect().sortBy(_._1).toSeq
@@ -322,9 +322,9 @@ class WarehouseSpec extends AnyFunSuite {
     // a writer that loses EVERY attempt surfaces the race after
     // maxAttempts instead of spinning
     intercept[IllegalStateException] {
-      Warehouse.mergeIntoRetryingHooked(spark, path, ours,
+      Warehouse.mergeIntoCore(spark, path, ours,
         "k", "ver", Seq("part"), None, 2,
-        _ => () => Warehouse.mergeInto(spark, path, competing, "k", "ver", "part"))
+        _ => () => Warehouse.mergeInto(spark, path, competing, "k", "ver", Seq("part")))
     }
   }
 

@@ -35,7 +35,7 @@ class WarehouseSqlSpec extends AnyFunSuite {
     // version 3: a CoW merge so time travel has something to see
     Warehouse.mergeInto(spark, path,
       Seq((1L, "name-renamed", 11L, "d2")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     path
   }
 
@@ -122,7 +122,7 @@ class WarehouseSqlSpec extends AnyFunSuite {
     Thread.sleep(1100)
     Warehouse.mergeInto(spark, path,
       Seq((1L, "a2", 11L, "d1")).toDF("k", "payload", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     // newest
     val now = spark.sql(s"SELECT k, payload FROM graft.`$path` ORDER BY k")
       .as[(Long, String)].collect().toSeq
@@ -202,7 +202,7 @@ class WarehouseSqlSpec extends AnyFunSuite {
       .toDF("k", "name", "ver", "part"), "part")
     Warehouse.mergeIntoDelta(spark, morPath,
       Seq((1L, "a2", 11L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val mor = spark.read.format("graft-warehouse").load(morPath)
     val morRows = mor.queryExecution.optimizedPlan.stats.rowCount
     assert(morRows.isDefined && morRows.get >= BigInt(2),
@@ -218,7 +218,7 @@ class WarehouseSqlSpec extends AnyFunSuite {
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "a2", 11L, "d1", false), (3L, "x", 11L, "d2", true))
         .toDF("k", "name", "ver", "part", "is_del"),
-      "k", "ver", "part", deleteCol = Some("is_del"))
+      "k", "ver", Seq("part"), deleteCol = Some("is_del"))
     val df = spark.read.format("graft-warehouse").load(path)
     val got = df.select("k", "name").as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(got == Seq((1L, "a2"), (2L, "b")),
@@ -283,7 +283,7 @@ class WarehouseSqlSpec extends AnyFunSuite {
       .toDF("k", "name", "ver", "part"), "part")
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "fresh", 11L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val got = spark.read.format("graft-warehouse").load(path)
       .limit(10).collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("name")))
       .sortBy(_._1).toSeq

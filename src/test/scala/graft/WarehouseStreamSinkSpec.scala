@@ -98,7 +98,7 @@ class WarehouseStreamSinkSpec extends AnyFunSuite {
     // an unrelated writer commits: merge + compact
     Warehouse.mergeInto(spark, path,
       Seq((1L, "merged", 2L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.compact(spark, path, "k", 1L << 26)
     assert(Warehouse.lastTxn(spark, path, "appA").contains(5L),
       "other commits must carry the txn record forward")

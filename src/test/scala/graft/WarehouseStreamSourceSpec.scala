@@ -58,7 +58,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     val path = freshTable(Seq((1L, "base", 1L, "d1"), (2L, "keep", 1L, "d2")))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "upd", 2L, "d1"), (3L, "ins", 1L, "d1"))
-        .toDF("k", "name", "ver", "part"), "k", "ver", "part")
+        .toDF("k", "name", "ver", "part"), "k", "ver", Seq("part"))
     val ckpt = Files.createTempDirectory("graft_src_ck").toString
     val first = drain(path, ckpt)
     assert(first.size == 1, s"fresh stream must be one snapshot batch, got $first")
@@ -70,10 +70,10 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     // two more commits land; the same checkpoint gets exactly their post-images
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, "upd2", 2L, "d2")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((4L, "new", 1L, "d2")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val resumed = drain(path, ckpt)
     assert(keyNames(resumed.flatten) == Set((2L, "upd2"), (4L, "new")),
       s"resume must deliver only the new commits' post-images, got $resumed")
@@ -85,7 +85,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     (0 until 4).foreach { i =>
       Warehouse.mergeIntoDelta(spark, path,
         Seq((10L + i, s"c$i", 1L, "d1")).toDF("k", "name", "ver", "part"),
-        "k", "ver", "part")
+        "k", "ver", Seq("part"))
     } // versions 2..5
     val ckpt = Files.createTempDirectory("graft_src_ck").toString
     val batches = drain(path, ckpt, Map(
@@ -107,7 +107,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     (0 until 4).foreach { i =>
       Warehouse.mergeIntoDelta(spark, path,
         Seq((20L + i, s"b$i", 1L, "d1")).toDF("k", "name", "ver", "part"),
-        "k", "ver", "part")
+        "k", "ver", Seq("part"))
     }
     // ...and the restarted run still pages them 2 commits at a time
     val resumed = drain(path, ckpt,
@@ -193,7 +193,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     val path = freshTable(Seq((1L, "base", 1L, "d1"), (2L, "gone", 1L, "d1")))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((3L, "ins", 1L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val ckptA = Files.createTempDirectory("graft_src_ck").toString
     val ckptB = Files.createTempDirectory("graft_src_ck").toString
     assert(drain(path, ckptA).size == 1)
@@ -218,10 +218,10 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     val path = freshTable(Seq((1L, "base", 1L, "d1")))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "upd", 2L, "d1"), (2L, "ins", 1L, "d1"))
-        .toDF("k", "name", "ver", "part"), "k", "ver", "part")
+        .toDF("k", "name", "ver", "part"), "k", "ver", Seq("part"))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((3L, "late", 1L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val ckpt = Files.createTempDirectory("graft_src_ck").toString
     val feed = drain(path, ckpt, Map("readChangeFeed" -> "true")).flatten
     val tags = feed.map(r => (r.getAs[Long]("k"),
@@ -241,7 +241,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     val path = freshTable(Seq((1L, "base", 1L, "d1")))
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, "only", 1L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val ckpt = Files.createTempDirectory("graft_src_ck").toString
     val got = drain(path, ckpt, Map("startingVersion" -> "2")).flatten
     assert(keyNames(got) == Set((2L, "only")),
@@ -268,7 +268,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     // a commit lands; the SAME checkpoint now delivers it
     Warehouse.mergeIntoDelta(spark, path,
       Seq((2L, "late", 1L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     val got = drain(path, ckpt,
       Map("readChangeFeed" -> "true", "keyCol" -> "k")).flatten
     assert(got.map(r => (r.getAs[Long]("k"), r.getAs[String]("change_type")))
@@ -281,7 +281,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     for (i <- 2 to 5)
       Warehouse.mergeIntoDelta(spark, path,
         Seq((i.toLong, s"v$i", 1L, "d1")).toDF("k", "name", "ver", "part"),
-        "k", "ver", "part")
+        "k", "ver", Seq("part"))
     // reclaim history below the newest few commits
     Warehouse.compact(spark, path, "k", targetBytes = 64L << 20)
     Warehouse.vacuum(spark, path, minAgeMs = 0L)
@@ -291,7 +291,7 @@ class WarehouseStreamSourceSpec extends AnyFunSuite {
     // something diffable to deliver
     Warehouse.mergeIntoDelta(spark, path,
       Seq((9L, "fresh", 1L, "d1")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     // fresh stream without startingVersion: the default floor is the
     // first RETAINED commit (the hardcoded version-1 floor crashed
     // changeLog's retention check here — judge r17 review)

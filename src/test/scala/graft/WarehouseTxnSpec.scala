@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.Warehouse
+import graft.io.{CommitBlocked, Warehouse}
 
 /** Cross-table ATOMIC commit (round 16, judge item #6 — the warehouse
   * plane of K4's staged + single-commit multi-table load): stage every
@@ -74,12 +74,12 @@ class WarehouseTxnSpec extends AnyFunSuite {
     assert(ids(a) == Set(1L) && ids(b) == Set(10L))
     assert(Warehouse.currentVersion(spark, a) == 1L)
     // the staged slots block later writers LOUDLY, naming the marker
-    val blocked = intercept[IllegalStateException] {
+    val blocked = intercept[CommitBlocked] {
       Warehouse.append(spark, a, Seq((3L, "a3", "p1")).toDF("id", "v", "dt"))
     }
     assert(blocked.getMessage.contains("crashed cross-table transaction"),
       s"wrong error: ${blocked.getMessage}")
-    val marker = blocked.getMessage.split("marker ")(1).split("\\)")(0)
+    val marker = blocked.marker
     // recovery: abort claims the marker, drops the stages, slots free
     assert(Warehouse.abortTransaction(spark, marker, Seq(a, b)))
     Warehouse.append(spark, a, Seq((3L, "a3", "p1")).toDF("id", "v", "dt"))
@@ -100,11 +100,11 @@ class WarehouseTxnSpec extends AnyFunSuite {
         beforeFlip = () => {
           // a racing janitor aborts while the coordinator is alive:
           // the marker's create-exclusive claim decides the winner
-          val blocked = intercept[IllegalStateException] {
+          val blocked = intercept[CommitBlocked] {
             Warehouse.append(spark, a,
               Seq((9L, "x", "p1")).toDF("id", "v", "dt"))
           }
-          val marker = blocked.getMessage.split("marker ")(1).split("\\)")(0)
+          val marker = blocked.marker
           assert(Warehouse.abortTransaction(spark, marker, Seq(a, b)))
         })
     }
@@ -169,7 +169,7 @@ class WarehouseTxnSpec extends AnyFunSuite {
     // make d a KEYED delta table (records _meta)
     Warehouse.mergeIntoDelta(spark, d,
       Seq((10L, "b1v2", 2L, "p1")).toDF("id", "v", "ver", "dt"),
-      "id", "ver", "dt")
+      "id", "ver", Seq("dt"))
     assert(Warehouse.read(spark, d).select("v").as[String].collect().toSet
       == Set("b1v2"))
     var preA: Set[Long] = null
@@ -199,7 +199,7 @@ class WarehouseTxnSpec extends AnyFunSuite {
     val (a, d) = mkTables()
     Warehouse.mergeIntoDelta(spark, d,
       Seq((10L, "b1v2", 2L, "p1")).toDF("id", "v", "ver", "dt"),
-      "id", "ver", "dt")
+      "id", "ver", Seq("dt"))
     intercept[RuntimeException] {
       Warehouse.transactHooked(spark,
         Seq(
@@ -211,10 +211,10 @@ class WarehouseTxnSpec extends AnyFunSuite {
     assert(ids(a) == Set(1L))
     assert(Warehouse.read(spark, d).select("v").as[String].collect().toSet
       == Set("b1v2"))
-    val blocked = intercept[IllegalStateException] {
+    val blocked = intercept[CommitBlocked] {
       Warehouse.append(spark, a, Seq((3L, "a3", "p1")).toDF("id", "v", "dt"))
     }
-    val marker = blocked.getMessage.split("marker ")(1).split("\\)")(0)
+    val marker = blocked.marker
     assert(Warehouse.abortTransaction(spark, marker, Seq(a, d)))
     // the staged chain link is gone: the delta table still serves v2
     // and takes new keyed writes
@@ -229,7 +229,7 @@ class WarehouseTxnSpec extends AnyFunSuite {
     val (_, d) = mkTables()
     Warehouse.mergeIntoDelta(spark, d,
       Seq((10L, "b1v2", 2L, "p1")).toDF("id", "v", "ver", "dt"),
-      "id", "ver", "dt")
+      "id", "ver", Seq("dt"))
     val e = intercept[IllegalArgumentException] {
       Warehouse.transact(spark, Seq(Warehouse.TxnWrite(d,
         Seq((1L, "z", 1L, "p1")).toDF("id", "v", "ver", "dt"),
@@ -242,7 +242,7 @@ class WarehouseTxnSpec extends AnyFunSuite {
     val (a, d) = mkTables()
     Warehouse.mergeIntoDelta(spark, d,
       Seq((10L, "b1v2", 2L, "p1")).toDF("id", "v", "ver", "dt"),
-      "id", "ver", "dt")
+      "id", "ver", Seq("dt"))
     val e = intercept[IllegalArgumentException] {
       Warehouse.transactAppend(spark,
         Seq(d -> Seq((11L, "new", "p1")).toDF("id", "v", "dt")))
@@ -286,10 +286,10 @@ class WarehouseTxnSpec extends AnyFunSuite {
         Seq(a -> Seq((3L, "a3", "p1")).toDF("id", "v", "dt")),
         beforeFlip = () => throw new RuntimeException("crash"))
     }
-    val blocked = intercept[IllegalStateException] {
+    val blocked = intercept[CommitBlocked] {
       Warehouse.append(spark, a, Seq((4L, "a4", "p1")).toDF("id", "v", "dt"))
     }
-    val m = blocked.getMessage.split("marker ")(1).split("\\)")(0)
+    val m = blocked.marker
     Warehouse.abortTransaction(spark, m, Seq(a))
     assert(markers().size == 2, s"both settled markers on disk: ${markers()}")
     // a LONG retention keeps them (young markers never sweep)
@@ -310,10 +310,10 @@ class WarehouseTxnSpec extends AnyFunSuite {
           b -> Seq((20L, "b2", "p1")).toDF("id", "v", "dt")),
         beforeFlip = () => throw new RuntimeException("crash"))
     }
-    val blocked = intercept[IllegalStateException] {
+    val blocked = intercept[CommitBlocked] {
       Warehouse.append(spark, a, Seq((3L, "a3", "p1")).toDF("id", "v", "dt"))
     }
-    val marker = blocked.getMessage.split("marker ")(1).split("\\)")(0)
+    val marker = blocked.marker
     val res = spark.sql(
       s"CALL graft.system.abort_txn(marker => '$marker', tables => '$a,$b')")
       .collect()(0)

@@ -68,7 +68,7 @@ class WarehouseWriteSpec extends AnyFunSuite {
     // record merge keys with a delta commit (key 1 is odd -> lives in d2)
     Warehouse.mergeIntoDelta(spark, path,
       Seq((1L, "delta", 11L, "d2")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     Warehouse.append(spark, path,
       Seq((1L, "upserted", 12L, "d2"), (3001L, "new", 12L, "d1"))
         .toDF("k", "name", "ver", "part"))
@@ -146,7 +146,7 @@ class WarehouseWriteSpec extends AnyFunSuite {
     Warehouse.create(spark, path, baseRows, "part")
     Warehouse.mergeInto(spark, path,
       Seq((1L, "changed", 11L, "d2")).toDF("k", "name", "ver", "part"),
-      "k", "ver", "part")
+      "k", "ver", Seq("part"))
     assert(Warehouse.read(spark, path)
       .filter(col("k") === 1L).select("name").as[String].head() == "changed")
     val newV = Warehouse.restore(spark, path, 1L)
