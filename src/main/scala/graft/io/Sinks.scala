@@ -1,73 +1,139 @@
 package graft.io
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, SQLException}
 import java.util.Properties
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
+import org.apache.spark.sql.internal.SQLConf
 
 /** JDBC sink layer — the reference's entire load surface (SURVEY.md
-  * §2.2 K1–K5) re-expressed Spark-first. The reference drives
-  * SQLAlchemy/pyodbc from a single Python process; here every bulk
-  * write is a distributed `df.write.jdbc` (one connection per
-  * partition, batched inserts) and only the DDL/DELETE bracketing
-  * runs on the driver.
+  * §2.2 K1–K5) as ONE staged, single-commit [[load]]. The reference
+  * deletes and then appends outside any transaction (LAT:213-222,
+  * SER:253), so a failure mid-load leaves a target truncated, holding
+  * half a window, or half-merged. Here every bulk write is a
+  * distributed `df.write.jdbc` into a private stage table (one
+  * connection per partition, batched inserts), and one driver
+  * transaction then swaps the staged rows into every target — data
+  * never leaves the DB — and commits once.
   *
-  * Scale notes (100 TB): the writers never collect — rows flow from
-  * executor partitions straight into the DB, so load parallelism ==
-  * partition count (repartition to match the DB's ingest capacity).
-  * The K5 upsert is `foreachPartition` + JDBC batch UPDATE: Spark's
-  * partitioning replaces the reference's manual `iloc` slicing across
-  * `os.cpu_count()` threads (SER:296-301).
+  * Scale notes (100 TB): the stage writers never collect — rows flow
+  * from executor partitions straight into the DB, so load parallelism
+  * == partition count (repartition to match the DB's ingest capacity).
+  * The commit is set-based SQL inside the DB (`DELETE` +
+  * `INSERT … SELECT`), independent of the Spark cluster.
   */
 object Sinks {
 
-  /** Driver-side connection helper for the DDL/transaction brackets. */
+  /** Which target rows a [[Load]] replaces inside the commit; every
+    * staged row is then inserted.
+    */
+  sealed trait Scope
+  object Scope {
+    /** K1 (LAT:188-198): replace nothing — a plain append. */
+    case object Append extends Scope
+    /** K2 (LAT:213-222, SER:229-245): replace the whole table. */
+    case object All extends Scope
+    /** K3 (LAT:217-223): replace the rows whose `col` lies in
+      * `[lo, hi]` — dynamic partition overwrite for engines without
+      * partitioned tables.
+      */
+    final case class Range(col: String, lo: Any, hi: Any) extends Scope
+    /** K5 + K1 (SER:269-276, 284-365): the MERGE — replace the rows
+      * whose `col` value is staged, and insert the unseen keys, in one
+      * step. Rows are replaced WHOLE: the frame must carry every target
+      * column (a column it lacks is left NULL or refused by the DB) and
+      * at most one row per key.
+      */
+    final case class Keys(col: String) extends Scope
+  }
+
+  /** Load `df` into `table`, replacing the rows `scope` selects. */
+  final case class Load(df: DataFrame, table: String, scope: Scope)
+
+  /** Rows per JDBC insert batch of a stage write (pandas' `chunksize`,
+    * LAT:188-198).
+    */
+  private val BatchSize = 5000
+
+  /** Load every frame into its table as ONE transaction (K4,
+    * SER:247-282, generalised to all scopes): either every target
+    * shows its new rows or none changes.
+    *
+    *  1. Stage — distributed-append each frame into its own
+    *     `${table}_stage$i`.
+    *  2. Commit — one driver transaction runs, per load, the scope's
+    *     `DELETE` and then an `INSERT … SELECT` that maps columns BY
+    *     NAME (a positional `SELECT *` would mis-assign when the
+    *     target's column order differs from the frame's), and commits
+    *     once. A missing target is created from the frame's schema
+    *     inside the same transaction (a fresh table has nothing to
+    *     delete).
+    *  3. Clean up — the stage tables are dropped whatever happened,
+    *     a failed stage write included.
+    *
+    * @return the rows each load inserted, in `loads` order
+    */
+  def load(loads: Seq[Load], url: String, props: Properties): Seq[Long] = {
+    val params = props.asScala.toMap
+    def options(table: String) = new JdbcOptionsInWrite(url, table, params)
+    val staged = loads.zipWithIndex.map { case (l, i) => l -> s"${l.table}_stage$i" }
+    withConnection(url, props) { conn =>
+      try {
+        staged.foreach { case (l, stage) =>
+          l.df.write.mode(SaveMode.Overwrite).option("batchsize", BatchSize)
+            .jdbc(url, stage, props)
+        }
+        val missing = mutable.Set(loads.map(_.table).distinct
+          .filterNot(t => JdbcUtils.tableExists(conn, options(t))): _*)
+        conn.setAutoCommit(false)
+        try {
+          val inserted = staged.map { case (l, stage) =>
+            if (missing.remove(l.table))
+              JdbcUtils.createTable(conn, l.table, l.df.schema,
+                SQLConf.get.caseSensitiveAnalysis, options(l.table))
+            else delete(conn, l, stage)
+            val cols = l.df.columns.map(c => s""""$c"""").mkString(", ")
+            update(conn, s"INSERT INTO ${l.table} ($cols) SELECT $cols FROM $stage").toLong
+          }
+          conn.commit()
+          inserted
+        } catch {
+          case e: Throwable => conn.rollback(); throw e
+        }
+      } finally {
+        conn.setAutoCommit(true)
+        staged.foreach { case (_, stage) =>
+          try update(conn, s"DROP TABLE $stage") catch { case _: SQLException => }
+        }
+      }
+    }
+  }
+
+  /** Run the scope's `DELETE` of `l`'s target rows. */
+  private def delete(conn: Connection, l: Load, stage: String): Unit = l.scope match {
+    case Scope.Append => ()
+    case Scope.All => update(conn, s"DELETE FROM ${l.table}")
+    case Scope.Range(c, lo, hi) =>
+      update(conn, s"""DELETE FROM ${l.table} WHERE "$c" BETWEEN ? AND ?""", lo, hi)
+    case Scope.Keys(c) =>
+      update(conn, s"""DELETE FROM ${l.table} WHERE "$c" IN (SELECT "$c" FROM $stage)""")
+  }
+
+  private def update(conn: Connection, sql: String, args: Any*): Int = {
+    val st = conn.prepareStatement(sql)
+    try {
+      args.zipWithIndex.foreach { case (a, i) => st.setObject(i + 1, a) }
+      st.executeUpdate()
+    } finally st.close()
+  }
+
   private def withConnection[A](url: String, props: Properties)(f: Connection => A): A = {
     val conn = DriverManager.getConnection(url, props)
     try f(conn) finally conn.close()
-  }
-
-  /** K1 (LAT:188-198) — chunked JDBC append: pandas
-    * `to_sql(if_exists='append', chunksize=5000)` becomes a
-    * distributed append with per-connection insert batches.
-    */
-  def appendJdbc(df: DataFrame, url: String, table: String, props: Properties,
-                 batchSize: Int = 5000): Unit =
-    df.write.mode(SaveMode.Append)
-      .option("batchsize", batchSize)
-      .jdbc(url, table, props)
-
-  /** K2 (LAT:213-222, SER:229-245) — truncate-and-reload: empty the
-    * target (keeping its DDL, indexes, grants) then append the new
-    * rows. The reference issues a raw `DELETE FROM`; `TRUNCATE` is
-    * the constant-time equivalent and Spark's overwrite-with-truncate
-    * keeps the table definition intact.
-    */
-  def truncateReload(df: DataFrame, url: String, table: String, props: Properties,
-                     batchSize: Int = 5000): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("truncate", value = true)
-      .option("batchsize", batchSize)
-      .jdbc(url, table, props)
-
-  /** K3 (LAT:217-223) — ranged partition overwrite: delete the target
-    * rows in `[lo, hi]` of `rangeCol`, then append the replacement
-    * window — dynamic partition overwrite for engines without
-    * partitioned tables. The delete is one driver-side statement (set
-    * logic stays in the DB); the append is distributed.
-    */
-  def rangedOverwrite(df: DataFrame, url: String, table: String, props: Properties,
-                      rangeCol: String, lo: Any, hi: Any,
-                      batchSize: Int = 5000): Unit = {
-    withConnection(url, props) { conn =>
-      val st = conn.prepareStatement(
-        s"""DELETE FROM $table WHERE "$rangeCol" BETWEEN ? AND ?""")
-      try {
-        st.setObject(1, lo); st.setObject(2, hi); st.executeUpdate()
-      } finally st.close()
-    }
-    appendJdbc(df, url, table, props, batchSize)
   }
 
   /** K3 on files — dynamic partition overwrite: rewrite ONLY the
@@ -84,115 +150,4 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
-
-  /** K4 (SER:247-282) — multi-table load with cross-table atomicity.
-    * Spark's JDBC writer commits per partition per table, so a direct
-    * multi-table append is NOT atomic (the reference wraps its four
-    * `to_sql` calls in one `engine.begin()` — single-connection,
-    * single-node). Emulation that keeps the semantic at scale:
-    * distributed-append every frame into a fresh staging table, then
-    * one driver transaction moves all staged rows into the targets
-    * (`DELETE` + `INSERT ... SELECT`, data never leaves the DB) and
-    * commits once. Any failure before that commit leaves every target
-    * untouched.
-    *
-    * @param loads  (dataframe, targetTable) pairs
-    * @param replace true = truncate-and-reload targets inside the tx;
-    *                false = append-only
-    */
-  def multiTableTransactionalLoad(loads: Seq[(DataFrame, String)], url: String,
-                                  props: Properties, replace: Boolean,
-                                  batchSize: Int = 5000): Unit = {
-    val staged = loads.zipWithIndex.map { case ((df, target), i) =>
-      val stage = s"${target}_stage$i"
-      df.write.mode(SaveMode.Overwrite).option("batchsize", batchSize)
-        .jdbc(url, stage, props)
-      (stage, target, df.columns.toSeq)
-    }
-    withConnection(url, props) { conn =>
-      conn.setAutoCommit(false)
-      try {
-        val st = conn.createStatement()
-        try {
-          staged.foreach { case (stage, target, cols) =>
-            if (replace) st.executeUpdate(s"DELETE FROM $target")
-            // column list on BOTH sides: positional SELECT * would
-            // silently mis-assign when the pre-existing target's
-            // column order differs from the frame's
-            val colList = cols.map(c => s""""$c"""").mkString(", ")
-            st.executeUpdate(
-              s"INSERT INTO $target ($colList) SELECT $colList FROM $stage")
-          }
-        } finally st.close()
-        conn.commit()
-      } catch {
-        case e: Throwable => conn.rollback(); throw e
-      } finally {
-        // staging cleanup is best-effort housekeeping OUTSIDE the
-        // transaction — autocommit so the drops don't open a new tx
-        conn.setAutoCommit(true)
-        val st = conn.createStatement()
-        try staged.foreach { case (stage, _, _) =>
-          try st.executeUpdate(s"DROP TABLE $stage") catch { case _: Exception => }
-        } finally st.close()
-      }
-    }
-  }
-
-  /** K5 (SER:284-365) — batched keyed UPDATE (the update half of the
-    * MERGE): `UPDATE t SET c=? ... WHERE key=?` executed as JDBC
-    * batches from every partition in parallel. Replaces the
-    * reference's `iterrows` + manual thread slicing with Spark's own
-    * partitioning; `updateCols` order is pinned so the statement text
-    * is deterministic.
-    *
-    * @return number of rows the executors attempted to update
-    */
-  def updateByKey(df: DataFrame, url: String, table: String, props: Properties,
-                  keyCol: String, updateCols: Seq[String],
-                  batchSize: Int = 1000): Long = {
-    val sql = s"UPDATE $table SET " +
-      updateCols.map(c => s""""$c" = ?""").mkString(", ") +
-      s""" WHERE "$keyCol" = ?"""
-    val cols = updateCols :+ keyCol
-    val projected = df.select(cols.map(col): _*)
-    val n = projected.sparkSession.sparkContext.longAccumulator("graft.k5.updated")
-    val propMap = props.stringPropertyNames().toArray(Array.empty[String])
-      .map(k => k -> props.getProperty(k)).toMap
-    projected.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.nonEmpty) {
-        val p = new Properties()
-        propMap.foreach { case (k, v) => p.setProperty(k, v) }
-        val conn = DriverManager.getConnection(url, p)
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.prepareStatement(sql)
-          try {
-            var inBatch = 0
-            rows.foreach { row =>
-              var i = 0
-              while (i < cols.length) { st.setObject(i + 1, row.get(i)); i += 1 }
-              st.addBatch()
-              inBatch += 1
-              n.add(1L)
-              if (inBatch >= batchSize) { st.executeBatch(); inBatch = 0 }
-            }
-            if (inBatch > 0) st.executeBatch()
-            conn.commit()
-          } finally st.close()
-        } finally conn.close()
-      }
-    }
-    n.value
-  }
-
-  /** Full MERGE: K5 updates + K1 appends from a
-    * [[graft.operators.Cdc.MergeSplit]] — the reference's
-    * `insert_data` tail (SER:269-276) as one call.
-    */
-  def applyMerge(split: graft.operators.Cdc.MergeSplit, url: String, table: String,
-                 props: Properties, keyCol: String, updateCols: Seq[String]): Unit = {
-    updateByKey(split.updates, url, table, props, keyCol, updateCols)
-    appendJdbc(split.inserts, url, table, props)
-  }
 }

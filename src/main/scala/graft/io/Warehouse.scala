@@ -1205,9 +1205,28 @@ object Warehouse {
     }
   }
 
-  /** CROSS-TABLE ATOMIC COMMIT — the warehouse plane of K4's staged +
-    * single-commit multi-table load (the reference loads four tables
-    * as one unit, `New_Api_Sercom/function_app.py:256`): append each
+  /** One table's write inside a cross-table transaction:
+    * `overwrite = false` appends the frame (the K1 shape; on a KEYED
+    * delta table the stage is a `~` chain link instead — the upsert
+    * folds at read exactly as [[mergeIntoDelta]]'s would, so the
+    * streaming-lakehouse shape participates in multi-table atomic
+    * loads); `overwrite = true` replaces the table's entire contents
+    * (the reference's `if_exists='replace'` reload, K2/K4; refused on
+    * delta tables — a plain replacement batch would bypass the fold).
+    * All stages are invisible until the same marker flip.
+    */
+  final case class TxnWrite(path: String, df: DataFrame,
+                            overwrite: Boolean = false)
+
+  /** [[transact]] with every write an append; see its protocol. */
+  def transactAppend(spark: SparkSession,
+                     tables: Seq[(String, DataFrame)]): String =
+    transact(spark, tables.map { case (p, df) => TxnWrite(p, df) })
+
+  /** CROSS-TABLE ATOMIC COMMIT — the warehouse plane of
+    * [[Sinks.load]]'s staged + single-commit multi-table load (the
+    * reference loads four tables as one unit,
+    * `New_Api_Sercom/function_app.py:256`): append each
     * frame to its table so that EITHER every table exposes its new
     * version or none does, with no torn window.
     *
@@ -1237,23 +1256,6 @@ object Warehouse {
     * pay one extra marker check only while a txn commit is the newest
     * version of a table.
     */
-  /** One table's write inside a cross-table transaction:
-    * `overwrite = false` appends the frame (the K1 shape; on a KEYED
-    * delta table the stage is a `~` chain link instead — the upsert
-    * folds at read exactly as [[mergeIntoDelta]]'s would, so the
-    * streaming-lakehouse shape participates in multi-table atomic
-    * loads); `overwrite = true` replaces the table's entire contents
-    * (the reference's `if_exists='replace'` reload, K2/K4; refused on
-    * delta tables — a plain replacement batch would bypass the fold).
-    * All stages are invisible until the same marker flip.
-    */
-  final case class TxnWrite(path: String, df: DataFrame,
-                            overwrite: Boolean = false)
-
-  def transactAppend(spark: SparkSession,
-                     tables: Seq[(String, DataFrame)]): String =
-    transact(spark, tables.map { case (p, df) => TxnWrite(p, df) })
-
   def transact(spark: SparkSession, writes: Seq[TxnWrite]): String =
     transactHooked(spark, writes, () => ())
 
@@ -1632,15 +1634,6 @@ object Warehouse {
     }
   }
 
-  /** RESTORE — Delta's `RESTORE TABLE … TO VERSION AS OF n`: roll the
-    * table back to snapshot `n` by committing version n's MAPPING as
-    * the newest version. History is never rewritten — the rolled-back
-    * versions stay readable (an audit sees the restore as one more
-    * commit), data files are shared, and the cost is one manifest
-    * read plus one commit whatever the table size. Fails loudly when
-    * `n` was never committed or its files were vacuumed away. Returns
-    * the new version number.
-    */
   /** PARTITION-SPEC EVOLUTION — Iceberg's evolve-partitioning, as one
     * atomic commit: rewrite the partitions `pred` selects (default:
     * all) from their current layout into `newPartCols`, and flip the
@@ -1749,6 +1742,15 @@ object Warehouse {
     }
   }
 
+  /** RESTORE — Delta's `RESTORE TABLE … TO VERSION AS OF n`: roll the
+    * table back to snapshot `n` by committing version n's MAPPING as
+    * the newest version. History is never rewritten — the rolled-back
+    * versions stay readable (an audit sees the restore as one more
+    * commit), data files are shared, and the cost is one manifest
+    * read plus one commit whatever the table size. Fails loudly when
+    * `n` was never committed or its files were vacuumed away. Returns
+    * the new version number.
+    */
   def restore(spark: SparkSession, path: String, n: Long): Long = {
     val fs = fsOf(spark, path)
     val mapping = committedMappingAt(fs, path, n)

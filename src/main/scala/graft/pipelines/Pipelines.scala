@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import java.time.LocalDate
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -8,6 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Flatten
 import graft.io.{Sinks, Sources}
+import graft.io.Sinks.{Load, Scope}
 import graft.io.Sources.{RestRequest, Transport}
 import graft.operators.{Cdc, Relational}
 
@@ -26,13 +28,13 @@ object Pipelines {
 
   /** E1 — hourly reload (LAT:231-262): displays scan → contents scan
     * (server-ordered+limited) → per-content report fan-out → union →
-    * clean → join → surrogate key → scalar shaping → ranged partition
-    * overwrite of the fact table + truncate-reload of the content dim.
+    * clean → join → surrogate key → scalar shaping → one transaction
+    * that reloads the content dim and overwrites the fact table's
+    * report window.
     *
     * @param anchorDate the reference uses `datetime.now()` (LAT:145);
     *                   a parameter keeps runs reproducible — the
-    *                   report window is [anchor−25d, anchor+2d]
-    *                   (LAT:146-147, F14)
+    *                   report window is [[reportWindow]]
     * @return the loaded fact frame (for assertions; plans stay lazy
     *         until the sinks run them)
     */
@@ -62,11 +64,7 @@ object Pipelines {
     // A3 collect both key lists; F8 CSV param; F14 date window
     val contentIds = Sources.collectKeys(contents, "id")
     val displayCsv = Sources.keysCsv(Sources.collectKeys(displays, "id"))
-    val (lo, hi) = (s"date_sub('$anchorDate', 25)", s"date_add('$anchorDate', 2)")
-    val window = spark.range(1).select(
-      expr(lo).cast(StringType).as("lo"), expr(hi).cast(StringType).as("hi"))
-      .head()
-    val (fromDate, toDate) = (window.getString(0), window.getString(1))
+    val (fromDate, toDate) = reportWindow(anchorDate)
 
     // S3 executor-side fan-out, one request per content id
     val fanOut = Sources.fanOutScan(spark, transport, contentIds, id =>
@@ -104,14 +102,24 @@ object Pipelines {
           .withColumn("total_time", col("total_time") / 100), // F10, LAT:256
         "content_display_rules")) // P5, LAT:254-255
 
-    // K2 truncate-reload the dim; K3 ranged overwrite of the fact window
-    Sinks.truncateReload(contents, jdbcUrl, dimTable, props)
-    Sinks.rangedOverwrite(shaped, jdbcUrl, factTable, props,
-      rangeCol = "Fecha", lo = fromDate, hi = toDate)
+    // K2 reload of the dim + K3 overwrite of the fact window, committed
+    // together (the reference deletes and appends untransacted, LAT:213-222)
+    Sinks.load(Seq(
+      Load(contents, dimTable, Scope.All),
+      Load(shaped, factTable, Scope.Range("Fecha", fromDate, toDate))), jdbcUrl, props)
     // the pinned fan-out payloads are fully consumed once the sinks
     // have run — release the cache before returning
     fanOut.payloads.unpersist(blocking = false)
     shaped
+  }
+
+  /** E1's report window `[anchor−25d, anchor+2d]` as ISO dates
+    * (LAT:146-147, F14), computed on the driver; a non-ISO anchor
+    * throws instead of sending null dates to the API.
+    */
+  def reportWindow(anchorDate: String): (String, String) = {
+    val anchor = LocalDate.parse(anchorDate)
+    (anchor.minusDays(25).toString, anchor.plusDays(2).toString)
   }
 
   /** Result of the E2 run, exposed for assertions. */
@@ -159,8 +167,8 @@ object Pipelines {
 
   /** E2 — 3-hourly incremental merge (SER:27-66): concurrent task +
     * element extraction → flatten/shape → JDBC snapshot probe → CDC
-    * split → transactional dimension reload + keyed merge into the
-    * task table.
+    * split → one transaction that reloads the dimensions and merges
+    * the changed tasks into the task table.
     */
   def runE2(spark: SparkSession, transport: Transport, apiBase: String,
             jdbcUrl: String, props: Properties,
@@ -185,8 +193,8 @@ object Pipelines {
 
     // S6 snapshot scan (projection pushed into the DB) + J2/J3 split.
     // The snapshot is PINNED (cached + materialized) before any sink
-    // runs: the merge writes into the very table being probed, and a
-    // lazy re-scan mid-merge would see its own writes (the reference
+    // runs: the load writes into the very table being probed, and a
+    // lazy re-scan after it would see its own writes (the reference
     // reads the snapshot eagerly once, SER:211). The pinned frame is
     // (key, version) only — at a billion target rows that is ~16 B/row
     // of cluster cache, the cheap end of the memory budget.
@@ -195,14 +203,15 @@ object Pipelines {
     snapshot.count()
     val split = Cdc.mergeSplit(tasks, snapshot, "id", "updated_at")
 
-    // K2-inside-K4: transactional truncate-reload of the three dims
-    // (the reference deletes OUTSIDE its tx, SER:253 — bug not ported)
-    Sinks.multiTableTransactionalLoad(Seq(
-      turns -> "turn_tbl", projects -> "project_tbl", elements -> "element_tbl"),
-      jdbcUrl, props, replace = true)
-    // K5 updates + K1 inserts into the task table
-    Sinks.applyMerge(split, jdbcUrl, taskTable, props,
-      keyCol = "id", updateCols = tasks.columns.filterNot(_ == "id").toSeq)
+    // K2 reload of the three dims + K5/K1 merge of the changed tasks,
+    // one transaction (the reference deletes OUTSIDE its tx, SER:253 —
+    // bug not ported)
+    Sinks.load(Seq(
+      Load(turns, "turn_tbl", Scope.All),
+      Load(projects, "project_tbl", Scope.All),
+      Load(elements, "element_tbl", Scope.All),
+      Load(split.updates.unionByName(split.inserts), taskTable, Scope.Keys("id"))),
+      jdbcUrl, props)
     // the snapshot pin deliberately outlives this call: the returned
     // split frames reference it lazily, and an unpersisted re-scan
     // would read the just-merged table (callers release via

@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.engine.Tables
+import graft.io.Sinks
+import graft.io.Sinks.{Load, Scope}
 import graft.streaming.Streaming
 
 /** Structured Streaming surface over the `events` table (SURVEY.md
@@ -169,7 +171,7 @@ object StreamQueries {
 
     // ST14 — streaming → JDBC warehouse refresh: a complete-mode
     // per-user aggregation drained through `foreachBatch` into Derby
-    // with K2's truncate-and-reload — the idempotent-refresh loop the
+    // with a whole-table reload (K2) — the idempotent-refresh loop the
     // runForeachBatch contract promises (every micro-batch rewrites
     // the target with the aggregation-so-far, so the final table is
     // the batch answer NO MATTER how the source split into
@@ -185,7 +187,7 @@ object StreamQueries {
           "complete") { df =>
           df.groupBy("user_id").agg(count(lit(1)).as("n_events"))
         } { (batch, _) =>
-          graft.io.Sinks.truncateReload(batch, url, "st14_totals", props)
+          Sinks.load(Seq(Load(batch, "st14_totals", Scope.All)), url, props)
         }
         s.read.jdbc(url, "st14_totals", props)
           .select(col("user_id"), col("n_events"))
@@ -199,14 +201,14 @@ object StreamQueries {
     // pre-Jan-21 latest-event-per-user snapshot (K2), then the
     // post-cutoff changes stream in and every micro-batch MERGES:
     // per-key latest of the batch → J2/J3 mergeSplit against the live
-    // warehouse (key, version) snapshot → K5 batched UPDATEs for
-    // newer versions + K1 INSERTs for unseen keys. st14 is the
-    // truncate-and-reload refresh; this is the incremental-merge
-    // sibling — per-batch sink work scales with the batch's keys, not
-    // the dimension. The version is epoch-micros (BIGINT end to end,
-    // so the Derby round trip and the compare are exact), ties inside
-    // a batch resolve by the (ts, event_id) struct argmax — the same
-    // total order the oracle replays. End state = latest event per
+    // warehouse (key, version) snapshot → one keyed load (K5 + K1)
+    // that replaces the newer versions and inserts unseen keys in one
+    // transaction. st14 is the whole-table refresh; this is the
+    // incremental-merge sibling — per-batch sink work scales with the
+    // batch's keys, not the dimension. The version is epoch-micros
+    // (BIGINT end to end, so the Derby round trip and the compare are
+    // exact), ties inside a batch resolve by the (ts, event_id) struct
+    // argmax — the same total order the oracle replays. End state = latest event per
     // user over ALL events: pre-only users survive from the seed,
     // changed users update (a post-cutoff version is always strictly
     // newer), new users insert — checked cell-for-cell through the
@@ -226,7 +228,7 @@ object StreamQueries {
         val pre = Tables.events(s, d).filter(col("ts") < cutoff)
           .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             col("event_id"), col("value"))
-        graft.io.Sinks.truncateReload(latest(pre), url, table, props)
+        Sinks.load(Seq(Load(latest(pre), table, Scope.All)), url, props)
         graft.streaming.Streaming.runForeachBatch(s, s"$d/events.parquet",
           "append") { raw =>
           val withTs =
@@ -242,9 +244,8 @@ object StreamQueries {
             .select(col("user_id"), col("ts_us"))
           val split = graft.operators.Cdc.mergeSplit(delta, snap,
             "user_id", "ts_us")
-          graft.io.Sinks.applyMerge(split, url, table, props,
-            keyCol = "user_id",
-            updateCols = Seq("ts_us", "last_event_id", "last_value"))
+          Sinks.load(Seq(Load(split.updates.unionByName(split.inserts), table,
+            Scope.Keys("user_id"))), url, props)
         }
         s.read.jdbc(url, table, props)
           .select(col("user_id"), col("last_event_id"), col("ts_us"),

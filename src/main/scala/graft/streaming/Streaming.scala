@@ -176,10 +176,10 @@ object Streaming {
   /** Drain a streaming transform into an arbitrary batch sink via
     * `foreachBatch` — the production shape for streaming loads into
     * JDBC/warehouse targets (each micro-batch calls `batchFn` with a
-    * normal DataFrame, so the K1–K5 sinks compose unchanged; e.g.
-    * complete-mode agg + truncate-reload gives idempotent refresh,
-    * update mode + [[graft.io.Sinks.updateByKey]] gives streaming
-    * upsert).
+    * normal DataFrame, so [[graft.io.Sinks.load]] composes unchanged;
+    * e.g. complete-mode agg + a `Scope.All` load gives idempotent
+    * refresh, update mode + a `Scope.Keys` load gives streaming
+    * upsert, each batch committed once).
     *
     * @param checkpoint optional durable checkpoint dir: pass the SAME
     *                    location across restarts and the query resumes

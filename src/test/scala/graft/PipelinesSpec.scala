@@ -127,25 +127,30 @@ class PipelinesSpec extends AnyFunSuite {
   private def readTable(table: String) =
     spark.read.option("pushDownPredicate", "false").jdbc(url, table, props)
 
-  test("E1: fan-out union join shape → ranged overwrite; failed key lands in accumulator") {
-    // pre-create the fact table (the reference loads into existing
-    // warehouse DDL) with one in-window row (must be replaced) and
-    // one out-of-window row (must survive)
+  /** Pre-create an E1 fact table (the reference loads into existing
+    * warehouse DDL) with one in-window row (must be replaced) and one
+    * out-of-window row (must survive).
+    */
+  private def createFactTable(table: String): Unit = {
     val conn = DriverManager.getConnection(url, props)
     try {
       val st = conn.createStatement()
       st.executeUpdate(
-        """CREATE TABLE report_fact (
+        s"""CREATE TABLE $table (
           |"content_key" BIGINT, "display_key" BIGINT, "content" BIGINT,
           |"display" BIGINT, "shows" BIGINT, "total_time" DOUBLE,
           |"Fecha" VARCHAR(10), "impacts" BIGINT, "extra_metric" BIGINT,
           |"content_name" VARCHAR(64), "arch" VARCHAR(80), "sk" VARCHAR(64))""".stripMargin)
       st.executeUpdate(
-        """INSERT INTO report_fact VALUES
+        s"""INSERT INTO $table VALUES
           |(1, 1, 1, 1, 0, 0.0, '2025-05-01', 0, 0, 'stale-in-window', '', 'x'),
           |(2, 2, 2, 2, 0, 0.0, '2024-01-01', 0, 0, 'old-out-of-window', '', 'y')""".stripMargin)
       st.close()
     } finally conn.close()
+  }
+
+  test("E1: fan-out union join shape → ranged overwrite; failed key lands in accumulator") {
+    createFactTable("report_fact")
 
     val shaped = Pipelines.runE1(spark, new LatinadTransport(), "https://api.test",
       url, props, anchorDate = "2025-05-19")
@@ -178,6 +183,33 @@ class PipelinesSpec extends AnyFunSuite {
         params = Map("content_id" -> id.toString)))
     assert(fanOut.payloads.count() == 2)
     assert(fanOut.failedKeys.value.toArray.toSeq == Seq(9003L))
+  }
+
+  test("E1 re-run for the same anchorDate reproduces the dim and fact tables exactly") {
+    // the dim does not exist yet: the first run's load creates it
+    createFactTable("rerun_fact")
+    def runOnce(): (Seq[String], Seq[String]) = {
+      Pipelines.runE1(spark, new LatinadTransport(), "https://api.test", url, props,
+        anchorDate = "2025-05-19", factTable = "rerun_fact", dimTable = "rerun_dim")
+      def rows(t: String) = readTable(t).collect().map(_.toString).toSeq.sorted
+      (rows("rerun_dim"), rows("rerun_fact"))
+    }
+    val first = runOnce()
+    assert(first._1.size == 3 && first._2.size == 4)
+    assert(runOnce() == first)
+  }
+
+  test("E1's report window from java.time equals Spark's date_sub/date_add") {
+    // leap day, year boundary and month ends
+    for (anchor <- Seq("2025-05-19", "2024-03-01", "2025-01-10", "2025-03-31")) {
+      val expected = spark.range(1).select(
+        date_sub(lit(anchor), 25).cast("string"), date_add(lit(anchor), 2).cast("string"))
+        .as[(String, String)].head()
+      assert(Pipelines.reportWindow(anchor) == expected, anchor)
+    }
+    assert(Pipelines.reportWindow("2024-03-01") == ("2024-02-05", "2024-03-03"))
+    // a non-ISO anchor fails on the driver instead of becoming null dates
+    intercept[java.time.format.DateTimeParseException](Pipelines.reportWindow("19/05/2025"))
   }
 
   test("fan-out retries transient failures; only permanently-failing keys accumulate") {

@@ -60,8 +60,9 @@ class StreamingSpec extends AnyFunSuite {
     Streaming.runForeachBatch(spark, dataPath, "complete") { df =>
       df.groupBy().agg(count(lit(1)).as("n"), sum("v").as("total"))
     } { (batch, _) =>
-      // complete mode + truncate-reload = idempotent refresh per batch
-      graft.io.Sinks.truncateReload(batch, url, "stream_agg", props)
+      // complete mode + whole-table reload = idempotent refresh per batch
+      graft.io.Sinks.load(Seq(graft.io.Sinks.Load(batch, "stream_agg",
+        graft.io.Sinks.Scope.All)), url, props)
     }
     val got = spark.read.jdbc(url, "stream_agg", props)
       .as[(Long, Long)].collect().toSeq
