@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Shared local-session factory for the repo's mains and tests.
@@ -12,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   *    nanos as long + an explicit convert in [[Tables.events]] keeps
   *    the read vectorized),
   *  - shuffle partitions sized to the local core count rather than the
-  *    200 default (on a real cluster this would be AQE-advised).
+  *    200 default (on a real cluster this would be AQE-advised),
+  *  - [[ForkFreeLocalFileSystem]] as the `file:` filesystem, unless the
+  *    caller's SparkConf already names one ([[fileSystemFor]]).
   */
 object Sessions {
 
@@ -75,9 +78,22 @@ object Sessions {
       exp.extraStrategies ++= Seq(new org.apache.spark.sql.graft.ProbedDimStrategy)
   }
 
+  /** The SparkConf key that names the `file:` filesystem. */
+  private[graft] val FileImplKey = "spark.hadoop.fs.file.impl"
+
+  /** The `file:` filesystem of a session built over `conf`: the one
+    * `conf` already names (a `spark.*` system property or a
+    * `spark-submit --conf`), otherwise [[ForkFreeLocalFileSystem]].
+    * Hadoop caches one filesystem per scheme per process, so the
+    * setting has to be in the conf the SparkContext starts from.
+    */
+  private[graft] def fileSystemFor(conf: SparkConf): String =
+    conf.get(FileImplKey, classOf[ForkFreeLocalFileSystem].getName)
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(FileImplKey, fileSystemFor(new SparkConf()))
       // engine extensions: native expressions (cosine_sim) for the
       // Column API and SQL
       .withExtensions(new graft.expressions.GraftExtensions)

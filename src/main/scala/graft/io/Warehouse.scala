@@ -473,7 +473,7 @@ object Warehouse {
     */
   @volatile private[graft] var primitiveOverride: Option[CommitPrimitive] = None
 
-  private def primitiveFor(fs: FileSystem): CommitPrimitive =
+  private[graft] def primitiveFor(fs: FileSystem): CommitPrimitive =
     primitiveOverride.getOrElse((
       // not every FileSystem implements getScheme (it may throw)
       try fs.getScheme catch { case _: UnsupportedOperationException => "" }
@@ -1906,20 +1906,9 @@ object Warehouse {
   private def parquetRowsUnder(spark: SparkSession, fs: FileSystem,
                                dir: HPath): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    var total = 0L
     fs.listStatus(dir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .foreach { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            f.getPath, conf))
-        try {
-          val blocks = reader.getFooter.getBlocks
-          var i = 0
-          while (i < blocks.size()) { total += blocks.get(i).getRowCount; i += 1 }
-        } finally reader.close()
-      }
-    total
+      .map(f => ParquetFooters.rowCount(conf, f.getPath)).sum
   }
 
   /** ROW-LEVEL DELETE, merge-on-read via DELETION VECTORS — the
@@ -3262,35 +3251,36 @@ object Warehouse {
       def typeOf(c: String) = tblSchema.fields.find(_.name == c).get.dataType
       // evaluate every source-side expression over the source ONCE;
       // the computed columns carry unique names so the join below is
-      // unambiguous whatever the source's own columns are called
+      // unambiguous whatever the source's own columns are called.
+      // They are added in one projection (one analysis of the plan); a
+      // name assigned twice keeps its first position and last value,
+      // as successive withColumn calls would.
       val keyCols = sourceKeys.indices.map(i => s"_gm_key$i")
-      var src = sourceKeys.zip(keyCols).foldLeft(source) {
-        case (d, (k, n)) => d.withColumn(n, k)
-      }.withColumn("_gm_m", lit(true))
+      val computed = scala.collection.mutable.LinkedHashMap[String, Column]()
+      keyCols.zip(sourceKeys).foreach { case (n, k) => computed(n) = k }
+      computed("_gm_m") = lit(true)
+      def assigned(c: String, value: Column) =
+        if (newCols.contains(c)) value else value.cast(typeOf(c))
       matched.zipWithIndex.foreach { case ((cond, assigns), i) =>
         // pair-level conditions/values compare against the stored row,
         // so they evaluate POST-join (below); source-only ones here
         if (!pairLevel(i))
-          src = src.withColumn(s"_gm_c$i",
-            coalesce(cond.getOrElse(lit(true)), lit(false)))
+          computed(s"_gm_c$i") = coalesce(cond.getOrElse(lit(true)), lit(false))
         if (!pairValues(i))
           assigns.getOrElse(Nil).foreach { case (c, value) =>
-            src = src.withColumn(s"_gm_u${i}_$c",
-              if (newCols.contains(c)) value else value.cast(typeOf(c)))
+            computed(s"_gm_u${i}_$c") = assigned(c, value)
           }
       }
       notMatched.zipWithIndex.foreach { case ((cond, assigns), j) =>
-        src = src.withColumn(s"_gm_ic$j",
-          coalesce(cond.getOrElse(lit(true)), lit(false)))
-        assigns.foreach { case (c, value) =>
-          src = src.withColumn(s"_gm_i${j}_$c",
-            if (newCols.contains(c)) value else value.cast(typeOf(c)))
-        }
+        computed(s"_gm_ic$j") = coalesce(cond.getOrElse(lit(true)), lit(false))
+        assigns.foreach { case (c, value) => computed(s"_gm_i${j}_$c") = assigned(c, value) }
       }
+      val enriched = source.withColumns(scala.collection.immutable.ListMap.from(computed))
       // first-applicable INSERT arm per not-matched source row; -1 =
       // no arm applies (the row is ignored, like an unmatched base row)
-      if (notMatched.nonEmpty)
-        src = src.withColumn("_gm_iact",
+      val src =
+        if (notMatched.isEmpty) enriched
+        else enriched.withColumn("_gm_iact",
           notMatched.indices.foldLeft(when(lit(false), lit(-1))) {
             (w, j) => w.when(col(s"_gm_ic$j"), lit(j))
           }.otherwise(lit(-1)))
@@ -4000,17 +3990,7 @@ object Warehouse {
       if (files.length > maxFiles) None
       else {
         val conf = spark.sparkContext.hadoopConfiguration
-        var total = 0L
-        files.foreach { f =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-          try {
-            val blocks = reader.getFooter.getBlocks
-            var i = 0
-            while (i < blocks.size()) { total += blocks.get(i).getRowCount; i += 1 }
-          } finally reader.close()
-        }
-        Some(total)
+        Some(files.map(ParquetFooters.rowCount(conf, _)).sum)
       }
     } catch { case _: java.io.IOException => None }
   }
@@ -4503,58 +4483,54 @@ object Warehouse {
     */
   private def minMaxOf(conf: org.apache.hadoop.conf.Configuration,
                        file: HPath, statsCols: Set[String]): Map[String, Stat] = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      val acc = scala.collection.mutable.Map[String, Stat]()
-      // a column with incomplete/unsupported stats in ANY row group is
-      // unusable for the whole file — pruning must see every row
-      val dead = scala.collection.mutable.Set[String]()
-      val blocks = reader.getFooter.getBlocks
-      var i = 0
-      while (i < blocks.size()) {
-        val cols = blocks.get(i).getColumns
-        var j = 0
-        while (j < cols.size()) {
-          val c = cols.get(j)
-          val name = c.getPath.toDotString
-          if (statsCols.contains(name) && !dead.contains(name)) {
-            val st = c.getStatistics
-            val stat: Option[Stat] =
-              if (st == null || st.isEmpty || !st.hasNonNullValue) None
-              else (st.genericGetMin, st.genericGetMax) match {
-                case (a: java.lang.Long, b: java.lang.Long) =>
-                  Some(LongStat(a.longValue, b.longValue))
-                case (a: java.lang.Integer, b: java.lang.Integer) =>
-                  Some(LongStat(a.longValue, b.longValue))
-                case (a: org.apache.parquet.io.api.Binary,
-                      b: org.apache.parquet.io.api.Binary) =>
-                  Some(StrStat(a.toStringUsingUTF8, b.toStringUsingUTF8))
-                case _ => None
-              }
-            (stat, acc.get(name)) match {
-              case (Some(s), None) => acc(name) = s
-              case (Some(LongStat(l2, h2)), Some(LongStat(l1, h1))) =>
-                acc(name) = LongStat(math.min(l1, l2), math.max(h1, h2))
-              case (Some(StrStat(l2, h2)), Some(StrStat(l1, h1))) =>
-                // merge row groups in UTF-8 BYTE order — the order
-                // parquet recorded the per-group stats in and the
-                // order StrBound.intersects prunes with; a UTF-16
-                // merge could record a non-extremal file min/max and
-                // prune a file holding matching rows
-                acc(name) = StrStat(
-                  if (byteCmp(l1, l2) <= 0) l1 else l2,
-                  if (byteCmp(h1, h2) >= 0) h1 else h2)
-              case _ =>
-                dead += name; acc -= name
+    val acc = scala.collection.mutable.Map[String, Stat]()
+    // a column with incomplete/unsupported stats in ANY row group is
+    // unusable for the whole file — pruning must see every row
+    val dead = scala.collection.mutable.Set[String]()
+    val blocks = ParquetFooters.footer(conf, file).getBlocks
+    var i = 0
+    while (i < blocks.size()) {
+      val cols = blocks.get(i).getColumns
+      var j = 0
+      while (j < cols.size()) {
+        val c = cols.get(j)
+        val name = c.getPath.toDotString
+        if (statsCols.contains(name) && !dead.contains(name)) {
+          val st = c.getStatistics
+          val stat: Option[Stat] =
+            if (st == null || st.isEmpty || !st.hasNonNullValue) None
+            else (st.genericGetMin, st.genericGetMax) match {
+              case (a: java.lang.Long, b: java.lang.Long) =>
+                Some(LongStat(a.longValue, b.longValue))
+              case (a: java.lang.Integer, b: java.lang.Integer) =>
+                Some(LongStat(a.longValue, b.longValue))
+              case (a: org.apache.parquet.io.api.Binary,
+                    b: org.apache.parquet.io.api.Binary) =>
+                Some(StrStat(a.toStringUsingUTF8, b.toStringUsingUTF8))
+              case _ => None
             }
+          (stat, acc.get(name)) match {
+            case (Some(s), None) => acc(name) = s
+            case (Some(LongStat(l2, h2)), Some(LongStat(l1, h1))) =>
+              acc(name) = LongStat(math.min(l1, l2), math.max(h1, h2))
+            case (Some(StrStat(l2, h2)), Some(StrStat(l1, h1))) =>
+              // merge row groups in UTF-8 BYTE order — the order
+              // parquet recorded the per-group stats in and the
+              // order StrBound.intersects prunes with; a UTF-16
+              // merge could record a non-extremal file min/max and
+              // prune a file holding matching rows
+              acc(name) = StrStat(
+                if (byteCmp(l1, l2) <= 0) l1 else l2,
+                if (byteCmp(h1, h2) >= 0) h1 else h2)
+            case _ =>
+              dead += name; acc -= name
           }
-          j += 1
         }
-        i += 1
+        j += 1
       }
-      acc.toMap
-    } finally reader.close()
+      i += 1
+    }
+    acc.toMap
   }
 
   private val BloomHeader = "graft-bloom-v1"
@@ -4901,14 +4877,7 @@ object Warehouse {
     val it = files.iterator
     while (acc < target && it.hasNext) {
       val f = it.next(); kept += f
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new HPath(f), conf))
-      try {
-        val blocks = reader.getFooter.getBlocks
-        var i = 0
-        while (i < blocks.size()) { acc += blocks.get(i).getRowCount; i += 1 }
-      } finally reader.close()
+      acc += ParquetFooters.rowCount(conf, new HPath(f))
     }
     kept.toSeq
   }

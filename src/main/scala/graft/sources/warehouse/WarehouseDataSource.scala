@@ -295,72 +295,68 @@ object WarehouseDataSource {
       case MinAgg(c, _) => c
       case MaxAgg(c, _) => c
     }.toSet
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks
-      var rowCount = 0L
-      val nulls = scala.collection.mutable.Map[String, Long]()
-      val mins = scala.collection.mutable.Map[String, Any]()
-      val maxs = scala.collection.mutable.Map[String, Any]()
-      val present = scala.collection.mutable.Set[String]()
-      var usable = true
-      var i = 0
-      while (i < blocks.size() && usable) {
-        val block = blocks.get(i)
-        rowCount += block.getRowCount
-        val cols = block.getColumns
-        var j = 0
-        while (j < cols.size() && usable) {
-          val c = cols.get(j)
-          val name = c.getPath.toDotString
-          if (needNulls.contains(name) || needMinMax.contains(name)) {
-            present += name
-            val st = c.getStatistics
-            if (needNulls.contains(name)) {
-              if (st == null || !st.isNumNullsSet || st.getNumNulls < 0)
-                usable = false
-              else nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
-            }
-            if (usable && needMinMax.contains(name)) {
-              // a chunk PROVEN all-null (null count == value count)
-              // contributes nothing; anything short of that proof, or
-              // missing/partial stats, poisons the whole file
-              if (st == null || st.isEmpty ||
-                  (!st.hasNonNullValue &&
-                    !(st.isNumNullsSet && st.getNumNulls == c.getValueCount)))
-                usable = false
-              else if (st.hasNonNullValue)
-                (st.genericGetMin, st.genericGetMax) match {
-                  case (a: java.lang.Long, b: java.lang.Long) =>
-                    mins(name) = mins.get(name).fold(a.longValue)(
-                      m => math.min(m.asInstanceOf[Long], a.longValue))
-                    maxs(name) = maxs.get(name).fold(b.longValue)(
-                      m => math.max(m.asInstanceOf[Long], b.longValue))
-                  case (a: java.lang.Integer, b: java.lang.Integer) =>
-                    mins(name) = mins.get(name).fold(a.longValue)(
-                      m => math.min(m.asInstanceOf[Long], a.longValue))
-                    maxs(name) = maxs.get(name).fold(b.longValue)(
-                      m => math.max(m.asInstanceOf[Long], b.longValue))
-                  case _ => usable = false
-                }
-            }
+    val blocks = org.apache.spark.sql.graft.ParquetFooters.footer(conf,
+      new org.apache.hadoop.fs.Path(file)).getBlocks
+    var rowCount = 0L
+    val nulls = scala.collection.mutable.Map[String, Long]()
+    val mins = scala.collection.mutable.Map[String, Any]()
+    val maxs = scala.collection.mutable.Map[String, Any]()
+    val present = scala.collection.mutable.Set[String]()
+    var usable = true
+    var i = 0
+    while (i < blocks.size() && usable) {
+      val block = blocks.get(i)
+      rowCount += block.getRowCount
+      val cols = block.getColumns
+      var j = 0
+      while (j < cols.size() && usable) {
+        val c = cols.get(j)
+        val name = c.getPath.toDotString
+        if (needNulls.contains(name) || needMinMax.contains(name)) {
+          present += name
+          val st = c.getStatistics
+          if (needNulls.contains(name)) {
+            if (st == null || !st.isNumNullsSet || st.getNumNulls < 0)
+              usable = false
+            else nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
           }
-          j += 1
+          if (usable && needMinMax.contains(name)) {
+            // a chunk PROVEN all-null (null count == value count)
+            // contributes nothing; anything short of that proof, or
+            // missing/partial stats, poisons the whole file
+            if (st == null || st.isEmpty ||
+                (!st.hasNonNullValue &&
+                  !(st.isNumNullsSet && st.getNumNulls == c.getValueCount)))
+              usable = false
+            else if (st.hasNonNullValue)
+              (st.genericGetMin, st.genericGetMax) match {
+                case (a: java.lang.Long, b: java.lang.Long) =>
+                  mins(name) = mins.get(name).fold(a.longValue)(
+                    m => math.min(m.asInstanceOf[Long], a.longValue))
+                  maxs(name) = maxs.get(name).fold(b.longValue)(
+                    m => math.max(m.asInstanceOf[Long], b.longValue))
+                case (a: java.lang.Integer, b: java.lang.Integer) =>
+                  mins(name) = mins.get(name).fold(a.longValue)(
+                    m => math.min(m.asInstanceOf[Long], a.longValue))
+                  maxs(name) = maxs.get(name).fold(b.longValue)(
+                    m => math.max(m.asInstanceOf[Long], b.longValue))
+                case _ => usable = false
+              }
+          }
         }
-        i += 1
+        j += 1
       }
-      if (!usable) None
-      else Some(aggs.map {
-        case CountStarAgg => rowCount
-        case CountColAgg(c) =>
-          if (!present.contains(c)) 0L // absent column: every row null
-          else rowCount - nulls.getOrElse(c, 0L)
-        case MinAgg(c, t) => typedStat(mins.get(c), t)
-        case MaxAgg(c, t) => typedStat(maxs.get(c), t)
-      })
-    } finally reader.close()
+      i += 1
+    }
+    if (!usable) None
+    else Some(aggs.map {
+      case CountStarAgg => rowCount
+      case CountColAgg(c) =>
+        if (!present.contains(c)) 0L // absent column: every row null
+        else rowCount - nulls.getOrElse(c, 0L)
+      case MinAgg(c, t) => typedStat(mins.get(c), t)
+      case MaxAgg(c, t) => typedStat(maxs.get(c), t)
+    })
   }
 
   /** A footer long back to its catalyst-typed value (the inverse of
@@ -397,8 +393,6 @@ object WarehouseDataSource {
   private[warehouse] def exactPartials(
       conf: org.apache.hadoop.conf.Configuration, file: String,
       aggs: Seq[PushedAgg]): Seq[Any] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val needCount = aggs.collect { case CountColAgg(c) => c }.toSet
     val needMinMax = aggs.collect {
       case MinAgg(c, _) => c
@@ -406,10 +400,7 @@ object WarehouseDataSource {
     }.toSet
     val needed = needCount ++ needMinMax
     val hPath = new org.apache.hadoop.fs.Path(file)
-    val footer = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
-      try r.getFooter finally r.close()
-    }
+    val footer = org.apache.spark.sql.graft.ParquetFooters.footer(conf, hPath)
     val fileSchema = footer.getFileMetaData.getSchema
     val presentFields = fileSchema.getFields
     val selected = new java.util.ArrayList[org.apache.parquet.schema.Type]()

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import java.net.URI
-import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+
+import graft.engine.ForkFreeLocalFileSystem
 
 /** Checkpoint file manager that keeps streaming checkpoints on local
   * paths off Hadoop's shell-out paths. Installed per drain through
@@ -25,9 +24,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   * a state-store commit holds the provider lock while it waits.
   *
   * On a local path this is Spark's [[FileSystemBasedCheckpointFileManager]]
-  * over a stock [[LocalFileSystem]] (so `.crc` sidecars are written
-  * and verified exactly as before) whose raw filesystem sets modes
-  * through `java.nio` instead of `chmod`; renames go through
+  * over the engine's [[ForkFreeLocalFileSystem]] (so `.crc` sidecars
+  * are written and verified exactly as before, and modes are set
+  * through `java.nio` instead of `chmod`); renames go through
   * `File.renameTo`, which reads no link. Files, names and modes are
   * the ones the default manager writes. Any other path gets exactly
   * what Spark would pick without this class.
@@ -67,30 +66,15 @@ object LocalCheckpointFileManager {
   private def isLocal(path: Path, conf: Configuration): Boolean =
     Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
 
-  /** Spark's FileSystem-based manager over a private `LocalFileSystem`
-    * built the way `FileSystem.get` builds one, around [[NioPermissions]]. */
+  /** Spark's FileSystem-based manager over a private
+    * [[ForkFreeLocalFileSystem]], built the way `FileSystem.get` builds one. */
   private[graft] final class ForkFree(path: Path, conf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, conf) {
     override protected val fs: FileSystem = {
-      val local = new LocalFileSystem(new NioPermissions)
+      val local = new ForkFreeLocalFileSystem
       local.setConf(conf)
       local.initialize(URI.create("file:///"), conf)
       local
     }
-  }
-
-  /** `RawLocalFileSystem` whose `setPermission` is a `java.nio` call
-    * rather than a forked `chmod`. Same mode bits: Hadoop applies the
-    * umask before it calls here. A mode `java.nio` cannot express (a
-    * sticky bit) or a non-POSIX store takes Hadoop's own path.
-    */
-  private[graft] final class NioPermissions extends RawLocalFileSystem {
-    override def setPermission(p: Path, permission: FsPermission): Unit =
-      try Files.setPosixFilePermissions(pathToFile(p).toPath,
-        PosixFilePermissions.fromString(permission.toString))
-      catch {
-        case _: UnsupportedOperationException | _: IllegalArgumentException =>
-          super.setPermission(p, permission)
-      }
   }
 }

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -12,10 +14,11 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.internal.SessionStateHelper
 import org.apache.spark.sql.types.StructType
 
-/** Spark's own parquet footer reading and footer-to-schema conversion,
-  * called on the Spark driver: the warehouse resolves a scan's data
-  * schema from one footer per immutable batch, with no Spark job (a
-  * `mergeSchema` read runs one per frame built).
+/** Spark's own parquet footer reading and footer-to-schema conversion.
+  * The warehouse resolves a scan's data schema from one footer per
+  * immutable batch on the driver, with no Spark job (a `mergeSchema`
+  * read runs one per frame built), and reads row counts and column
+  * statistics from footers on the driver and in its aggregate tasks.
   */
 object ParquetFooters {
 
@@ -25,6 +28,20 @@ object ParquetFooters {
   def fileMetaData(conf: Configuration, file: FileStatus): FileMetaData =
     ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
       ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+
+  /** The whole footer of `file` (schema and row groups with their
+    * column statistics), read with the options of the caller's `conf`:
+    * one open. Parquet's reader opened without read options builds
+    * them over a fresh `Configuration`, which re-parses Hadoop's
+    * default resources for every file.
+    */
+  def footer(conf: Configuration, file: Path): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, conf),
+      ParquetMetadataConverter.NO_FILTER)
+
+  /** The row count of `file`, from its footer alone. */
+  def rowCount(conf: Configuration, file: Path): Long =
+    footer(conf, file).getBlocks.asScala.iterator.map(_.getRowCount).sum
 
   /** The Spark schema of a footer, exactly as schema inference derives
     * it: the Spark row metadata the writer stored when present,
