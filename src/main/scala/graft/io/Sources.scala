@@ -3,8 +3,10 @@ package graft.io
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorService, Executors,
+  RejectedExecutionException, ScheduledExecutorService, ThreadFactory, TimeUnit}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.spark.TaskContext
@@ -31,7 +33,11 @@ import org.apache.spark.util.CollectionAccumulator
   * in at most one wave of tasks that each run their keys' requests on
   * a task-local thread pool, so about `parallelism` requests are in
   * flight whatever the number of task slots (the reference overlaps
-  * them with aiohttp + `as_completed`, LAT:129-164). Per-key failures
+  * them with aiohttp + `as_completed`, LAT:129-164). A key waiting out
+  * its retry backoff sits on a task-local timer, not on a pool thread,
+  * so it holds no request slot, as a pending aiohttp retry holds no
+  * connection; in-flight requests stay at most `parallelism`, and each
+  * key makes at most `retries + 1` attempts with linear backoff. Per-key failures
   * are recorded in an accumulator keyed by the ACTUAL failed id (the
   * reference's `failed_ids.append(cont)` at LAT:162 records the loop
   * variable — a bug we fix, not port).
@@ -245,36 +251,26 @@ object Sources {
     * `min(keys, parallelism, defaultParallelism)` tasks, so every task
     * runs in the first wave; each task fetches its keys on a
     * task-local pool, the pools' threads summing to `parallelism`.
+    * A key makes at most `retries + 1` attempts; after failed attempt
+    * n it waits 50·n ms on the task's backoff timer, holding no pool
+    * thread, so a backing-off key never takes a request slot.
     * Failures never kill the scan: a key that fails every retry is
     * collected in an accumulator under its ACTUAL id (fixing the
     * reference's loop-variable bug at LAT:162). An interrupt does kill
     * it — a cancelled job stops fetching instead of retrying.
     *
     * @param parallelism concurrent HTTP requests, at most
+    * @param retries attempts after a key's first failed one
     */
   def fanOutScan(spark: SparkSession, transport: Transport, keys: Seq[Long],
                  reqOf: Long => RestRequest, parallelism: Int = 16,
                  retries: Int = 2): FanOut = {
     import spark.implicits._
     require(parallelism > 0, s"parallelism must be positive, got $parallelism")
+    require(retries >= 0, s"retries must be non-negative, got $retries")
     val acc = spark.sparkContext.collectionAccumulator[Long]("graft.s3.failedKeys")
     val tasks = math.max(1, Seq(keys.size, parallelism,
       spark.sparkContext.defaultParallelism).min)
-    // transient endpoint hiccups are the norm at fan-out scale:
-    // bounded linear-backoff retries per key; None = every attempt failed
-    def fetch(key: Long): Option[String] = {
-      var attempt = 0
-      var result: Option[String] = None
-      while (result.isEmpty && attempt <= retries) {
-        try result = Some(transport(reqOf(key)))
-        catch {
-          case NonFatal(_) =>
-            attempt += 1
-            if (attempt <= retries) Thread.sleep(50L * attempt)
-        }
-      }
-      result
-    }
     // PINNED: downstream consumers run several actions over the
     // payloads (schema inference, the load, any validation pass) — an
     // unpersisted plan would re-execute every HTTP request per action
@@ -285,17 +281,13 @@ object Sources {
         // thread, so the pools sum to exactly `parallelism`
         val part = TaskContext.getPartitionId()
         val threads = parallelism / tasks + (if (part < parallelism % tasks) 1 else 0)
-        // daemon: a call that ignores shutdownNow's interrupt cannot
-        // keep the executor JVM alive
-        val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
-          val t = new Thread(r, s"graft-s3-fetch-$part")
-          t.setDaemon(true)
-          t
-        })
+        val pool = Executors.newFixedThreadPool(threads, daemonThreads(s"graft-s3-fetch-$part"))
+        val timer = Executors.newSingleThreadScheduledExecutor(
+          daemonThreads(s"graft-s3-backoff-$part"))
+        val fetch = new RetryingFetch(transport, reqOf, retries, pool, timer)
+        val pending = ArrayBuffer.empty[(Long, CompletableFuture[Option[String]])]
         try {
-          val pending = it.map { key =>
-            key -> pool.submit(new Callable[Option[String]] { def call() = fetch(key) })
-          }.toVector
+          it.foreach(key => pending += key -> fetch(key))
           // joined in key order on the task thread, which must own the
           // accumulator updates: Spark ships them when the task ends
           val fetched = pending.flatMap { case (key, f) =>
@@ -304,9 +296,58 @@ object Sources {
             r.map(key -> _)
           }
           fetched.iterator
-        } finally pool.shutdownNow()
+        } finally {
+          timer.shutdownNow()
+          pool.shutdownNow()
+          // a scan that failed leaves no key unfinished
+          pending.foreach(_._2.cancel(false))
+        }
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     FanOut(payloads, acc)
+  }
+
+  /** Daemon threads: a call that ignores shutdownNow's interrupt
+    * cannot keep the executor JVM alive.
+    */
+  private def daemonThreads(name: String): ThreadFactory = (r: Runnable) => {
+    val t = new Thread(r, name)
+    t.setDaemon(true)
+    t
+  }
+
+  /** The fetches of one fan-out task. Attempts run on `pool`; a failed
+    * attempt n returns its thread at once and `timer` puts attempt
+    * n + 1 back on the pool after 50·n ms (transient endpoint hiccups
+    * are the norm at fan-out scale). Each key ends in one future:
+    * `Some(payload)`, `None` when all `retries + 1` attempts failed, or
+    * completed exceptionally by a fatal error or interrupt from the
+    * transport, or by a retry that finds the pool or timer shut down.
+    */
+  private[graft] final class RetryingFetch(transport: Transport, reqOf: Long => RestRequest,
+                                           retries: Int, pool: ExecutorService,
+                                           timer: ScheduledExecutorService) {
+    def apply(key: Long): CompletableFuture[Option[String]] = {
+      val done = new CompletableFuture[Option[String]]()
+      submit(key, 0, done)
+      done
+    }
+
+    /** Runs the attempt after `failed` failed ones on the pool. */
+    private def submit(key: Long, failed: Int, done: CompletableFuture[Option[String]]): Unit =
+      try pool.execute(() => attempt(key, failed, done))
+      catch { case e: RejectedExecutionException => done.completeExceptionally(e) }
+
+    private def attempt(key: Long, failed: Int, done: CompletableFuture[Option[String]]): Unit =
+      try done.complete(Some(transport(reqOf(key))))
+      catch {
+        case NonFatal(_) if failed < retries =>
+          val n = failed + 1
+          val retry: Runnable = () => submit(key, n, done)
+          try timer.schedule(retry, 50L * n, TimeUnit.MILLISECONDS)
+          catch { case e: RejectedExecutionException => done.completeExceptionally(e) }
+        case NonFatal(_) => done.complete(None)
+        case e: Throwable => done.completeExceptionally(e)
+      }
   }
 
   /** Parse fan-out payloads into one DataFrame (schema unioned by

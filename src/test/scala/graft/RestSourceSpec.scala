@@ -103,6 +103,43 @@ object RestSourceFixture {
     }
   }
 
+  /** [[PeakTransport]] (whose peak it shares), but keys ≡ 1 (mod 3)
+    * fail their first attempt and keys ≡ 0 (mod 3) fail every attempt;
+    * counts attempts per key.
+    */
+  object FlakyPeakTransport extends Transport {
+    val attempts = new ConcurrentHashMap[Long, AtomicInteger]()
+    def failures(k: Long): Int = (k % 3).toInt match {
+      case 0 => Int.MaxValue
+      case 1 => 1
+      case _ => 0
+    }
+    def apply(req: RestRequest): String = {
+      val payload = PeakTransport(req)
+      val k = req.params("k").toLong
+      val n = attempts.computeIfAbsent(k, _ => new AtomicInteger()).incrementAndGet()
+      if (n <= failures(k)) throw new RuntimeException(s"attempt $n of key $k failed")
+      payload
+    }
+  }
+
+  /** Takes 10 ms per call; key 1 fails its first attempt. Logs every
+    * attempt as (key, start ns, end ns).
+    */
+  object TimedTransport extends Transport {
+    val log = new ConcurrentLinkedQueue[(Long, Long, Long)]()
+    def apply(req: RestRequest): String = {
+      val k = req.params("k").toLong
+      val start = System.nanoTime()
+      try {
+        Thread.sleep(10)
+        if (k == 1L && !log.asScala.exists(_._1 == 1L))
+          throw new RuntimeException("first attempt of key 1 failed")
+        s"""[{"k": $k}]"""
+      } finally log.add((k, start, System.nanoTime()))
+    }
+  }
+
   def keyedReq(k: Long): RestRequest = RestRequest("https://api.test/k", Map("k" -> k.toString))
 
   /** Interrupts its caller on key 3 and counts calls per key. */
@@ -270,6 +307,44 @@ class RestSourceSpec extends AnyFunSuite {
     val peak8 = run(8)
     assert(peak8 <= 8 && peak8 > 4, s"peak in-flight $peak8 with parallelism 8")
     assert(run(1) == 1)
+
+    // keys backing off between attempts do not add to the in-flight count
+    import RestSourceFixture.FlakyPeakTransport
+    PeakTransport.peak.set(0)
+    FlakyPeakTransport.attempts.clear()
+    val keys = 1L to 48L
+    val fo = Sources.fanOutScan(spark, FlakyPeakTransport, keys, keyedReq, parallelism = 8)
+    val lost = keys.filter(_ % 3 == 0)
+    assert(fo.payloads.collect().sortBy(_._1).toSeq ==
+      keys.filterNot(lost.contains).map(k => k -> s"""[{"k": $k}]"""))
+    assert(PeakTransport.peak.get <= 8, s"peak in-flight ${PeakTransport.peak.get}")
+    for (k <- keys) {
+      val expected = math.min(FlakyPeakTransport.failures(k).toLong + 1, 3L)
+      assert(FlakyPeakTransport.attempts.get(k).get == expected, s"attempts of key $k")
+    }
+    assert(fo.failedKeys.value.asScala.toSeq.sorted == lost)
+  }
+
+  test("fan-out refuses a negative retry budget") {
+    val err = intercept[IllegalArgumentException](Sources.fanOutScan(spark,
+      RestSourceFixture.PeakTransport, Seq(1L), RestSourceFixture.keyedReq, retries = -1))
+    assert(err.getMessage.contains("retries must be non-negative, got -1"))
+  }
+
+  test("a key backing off frees its request slot for the next key") {
+    import RestSourceFixture.{TimedTransport, keyedReq}
+    TimedTransport.log.clear()
+    val fo = Sources.fanOutScan(spark, TimedTransport, Seq(1L, 2L), keyedReq, parallelism = 1)
+    assert(fo.payloads.collect().toSeq == Seq(1L -> """[{"k": 1}]""", 2L -> """[{"k": 2}]"""))
+    assert(fo.failedKeys.value.isEmpty)
+    val log = TimedTransport.log.asScala.toSeq.sortBy(_._2)
+    assert(log.map(_._1) == Seq(1L, 2L, 1L), log)
+    val Seq((_, _, failedEnd), (_, k2Start, _), (_, retryStart, _)) = log
+    // k2 ran while k1 waited out its backoff ...
+    assert(k2Start < retryStart)
+    // ... which is still 50 ms after the failed attempt
+    assert(retryStart - failedEnd >= 50L * 1000 * 1000,
+      s"retry ${(retryStart - failedEnd) / 1e6} ms after the failure")
   }
 
   test("an interrupted fetch fails the scan instead of retrying or losing the key") {
@@ -280,6 +355,76 @@ class RestSourceSpec extends AnyFunSuite {
     assert(err.getMessage.contains("interrupted on key 3"), err.getMessage)
     assert(fo.failedKeys.value.isEmpty)
     assert(InterruptingTransport.calls.get("3").get == 1)
+  }
+
+  /** Names of live fan-out threads once they had up to 5 s to exit
+    * (shutdownNow interrupts them; they end asynchronously).
+    */
+  private def fanOutThreads(): Set[String] = {
+    def live = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-s3-")).map(_.getName).toSet
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (live.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    live
+  }
+
+  test("no fetch or backoff thread outlives a scan") {
+    import RestSourceFixture.{FlakyPeakTransport, InterruptingTransport, PeakTransport, keyedReq}
+    Sources.fanOutScan(spark, PeakTransport, 1L to 16L, keyedReq).payloads.count()
+    assert(fanOutThreads().isEmpty, "after a clean scan")
+    FlakyPeakTransport.attempts.clear()
+    val lossy = Sources.fanOutScan(spark, FlakyPeakTransport, 1L to 12L, keyedReq)
+    lossy.payloads.count()
+    assert(lossy.failedKeys.value.size == 4)
+    assert(fanOutThreads().isEmpty, "after a scan with lost keys")
+    intercept[org.apache.spark.SparkException](
+      Sources.fanOutScan(spark, InterruptingTransport, 1L to 8L, keyedReq).payloads.count())
+    assert(fanOutThreads().isEmpty, "after an interrupted scan")
+  }
+
+  test("a retry that finds its pool or timer shut down completes its key's future") {
+    import java.util.concurrent.{ExecutionException, Executors, RejectedExecutionException,
+      ScheduledThreadPoolExecutor, TimeUnit}
+    val timerErrors = new ConcurrentLinkedQueue[Throwable]()
+    // records what each timer task threw (a scheduled task's own future keeps it)
+    class Timer extends ScheduledThreadPoolExecutor(1) {
+      override def afterExecute(r: Runnable, t: Throwable): Unit = r match {
+        case f: java.util.concurrent.Future[_] if f.isDone =>
+          try f.get() catch { case e: ExecutionException => timerErrors.add(e.getCause) }
+        case _ =>
+      }
+    }
+    def failOnce(onFailure: () => Unit): Transport = new Transport {
+      val calls = new AtomicInteger()
+      def apply(req: RestRequest): String =
+        if (calls.incrementAndGet() == 1) { onFailure(); throw new RuntimeException("down") }
+        else "[]"
+    }
+    def rejected(f: java.util.concurrent.CompletableFuture[Option[String]]) = {
+      val e = intercept[ExecutionException](f.get(5, TimeUnit.SECONDS))
+      assert(e.getCause.isInstanceOf[RejectedExecutionException], e.getCause)
+    }
+
+    // the pool shuts down while the key backs off: the retry fires on
+    // the timer, finds the pool gone and fails the key's future
+    val pool = Executors.newFixedThreadPool(1)
+    val timer = new Timer
+    try {
+      val f = new Sources.RetryingFetch(failOnce(() => pool.shutdown()),
+        RestSourceFixture.keyedReq, 2, pool, timer)(1L)
+      rejected(f)
+    } finally { pool.shutdownNow(); timer.shutdownNow() }
+    assert(timerErrors.isEmpty, timerErrors)
+
+    // the timer is already shut down when the attempt fails
+    val pool2 = Executors.newFixedThreadPool(1)
+    val timer2 = new Timer
+    try {
+      val f = new Sources.RetryingFetch(failOnce(() => timer2.shutdown()),
+        RestSourceFixture.keyedReq, 2, pool2, timer2)(1L)
+      rejected(f)
+    } finally { pool2.shutdownNow(); timer2.shutdownNow() }
+    assert(timerErrors.isEmpty, timerErrors)
   }
 
   test("pageIsEmpty handles bare arrays, envelopes, and junk") {
