@@ -81,26 +81,28 @@ object Flatten {
     * which cannot be a lazy plan node — so make the counting cheap at
     * scale with a two-phase EXACT check:
     *
-    *  1. count every column over a bounded sample (`sampleRows`): any
-    *     column with a non-null there is definitively kept — for
-    *     real-world "mostly populated" frames this resolves nearly
-    *     every column from a few thousand rows;
-    *  2. only the still-suspect columns get the exact full count, and
-    *     that scan is COLUMN-PRUNED to just those columns — at 100 TB
-    *     the full pass reads the (typically tiny) suspicious subset
-    *     of the data, not the whole table.
+    *  1. count every column, and the rows, over a bounded sample
+    *     (`sampleRows`): any column with a non-null there is
+    *     definitively kept — for real-world "mostly populated" frames
+    *     this resolves nearly every column from a few thousand rows.
+    *     A sample of fewer than `sampleRows` rows is the whole frame,
+    *     so its counts are exact and the check ends here;
+    *  2. otherwise only the still-suspect columns get the exact full
+    *     count, and that scan is COLUMN-PRUNED to just those columns —
+    *     at 100 TB the full pass reads the (typically tiny) suspicious
+    *     subset of the data, not the whole table.
     *
     * Result is identical to the single-pass exact version (same
     * oracle row); only the plan shape changes.
     */
   def dropAllNullColumns(df: DataFrame, sampleRows: Int = 10000): DataFrame = {
     val sampleCounts = df.limit(sampleRows)
-      .select(df.columns.map(c => count(col(c)).as(c)): _*).head()
+      .select(count(lit(1)) +: df.columns.map(c => count(col(c)).as(c)).toSeq: _*).head()
     val suspects = df.columns.zipWithIndex.collect {
-      case (c, i) if sampleCounts.getLong(i) == 0L => c
+      case (c, i) if sampleCounts.getLong(i + 1) == 0L => c
     }
     val allNull: Set[String] =
-      if (suspects.isEmpty) Set.empty
+      if (suspects.isEmpty || sampleCounts.getLong(0) < sampleRows) suspects.toSet
       else {
         val full = df.select(suspects.map(c => count(col(c)).as(c)).toSeq: _*).head()
         suspects.zipWithIndex.collect {

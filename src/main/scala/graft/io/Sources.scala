@@ -7,6 +7,7 @@ import java.util.concurrent.{CompletableFuture, ExecutionException, ExecutorServ
   RejectedExecutionException, ScheduledExecutorService, ThreadFactory, TimeUnit}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.TaskContext
@@ -28,19 +29,23 @@ import org.apache.spark.util.CollectionAccumulator
   *
   * Scale notes (100 TB): single-shot scans (S1/S2/S4/S5) fetch on the
   * driver — correct for the reference's bounded admin endpoints (≤11k
-  * rows). The fan-out scan (S3) is the one that multiplies: one
-  * request per key — so it fetches ON EXECUTORS via `mapPartitions`,
-  * in at most one wave of tasks that each run their keys' requests on
-  * a task-local thread pool, so about `parallelism` requests are in
-  * flight whatever the number of task slots (the reference overlaps
-  * them with aiohttp + `as_completed`, LAT:129-164). A key waiting out
-  * its retry backoff sits on a task-local timer, not on a pool thread,
-  * so it holds no request slot, as a pending aiohttp retry holds no
-  * connection; in-flight requests stay at most `parallelism`, and each
-  * key makes at most `retries + 1` attempts with linear backoff. Per-key failures
-  * are recorded in an accumulator keyed by the ACTUAL failed id (the
-  * reference's `failed_ids.append(cont)` at LAT:162 records the loop
-  * variable — a bug we fix, not port).
+  * rows). A pipeline fetches its independent scans at once
+  * ([[Sources.concurrent]]), and a scan it reads more than once is
+  * pinned on the driver ([[Sources.pinLocal]]), so it starts Spark jobs
+  * only to parse its payload once. The fan-out scan (S3) is the one
+  * that multiplies: one request per key — so it fetches ON EXECUTORS
+  * via `mapPartitions`, in at most one wave of tasks that each run
+  * their keys' requests on a task-local thread pool, so about
+  * `parallelism` requests are in flight whatever the number of task
+  * slots (the reference overlaps them with aiohttp + `as_completed`,
+  * LAT:129-164). A key waiting out its retry backoff sits on a
+  * task-local timer, not on a pool thread, so it holds no request slot,
+  * as a pending aiohttp retry holds no connection; in-flight requests
+  * stay at most `parallelism`, and each key makes at most `retries + 1`
+  * attempts with linear backoff. Per-key failures are recorded in an
+  * accumulator keyed by the ACTUAL failed id (the reference's
+  * `failed_ids.append(cont)` at LAT:162 records the loop variable — a
+  * bug we fix, not port).
   */
 object Sources {
 
@@ -368,29 +373,60 @@ object Sources {
 
   /** S7 (SER:36-56) — concurrent independent source fetches: the
     * reference's ThreadPoolExecutor becomes driver-side Futures (the
-    * fetch is the blocking part; the Spark plans they return are
-    * lazy). Results keep their names; any failure fails the batch,
-    * like `future.result()` at SER:49.
+    * fetch, and any job a source runs to parse or pin its rows, is the
+    * blocking part). Each thunk runs under the caller's job group,
+    * description, interrupt flag and job tags, so its jobs are
+    * attributed to, and cancelled with, the caller's; the pool
+    * thread's own values come back afterwards. Results keep their
+    * names; any failure fails the batch, like `future.result()` at
+    * SER:49.
     */
-  def concurrent(sources: Map[String, () => DataFrame],
+  def concurrent(spark: SparkSession, sources: Map[String, () => DataFrame],
                  timeoutSec: Int = 600): Map[String, DataFrame] = {
     import scala.concurrent.{Await, Future, ExecutionContext, blocking}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = spark.sparkContext
+    // a pool thread carries the local properties of whichever thread
+    // it was created from, not the caller's
+    def jobProps = JobProps.map(k => k -> sc.getLocalProperty(k))
+    val callers = jobProps
+    def asCaller[A](body: => A): A = {
+      val own = jobProps
+      callers.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
     // blocking: lets the global pool add threads when more sources
     // than cores wait on their transport at once
-    val futs = sources.map { case (name, thunk) => Future(blocking((name, thunk()))) }
+    val futs = sources.map { case (name, thunk) => Future(blocking((name, asCaller(thunk())))) }
     Await.result(Future.sequence(futs.toSeq), timeoutSec.seconds).toMap
   }
 
+  /** The local properties that scope a job: group, description,
+    * interrupt-on-cancel and tags (a null value is unset).
+    */
+  private val JobProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags")
+
+  /** Pin a bounded frame on the driver: its rows are collected once
+    * and come back as a local relation. Later projections and filters
+    * over it fold on the driver and collecting them runs no job, so a
+    * single-shot scan read several times parses its payload once. For
+    * driver-sized frames only (the S1/S2 scans, ≤11k rows).
+    */
+  def pinLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
   /** A3 (LAT:69,101) — collect a small key column to the driver to
-    * parameterize a fan-out. Deliberately driver-side: the key sets
-    * are bounded (≤11k by the S2 limit); anything unbounded should
-    * stay a DataFrame and join instead.
+    * parameterize a fan-out, deduplicated and sorted there.
+    * Deliberately driver-side: the key sets are bounded (≤11k by the
+    * S2 limit), so deduping them needs no shuffle, and over a
+    * [[pinLocal]] frame the collect runs no job; anything unbounded
+    * should stay a DataFrame and join instead.
     */
   def collectKeys(df: DataFrame, keyCol: String): Seq[Long] = {
     import df.sparkSession.implicits._
-    df.select(col(keyCol).cast("long")).distinct().as[Long].collect().toSeq.sorted
+    df.select(col(keyCol).cast("long")).as[Long].collect().distinct.sorted.toSeq
   }
 
   /** F8 (LAT:149) — key list → CSV request parameter. */

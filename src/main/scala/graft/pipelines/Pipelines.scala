@@ -26,11 +26,11 @@ import graft.operators.{Cdc, Relational}
   */
 object Pipelines {
 
-  /** E1 — hourly reload (LAT:231-262): displays scan → contents scan
-    * (server-ordered+limited) → per-content report fan-out → union →
-    * clean → join → surrogate key → scalar shaping → one transaction
-    * that reloads the content dim and overwrites the fact table's
-    * report window.
+  /** E1 — hourly reload (LAT:231-262): displays and contents scans
+    * (contents server-ordered+limited, pinned on the driver), fetched
+    * concurrently → per-content report fan-out → union → clean → join
+    * → surrogate key → scalar shaping → one transaction that reloads
+    * the content dim and overwrites the fact table's report window.
     *
     * @param anchorDate the reference uses `datetime.now()` (LAT:145);
     *                   a parameter keeps runs reproducible — the
@@ -42,24 +42,28 @@ object Pipelines {
             jdbcUrl: String, props: Properties, anchorDate: String,
             factTable: String = "report_fact", dimTable: String = "content_dim"): DataFrame = {
 
-    // S1 + P7 tombstone + F1/F3 flatten + P4 drop + P1/P2 projection
+    // S7: both single-shot scans fetched concurrently. The contents are
+    // read three times (keys, join side, dim load), so they are parsed
+    // once and pinned on the driver; the displays give only their keys.
+    val scans = Sources.concurrent(spark, Map(
+      "displays" -> (() => Sources.restScan(spark, transport,
+        RestRequest(s"$apiBase/displays"))),
+      // S2 ordered+limited scan + F4 rename + F5 length cap
+      "contents" -> (() => Sources.pinLocal(Flatten.renameAll(
+        Flatten.selectExisting(
+          Sources.restScanOrdered(spark, transport,
+            RestRequest(s"$apiBase/contents"), orderCol = "updated_at",
+            desc = true, limit = 11000, root = Some("data")),
+          Seq("id", "name", "type", "file", "updated_at")),
+        Map("file" -> "arch"))
+        .withColumn("arch", Relational.lengthCap(col("arch"), 50))))))
+    val contents = scans("contents")
+
+    // P7 tombstone + F1/F3 flatten + P4 drop + P1/P2 projection
     val displays = Flatten.selectExisting(
-      Flatten.dropIfExists(
-        Flatten.flatten(Sources.restScan(spark, transport,
-          RestRequest(s"$apiBase/displays"))),
-        "audience_provider_id"),
+      Flatten.dropIfExists(Flatten.flatten(scans("displays")), "audience_provider_id"),
       Seq("id", "name", "company_id", "audience_provider_name"))
       .filter(col("id") =!= 40660)
-
-    // S2 ordered+limited scan + F4 rename + F5 length cap
-    val contents = Flatten.renameAll(
-      Flatten.selectExisting(
-        Sources.restScanOrdered(spark, transport,
-          RestRequest(s"$apiBase/contents"), orderCol = "updated_at",
-          desc = true, limit = 11000, root = Some("data")),
-        Seq("id", "name", "type", "file", "updated_at")),
-      Map("file" -> "arch"))
-      .withColumn("arch", Relational.lengthCap(col("arch"), 50))
 
     // A3 collect both key lists; F8 CSV param; F14 date window
     val contentIds = Sources.collectKeys(contents, "id")
@@ -71,46 +75,47 @@ object Pipelines {
       RestRequest(s"$apiBase/report", params = Map(
         "content_id" -> id.toString, "display_id" -> displayCsv,
         "from" -> fromDate, "to" -> toDate)))
-    // A1 union-by-name across heterogeneous payloads + F1/F3 flatten
-    val reports = Flatten.flatten(
-      Sources.parseFanOut(spark, fanOut, root = Some("report")))
+    // the pinned payloads are consumed once the sinks have run; release
+    // them then, and when any stage fails
+    try {
+      // A1 union-by-name across heterogeneous payloads + F1/F3 flatten
+      val reports = Flatten.flatten(
+        Sources.parseFanOut(spark, fanOut, root = Some("report")))
 
-    // P9 null-key drop + F4 key renames + F15's fact-side projection
-    val facts = Relational.dropNullKeys(
-      Flatten.renameAll(reports, Map(
-        "content_display_display_id" -> "display_key",
-        "content_display_content_id" -> "content_key",
-        "date" -> "Fecha")),
-      Seq("display_key", "content_key"))
+      // P9 null-key drop + F4 key renames + F15's fact-side projection
+      val facts = Relational.dropNullKeys(
+        Flatten.renameAll(reports, Map(
+          "content_display_display_id" -> "display_key",
+          "content_display_content_id" -> "content_key",
+          "date" -> "Fecha")),
+        Seq("display_key", "content_key"))
 
-    // J1 multi-key left join to the content dim
-    val joined = facts.join(
-      contents.select(col("id").as("content_key"), col("name").as("content_name"),
-        col("arch")),
-      Seq("content_key"), "left")
+      // J1 multi-key left join to the content dim
+      val joined = facts.join(
+        contents.select(col("id").as("content_key"), col("name").as("content_name"),
+          col("arch")),
+        Seq("content_key"), "left")
 
-    // F7 surrogate key, P8 filter, P5 conditional drop, P6 all-null
-    // drop, F11 null fill, F10 scale
-    val shaped = Flatten.dropAllNullColumns(
-      Flatten.dropIfExists(
-        joined
-          .filter(col("Fecha") =!= "") // P8
-          .withColumn("sk", Relational.surrogateKey(
-            col("content_key"), col("display_key"), col("Fecha"))) // F7
-          .withColumn("impacts",
-            coalesce(col("impacts"), lit(0.0)).cast(LongType)) // F11, LAT:176
-          .withColumn("total_time", col("total_time") / 100), // F10, LAT:256
-        "content_display_rules")) // P5, LAT:254-255
+      // F7 surrogate key, P8 filter, P5 conditional drop, P6 all-null
+      // drop, F11 null fill, F10 scale
+      val shaped = Flatten.dropAllNullColumns(
+        Flatten.dropIfExists(
+          joined
+            .filter(col("Fecha") =!= "") // P8
+            .withColumn("sk", Relational.surrogateKey(
+              col("content_key"), col("display_key"), col("Fecha"))) // F7
+            .withColumn("impacts",
+              coalesce(col("impacts"), lit(0.0)).cast(LongType)) // F11, LAT:176
+            .withColumn("total_time", col("total_time") / 100), // F10, LAT:256
+          "content_display_rules")) // P5, LAT:254-255
 
-    // K2 reload of the dim + K3 overwrite of the fact window, committed
-    // together (the reference deletes and appends untransacted, LAT:213-222)
-    Sinks.load(Seq(
-      Load(contents, dimTable, Scope.All),
-      Load(shaped, factTable, Scope.Range("Fecha", fromDate, toDate))), jdbcUrl, props)
-    // the pinned fan-out payloads are fully consumed once the sinks
-    // have run — release the cache before returning
-    fanOut.payloads.unpersist(blocking = false)
-    shaped
+      // K2 reload of the dim + K3 overwrite of the fact window, committed
+      // together (the reference deletes and appends untransacted, LAT:213-222)
+      Sinks.load(Seq(
+        Load(contents, dimTable, Scope.All),
+        Load(shaped, factTable, Scope.Range("Fecha", fromDate, toDate))), jdbcUrl, props)
+      shaped
+    } finally fanOut.payloads.unpersist(blocking = false)
   }
 
   /** E1's report window `[anchor−25d, anchor+2d]` as ISO dates
@@ -165,31 +170,34 @@ object Pipelines {
           "longitude", "address", "deleted_at", "enabled", "external_id")),
       Seq("deleted_at"))
 
-  /** E2 — 3-hourly incremental merge (SER:27-66): concurrent task +
-    * element extraction → flatten/shape → JDBC snapshot probe → CDC
-    * split → one transaction that reloads the dimensions and merges
-    * the changed tasks into the task table.
+  /** E2 — 3-hourly incremental merge (SER:27-66): concurrent task,
+    * element, turn and project extraction → flatten/shape → JDBC
+    * snapshot probe → CDC split → one transaction that reloads the
+    * dimensions and merges the changed tasks into the task table.
     */
   def runE2(spark: SparkSession, transport: Transport, apiBase: String,
             jdbcUrl: String, props: Properties,
             taskTable: String = "task_tbl"): E2Result = {
 
-    // S7: tasks (S4, expand[] pushdown) and elements (S5) fetched
-    // concurrently; turns/projects after (SER:58-59)
-    val first = Sources.concurrent(Map(
+    // S7: all four scans fetched concurrently — tasks (S4, expand[]
+    // pushdown), elements (S5), and turns and projects, which the
+    // reference fetches after the first two (SER:58-59) although none
+    // depends on another. Each frame is read once, so none is pinned.
+    val raw = Sources.concurrent(spark, Map(
       "tasks" -> (() => Sources.restScanExpanded(spark, transport,
         RestRequest(s"$apiBase/tasks"),
         expand = Seq("created_by", "update_by", "state", "project", "team"),
         extraParams = Map("deleted" -> "false"))),
       "elements" -> (() => Sources.restScan(spark, transport,
-        RestRequest(s"$apiBase/elements")))))
-    val turnsRaw = Sources.restScan(spark, transport, RestRequest(s"$apiBase/turns"))
-    val projectsRaw = Sources.restScan(spark, transport, RestRequest(s"$apiBase/projects"))
+        RestRequest(s"$apiBase/elements"))),
+      "turns" -> (() => Sources.restScan(spark, transport, RestRequest(s"$apiBase/turns"))),
+      "projects" -> (() => Sources.restScan(spark, transport,
+        RestRequest(s"$apiBase/projects")))))
 
-    val tasks = shapeTasks(first("tasks"))
-    val turns = shapeTurns(turnsRaw)
-    val projects = shapeProjects(projectsRaw)
-    val elements = shapeElements(first("elements"))
+    val tasks = shapeTasks(raw("tasks"))
+    val turns = shapeTurns(raw("turns"))
+    val projects = shapeProjects(raw("projects"))
+    val elements = shapeElements(raw("elements"))
 
     // S6 snapshot scan (projection pushed into the DB) + J2/J3 split.
     // The snapshot is PINNED (cached + materialized) before any sink

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -81,6 +82,33 @@ class FlattenSpec extends AnyFunSuite {
                  (2L, Option.empty[String], Option.empty[String]))
       .toDF("id", "allnull", "somenull")
     assert(Flatten.dropAllNullColumns(df).columns.toSeq == Seq("id", "somenull"))
+  }
+
+  test("dropAllNullColumns decides a frame smaller than its sample from one aggregate") {
+    val df = Seq((1L, Option.empty[String], Option("k")),
+                 (2L, Option.empty[String], Option.empty[String]),
+                 (3L, Option.empty[String], Option.empty[String]))
+      .toDF("id", "allnull", "somenull")
+    val sc = spark.sparkContext
+    // the sample aggregate's jobs alone: a frame with no all-null column
+    // never needs the full pass
+    val (_, sampleJobs) = JobCounter.count(sc)(Flatten.dropAllNullColumns(df.drop("allnull")))
+    val (kept, jobs) = JobCounter.count(sc)(Flatten.dropAllNullColumns(df, sampleRows = 4))
+    assert(kept.columns.toSeq == Seq("id", "somenull"))
+    assert(jobs == sampleJobs, s"$jobs jobs, the sample aggregate alone runs $sampleJobs")
+    // a sample that holds every row but fills `sampleRows` exactly
+    // cannot tell, so the full pass still runs
+    val (full, fullJobs) = JobCounter.count(sc)(Flatten.dropAllNullColumns(df, sampleRows = 3))
+    assert(full.columns.toSeq == Seq("id", "somenull"))
+    assert(fullJobs > sampleJobs)
+  }
+
+  test("dropAllNullColumns keeps a column whose only non-null row may fall outside the sample") {
+    val df = Seq((1L, Option.empty[String]), (2L, Option("v"))).toDF("id", "late")
+    assert(Flatten.dropAllNullColumns(df, sampleRows = 1).columns.toSeq == Seq("id", "late"))
+    // ordered, the one-row sample is surely the null one
+    assert(Flatten.dropAllNullColumns(df.orderBy("id"), sampleRows = 1)
+      .columns.toSeq == Seq("id", "late"))
   }
 
   test("renameAll applies an explicit rename map (F4)") {

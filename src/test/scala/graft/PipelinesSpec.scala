@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.DriverManager
 import java.util.Properties
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -212,6 +213,16 @@ class PipelinesSpec extends AnyFunSuite {
     intercept[java.time.format.DateTimeParseException](Pipelines.reportWindow("19/05/2025"))
   }
 
+  test("an E1 run whose load fails leaves the session's cached RDDs as they were") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // no `create=true`: the load cannot connect, after the fan-out has run
+    val missingDb = s"jdbc:derby:$dbDir/no_such_db"
+    intercept[java.sql.SQLException](Pipelines.runE1(spark, new LatinadTransport(),
+      "https://api.test", missingDb, props, anchorDate = "2025-05-19"))
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("fan-out retries transient failures; only permanently-failing keys accumulate") {
     val fanOut = Sources.fanOutScan(spark, new FlakyOnceTransport(),
       Seq(1L, 2L, 3L), id => RestRequest("https://api.test/report",
@@ -331,5 +342,34 @@ class PipelinesSpec extends AnyFunSuite {
     // F4 rename reached the warehouse
     assert(readTable("project_tbl").columns.contains("CeCo"))
     assert(readTable("element_tbl").count() == 1)
+  }
+
+  test("E1 and E2 start jobs only for executor and database data, all under the caller's group") {
+    val seedJson = s"[${taskJson(1, "2025-04-01T00:00:00-04:00", "old-desc")}]"
+    Pipelines.shapeTasks(Sources.parseJson(spark, spark.createDataset(Seq(seedJson)), None))
+      .write.jdbc(url, "guard_task_tbl", props)
+    val incoming = s"[${taskJson(1, "2025-04-05T00:00:00-04:00", "new-desc")}," +
+      s"${taskJson(3, "2025-04-06T00:00:00-04:00", "brand-new")}]"
+    val sc = spark.sparkContext
+    def jobsOf(body: => Unit): Int = {
+      sc.setJobGroup("pipeline-guard", "E1/E2 job guard", interruptOnCancel = false)
+      try {
+        val (_, groups) = JobCounter.jobGroups(sc)(body)
+        // jobs started from the concurrent scans carry the group too
+        assert(groups.forall(_.contains("pipeline-guard")), groups)
+        groups.size
+      } finally sc.clearJobGroup()
+    }
+    val e1 = jobsOf(Pipelines.runE1(spark, new LatinadTransport(), "https://api.test", url,
+      props, anchorDate = "2025-05-19", factTable = "guard_fact", dimTable = "guard_dim"))
+    val e2 = jobsOf(Pipelines.runE2(spark, new SercomTransport(incoming), "https://sercom.test",
+      url, props, taskTable = "guard_task_tbl"))
+    // E1: two scan inferences, the contents pin, the display keys, the
+    // fan-out (its shuffle and two parse jobs), the all-null sample
+    // (a broadcast and two), and the two stage writes (one broadcast).
+    // E2: four scan inferences, the snapshot pin (three), three dim
+    // stage writes, and the task stage write (two broadcasts).
+    assert(e1 <= 13, s"E1 started $e1 jobs")
+    assert(e2 <= 13, s"E2 started $e2 jobs")
   }
 }

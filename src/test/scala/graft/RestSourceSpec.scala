@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -425,6 +426,49 @@ class RestSourceSpec extends AnyFunSuite {
       rejected(f)
     } finally { pool2.shutdownNow(); timer2.shutdownNow() }
     assert(timerErrors.isEmpty, timerErrors)
+  }
+
+  test("collectKeys returns sorted, distinct keys; over a pinned frame it runs no job") {
+    val sc = spark.sparkContext
+    val unsorted = Seq(5, 3, 5, 1, 3, 9).toDF("k")
+    val (keys, jobs) = JobCounter.count(sc)(Sources.collectKeys(unsorted, "k"))
+    assert(keys == Seq(1L, 3L, 5L, 9L))
+    assert(jobs == 0)
+    // a frame the executors compute is collected once and deduped on the driver
+    val computed = spark.range(12).select((col("id") * 7 % 5).as("k"))
+    assert(Sources.collectKeys(computed, "k") == Seq(0L, 1L, 2L, 3L, 4L))
+    val pinned = Sources.pinLocal(computed.filter(col("k") > 1))
+    assert(pinned.schema == computed.schema)
+    val (pinnedKeys, pinnedJobs) = JobCounter.count(sc)(Sources.collectKeys(pinned, "k"))
+    assert(pinnedKeys == Seq(2L, 3L, 4L))
+    assert(pinnedJobs == 0)
+  }
+
+  test("a job started inside a concurrent source runs under the caller's job group") {
+    val sc = spark.sparkContext
+    val sources = (1 to 8).map(i => s"s$i" -> { () =>
+      spark.range(3).collect()
+      spark.emptyDataFrame
+    }).toMap
+    def groupsOf(): Seq[Option[String]] = {
+      val (out, groups) = JobCounter.jobGroups(sc)(Sources.concurrent(spark, sources))
+      assert(out.keySet == sources.keySet)
+      assert(groups.size == sources.size, groups)
+      groups
+    }
+    try {
+      // the second call reuses pool threads the first one started,
+      // which inherited the first caller's group
+      for (group <- Seq("caller-1", "caller-2")) {
+        sc.setJobGroup(group, s"concurrent $group", interruptOnCancel = false)
+        val groups = groupsOf()
+        assert(groups.forall(_.contains(group)), groups)
+        assert(sc.getLocalProperty("spark.jobGroup.id") == group)
+      }
+      sc.clearJobGroup()
+      val groups = groupsOf()
+      assert(groups.forall(_.isEmpty), groups)
+    } finally sc.clearJobGroup()
   }
 
   test("pageIsEmpty handles bare arrays, envelopes, and junk") {

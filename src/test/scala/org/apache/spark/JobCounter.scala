@@ -1,6 +1,8 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -10,16 +12,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   */
 object JobCounter {
   def count[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val (r, groups) = jobGroups(sc)(body)
+    (r, groups.size)
+  }
+
+  /** The job group (`spark.jobGroup.id`, None when unset) of each job
+    * `body` launches, in start order.
+    */
+  def jobGroups[T](sc: SparkContext)(body: => T): (T, Seq[Option[String]]) = {
     sc.listenerBus.waitUntilEmpty()
-    val n = new AtomicInteger
+    val groups = new ConcurrentLinkedQueue[Option[String]]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))): Unit
     }
     sc.addSparkListener(listener)
     try {
       val r = body
       sc.listenerBus.waitUntilEmpty()
-      (r, n.get)
+      (r, groups.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
