@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.hadoop.metadata.FileMetaData
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetFooters
@@ -710,26 +710,15 @@ object Warehouse {
         "with '_' and must not contain '=', '/', tab or newline"))
   }
 
-  /** Canonical manifest keys for the partitions a change batch
-    * touches: per distinct partition-value tuple, the exact relative
-    * dir path the parquet writer produces (hive path escaping), so
-    * values containing ':', '/', '%', … look up correctly. Nulls are
-    * rejected loudly — a key must name a real partition.
-    */
-  /** The distinct (partition column → string value) tuples a change
-    * batch carries under the given layout — [[partKeysOf]]'s values
-    * before hive escaping, the input [[overlappingKeys]] matches
-    * manifest keys against.
-    */
   /** Refuse a MIGRATION rewrite that would land NULL in a partition
     * column some touched old-generation key did not have: Spark would
     * silently write `__HIVE_DEFAULT_PARTITION__` dirs whose rows every
     * later tuple-based DML refuses (judge r18 review). Zero cost on
-    * uniform tables (no missing column → no job); evolveLayout's own
-    * contract, enforced on every deferred-migration path (compact,
-    * CoW update/delete/merge).
+    * uniform tables (no missing column → no job, and `rows` is never
+    * built); evolveLayout's own contract, enforced on every
+    * deferred-migration path (compact, CoW update/delete/merge).
     */
-  private def requireMigratableNonNull(rows: DataFrame,
+  private def requireMigratableNonNull(rows: => DataFrame,
       touchedKeys: Iterable[String], partCols: Seq[String],
       op: String): Unit = {
     val missing = partCols.filter(c =>
@@ -744,19 +733,34 @@ object Warehouse {
           "rows before re-partitioning them")
   }
 
+  private def nullPartMessage(c: String) =
+    s"change batch carries a NULL $c - partition values must be non-null"
+
+  /** The distinct (partition column → string value) tuples a change
+    * batch carries under the given layout — [[partKeysOf]]'s values
+    * before hive escaping, the input [[overlappingKeys]] matches
+    * manifest keys against. Each task dedupes its own rows and the
+    * driver merges the sets: one single-stage job, where `distinct()`
+    * would shuffle. Nulls are rejected loudly — a key must name a
+    * real partition.
+    */
   private def partTuplesOf(changes: DataFrame,
                            partCols: Seq[String]): Seq[Map[String, String]] = {
     val raw = changes.select(partCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect().toSeq
+      .rdd.mapPartitions(_.toSet.iterator).collect().distinct.toSeq
     raw.map { r =>
       partCols.zipWithIndex.map { case (c, i) =>
-        require(!r.isNullAt(i),
-          s"change batch carries a NULL $c - partition values must be non-null")
+        require(!r.isNullAt(i), nullPartMessage(c))
         c -> r.getString(i)
       }.toMap
     }
   }
 
+  /** Canonical manifest keys for the partitions a change batch
+    * touches: per distinct partition-value tuple, the exact relative
+    * dir path the parquet writer produces (hive path escaping), so
+    * values containing ':', '/', '%', … look up correctly.
+    */
   private def partKeysOf(changes: DataFrame, partCols: Seq[String]): Seq[String] =
     partTuplesOf(changes, partCols).map(t => partCols.map(c =>
       s"$c=${ExternalCatalogUtils.escapePathName(t(c))}").mkString("/")).sorted
@@ -774,7 +778,72 @@ object Warehouse {
           if (depth == partCols.length - 1) Seq(st.getPath.getName)
           else walk(st.getPath, depth + 1).map(s"${st.getPath.getName}/" + _)
         }
-    walk(new HPath(s"$path/data/batch=$batchId"), 0)
+    walk(new HPath(batchDir(path, batchId)), 0)
+  }
+
+  private def batchDir(path: String, batchId: String) =
+    s"$path/data/batch=$batchId"
+
+  /** Write `rows` hive-partitioned by `partCols` as a fresh batch dir
+    * of the table at `path` and return its id. The batch stays
+    * invisible until a commit maps its partitions.
+    */
+  private def writeBatch(path: String, rows: DataFrame,
+                         partCols: Seq[String]): String = {
+    val batchId = java.util.UUID.randomUUID().toString
+    rows.write.mode("overwrite").partitionBy(partCols: _*)
+      .parquet(batchDir(path, batchId))
+    batchId
+  }
+
+  /** Delete a batch that was written but will never be published. */
+  private def dropBatch(fs: FileSystem, path: String, batchId: String): Unit =
+    fs.delete(new HPath(batchDir(path, batchId)), true): Unit
+
+  /** [[writeBatch]] of `rows(frame)` with the aggregate `metric` over
+    * `frame`'s rows observed in the same pass: a statement's counts
+    * and checks come from the write, not from a second scan. Returns
+    * the batch id and the metric (a NULL aggregate, e.g. a max over no
+    * rows, reads as 0). When Spark reports no metric — the optimizer
+    * pruned the observed node because a predicate folded to a
+    * constant, or the listener event did not arrive — the metric is
+    * computed by its own query over `frame`; an absent metric is never
+    * read as 0. Each call observes through a fresh [[Observation]], so
+    * a retried attempt never reads a previous attempt's value.
+    */
+  private def writeBatchObserving(path: String, partCols: Seq[String],
+      frame: DataFrame, metric: Column)(
+      rows: DataFrame => DataFrame): (String, Long) = {
+    def valueOf(r: org.apache.spark.sql.Row) =
+      if (r.isNullAt(0)) 0L else r.getAs[Number](0).longValue
+    val obs = Observation()
+    val batchId = writeBatch(path, rows(frame.observe(obs, metric.as("m"))),
+      partCols)
+    // the metric reaches the Observation through a listener event,
+    // normally within milliseconds of the write's end
+    val reported = scala.util.Try(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(60, "s"))).toOption
+      .filter(_.length == 1)
+    (batchId, valueOf(reported.getOrElse(frame.agg(metric).head())))
+  }
+
+  /** The partition keys a just-written append-like batch holds. A
+    * batch that holds none (its frame had no rows) is refused with
+    * [[EmptyBatchException]] and `emptyMessage`; one that holds a NULL
+    * partition value (Spark writes it under
+    * `__HIVE_DEFAULT_PARTITION__`) is refused with the NULL message of
+    * [[partTuplesOf]]. Either way the batch is deleted first — it was
+    * never published — so the check costs a listing, not a job.
+    */
+  private def writtenPartKeys(fs: FileSystem, path: String, batchId: String,
+      partCols: Seq[String], emptyMessage: String): Seq[String] = {
+    val written = partDirs(fs, path, batchId, partCols)
+    val nullCol = partCols.find(c => written.exists(_.split('/').contains(
+      s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}")))
+    if (written.isEmpty || nullCol.nonEmpty) dropBatch(fs, path, batchId)
+    if (written.isEmpty) throw new EmptyBatchException(emptyMessage)
+    nullCol.foreach(c => require(false, nullPartMessage(c)))
+    written
   }
 
   // ---------------------------------------------------------------
@@ -1145,9 +1214,7 @@ object Warehouse {
     requireSimpleCols(partCols)
     val fs = fsOf(spark, path)
     require(snapshot(fs, path).isEmpty, s"warehouse table already exists at $path")
-    val batchId = java.util.UUID.randomUUID().toString
-    df.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$path/data/batch=$batchId")
+    val batchId = writeBatch(path, df, partCols)
     val mapping = partDirs(fs, path, batchId, partCols)
       .map(_ -> batchId).toMap
     commit(fs, path, 1L, mapping)
@@ -1186,12 +1253,9 @@ object Warehouse {
       mergeIntoDeltaCore(spark, path, df, k, v, partCols, None, maxAttempts,
         txn = txn)
     } else {
-      if (partKeysOf(df, partCols).isEmpty)
-        throw new EmptyBatchException("empty append batch")
-      val batchId = java.util.UUID.randomUUID().toString
-      df.write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(s"$path/data/batch=$batchId")
-      val written = partDirs(fs, path, batchId, partCols)
+      val batchId = writeBatch(path, df, partCols)
+      val written = writtenPartKeys(fs, path, batchId, partCols,
+        "empty append batch")
       withCommitRetry(maxAttempts) { attempt =>
         val (v, mapping, _) = currentSnapshot(fs, path)
         val newMapping = mapping ++ written.map(key =>
@@ -1298,13 +1362,10 @@ object Warehouse {
           s"transact write for the delta table at $path must carry its " +
             s"merge columns ($k, $vc) - the read-time fold needs them"))
       }
-      if (partKeysOf(df, partCols).isEmpty)
-        throw new EmptyBatchException(s"empty batch for $path")
-      val batchId = java.util.UUID.randomUUID().toString
-      df.write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(s"$path/data/batch=$batchId")
-      (path, fs, batchId, partDirs(fs, path, batchId, partCols), overwrite,
-        isDelta)
+      val batchId = writeBatch(path, df, partCols)
+      (path, fs, batchId,
+        writtenPartKeys(fs, path, batchId, partCols, s"empty batch for $path"),
+        overwrite, isDelta)
     }
     // claim each table's next version slot with the pending header;
     // a lost race to a CONCURRENT NORMAL commit rebases (append
@@ -1598,15 +1659,11 @@ object Warehouse {
     // recovers — an empty streaming Complete batch could brick the
     // table). Truncate-to-empty is not a state this table can serve;
     // an operator who really wants it deletes the path and re-creates.
-    if (partKeysOf(df, partCols).isEmpty)
-      throw new EmptyBatchException(
-        if (dynamic) "empty change batch - dynamic overwrite needs rows naming partitions"
-        else "empty change batch - static overwrite of a warehouse table " +
-          "to zero rows is refused (it would leave no live partitions)")
-    val batchId = java.util.UUID.randomUUID().toString
-    df.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$path/data/batch=$batchId")
-    val written = partDirs(fs, path, batchId, partCols)
+    val batchId = writeBatch(path, df, partCols)
+    val written = writtenPartKeys(fs, path, batchId, partCols,
+      if (dynamic) "empty change batch - dynamic overwrite needs rows naming partitions"
+      else "empty change batch - static overwrite of a warehouse table " +
+        "to zero rows is refused (it would leave no live partitions)")
     withCommitRetry(maxAttempts) { attempt =>
       val (v, mapping, _) = currentSnapshot(fs, path)
       if (dynamic) {
@@ -1853,12 +1910,12 @@ object Warehouse {
       if (touchedKeys.isEmpty) return 0L
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
       val touchedRows = readMapped(spark, path, touched, partCols, dvs)
-      val deleted = touchedRows.filter(pred).count()
-      val survivors = touchedRows.filter(pred.isNull || !pred)
-      requireMigratableNonNull(survivors, touchedKeys, partCols, "DELETE")
-      val batchId = java.util.UUID.randomUUID().toString
-      survivors.write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(s"$path/data/batch=$batchId")
+      def survivors(rows: DataFrame) = rows.filter(pred.isNull || !pred)
+      requireMigratableNonNull(survivors(touchedRows), touchedKeys, partCols,
+        "DELETE")
+      // the deleted-row count is observed on the rewrite's own pass
+      val (batchId, deleted) = writeBatchObserving(path, partCols,
+        touchedRows, count(when(pred, 1)))(survivors)
       val written = partDirs(fs, path, batchId, partCols).toSet
       val newMapping = (mapping -- touchedKeys) ++ written.map(_ -> batchId)
       hookFor(attempt)()
@@ -1993,16 +2050,16 @@ object Warehouse {
       var newMapping = mapping
       if (chainedT.nonEmpty) {
         val rows = readMapped(spark, path, chainedT, partCols, dvs)
-        cowDeleted = rows.filter(pred).count()
+        def survivors(rows: DataFrame) = rows.filter(pred.isNull || !pred)
+        requireMigratableNonNull(survivors(rows), chainedT.keys, partCols,
+          "DELETE")
+        val (batchId, n) = writeBatchObserving(path, partCols, rows,
+          count(when(pred, 1)))(survivors)
+        cowDeleted = n
         if (cowDeleted > 0L) {
-          val survivors = rows.filter(pred.isNull || !pred)
-          requireMigratableNonNull(survivors, chainedT.keys, partCols, "DELETE")
-          val batchId = java.util.UUID.randomUUID().toString
-          survivors.write.mode("overwrite").partitionBy(partCols: _*)
-            .parquet(s"$path/data/batch=$batchId")
           val written = partDirs(fs, path, batchId, partCols).toSet
           newMapping = (mapping -- chainedT.keySet) ++ written.map(_ -> batchId)
-        }
+        } else dropBatch(fs, path, batchId)
       }
       if (dvDeleted == 0L && cowDeleted == 0L) return Some(0L)
       hookFor(attempt)()
@@ -2077,21 +2134,21 @@ object Warehouse {
         require(touchedRows.columns.contains(c),
           s"UPDATE references unknown column '$c'")
       }
-      val updated = touchedRows.filter(pred).count()
       val assignMap = assignments.toMap
       // NULL-pred rows fall to otherwise(): exactly SQL's survive-unchanged
-      val rewritten = touchedRows.select(
-        touchedRows.schema.fields.toIndexedSeq.map { f =>
+      def rewritten(rows: DataFrame) = rows.select(
+        rows.schema.fields.toIndexedSeq.map { f =>
           assignMap.get(f.name) match {
             case Some(value) =>
               when(pred, value.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
             case None => col(f.name)
           }
         }: _*)
-      requireMigratableNonNull(rewritten, touchedKeys, partCols, "UPDATE")
-      val batchId = java.util.UUID.randomUUID().toString
-      rewritten.write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(s"$path/data/batch=$batchId")
+      requireMigratableNonNull(rewritten(touchedRows), touchedKeys, partCols,
+        "UPDATE")
+      // the updated-row count is observed on the rewrite's own pass
+      val (batchId, updated) = writeBatchObserving(path, partCols,
+        touchedRows, count(when(pred, 1)))(rewritten)
       // updates never add or drop rows, so every touched partition
       // rewrites in place
       val written = partDirs(fs, path, batchId, partCols).toSet
@@ -2935,9 +2992,7 @@ object Warehouse {
             .select(col(keyCol) +: col(s"_m.$versionCol") +:
               (partCols ++ dataCols).map(c => col(s"_m.$c").as(c)).toSeq: _*)
           requireMigratableNonNull(merged, cowTouched, partCols, "MERGE")
-          val batchId = java.util.UUID.randomUUID().toString
-          merged.write.mode("overwrite").partitionBy(partCols: _*)
-            .parquet(s"$path/data/batch=$batchId")
+          val batchId = writeBatch(path, merged, partCols)
           // a touched partition whose every row was tombstoned produces NO
           // rewritten dir — it must leave the mapping entirely, or the old
           // batch's rows would resurrect. (Vector-routed partitions instead
@@ -3024,9 +3079,7 @@ object Warehouse {
     }
     // the data lands ONCE, before the commit loop — a lost race never
     // rewrites it, only re-publishes the manifest
-    val batchId = java.util.UUID.randomUUID().toString
-    toWrite.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(s"$path/data/batch=$batchId")
+    val batchId = writeBatch(path, toWrite, partCols)
     val written = partDirs(fs, path, batchId, partCols).toSet
     withCommitRetry(maxAttempts) { attempt =>
       val (v, mapping, _) = currentSnapshot(fs, path)
@@ -3115,12 +3168,19 @@ object Warehouse {
     * arms and the source row to the insert arm. A NULL residual
     * counts as not-matched (SQL three-valued logic under a WHERE-like
     * predicate). The SQL cardinality guard follows the matching
-    * definition: key-only merges check at KEY granularity (one
-    * bounded semi-join over the change-sized source); a residual ON
-    * counts over the POST-JOIN qualified pairs (Delta parity), so
-    * duplicate source keys the residual fully disambiguates are
-    * legal — either way a double match refuses loudly, never a
-    * silent wrong answer.
+    * definition: key-only merges check at KEY granularity, inside the
+    * write itself (a per-key source count rides the merge join and the
+    * write observes its max over matched rows; a violating batch is
+    * deleted unpublished); a residual ON counts over the POST-JOIN
+    * qualified pairs (Delta parity) in its own query, so duplicate
+    * source keys the residual fully disambiguates are legal — either
+    * way a double match refuses loudly before anything is committed,
+    * never a silent wrong answer.
+    *
+    * One join of the touched partitions to the source, on the full
+    * ON, produces every written row: a full outer join when INSERT
+    * arms exist (its source-only rows are the insert candidates), a
+    * left join otherwise.
     *
     * `dvRoute` (set by the SQL plane from TBLPROPERTIES
     * `deletionVectors`) lets MATCHED-DELETE rows of partitions the
@@ -3284,8 +3344,11 @@ object Warehouse {
           notMatched.indices.foldLeft(when(lit(false), lit(-1))) {
             (w, j) => w.when(col(s"_gm_ic$j"), lit(j))
           }.otherwise(lit(-1)))
-      def keyCond(base: DataFrame) = targetKeys.zip(keyCols)
-        .map { case (tk, kc) => base(tk) === src(kc) }.reduce(_ && _)
+      // the full ON: key equality AND the residual (a NULL residual
+      // is not-matched)
+      def onCond(base: DataFrame) = targetKeys.zip(keyCols)
+        .map { case (tk, kc) => base(tk) === src(kc) }.reduce(_ && _) &&
+        residual.map(r => coalesce(r, lit(false))).getOrElse(lit(true))
       // ---- deletion-vector routing (TBLPROPERTIES deletionVectors /
       // dvRoute): MATCHED-DELETE rows of partitions the merge
       // otherwise leaves alone become O(deleted rows) (file, pos)
@@ -3337,10 +3400,7 @@ object Warehouse {
           val pairsByRow = dvLineageMatches(spark, path, dvMap, dvs) { b0 =>
               val b = targetCondCols.distinct.foldLeft(b0)((d, c) =>
                 d.withColumn(s"_gm_t_$c", d(c)))
-              val cond = residual
-                .map(r => keyCond(b) && coalesce(r, lit(false)))
-                .getOrElse(keyCond(b))
-              b.join(src, cond, "inner")
+              b.join(src, onCond(b), "inner")
                 .select(col("_gdvf").as("file"), col("_gdvp").as("pos"),
                   firstArm.as("_gm_arm"))
             }
@@ -3403,8 +3463,9 @@ object Warehouse {
           // ambiguous against a same-named source column, so those
           // expressions arrive rebound to the reserved _gm_t_<name>
           // form and resolve against these aliases only
+          // `_gm_b` marks a row that has a base side after the join
           targetCondCols.distinct.foldLeft(b)((d, c) =>
-            d.withColumn(s"_gm_t_$c", d(c)))
+            d.withColumn(s"_gm_t_$c", d(c))).withColumn("_gm_b", lit(true))
         }
       // schema evolution: a new column's stored type is its resolved
       // source type — required identical across every clause that
@@ -3424,55 +3485,50 @@ object Warehouse {
         org.apache.spark.sql.types.StructField(c, types.head, nullable = true)
       }
       val effFields = tblSchema.fields.toIndexedSeq ++ newFields
+      // ONE join of the touched partitions to the source feeds the
+      // write: a FULL outer join when INSERT arms exist (its
+      // source-only rows are the insert candidates, replacing a
+      // separate anti-join), a left join otherwise. Matching is the
+      // full ON — key equality AND the residual — so a key-equal pair
+      // failing the residual is NOT matched (SQL's ON semantics): its
+      // base row passes through as unmatched and its source row is an
+      // insert candidate.
+      val withInserts = notMatched.nonEmpty
       // the standard's cardinality rule: a TARGET row may be matched
-      // by at most one source row — checked on the source keys that
-      // actually join a target row (duplicate keys that all land in
-      // the insert arm are legal), one bounded aggregation over the
-      // change-sized source, never the table
-      if (matched.nonEmpty) base0.foreach { base =>
-        residual match {
-          case None =>
-            // key-only matching: exact at KEY granularity, one bounded
-            // semi-join + aggregation over the change-sized source
-            val bkeys = base.select(targetKeys.zipWithIndex.map {
-              case (tk, i) => base(tk).as(s"_gm_tk$i") }: _*)
-            val cond = keyCols.zipWithIndex
-              .map { case (kc, i) => src(kc) === bkeys(s"_gm_tk$i") }
-              .reduce(_ && _)
-            val dup = src.join(bkeys, cond, "left_semi")
-              .groupBy(keyCols.map(col): _*).count()
-              .filter(col("count") > 1).limit(1).count()
-            require(dup == 0L,
-              "MERGE source carries duplicate join keys that match a target " +
-                "row - a target row may match at most one source row (SQL " +
-                "cardinality rule); de-duplicate the source (e.g. latest-wins " +
-                "argmax) first")
-          case Some(res) =>
-            // matching is key equality AND the residual, so the
-            // cardinality rule counts over the POST-JOIN qualified
-            // pairs (Delta parity, advisor r17): duplicate source
-            // keys the residual fully disambiguates are legal. The
-            // check join is bounded by the pairs the real merge join
-            // builds anyway.
-            val b = base.withColumn("_gm_rid", monotonically_increasing_id())
-            val dup = b.join(src,
-              targetKeys.zip(keyCols)
-                .map { case (tk, kc) => b(tk) === src(kc) }.reduce(_ && _) &&
-                coalesce(res, lit(false)), "inner")
-              .groupBy(col("_gm_rid")).count()
-              .filter(col("count") > 1).limit(1).count()
-            require(dup == 0L,
-              "MERGE source carries rows that MATCH one target row more " +
-                "than once (key equality AND the ON residual) - a target " +
-                "row may match at most one source row (SQL cardinality " +
-                "rule); de-duplicate the source first")
-        }
+      // by at most one source row. Under key-only matching the rule is
+      // exact at KEY granularity, so a per-key source count rides the
+      // join (the window's exchange is the one the join partitions the
+      // source by anyway) and the write observes its max over matched
+      // rows; duplicate keys that all land in the insert arm stay
+      // legal. A residual makes matching pair-level: that check counts
+      // qualifying pairs per target row in its own query below.
+      val keyCardinality = matched.nonEmpty && residual.isEmpty && base0.nonEmpty
+      val srcJ =
+        if (!keyCardinality) src
+        else src.withColumn("_gm_n", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)))
+      if (matched.nonEmpty && residual.nonEmpty) base0.foreach { base =>
+        // matching is key equality AND the residual, so the
+        // cardinality rule counts over the POST-JOIN qualified
+        // pairs (Delta parity, advisor r17): duplicate source
+        // keys the residual fully disambiguates are legal. The
+        // check join is bounded by the pairs the real merge join
+        // builds anyway.
+        val b = base.withColumn("_gm_rid", monotonically_increasing_id())
+        val dup = b.join(src, onCond(b), "inner")
+          .groupBy(col("_gm_rid")).count()
+          .filter(col("count") > 1).limit(1).count()
+        require(dup == 0L,
+          "MERGE source carries rows that MATCH one target row more " +
+            "than once (key equality AND the ON residual) - a target " +
+            "row may match at most one source row (SQL cardinality " +
+            "rule); de-duplicate the source first")
       }
+      // a row with a base side came from the touched partitions; in
+      // the full outer join the others are source-only
+      val hasBase = coalesce(col("_gm_b"), lit(false))
       // first-applicable-clause index per matched base row; -1 = no
-      // clause applies (row passes through unchanged). Matching is
-      // key equality AND the residual (a key-equal pair failing the
-      // residual is NOT matched — SQL's ON semantics), folded into
-      // the `_gm_meff` marker post-join.
+      // clause applies (row passes through unchanged)
       val act = {
         val chain = matched.zipWithIndex.foldLeft(
           when(!col("_gm_meff"), lit(-1))) { case (w, ((_, _), i)) =>
@@ -3480,49 +3536,63 @@ object Warehouse {
         }
         chain.otherwise(lit(-1))
       }
-      val survivors = base0.map { base =>
-        var joined = base.join(src, keyCond(base), "left")
-          .withColumn("_gm_meff",
-            coalesce(col("_gm_m"), lit(false)) &&
-              residual.map(r => coalesce(r, lit(false))).getOrElse(lit(true)))
+      val joined = base0.map { base =>
+        var j = base.join(srcJ, onCond(base),
+          if (withInserts) "full_outer" else "left")
+          .withColumn("_gm_meff", hasBase && coalesce(col("_gm_m"), lit(false)))
         matched.zipWithIndex.foreach { case ((cond, assigns), i) =>
           if (pairLevel(i))
-            joined = joined.withColumn(s"_gm_c$i",
+            j = j.withColumn(s"_gm_c$i",
               coalesce(cond.getOrElse(lit(true)), lit(false)))
           if (pairValues(i))
             assigns.getOrElse(Nil).foreach { case (c, value) =>
-              joined = joined.withColumn(s"_gm_u${i}_$c", value.cast(typeOf(c)))
+              j = j.withColumn(s"_gm_u${i}_$c", value.cast(typeOf(c)))
             }
         }
-        notMatchedBySource.zipWithIndex.foreach { case ((cond, assigns), j) =>
-          joined = joined.withColumn(s"_gm_bc$j",
+        notMatchedBySource.zipWithIndex.foreach { case ((cond, assigns), k) =>
+          j = j.withColumn(s"_gm_bc$k",
             coalesce(cond.getOrElse(lit(true)), lit(false)))
           assigns.getOrElse(Nil).foreach { case (c, value) =>
-            joined = joined.withColumn(s"_gm_b${j}_$c", value.cast(typeOf(c)))
+            j = j.withColumn(s"_gm_b${k}_$c", value.cast(typeOf(c)))
           }
         }
-        joined = joined.withColumn("_gm_act", act)
+        j = j.withColumn("_gm_act", act)
         // first-applicable BY SOURCE clause for UNMATCHED base rows
-        // (unmatched under the FULL ON: key miss OR residual failure)
-        joined =
-          if (reconcile) {
-            val bchain = notMatchedBySource.zipWithIndex.foldLeft(
-              when(col("_gm_meff"), lit(-1))) { case (w, (_, j)) =>
-              w.when(col(s"_gm_bc$j"), lit(j))
-            }
-            joined.withColumn("_gm_bact", bchain.otherwise(lit(-1)))
-          } else joined.withColumn("_gm_bact", lit(-1))
+        // (unmatched under the FULL ON: key miss OR residual failure);
+        // a source-only row has no stored row to reconcile
+        if (reconcile) {
+          val bchain = notMatchedBySource.zipWithIndex.foldLeft(
+            when(col("_gm_meff") || !hasBase, lit(-1))) { case (w, (_, k)) =>
+            w.when(col(s"_gm_bc$k"), lit(k))
+          }
+          j.withColumn("_gm_bact", bchain.otherwise(lit(-1)))
+        } else j.withColumn("_gm_bact", lit(-1))
+      }
+      // the first-applicable INSERT arm's value; arms not assigning the
+      // column leave it NULL (exactly the single-arm contract)
+      def insertValue(f: org.apache.spark.sql.types.StructField): Column =
+        notMatched.zipWithIndex.collect {
+          case ((_, as), k) if as.exists(_._1 == f.name) => k
+        }.foldLeft(lit(null).cast(f.dataType)) { (prev, k) =>
+          when(col("_gm_iact") === lit(k), col(s"_gm_i${k}_${f.name}"))
+            .otherwise(prev)
+        }
+      // survivors and inserts in one projection over the joined rows
+      def survivorsAndInserts(base: DataFrame)(j: DataFrame): DataFrame = {
         val deleteIdx = matched.zipWithIndex.collect {
           case ((_, None), i) => i
         }
         val bDeleteIdx = notMatchedBySource.zipWithIndex.collect {
-          case ((_, None), j) => j
+          case ((_, None), k) => k
         }
         val kept = bDeleteIdx.foldLeft(
-          deleteIdx.foldLeft(joined) { (d, i) =>
+          deleteIdx.foldLeft(j) { (d, i) =>
             d.filter(col("_gm_act") =!= lit(i))
-          }) { (d, j) => d.filter(col("_gm_bact") =!= lit(j)) }
-        kept.select(effFields.map { f =>
+          }) { (d, k) => d.filter(col("_gm_bact") =!= lit(k)) }
+        val rows =
+          if (withInserts) kept.filter(hasBase || col("_gm_iact") >= 0)
+          else kept
+        rows.select(effFields.map { f =>
           val stored = tblSchema.fieldNames.contains(f.name)
           val baseVal =
             if (stored) base(f.name) else lit(null).cast(f.dataType)
@@ -3530,9 +3600,9 @@ object Warehouse {
             case ((_, Some(assigns)), i) if assigns.exists(_._1 == f.name) => i
           }
           val bOverlays = notMatchedBySource.zipWithIndex.collect {
-            case ((_, Some(assigns)), j) if assigns.exists(_._1 == f.name) => j
+            case ((_, Some(assigns)), k) if assigns.exists(_._1 == f.name) => k
           }
-          val value =
+          val survivor =
             if (partCols.contains(f.name))
               // partition values are IMMUTABLE: an UPDATE assignment to
               // a partition column (UPDATE SET * carries one naturally)
@@ -3556,36 +3626,22 @@ object Warehouse {
                 when(col("_gm_act") === lit(i), col(s"_gm_u${i}_${f.name}"))
                   .otherwise(prev)
               }
-              bOverlays.foldLeft(afterMatched) { (prev, j) =>
-                when(col("_gm_bact") === lit(j), col(s"_gm_b${j}_${f.name}"))
+              bOverlays.foldLeft(afterMatched) { (prev, k) =>
+                when(col("_gm_bact") === lit(k), col(s"_gm_b${k}_${f.name}"))
                   .otherwise(prev)
               }
             }
+          val value =
+            if (withInserts) when(hasBase, survivor).otherwise(insertValue(f))
+            else survivor
           value.as(f.name)
         }: _*)
       }
-      val insertRows: Option[DataFrame] =
-        if (notMatched.isEmpty) None
-        else Some {
-          val anti = base0 match {
-            case Some(base) =>
-              // "not matched" is defined by the FULL ON condition: the
-              // anti-join carries the residual too (resolved against the
-              // base side's _gm_t_ aliases), so a key-equal source row
-              // that fails the residual correctly lands in the insert arm
-              val tks = targetKeys.zipWithIndex.map { case (tk, i) =>
-                col(tk).as(s"_gm_tk$i") } ++
-                (if (residual.isEmpty) Nil
-                 else targetCondCols.distinct.map(c => base(s"_gm_t_$c")))
-              val keyEq = keyCols.zipWithIndex
-                .map { case (kc, i) => src(kc) === col(s"_gm_tk$i") }
-                .reduce(_ && _)
-              val cond = residual.fold(keyEq)(r => keyEq && r)
-              src.join(base.select(tks: _*), cond, "left_anti")
-            case None => src
-          }
-          anti.filter(col("_gm_iact") >= 0)
-        }
+      // the source rows that take an INSERT arm
+      val insertCandidates: Option[DataFrame] =
+        if (!withInserts) None
+        else Some(joined.fold(src)(_.filter(!hasBase))
+          .filter(col("_gm_iact") >= 0))
       // rewrite accounting is over the COW side only: vector-routed
       // partitions keep their mapping entry and data files, so for
       // the insert-collision guard and the hijack check below they
@@ -3600,10 +3656,10 @@ object Warehouse {
       // loudly; disable via the conf when keys provably embed their
       // partition (then this scan is pure cost).
       val untouchedMap = mapping.filter { case (k, _) => !touchedSet(k) }
-      if (untouchedMap.nonEmpty && insertRows.nonEmpty &&
+      if (untouchedMap.nonEmpty && insertCandidates.nonEmpty &&
           spark.conf.getOption("spark.graft.merge.crossPartitionKeyCheck")
             .forall(_.toBoolean)) {
-        val insKeys = insertRows.get.select(keyCols.map(col): _*)
+        val insKeys = insertCandidates.get.select(keyCols.map(col): _*)
         // an all-matched source inserts nothing: one bounded count over
         // the change-sized key set decides whether the untouched-
         // partition scan runs at all (a semi join against an EMPTY
@@ -3634,34 +3690,34 @@ object Warehouse {
               "guard when keys provably embed their partition")
         }
       }
-      val inserts = insertRows.map { rows =>
-        rows.select(effFields.map { f =>
-          // first-applicable arm's value; arms not assigning the
-          // column leave it NULL (exactly the single-arm contract)
-          val armOverlays = notMatched.zipWithIndex.collect {
-            case ((_, as), j) if as.exists(_._1 == f.name) => j
-          }
-          val value = armOverlays.foldLeft(
-            lit(null).cast(f.dataType)) { (prev, j) =>
-            when(col("_gm_iact") === lit(j), col(s"_gm_i${j}_${f.name}"))
-              .otherwise(prev)
-          }
-          value.as(f.name)
-        }: _*)
-      }
       // matched-only merge against partitions that don't exist yet:
       // nothing to rewrite, nothing to insert, nothing vectored — a
       // no-op, like SQL
-      if (survivors.isEmpty && inserts.isEmpty && dvAdd.isEmpty) return
+      if (joined.isEmpty && insertCandidates.isEmpty && dvAdd.isEmpty) return
       val newMapping =
-        if (survivors.isEmpty && inserts.isEmpty) mapping // DV-only merge
+        if (joined.isEmpty && insertCandidates.isEmpty) mapping // DV-only merge
         else {
-          val merged = (survivors.toSeq ++ inserts.toSeq)
-            .reduce(_.unionByName(_))
-          requireMigratableNonNull(merged, cowTouched, partCols, "MERGE")
-          val batchId = java.util.UUID.randomUUID().toString
-          merged.write.mode("overwrite").partitionBy(partCols: _*)
-            .parquet(s"$path/data/batch=$batchId")
+          val (batchId, maxMatches) = (base0, joined) match {
+            case (Some(base), Some(j)) =>
+              val rows = survivorsAndInserts(base) _
+              requireMigratableNonNull(rows(j), cowTouched, partCols, "MERGE")
+              if (keyCardinality) writeBatchObserving(path, partCols, j,
+                max(when(col("_gm_meff"), col("_gm_n"))))(rows)
+              else (writeBatch(path, rows(j), partCols), 0L)
+            case _ =>
+              // no partition to rewrite: the source rows are all inserts
+              (writeBatch(path, insertCandidates.get
+                .select(effFields.map(f => insertValue(f).as(f.name)): _*),
+                partCols), 0L)
+          }
+          // the cardinality rule, checked on the write's own pass: the
+          // unpublished batch goes before the statement fails
+          if (maxMatches > 1L) dropBatch(fs, path, batchId)
+          require(maxMatches <= 1L,
+            "MERGE source carries duplicate join keys that match a target " +
+              "row - a target row may match at most one source row (SQL " +
+              "cardinality rule); de-duplicate the source (e.g. latest-wins " +
+              "argmax) first")
           val written = partDirs(fs, path, batchId, partCols).toSet
           // an insert may NAME a brand-new partition (fine — it joins
           // the mapping) but must never silently claim an EXISTING

@@ -446,6 +446,26 @@ class WarehouseDmlSpec extends AnyFunSuite {
     assert(rows2 == Seq((1L, "both"), (2L, "y")))
   }
 
+  test("MERGE residual ON: a target row key-equal to one qualifying and one failing source row is updated once, not duplicated") {
+    val path = freshDir()
+    Warehouse.create(spark, path,
+      Seq((1L, 5L, "p0"), (2L, 1L, "p0")).toDF("id", "a", "dt"), "dt")
+    // id=1 key-matches both source rows: 5 >= 3 qualifies, 5 >= 9
+    // fails. Only the qualifying pair is matched, so the stored row is
+    // updated once and the failing pair leaves no unchanged copy behind
+    spark.sql(
+      s"""MERGE INTO graft.`$path` t
+         |USING (SELECT * FROM VALUES
+         |  (CAST(1 AS BIGINT), CAST(3 AS BIGINT), 'p0'),
+         |  (CAST(1 AS BIGINT), CAST(9 AS BIGINT), 'p0')
+         |  AS s(id, delta, dt)) s
+         |ON t.id = s.id AND t.a >= s.delta
+         |WHEN MATCHED THEN UPDATE SET a = t.a + s.delta""".stripMargin)
+    val rows = Warehouse.read(spark, path).orderBy("id", "a")
+      .select("id", "a").as[(Long, Long)].collect().toSeq
+    assert(rows == Seq((1L, 8L), (2L, 1L)))
+  }
+
   test("MERGE and UPDATE refuse time-travel relations (history is immutable)") {
     val path = freshDir()
     seed(path)
