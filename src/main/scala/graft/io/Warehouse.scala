@@ -182,15 +182,22 @@ object Warehouse {
   private def needsFold(v: String): Boolean =
     v.split(",").exists(_.startsWith("~"))
 
-  private def listVersions(fs: FileSystem, path: String): Seq[(Long, HPath)] = {
-    val vdir = new HPath(s"$path/_versions")
-    if (!fs.exists(vdir)) Seq.empty
-    else fs.listStatus(vdir).toSeq.flatMap(st =>
-      st.getPath.getName match {
+  private def versionsDir(path: String) = new HPath(s"$path/_versions")
+
+  private def versionFile(path: String, n: Long) =
+    new HPath(versionsDir(path), f"v$n%08d")
+
+  /** Every manifest file under `_versions` (none before `create`): one
+    * listing. Called by [[newestSnapshot]] and by the scans that walk
+    * the whole retained history.
+    */
+  private def listVersions(fs: FileSystem, path: String): Seq[(Long, HPath)] =
+    (try fs.listStatus(versionsDir(path)).toSeq
+     catch { case _: java.io.FileNotFoundException => Nil })
+      .flatMap(st => st.getPath.getName match {
         case VersionRe(n) => Some((n.toLong, st.getPath))
         case _            => None
       })
-  }
 
   private def readSmallFile(fs: FileSystem, p: HPath): String = {
     val in = fs.open(p)
@@ -213,9 +220,6 @@ object Warehouse {
         val Array(part, batch) = line.split("\t", 2)
         part -> batch
       }.toMap
-
-  private def readMapping(fs: FileSystem, p: HPath): Map[String, String] =
-    parseMapping(readSmallFile(fs, p))
 
   /** Manifest TXN-PENDING header: `#txnpending\t<marker path>` — the
     * manifest was STAGED by a cross-table transaction
@@ -305,30 +309,6 @@ object Warehouse {
   private def visible(fs: FileSystem, p: HPath): Boolean =
     contentVisible(fs, readSmallFile(fs, p))
 
-  /** Invisible (staged-uncommitted / aborted) manifests only ever form
-    * a contiguous TOP segment of the version sequence — a later commit
-    * cannot land above one because its claim of that version number
-    * fails loudly — so resolution is a walk down from the max until
-    * the first visible manifest, one small-file read per step and
-    * exactly one in the txn-free common case.
-    */
-  private def newestVisible(fs: FileSystem,
-                            path: String): Option[(Long, HPath, String)] =
-    listVersions(fs, path).sortBy(-_._1).iterator
-      .map { case (n, p) => (n, p, readSmallFile(fs, p)) }
-      .find { case (_, _, c) => contentVisible(fs, c) }
-
-  /** The mapping of exactly version `n`, or None when `n` was never
-    * committed OR is staged by an uncommitted/aborted transaction.
-    */
-  private def visibleMappingAt(fs: FileSystem, path: String,
-                               n: Long): Option[Map[String, String]] =
-    listVersions(fs, path).collectFirst { case (v, p) if v == n => p }
-      .flatMap { p =>
-        val c = readSmallFile(fs, p)
-        if (contentVisible(fs, c)) Some(parseMapping(c)) else None
-      }
-
   /** The txn records of one manifest's content. */
   private def parseTxns(content: String): Map[String, Long] =
     content.split("\n")
@@ -337,40 +317,71 @@ object Warehouse {
         app -> batch.toLong
       }.toMap
 
-  /** The txn records of one committed manifest file. */
-  private def readTxnsOf(fs: FileSystem, p: HPath): Map[String, Long] =
-    parseTxns(readSmallFile(fs, p))
+  /** One committed manifest, parsed once: its version, the partKey →
+    * chain mapping, the active deletion vectors (`#dv`), the
+    * streaming txn records (`#txn`) and the `#layout` header. A
+    * statement resolves one snapshot per attempt and every step reads
+    * from it, so the mapping it rewrites and the layout it writes in
+    * come from the same manifest; [[commit]] publishes the successor
+    * of exactly this snapshot. [[Snapshot.Empty]] (version 0) is the
+    * predecessor of a table's first commit.
+    */
+  private[graft] final case class Snapshot(version: Long,
+      mapping: Map[String, String], dvs: Seq[(String, Long)],
+      txns: Map[String, Long], layoutHeader: Option[Seq[String]]) {
+    /** The partition columns NEW WRITES use: the `#layout` header when
+      * present (the table evolved at least once), else the uniform
+      * keys' layout. Undefined on an empty mapping.
+      */
+    lazy val layout: Seq[String] = layoutHeader.getOrElse(partColsOf(mapping))
+  }
+
+  private[graft] object Snapshot {
+    val Empty: Snapshot = Snapshot(0L, Map.empty, Nil, Map.empty, None)
+
+    def parse(version: Long, content: String): Snapshot =
+      Snapshot(version, parseMapping(content), parseDvs(content),
+        parseTxns(content), parseLayout(content))
+  }
+
+  /** The newest VISIBLE snapshot, or None when the table was never
+    * created. Invisible (staged-uncommitted / aborted) manifests only
+    * ever form a contiguous TOP segment of the version sequence — a
+    * later commit cannot land above one because its claim of that
+    * version number fails loudly — so resolution is one listing and a
+    * walk down from the max until the first visible manifest: one
+    * small-file read per step, exactly one in the txn-free common case.
+    */
+  private[graft] def newestSnapshot(fs: FileSystem, path: String): Option[Snapshot] =
+    listVersions(fs, path).sortBy(-_._1).iterator
+      .map { case (n, p) => (n, readSmallFile(fs, p)) }
+      .collectFirst { case (n, c) if contentVisible(fs, c) => Snapshot.parse(n, c) }
+
+  /** The snapshot of exactly version `n`: one read of its manifest, no
+    * listing. None when `n` was never committed (or was vacuumed) OR is
+    * staged by an uncommitted/aborted transaction.
+    */
+  private[graft] def snapshotAt(fs: FileSystem, path: String, n: Long): Option[Snapshot] =
+    (try Some(readSmallFile(fs, versionFile(path, n)))
+     catch { case _: java.io.FileNotFoundException => None })
+      .filter(contentVisible(fs, _)).map(Snapshot.parse(n, _))
+
+  /** Version `n`'s snapshot when given, else the newest — or a typed
+    * [[NoCommittedVersion]] when there is none to serve.
+    */
+  private def resolve(fs: FileSystem, path: String,
+                      version: Option[Long] = None): Snapshot =
+    version.fold(newestSnapshot(fs, path))(snapshotAt(fs, path, _))
+      .getOrElse(throw new NoCommittedVersion(version.fold(
+        s"no committed version under $path - create() first")(n =>
+        s"no committed version $n under $path")))
 
   /** The last batch id `appId` committed to this table, off the
     * newest manifest — None for a writer the table has never seen.
     * The check a streaming sink runs before applying a micro-batch.
     */
-  def lastTxn(spark: SparkSession, path: String, appId: String): Option[Long] = {
-    val fs = fsOf(spark, path)
-    newestVisible(fs, path).flatMap { case (_, p, _) =>
-      readTxnsOf(fs, p).get(appId)
-    }
-  }
-
-  /** (version number, partKey → chain, active deletion vectors) of
-    * the newest VISIBLE commit — a manifest staged by an in-flight or
-    * aborted cross-table transaction ([[transactAppend]]) is skipped
-    * until its marker flips to committed.
-    */
-  private def snapshot(fs: FileSystem,
-      path: String): Option[(Long, Map[String, String], Seq[(String, Long)])] =
-    newestVisible(fs, path).map { case (n, _, c) =>
-      (n, parseMapping(c), parseDvs(c))
-    }
-
-  /** The active deletion-vector list of exactly version `n` (empty
-    * when `n` is missing/invisible — callers pair this with
-    * [[visibleMappingAt]], which is the existence gate).
-    */
-  private def visibleDvAt(fs: FileSystem, path: String,
-                          n: Long): Seq[(String, Long)] =
-    listVersions(fs, path).collectFirst { case (v, p) if v == n => p }
-      .map(p => parseDvs(readSmallFile(fs, p))).getOrElse(Nil)
+  def lastTxn(spark: SparkSession, path: String, appId: String): Option[Long] =
+    newestSnapshot(fsOf(spark, path), path).flatMap(_.txns.get(appId))
 
   /** Hard-link claim for local filesystems: `link(2)` fails EEXIST
     * atomically — no check-then-rename window. Mounts behind
@@ -490,47 +501,49 @@ object Warehouse {
       }
     })
 
-  /** Publish `mapping` as version `n` — write the content to a temp
-    * name, then claim the version through the filesystem's
-    * [[CommitPrimitive]]. Before the claim, readers resolve the
-    * previous version; after it, the new one — there is no torn
-    * state. A duplicate version number (a racing writer that resolved
-    * the same snapshot) fails loudly instead of clobbering a
-    * committed manifest.
+  /** Publish `mapping` as the successor of `prev`, version
+    * `prev.version + 1` — write the content to a temp name, then claim
+    * the version through the filesystem's [[CommitPrimitive]]. Before
+    * the claim, readers resolve `prev`; after it, the new version —
+    * there is no torn state. A duplicate version number (a racing
+    * writer that resolved the same snapshot) fails loudly instead of
+    * clobbering a committed manifest. `prev` is the snapshot the
+    * statement resolved ([[Snapshot.Empty]] for a table's first
+    * commit); nothing is read before the claim.
     *
-    * TXN records ride the manifest: version n carries version n-1's
-    * `#txn` lines overlaid with `txnUpdate` (the streaming sink's
-    * exactly-once cursor), so EVERY commit — merge, compact, vacuum's
-    * survivor, an unrelated writer — preserves the records, and a
-    * record is visible exactly when its data is.
+    * Headers ride the manifest and carry forward from `prev`: its
+    * `#txn` records overlaid with `txnUpdate` (the streaming sink's
+    * exactly-once cursor), its `#dv` list unless `dvUpdate` replaces
+    * it, and its `#layout` header unless `layoutUpdate` replaces it
+    * (an inner None removes the header). So EVERY commit — merge,
+    * compact, an unrelated writer — preserves them, and a record is
+    * visible exactly when its data is. When the claim is lost, the
+    * statement's retry resolves the winner's snapshot and carries the
+    * winner's headers.
     *
     * Failure contract (typed, never a message to match): a lost claim
     * throws [[CommitConflict]]; a slot held by a staged cross-table
     * transaction throws [[CommitBlocked]] naming its marker. Both
     * leave every committed version as it was.
     */
-  private[graft] def commit(fs: FileSystem, path: String, n: Long,
+  private[graft] def commit(fs: FileSystem, path: String, prev: Snapshot,
                             mapping: Map[String, String],
                             txnUpdate: Map[String, Long] = Map.empty,
                             pendingMarker: Option[String] = None,
                             dvUpdate: Option[Seq[(String, Long)]] = None,
                             layoutUpdate: Option[Option[Seq[String]]] = None): Unit = {
-    val vdir = new HPath(s"$path/_versions")
-    fs.mkdirs(vdir)
-    val prevContent =
-      if (n <= 1L) None
-      else listVersions(fs, path).collectFirst {
-        case (v, p) if v == n - 1 => readSmallFile(fs, p)
-      }
-    val txns = prevContent.map(parseTxns).getOrElse(Map.empty) ++ txnUpdate
+    val n = prev.version + 1
+    val vdir = versionsDir(path)
+    if (prev.version == 0L) fs.mkdirs(vdir)
+    val txns = prev.txns ++ txnUpdate
     // deletion vectors carry forward like txn records: a writer that
     // doesn't touch them (append/merge/overwrite-partitions) must not
     // silently resurrect DV-deleted rows by dropping the header
-    val dvs = dvUpdate.getOrElse(prevContent.map(parseDvs).getOrElse(Nil))
+    val dvs = dvUpdate.getOrElse(prev.dvs)
     // the layout header likewise: only evolveLayout (and restore,
     // which reinstates the target version's header INCLUDING its
-    // absence) changes it - outer None carries the previous header
-    val layout = layoutUpdate.getOrElse(prevContent.flatMap(parseLayout))
+    // absence) changes it
+    val layout = layoutUpdate.getOrElse(prev.layoutHeader)
     val tmp = new HPath(vdir, s".tmp_${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try out.write(
@@ -541,7 +554,7 @@ object Warehouse {
         mapping.toSeq.sorted.map { case (p, b) => s"$p\t$b" })
         .mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    val target = new HPath(vdir, f"v$n%08d")
+    val target = versionFile(path, n)
     val committed = primitiveFor(fs).claim(fs, tmp, target)
     fs.delete(tmp, false): Unit
     if (!committed) {
@@ -582,23 +595,6 @@ object Warehouse {
     result.get
   }
 
-  /** The newest visible snapshot, or a typed [[NoCommittedVersion]]
-    * when the table at `path` was never created.
-    */
-  private def currentSnapshot(fs: FileSystem, path: String)
-      : (Long, Map[String, String], Seq[(String, Long)]) =
-    snapshot(fs, path).getOrElse(throw new NoCommittedVersion(
-      s"no committed version under $path - create() first"))
-
-  /** The mapping of exactly version `n`, or a typed
-    * [[NoCommittedVersion]] when `n` was never committed or is staged
-    * by an uncommitted transaction.
-    */
-  private def committedMappingAt(fs: FileSystem, path: String,
-                                 n: Long): Map[String, String] =
-    visibleMappingAt(fs, path, n).getOrElse(throw new NoCommittedVersion(
-      s"no committed version $n under $path"))
-
   // ---------------------------------------------------------------
   // partition keys (relative hive paths, possibly multi-column)
   // ---------------------------------------------------------------
@@ -607,7 +603,7 @@ object Warehouse {
     * key (`dt=…/region=…` → Seq(dt, region)) — no filesystem access.
     * On a MIXED-layout table (mid partition-spec evolution) this is
     * one generation's layout, arbitrary — write paths use
-    * [[writeLayout]] (the `#layout` manifest header) instead, and
+    * [[Snapshot.layout]] (the `#layout` manifest header) instead, and
     * read paths parse each key's own layout ([[layoutColsOf]]).
     */
   private def partColsOf(mapping: Map[String, String]): Seq[String] =
@@ -639,16 +635,6 @@ object Warehouse {
   private def parseLayout(content: String): Option[Seq[String]] =
     content.split("\n").find(_.startsWith(LayoutPrefix + "\t"))
       .map(_.split("\t", 2)(1).split(",").toSeq.filter(_.nonEmpty))
-
-  /** The partition columns NEW WRITES must use: the `#layout` header
-    * when present (the table evolved at least once), else the uniform
-    * keys' layout. One extra small-file read per WRITE operation —
-    * noise next to the data work those operations do.
-    */
-  private def writeLayout(fs: FileSystem, path: String,
-                          mapping: Map[String, String]): Seq[String] =
-    newestVisible(fs, path).flatMap { case (_, _, c) => parseLayout(c) }
-      .getOrElse(partColsOf(mapping))
 
   /** Mapping keys whose partition tuple OVERLAPS any of `tuples`:
     * equal on every column the key and the tuple share. On a
@@ -827,22 +813,35 @@ object Warehouse {
     (batchId, valueOf(reported.getOrElse(frame.agg(metric).head())))
   }
 
-  /** The partition keys a just-written append-like batch holds. A
-    * batch that holds none (its frame had no rows) is refused with
-    * [[EmptyBatchException]] and `emptyMessage`; one that holds a NULL
-    * partition value (Spark writes it under
-    * `__HIVE_DEFAULT_PARTITION__`) is refused with the NULL message of
-    * [[partTuplesOf]]. Either way the batch is deleted first — it was
-    * never published — so the check costs a listing, not a job.
+  /** The partition keys a just-written batch holds. One that holds a
+    * NULL partition value is refused with the NULL message of
+    * [[partTuplesOf]]: Spark writes NULL, and an empty string, under
+    * `__HIVE_DEFAULT_PARTITION__`, which would commit as a NULL
+    * partition. The batch is deleted first — it was never published —
+    * so the check costs a listing, not a job.
+    */
+  private def writtenKeys(fs: FileSystem, path: String, batchId: String,
+                          partCols: Seq[String]): Seq[String] = {
+    val written = partDirs(fs, path, batchId, partCols)
+    partCols.find(c => written.exists(_.split('/').contains(
+      s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"))).foreach { c =>
+      dropBatch(fs, path, batchId)
+      require(false, nullPartMessage(c))
+    }
+    written
+  }
+
+  /** [[writtenKeys]] of an append-like batch, which must hold rows: an
+    * empty one (its frame had no rows) is deleted and refused with
+    * [[EmptyBatchException]] and `emptyMessage`.
     */
   private def writtenPartKeys(fs: FileSystem, path: String, batchId: String,
       partCols: Seq[String], emptyMessage: String): Seq[String] = {
-    val written = partDirs(fs, path, batchId, partCols)
-    val nullCol = partCols.find(c => written.exists(_.split('/').contains(
-      s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}")))
-    if (written.isEmpty || nullCol.nonEmpty) dropBatch(fs, path, batchId)
-    if (written.isEmpty) throw new EmptyBatchException(emptyMessage)
-    nullCol.foreach(c => require(false, nullPartMessage(c)))
+    val written = writtenKeys(fs, path, batchId, partCols)
+    if (written.isEmpty) {
+      dropBatch(fs, path, batchId)
+      throw new EmptyBatchException(emptyMessage)
+    }
     written
   }
 
@@ -963,9 +962,10 @@ object Warehouse {
   private def alterContext(spark: SparkSession, path: String): (
       FileSystem, Seq[SchemaOp], Set[String], Seq[String], Set[String]) = {
     val fs = fsOf(spark, path)
-    val existing = read(spark, path).columns.toSet
+    val snap = resolve(fs, path)
+    val existing = readSnapshot(spark, path, snap).columns.toSet
     val ops = readSchemaOverlay(fs, path)
-    val mapping = snapshot(fs, path).map(_._2).getOrElse(Map.empty)
+    val mapping = snap.mapping
     // the UNION across layout generations: an ALTER must not touch a
     // column that is a partition column in ANY live generation
     val partCols =
@@ -1213,11 +1213,12 @@ object Warehouse {
              partCols: Seq[String]): Unit = {
     requireSimpleCols(partCols)
     val fs = fsOf(spark, path)
-    require(snapshot(fs, path).isEmpty, s"warehouse table already exists at $path")
+    require(newestSnapshot(fs, path).isEmpty,
+      s"warehouse table already exists at $path")
     val batchId = writeBatch(path, df, partCols)
     val mapping = partDirs(fs, path, batchId, partCols)
       .map(_ -> batchId).toMap
-    commit(fs, path, 1L, mapping)
+    commit(fs, path, Snapshot.Empty, mapping)
   }
 
   def create(spark: SparkSession, path: String, df: DataFrame,
@@ -1244,10 +1245,10 @@ object Warehouse {
              maxAttempts: Int = 5,
              txn: Map[String, Long] = Map.empty): Int = {
     val fs = fsOf(spark, path)
-    val mapping0 = currentSnapshot(fs, path)._2
-    require(mapping0.nonEmpty,
+    val snap0 = resolve(fs, path)
+    require(snap0.mapping.nonEmpty,
       s"table at $path has no live partitions - re-create() to repopulate")
-    val partCols = writeLayout(fs, path, mapping0)
+    val partCols = snap0.layout
     if (fs.exists(metaPath(path))) {
       val (k, v) = readMeta(fs, path)
       mergeIntoDeltaCore(spark, path, df, k, v, partCols, None, maxAttempts,
@@ -1257,13 +1258,14 @@ object Warehouse {
       val written = writtenPartKeys(fs, path, batchId, partCols,
         "empty append batch")
       withCommitRetry(maxAttempts) { attempt =>
-        val (v, mapping, _) = currentSnapshot(fs, path)
+        val snap = resolve(fs, path)
+        val mapping = snap.mapping
         val newMapping = mapping ++ written.map(key =>
           key -> (mapping.get(key) match {
             case Some(chain) => s"$chain,+$batchId"
             case None        => s"+$batchId"
           }))
-        commit(fs, path, v + 1, newMapping, txn)
+        commit(fs, path, snap, newMapping, txn)
         attempt
       }
     }
@@ -1340,10 +1342,10 @@ object Warehouse {
     // stage the data batches first (all invisible until the flip)
     val staged = writes.map { case TxnWrite(path, df, overwrite) =>
       val fs = fsOf(spark, path)
-      val mapping0 = currentSnapshot(fs, path)._2
-      require(mapping0.nonEmpty,
+      val snap0 = resolve(fs, path)
+      require(snap0.mapping.nonEmpty,
         s"table at $path has no live partitions - re-create() to repopulate")
-      val partCols = writeLayout(fs, path, mapping0)
+      val partCols = snap0.layout
       val isDelta = fs.exists(metaPath(path))
       require(!(isDelta && overwrite),
         s"transact cannot OVERWRITE the delta table at $path - a plain " +
@@ -1377,7 +1379,8 @@ object Warehouse {
     // slots behind
     try staged.foreach { case (path, fs, batchId, written, overwrite, isDelta) =>
       withCommitRetry(5) { _ =>
-        val (v, mapping, _) = currentSnapshot(fs, path)
+        val snap = resolve(fs, path)
+        val mapping = snap.mapping
         if (isDelta) {
           // same contract as mergeIntoDelta: a delta link must attach
           // to its OWN key's chain - partitions still under a previous
@@ -1398,7 +1401,7 @@ object Warehouse {
               case Some(chain) => s"$chain,$link$batchId"
               case None        => s"$link$batchId"
             }))
-        commit(fs, path, v + 1, newMapping, pendingMarker = Some(marker))
+        commit(fs, path, snap, newMapping, pendingMarker = Some(marker))
       }
     } catch {
       case e: Throwable =>
@@ -1649,10 +1652,10 @@ object Warehouse {
                               dynamic: Boolean, maxAttempts: Int,
                               txn: Map[String, Long]): Int = {
     val fs = fsOf(spark, path)
-    val mapping0 = currentSnapshot(fs, path)._2
-    require(mapping0.nonEmpty,
+    val snap0 = resolve(fs, path)
+    require(snap0.mapping.nonEmpty,
       s"table at $path has no live partitions - re-create() to repopulate")
-    val partCols = writeLayout(fs, path, mapping0)
+    val partCols = snap0.layout
     // BOTH overwrite modes refuse an empty batch (advisor r14: a
     // static overwrite with zero rows used to commit an EMPTY mapping,
     // after which read/append/overwrite all refuse and only restore()
@@ -1665,7 +1668,8 @@ object Warehouse {
       else "empty change batch - static overwrite of a warehouse table " +
         "to zero rows is refused (it would leave no live partitions)")
     withCommitRetry(maxAttempts) { attempt =>
-      val (v, mapping, _) = currentSnapshot(fs, path)
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
       if (dynamic) {
         // a dynamic overwrite REPLACES exactly the partitions the
         // batch names; a named partition still stored (wholly or
@@ -1685,7 +1689,7 @@ object Warehouse {
       // a STATIC overwrite unreferences every previous file, so the
       // active deletion vectors are all stale - clear them; dynamic
       // mode keeps untouched partitions and carries the list forward
-      commit(fs, path, v + 1, newMapping, txn,
+      commit(fs, path, snap, newMapping, txn,
         dvUpdate = if (dynamic) None else Some(Nil))
       attempt
     }
@@ -1729,7 +1733,8 @@ object Warehouse {
     requireSimpleCols(newPartCols)
     val fs = fsOf(spark, path)
     withCommitRetry(maxAttempts) { _ =>
-      val (v, mapping, dvs) = currentSnapshot(fs, path)
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
       require(mapping.nonEmpty,
         s"table at $path has no live partitions - nothing to evolve")
       val chosen = mapping.keySet.filter(key =>
@@ -1737,8 +1742,8 @@ object Warehouse {
       if (chosen.isEmpty) {
         // nothing selected to rewrite: flip the header only (new
         // writes take the new spec; compact migrates the rest)
-        if (writeLayout(fs, path, mapping) != newPartCols)
-          commit(fs, path, v + 1, mapping,
+        if (snap.layout != newPartCols)
+          commit(fs, path, snap, mapping,
             layoutUpdate = Some(Some(newPartCols)))
         0
       } else {
@@ -1747,7 +1752,7 @@ object Warehouse {
         val selectedKeys = overlapClosure(mapping, chosen.toSeq.map(kvOf))
         val selected = mapping.filter { case (k, _) => selectedKeys(k) }
         val rows = readMapped(spark, path, selected,
-          partColsOf(selected), dvs)
+          partColsOf(selected), snap.dvs)
         newPartCols.foreach(c => require(rows.columns.contains(c),
           s"evolveLayout: '$c' is not a column of the table at $path"))
         require(rows.filter(
@@ -1792,7 +1797,7 @@ object Warehouse {
           written.map(_ -> batchId)
         require(newMapping.nonEmpty,
           "evolveLayout would leave the table empty - refusing")
-        commit(fs, path, v + 1, newMapping,
+        commit(fs, path, snap, newMapping,
           layoutUpdate = Some(Some(newPartCols)))
         selected.size
       }
@@ -1810,29 +1815,35 @@ object Warehouse {
     */
   def restore(spark: SparkSession, path: String, n: Long): Long = {
     val fs = fsOf(spark, path)
-    val mapping = committedMappingAt(fs, path, n)
-    mapping.toSeq.sorted.foreach { case (key, chain) =>
-      chainOf(chain).foreach { b =>
-        if (!fs.exists(new HPath(s"$path/data/batch=$b/$key")))
-          throw new IllegalStateException(
-            s"cannot restore $path to version $n: it references vacuumed " +
-              s"data (batch=$b/$key) - history before the last vacuum is gone")
-      }
-    }
-    val newest = newestVisible(fs, path).map(_._1).getOrElse(n)
+    val target = resolve(fs, path, Some(n))
+    requireUnvacuumed(fs, path, target, s"cannot restore $path to version $n: it")
+    val newest = newestSnapshot(fs, path).getOrElse(target)
     // version n's DELETION VECTORS and #layout header are part of its
     // logical state - restore them with the mapping (a restore to a
     // pre-evolution version must also write in the old layout again;
     // judge r18 review). The sidecars survive vacuum exactly as long
     // as the version file does, checked above.
-    val nLayout = listVersions(fs, path)
-      .collectFirst { case (v, pth) if v == n => pth }
-      .flatMap(pth => parseLayout(readSmallFile(fs, pth)))
-    commit(fs, path, newest + 1, mapping,
-      dvUpdate = Some(visibleDvAt(fs, path, n)),
-      layoutUpdate = Some(nLayout))
-    newest + 1
+    commit(fs, path, newest, target.mapping,
+      dvUpdate = Some(target.dvs),
+      layoutUpdate = Some(target.layoutHeader))
+    newest.version + 1
   }
+
+  /** Refuse a snapshot whose mapping names a (batch, partition) dir a
+    * [[vacuum]] removed — time travel past the retention boundary
+    * fails loudly instead of serving a partial snapshot. `subject`
+    * opens the message ("version 3 of /t").
+    */
+  private def requireUnvacuumed(fs: FileSystem, path: String,
+                                snap: Snapshot, subject: String): Unit =
+    snap.mapping.toSeq.sorted.foreach { case (key, chain) =>
+      chainOf(chain).foreach { b =>
+        if (!fs.exists(new HPath(s"$path/data/batch=$b/$key")))
+          throw new IllegalStateException(
+            s"$subject references vacuumed data (batch=$b/$key) - history " +
+              "before the last vacuum is gone")
+      }
+    }
 
   /** METADATA-ONLY partition delete — the SQL `DELETE FROM … WHERE
     * <partition predicate>` plane (Delta/Hive's drop-partition
@@ -1857,9 +1868,9 @@ object Warehouse {
                             maxAttempts: Int = 5): Int = {
     val fs = fsOf(spark, path)
     withCommitRetry(maxAttempts) { _ =>
-      val (v, mapping, _) = currentSnapshot(fs, path)
-      val dropped = mapping.keySet.filter(key => pred(kvOf(key)))
-      if (dropped.nonEmpty) commit(fs, path, v + 1, mapping -- dropped)
+      val snap = resolve(fs, path)
+      val dropped = snap.mapping.keySet.filter(key => pred(kvOf(key)))
+      if (dropped.nonEmpty) commit(fs, path, snap, snap.mapping -- dropped)
       dropped.size
     }
   }
@@ -1902,14 +1913,15 @@ object Warehouse {
                   hookFor: Int => () => Unit = _ => () => ()): Long = {
     val fs = fsOf(spark, path)
     def attemptOnce(attempt: Int): Long = {
-      val (v, mapping, dvs) = currentSnapshot(fs, path)
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
       if (mapping.isEmpty) return 0L
-      val partCols = writeLayout(fs, path, mapping)
+      val partCols = snap.layout
       val touchedKeys = overlapClosure(mapping, partTuplesOf(
-        readForScan(spark, path, None, bounds).filter(pred), partCols))
+        scanSnapshot(spark, fs, path, snap, bounds).filter(pred), partCols))
       if (touchedKeys.isEmpty) return 0L
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
-      val touchedRows = readMapped(spark, path, touched, partCols, dvs)
+      val touchedRows = readMapped(spark, path, touched, partCols, snap.dvs)
       def survivors(rows: DataFrame) = rows.filter(pred.isNull || !pred)
       requireMigratableNonNull(survivors(touchedRows), touchedKeys, partCols,
         "DELETE")
@@ -1919,7 +1931,7 @@ object Warehouse {
       val written = partDirs(fs, path, batchId, partCols).toSet
       val newMapping = (mapping -- touchedKeys) ++ written.map(_ -> batchId)
       hookFor(attempt)()
-      commit(fs, path, v + 1, newMapping)
+      commit(fs, path, snap, newMapping)
       deleted
     }
     withCommitRetry(maxAttempts)(attemptOnce)
@@ -2007,11 +2019,13 @@ object Warehouse {
     // None: the vector arm hit the size valve before anything was
     // committed, and the statement runs copy-on-write instead
     def attemptOnce(attempt: Int): Option[Long] = {
-      val (v, mapping, dvs) = currentSnapshot(fs, path)
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
+      val dvs = snap.dvs
       if (mapping.isEmpty) return Some(0L)
-      val partCols = writeLayout(fs, path, mapping)
+      val partCols = snap.layout
       val touchedKeys = overlappingKeys(mapping, partTuplesOf(
-        readForScan(spark, path, None, bounds).filter(pred), partCols))
+        scanSnapshot(spark, fs, path, snap, bounds).filter(pred), partCols))
       if (touchedKeys.isEmpty) return Some(0L)
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
       val (chainedT0, pureT0) = touched.partition { case (_, c) => needsFold(c) }
@@ -2063,7 +2077,7 @@ object Warehouse {
       }
       if (dvDeleted == 0L && cowDeleted == 0L) return Some(0L)
       hookFor(attempt)()
-      commitDv(fs, path, v + 1, newMapping, dvs, dvAdd)
+      commitDv(fs, path, snap, newMapping, dvAdd)
       Some(dvDeleted + cowDeleted)
     }
     withCommitRetry(maxAttempts)(attemptOnce).getOrElse(
@@ -2116,9 +2130,10 @@ object Warehouse {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     val fs = fsOf(spark, path)
     def attemptOnce(attempt: Int): Long = {
-      val (v, mapping, dvs) = currentSnapshot(fs, path)
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
       if (mapping.isEmpty) return 0L
-      val partCols = writeLayout(fs, path, mapping)
+      val partCols = snap.layout
       assignments.foreach { case (c, _) =>
         require(!partCols.contains(c),
           s"UPDATE cannot assign partition column '$c' - partition values " +
@@ -2126,10 +2141,10 @@ object Warehouse {
             "(or a merge with a tombstone + fresh row)")
       }
       val touchedKeys = overlapClosure(mapping, partTuplesOf(
-        readForScan(spark, path, None, bounds).filter(pred), partCols))
+        scanSnapshot(spark, fs, path, snap, bounds).filter(pred), partCols))
       if (touchedKeys.isEmpty) return 0L
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
-      val touchedRows = readMapped(spark, path, touched, partCols, dvs)
+      val touchedRows = readMapped(spark, path, touched, partCols, snap.dvs)
       assignments.foreach { case (c, _) =>
         require(touchedRows.columns.contains(c),
           s"UPDATE references unknown column '$c'")
@@ -2154,7 +2169,7 @@ object Warehouse {
       val written = partDirs(fs, path, batchId, partCols).toSet
       val newMapping = (mapping -- touchedKeys) ++ written.map(_ -> batchId)
       hookFor(attempt)()
-      commit(fs, path, v + 1, newMapping)
+      commit(fs, path, snap, newMapping)
       updated
     }
     withCommitRetry(maxAttempts)(attemptOnce)
@@ -2166,13 +2181,16 @@ object Warehouse {
     * argmax, tombstones dropped — so a reader always sees the merged
     * logical state whichever write path produced it.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = fsOf(spark, path)
-    val (_, mapping, dvs) = currentSnapshot(fs, path)
-    require(mapping.nonEmpty,
+  def read(spark: SparkSession, path: String): DataFrame =
+    readSnapshot(spark, path, resolve(fsOf(spark, path), path))
+
+  /** [[read]] of an already-resolved snapshot. */
+  private def readSnapshot(spark: SparkSession, path: String,
+                           snap: Snapshot): DataFrame = {
+    require(snap.mapping.nonEmpty,
       s"table at $path has no live partitions (every row deleted) - " +
         "no schema to serve; re-create() to repopulate")
-    readMapped(spark, path, mapping, partColsOf(mapping), dvs)
+    readMapped(spark, path, snap.mapping, partColsOf(snap.mapping), snap.dvs)
   }
 
   /** Above this many ACCUMULATED vector entries the read-side
@@ -2271,8 +2289,9 @@ object Warehouse {
       catch { case _: java.io.IOException => () }
   }
 
-  /** Commit version `n` publishing the attempt's fresh deletion-vector
-    * sidecar `dvAdd` (if any) on top of the snapshot's vectors `dvs`.
+  /** Commit the successor of `prev` publishing the attempt's fresh
+    * deletion-vector sidecar `dvAdd` (if any) on top of `prev`'s
+    * vectors.
     * When the commit fails the sidecar goes: at once on a
     * [[CommitConflict]] (a lost claim provably published nothing, so
     * the hot retry path pays no history scan); on any other non-fatal
@@ -2280,11 +2299,12 @@ object Warehouse {
     * may have published before throwing). Fatal errors skip the
     * cleanup. The error always propagates.
     */
-  private def commitDv(fs: FileSystem, path: String, n: Long,
-                       mapping: Map[String, String], dvs: Seq[(String, Long)],
+  private def commitDv(fs: FileSystem, path: String, prev: Snapshot,
+                       mapping: Map[String, String],
                        dvAdd: Option[(String, Long)],
                        txn: Map[String, Long] = Map.empty): Unit =
-    try commit(fs, path, n, mapping, txn, dvUpdate = Some(dvs ++ dvAdd.toSeq))
+    try commit(fs, path, prev, mapping, txn,
+      dvUpdate = Some(prev.dvs ++ dvAdd.toSeq))
     catch {
       case e: CommitConflict =>
         dvAdd.foreach { case (id, _) =>
@@ -2620,16 +2640,10 @@ object Warehouse {
   private[graft] def readVersion(spark: SparkSession, path: String, n: Long,
                                  onlyParts: Option[Set[String]]): DataFrame = {
     val fs = fsOf(spark, path)
-    val mapping = committedMappingAt(fs, path, n)
+    val snap = resolve(fs, path, Some(n))
+    val mapping = snap.mapping
     require(mapping.nonEmpty, s"version $n of $path has no live partitions")
-    mapping.toSeq.sorted.foreach { case (key, chain) =>
-      chainOf(chain).foreach { b =>
-        if (!fs.exists(new HPath(s"$path/data/batch=$b/$key")))
-          throw new IllegalStateException(
-            s"version $n of $path references vacuumed data " +
-              s"(batch=$b/$key) - history before the last vacuum is gone")
-      }
-    }
+    requireUnvacuumed(fs, path, snap, s"version $n of $path")
     val sub = onlyParts.fold(mapping)(ps =>
       mapping.filter { case (k, _) => ps(k) })
     if (sub.isEmpty)
@@ -2638,8 +2652,7 @@ object Warehouse {
       // replayed empty group set must not throw)
       return readMapped(spark, path, mapping, partColsOf(mapping), Nil)
         .filter(lit(false))
-    readMapped(spark, path, sub, partColsOf(mapping),
-      visibleDvAt(fs, path, n))
+    readMapped(spark, path, sub, partColsOf(mapping), snap.dvs)
   }
 
   /** Per-partition byte sizes of the FULL snapshot at version `n` —
@@ -2652,7 +2665,7 @@ object Warehouse {
   private[graft] def snapshotPageStats(spark: SparkSession, path: String,
                                        n: Long): Seq[(String, Long, Long)] = {
     val fs = fsOf(spark, path)
-    val mapping = committedMappingAt(fs, path, n)
+    val mapping = resolve(fs, path, Some(n)).mapping
     mapping.toSeq.sorted.map { case (key, chain) =>
       val sized = chainOf(chain).map { b =>
         val fsts = fs.listStatus(new HPath(s"$path/data/batch=$b/$key"))
@@ -2698,24 +2711,20 @@ object Warehouse {
     val (pendingOpen, settled) = all.partition { case (_, _, c) =>
       pendingMarkerOf(c).exists(m => !markerCommitted(fs, m))
     }
-    val versions = settled.map { case (v, p, _) => (v, p) }
-    require(versions.nonEmpty, s"no committed version under $path")
-    val (newest, newestPath) = versions.maxBy(_._1)
-    val mapping = readMapping(fs, newestPath)
+    require(settled.nonEmpty, s"no committed version under $path")
+    val (newest, _, newestContent) = settled.maxBy(_._1)
+    val mapping = parseMapping(newestContent)
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val old = versions.filter { case (v, p) =>
-      v < newest && fs.getFileStatus(p).getModificationTime <= cutoff
-    }
     // sweep data first: if we die between the two steps, the old
     // version files reference missing dirs and readVersion fails
     // loudly (never silently serves a partial snapshot). Age-gated
     // symmetrically with the version files, so a young superseded
     // version stays fully readable until it passes the retention.
-    val retained = versions.filter { case (v, p) =>
-      v < newest && fs.getFileStatus(p).getModificationTime > cutoff
+    val (retained, old) = settled.filter(_._1 < newest).partition {
+      case (_, p, _) => fs.getFileStatus(p).getModificationTime > cutoff
     }
-    val protected0 = retained.map { case (_, p) => readMapping(fs, p) } ++
-      pendingOpen.map { case (_, _, c) => parseMapping(c) }
+    val protected0 = (retained ++ pendingOpen).map { case (_, _, c) =>
+      parseMapping(c) }
     val live =
       if (protected0.isEmpty) mapping
       else mapping ++ protected0.flatten
@@ -2730,7 +2739,7 @@ object Warehouse {
     // hold partitions (advisor r13)
     if (live.nonEmpty)
       sweep(fs, path, live, minAgeMs)
-    old.foreach { case (_, p) =>
+    old.foreach { case (_, p, _) =>
       try fs.delete(p, false)
       catch { case _: java.io.IOException => () }
     }
@@ -2744,9 +2753,7 @@ object Warehouse {
     val dvDirRoot = new HPath(s"$path/_dv")
     if (fs.exists(dvDirRoot)) {
       val liveDv: Set[String] =
-        (Seq(readSmallFile(fs, newestPath)) ++
-          retained.map { case (_, p) => readSmallFile(fs, p) } ++
-          pendingOpen.map { case (_, _, c) => c })
+        (newestContent +: (retained ++ pendingOpen).map(_._3))
           .flatMap(c => parseDvs(c).map(_._1)).toSet
       fs.listStatus(dvDirRoot).foreach { st =>
         if (!liveDv.contains(st.getPath.getName) &&
@@ -2877,10 +2884,12 @@ object Warehouse {
     requireSimpleCols(partCols)
     val fs = fsOf(spark, path)
     withCommitRetry(maxAttempts) { attempt =>
-      val (v, mapping, dvs) = currentSnapshot(fs, path)
-      require(partCols == writeLayout(fs, path, mapping),
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
+      val dvs = snap.dvs
+      require(partCols == snap.layout,
         s"merge partCols (${partCols.mkString(",")}) must equal the table's " +
-          s"current layout (${writeLayout(fs, path, mapping).mkString(",")}) - " +
+          s"current layout (${snap.layout.mkString(",")}) - " +
           "evolveLayout changed it")
       val tuples = partTuplesOf(changes, partCols)
       if (tuples.isEmpty) throw new EmptyBatchException("empty change batch")
@@ -3000,11 +3009,11 @@ object Warehouse {
           // and their tombstone rows pass through the union harmlessly — a
           // winner or a stale loser alike is dropped by the !_del filter,
           // never written.)
-          val written = partDirs(fs, path, batchId, partCols).toSet
+          val written = writtenKeys(fs, path, batchId, partCols).toSet
           (mapping -- cowTouched) ++ written.map(_ -> batchId)
         }
       hookFor(attempt)()
-      commitDv(fs, path, v + 1, newMapping, dvs, dvAdd, txn)
+      commitDv(fs, path, snap, newMapping, dvAdd, txn)
       attempt
     }
   }
@@ -3066,7 +3075,7 @@ object Warehouse {
                      txn: Map[String, Long] = Map.empty): Int = {
     requireSimpleCols(partCols)
     val fs = fsOf(spark, path)
-    require(snapshot(fs, path).nonEmpty,
+    require(newestSnapshot(fs, path).nonEmpty,
       s"no committed version under $path - create() first")
     writeMetaIfAbsent(fs, path, keyCol, versionCol)
     val touched = partKeysOf(changes, partCols)
@@ -3080,9 +3089,10 @@ object Warehouse {
     // the data lands ONCE, before the commit loop — a lost race never
     // rewrites it, only re-publishes the manifest
     val batchId = writeBatch(path, toWrite, partCols)
-    val written = partDirs(fs, path, batchId, partCols).toSet
+    val written = writtenKeys(fs, path, batchId, partCols).toSet
     withCommitRetry(maxAttempts) { attempt =>
-      val (v, mapping, _) = currentSnapshot(fs, path)
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
       // a delta link attaches to EXACTLY its own key's chain; a
       // touched logical partition still stored under a PREVIOUS
       // layout generation's key would sit outside the fold group and
@@ -3102,7 +3112,7 @@ object Warehouse {
           case None        => s"~$batchId"
         }))
       hookFor(attempt)()
-      commit(fs, path, v + 1, newMapping, txn)
+      commit(fs, path, snap, newMapping, txn)
       attempt
     }
   }
@@ -3259,14 +3269,16 @@ object Warehouse {
     }
     val fs = fsOf(spark, path)
     def attemptOnce(attempt: Int): Unit = {
-      val (v, mapping, dvs) = currentSnapshot(fs, path)
+      val snap = resolve(fs, path)
+      val mapping = snap.mapping
+      val dvs = snap.dvs
       require(mapping.nonEmpty,
         s"table at $path has no live partitions - re-create() to repopulate")
-      val partCols = writeLayout(fs, path, mapping)
+      val partCols = snap.layout
       partCols.foreach(c => require(source.columns.contains(c),
         s"MERGE source must carry partition column '$c' - a change row " +
           "names the partition it belongs to (the mergeInto contract)"))
-      val tblSchema = read(spark, path).schema
+      val tblSchema = readSnapshot(spark, path, snap).schema
       targetKeys.foreach(k => require(tblSchema.fieldNames.contains(k),
         s"MERGE key '$k' is not a column of the table at $path"))
       targetCondCols.foreach(c => require(tblSchema.fieldNames.contains(c),
@@ -3718,7 +3730,7 @@ object Warehouse {
               "row - a target row may match at most one source row (SQL " +
               "cardinality rule); de-duplicate the source (e.g. latest-wins " +
               "argmax) first")
-          val written = partDirs(fs, path, batchId, partCols).toSet
+          val written = writtenKeys(fs, path, batchId, partCols).toSet
           // an insert may NAME a brand-new partition (fine — it joins
           // the mapping) but must never silently claim an EXISTING
           // partition the source's partition columns did not name
@@ -3743,7 +3755,7 @@ object Warehouse {
           "for an intended full wipe (restorable via restore()) or " +
           "overwrite() to replace the table")
       hookFor(attempt)()
-      commitDv(fs, path, v + 1, newMapping, dvs, dvAdd)
+      commitDv(fs, path, snap, newMapping, dvAdd)
     }
     withCommitRetry(maxAttempts)(attemptOnce)
   }
@@ -3786,10 +3798,8 @@ object Warehouse {
               onlyParts: Option[Set[String]]): DataFrame = {
     require(fromV < toV, s"need fromV < toV, got $fromV >= $toV")
     val fs = fsOf(spark, path)
-    val mapFrom = committedMappingAt(fs, path, fromV)
-    val mapTo = committedMappingAt(fs, path, toV)
-    val dvFrom = visibleDvAt(fs, path, fromV)
-    val dvTo = visibleDvAt(fs, path, toV)
+    val (from, to) = (resolve(fs, path, Some(fromV)), resolve(fs, path, Some(toV)))
+    val (mapFrom, mapTo, dvFrom, dvTo) = (from.mapping, to.mapping, from.dvs, to.dvs)
     val anyMap = if (mapTo.nonEmpty) mapTo else mapFrom
     require(anyMap.nonEmpty, s"versions $fromV and $toV of $path are both empty")
     val partCols = partColsOf(anyMap)
@@ -3887,11 +3897,10 @@ object Warehouse {
   def changeLog(spark: SparkSession, path: String, keyCol: String,
                 fromV: Long = 1L, toV: Option[Long] = None,
                 maxCommits: Int = 64): DataFrame = {
-    val fs = fsOf(spark, path)
-    val newest = currentSnapshot(fs, path)._1
+    val newest = currentVersion(spark, path)
     val to = toV.getOrElse(newest)
     require(to <= newest, s"toV $to exceeds newest committed version $newest")
-    val oldest = listVersions(fs, path).map(_._1).min
+    val oldest = oldestVersion(spark, path)
     require(fromV >= oldest && fromV < to,
       s"need $oldest <= fromV < $to (toV), got $fromV")
     require(to - fromV <= maxCommits,
@@ -3915,10 +3924,10 @@ object Warehouse {
   private[graft] def commitPageStats(spark: SparkSession, path: String,
                                      n: Long): Seq[(String, Long, Long)] = {
     val fs = fsOf(spark, path)
-    val mapFrom = committedMappingAt(fs, path, n - 1)
-    val mapTo = committedMappingAt(fs, path, n)
-    val dvFrom = visibleDvAt(fs, path, n - 1).map(_._1)
-    val dvTo = visibleDvAt(fs, path, n).map(_._1)
+    val (from, to) = (resolve(fs, path, Some(n - 1)), resolve(fs, path, Some(n)))
+    val (mapFrom, mapTo) = (from.mapping, to.mapping)
+    val dvFrom = from.dvs.map(_._1)
+    val dvTo = to.dvs.map(_._1)
     val addedDv = dvTo.filterNot(dvFrom.toSet)
     val dvMoved: Set[String] =
       if (addedDv.isEmpty) Set.empty
@@ -3968,11 +3977,10 @@ object Warehouse {
     * the DSv2 table reports. One manifest read, no data access.
     */
   def partitionColumns(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fsOf(spark, path)
-    val mapping = currentSnapshot(fs, path)._2
-    require(mapping.nonEmpty,
+    val snap = resolve(fsOf(spark, path), path)
+    require(snap.mapping.nonEmpty,
       s"table at $path has no live partitions - no layout to report")
-    writeLayout(fs, path, mapping)
+    snap.layout
   }
 
   /** Every data file of the (possibly time-traveled) snapshot WHEN no
@@ -3986,13 +3994,8 @@ object Warehouse {
   private[graft] def foldFreeFiles(spark: SparkSession, path: String,
       versionAsOf: Option[Long]): Option[(Seq[String], Seq[String])] = {
     val fs = fsOf(spark, path)
-    val (mapping, dvs) = versionAsOf match {
-      case Some(n) =>
-        (committedMappingAt(fs, path, n), visibleDvAt(fs, path, n))
-      case None =>
-        val (_, m, dvs) = currentSnapshot(fs, path)
-        (m, dvs)
-    }
+    val snap = resolve(fs, path, versionAsOf)
+    val (mapping, dvs) = (snap.mapping, snap.dvs)
     // active deletion vectors make footer row counts and raw file
     // reads over-deliver deleted rows. Their sidecar DIRS ride along
     // (second element): a caller whose partials are pure row COUNTS
@@ -4031,10 +4034,9 @@ object Warehouse {
   def rowCountEstimate(spark: SparkSession, path: String,
       versionAsOf: Option[Long], maxFiles: Int = 1024): Option[Long] = {
     val fs = fsOf(spark, path)
-    val mapping = versionAsOf match {
-      case Some(n) => visibleMappingAt(fs, path, n).getOrElse(return None)
-      case None => snapshot(fs, path).map(_._2).getOrElse(return None)
-    }
+    val mapping =
+      try resolve(fs, path, versionAsOf).mapping
+      catch { case _: NoCommittedVersion => return None }
     if (mapping.isEmpty) return Some(0L)
     try {
       val files = for {
@@ -4061,20 +4063,19 @@ object Warehouse {
     val fs = fsOf(spark, path)
     val versions = listVersions(fs, path)
     require(versions.nonEmpty, s"no committed version under $path")
-    versions.sortBy(-_._1).filter { case (_, p) => visible(fs, p) }
-      .map { case (v, p) =>
-        (v, fs.getFileStatus(p).getModificationTime,
-          readMapping(fs, p).size, readTxnsOf(fs, p).size)
-      }
+    versions.sortBy(-_._1).flatMap { case (v, p) =>
+      val c = readSmallFile(fs, p)
+      if (!contentVisible(fs, c)) None
+      else Some((v, fs.getFileStatus(p).getModificationTime,
+        parseMapping(c).size, parseTxns(c).size))
+    }
   }
 
   /** The newest committed version number — the cursor a change-feed
     * consumer checkpoints against.
     */
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val fs = fsOf(spark, path)
-    currentSnapshot(fs, path)._1
-  }
+  def currentVersion(spark: SparkSession, path: String): Long =
+    resolve(fsOf(spark, path), path).version
 
   /** The newest version committed at-or-before the given instant
     * (epoch MICROseconds) — `TIMESTAMP AS OF` resolution, off the
@@ -4107,7 +4108,11 @@ object Warehouse {
     */
   def partitionStats(spark: SparkSession, path: String): Seq[(String, String, Int, Long)] = {
     val fs = fsOf(spark, path)
-    val (_, mapping, _) = currentSnapshot(fs, path)
+    partitionStatsOf(fs, path, resolve(fs, path).mapping)
+  }
+
+  private def partitionStatsOf(fs: FileSystem, path: String,
+      mapping: Map[String, String]): Seq[(String, String, Int, Long)] =
     mapping.toSeq.sorted.map { case (key, chain) =>
       val files = chainOf(chain).flatMap { b =>
         fs.listStatus(new HPath(s"$path/data/batch=$b/$key"))
@@ -4115,7 +4120,6 @@ object Warehouse {
       }
       (key, chain, files.length, files.map(_.getLen).sum)
     }
-  }
 
   // ---------------------------------------------------------------
   // table-level column statistics (ANALYZE) — CBO join ordering
@@ -4337,9 +4341,10 @@ object Warehouse {
                           zorderCols: Seq[String],
                           bloomCols: Seq[String] = Nil,
                           bloomExpectedItems: Long = 100000L): Int = {
-    val (v, mapping, dvs) = currentSnapshot(fs, path)
-    val partCols = writeLayout(fs, path, mapping)
-    val stats = partitionStats(spark, path)
+    val snap = resolve(fs, path)
+    val (mapping, dvs) = (snap.mapping, snap.dvs)
+    val partCols = snap.layout
+    val stats = partitionStatsOf(fs, path, mapping)
     // which live (batch, partition) links carry deletion-vector
     // entries: those partitions MATERIALIZE this pass (the DV's
     // subtraction folds into the fresh base and the vector drops)
@@ -4378,7 +4383,7 @@ object Warehouse {
         val kept = perDvLive.collect { case (id, live) if live.nonEmpty =>
           dvs.find(_._1 == id).get
         }
-        commit(fs, path, v + 1, mapping, dvUpdate = Some(kept))
+        commit(fs, path, snap, mapping, dvUpdate = Some(kept))
       }
       0
     } else {
@@ -4414,7 +4419,7 @@ object Warehouse {
       val keptDvs = perDvLive.collect {
         case (id, live) if live.exists(newLive) => dvs.find(_._1 == id).get
       }
-      commit(fs, path, v + 1, newMapping, dvUpdate = Some(keptDvs))
+      commit(fs, path, snap, newMapping, dvUpdate = Some(keptDvs))
       frag.length
     }
   }
@@ -4454,10 +4459,8 @@ object Warehouse {
                analyzeEvery: Int): Boolean = {
     require(everyNCommits >= 1, s"everyNCommits must be >= 1, got $everyNCommits")
     require(analyzeEvery >= 0, s"analyzeEvery must be >= 0, got $analyzeEvery")
-    val fs = fsOf(spark, path)
-    val (v, _, _) = currentSnapshot(fs, path)
-    val compacted =
-      v % everyNCommits == 0 && compact(spark, path, sortCol, targetBytes) > 0
+    val compacted = currentVersion(spark, path) % everyNCommits == 0 &&
+      compact(spark, path, sortCol, targetBytes) > 0
     if (analyzeEvery > 0) colStatsVersion(spark, path).foreach { at =>
       if (currentVersion(spark, path) - at >= analyzeEvery) {
         val cols = readColStats(spark, path).keys.toSeq.sorted
@@ -4949,17 +4952,13 @@ object Warehouse {
   private[graft] def nativeScanEligible(spark: SparkSession, path: String,
       versionAsOf: Option[Long]): Boolean = {
     val fs = fsOf(spark, path)
-    val md =
-      try versionAsOf match {
-        case Some(n) =>
-          visibleMappingAt(fs, path, n).map(m => (m, visibleDvAt(fs, path, n)))
-        case None =>
-          snapshot(fs, path).map { case (_, m, dvs) => (m, dvs) }
-      } catch { case _: Exception => None }
-    md.exists { case (mapping, dvs) =>
-      dvs.isEmpty && mapping.nonEmpty &&
-        !mapping.values.exists(needsFold) &&
-        mapping.keys.map(layoutColsOf).toSet.size <= 1
+    val snap =
+      try Some(resolve(fs, path, versionAsOf))
+      catch { case _: Exception => None }
+    snap.exists { s =>
+      s.dvs.isEmpty && s.mapping.nonEmpty &&
+        !s.mapping.values.exists(needsFold) &&
+        s.mapping.keys.map(layoutColsOf).toSet.size <= 1
     }
   }
 
@@ -4969,22 +4968,21 @@ object Warehouse {
                    limit: Option[Int] = None,
                    extraBounds: Seq[(String, Bound)] = Nil): DataFrame = {
     val fs = fsOf(spark, path)
-    val (fullMapping, dvs) = versionAsOf match {
-      case Some(n) =>
-        val m = committedMappingAt(fs, path, n)
-        m.toSeq.sorted.foreach { case (key, chain) =>
-          chainOf(chain).foreach { b =>
-            if (!fs.exists(new HPath(s"$path/data/batch=$b/$key")))
-              throw new IllegalStateException(
-                s"version $n of $path references vacuumed data " +
-                  s"(batch=$b/$key) - history before the last vacuum is gone")
-          }
-        }
-        (m, visibleDvAt(fs, path, n))
-      case None =>
-        val (_, m, dvs) = currentSnapshot(fs, path)
-        (m, dvs)
-    }
+    val snap = resolve(fs, path, versionAsOf)
+    versionAsOf.foreach(n =>
+      requireUnvacuumed(fs, path, snap, s"version $n of $path"))
+    scanSnapshot(spark, fs, path, snap, bounds, limit, extraBounds)
+  }
+
+  /** [[readForScan]] of an already-resolved snapshot — the DML
+    * statements' touched-partition discovery scans the snapshot the
+    * statement rewrites.
+    */
+  private def scanSnapshot(spark: SparkSession, fs: FileSystem, path: String,
+                           snap: Snapshot, bounds: Map[String, Bound],
+                           limit: Option[Int] = None,
+                           extraBounds: Seq[(String, Bound)] = Nil): DataFrame = {
+    val (fullMapping, dvs) = (snap.mapping, snap.dvs)
     require(fullMapping.nonEmpty, s"table at $path has no live partitions")
     val partCols = partColsOf(fullMapping)
     // mid partition-spec evolution a snapshot holds several layout

@@ -146,6 +146,38 @@ class WarehouseDmlSpec extends AnyFunSuite {
     assert(rows == Seq((1L, "a"), (2L, "a"), (3L, "b"), (7L, "c")))
   }
 
+  test("MERGE and mergeInto refuse an empty-string partition value (Spark writes it as a NULL partition): table and batch dirs unchanged") {
+    val path = freshDir()
+    seed(path)
+    def batchDirs(): Set[String] =
+      Files.list(Paths.get(path, "data")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("batch=")).toSet
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(c => String.valueOf(c.getMessage)).toSeq
+    val v = Warehouse.currentVersion(spark, path)
+    val batches = batchDirs()
+    val e = intercept[Exception] {
+      spark.sql(
+        s"""MERGE INTO graft.`$path` t
+           |USING (SELECT CAST(900 AS BIGINT) AS id, CAST(1 AS BIGINT) AS ver,
+           |              'm' AS v, '' AS dt) s
+           |ON t.id = s.id
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
+    }
+    assert(messages(e).exists(_.contains("change batch carries a NULL dt")),
+      messages(e))
+    val e2 = intercept[IllegalArgumentException] {
+      Warehouse.mergeInto(spark, path,
+        Seq((901L, 1L, "m", "")).toDF("id", "ver", "v", "dt"),
+        "id", "ver", Seq("dt"))
+    }
+    assert(e2.getMessage.contains("change batch carries a NULL dt"), e2.getMessage)
+    assert(Warehouse.currentVersion(spark, path) == v)
+    assert(batchDirs() == batches, "a refused MERGE left its batch dir")
+    assert(Warehouse.read(spark, path).count() == 3L)
+  }
+
   test("MERGE with explicit column assignments: unassigned columns keep target values (UPDATE) / land NULL (INSERT)") {
     val path = freshDir()
     seed(path)

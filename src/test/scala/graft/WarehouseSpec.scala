@@ -334,9 +334,10 @@ class WarehouseSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the loser of a version race: both writers resolved version 1,
     // the winner has already published v2 when the loser commits
-    Warehouse.commit(fs, path, 2L, Map("d9" -> "winner"))
+    val v1 = Warehouse.newestSnapshot(fs, path).get
+    Warehouse.commit(fs, path, v1, Map("d9" -> "winner"))
     intercept[IllegalStateException] {
-      Warehouse.commit(fs, path, 2L, Map("d9" -> "loser"))
+      Warehouse.commit(fs, path, v1, Map("d9" -> "loser"))
     }
     // the winner's manifest is untouched
     val content = new String(java.nio.file.Files.readAllBytes(
