@@ -323,8 +323,9 @@ object Warehouse {
     * statement resolves one snapshot per attempt and every step reads
     * from it, so the mapping it rewrites and the layout it writes in
     * come from the same manifest; [[commit]] publishes the successor
-    * of exactly this snapshot. [[Snapshot.Empty]] (version 0) is the
-    * predecessor of a table's first commit.
+    * of exactly this snapshot. A connector scan plans and reads from
+    * one too ([[snapshotForScan]]). [[Snapshot.Empty]] (version 0) is
+    * the predecessor of a table's first commit.
     */
   private[graft] final case class Snapshot(version: Long,
       mapping: Map[String, String], dvs: Seq[(String, Long)],
@@ -334,6 +335,14 @@ object Warehouse {
       * keys' layout. Undefined on an empty mapping.
       */
     lazy val layout: Seq[String] = layoutHeader.getOrElse(partColsOf(mapping))
+
+    /** The partition columns every key's data files carry; None on an
+      * empty mapping or one that mixes layout generations. A
+      * header-only `evolveLayout` changes [[layout]], not this.
+      */
+    lazy val keyLayout: Option[Seq[String]] =
+      Some(mapping.keys.map(layoutColsOf).toSet)
+        .collect { case ls if ls.size == 1 => ls.head }
   }
 
   private[graft] object Snapshot {
@@ -375,6 +384,20 @@ object Warehouse {
       .getOrElse(throw new NoCommittedVersion(version.fold(
         s"no committed version under $path - create() first")(n =>
         s"no committed version $n under $path")))
+
+  /** The snapshot a connector scan plans from and reads, resolved once
+    * per scan: version `n` (refused once vacuum removed data it names)
+    * or the newest. None when there is no such commit.
+    */
+  private[graft] def snapshotForScan(spark: SparkSession, path: String,
+      versionAsOf: Option[Long]): Option[Snapshot] = {
+    val fs = fsOf(spark, path)
+    versionAsOf.fold(newestSnapshot(fs, path)) { n =>
+      val snap = snapshotAt(fs, path, n)
+      snap.foreach(requireUnvacuumed(fs, path, _, s"version $n of $path"))
+      snap
+    }
+  }
 
   /** The last batch id `appId` committed to this table, off the
     * newest manifest — None for a writer the table has never seen.
@@ -1918,7 +1941,7 @@ object Warehouse {
       if (mapping.isEmpty) return 0L
       val partCols = snap.layout
       val touchedKeys = overlapClosure(mapping, partTuplesOf(
-        scanSnapshot(spark, fs, path, snap, bounds).filter(pred), partCols))
+        scanSnapshot(spark, path, snap, bounds).filter(pred), partCols))
       if (touchedKeys.isEmpty) return 0L
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
       val touchedRows = readMapped(spark, path, touched, partCols, snap.dvs)
@@ -2025,7 +2048,7 @@ object Warehouse {
       if (mapping.isEmpty) return Some(0L)
       val partCols = snap.layout
       val touchedKeys = overlappingKeys(mapping, partTuplesOf(
-        scanSnapshot(spark, fs, path, snap, bounds).filter(pred), partCols))
+        scanSnapshot(spark, path, snap, bounds).filter(pred), partCols))
       if (touchedKeys.isEmpty) return Some(0L)
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
       val (chainedT0, pureT0) = touched.partition { case (_, c) => needsFold(c) }
@@ -2141,7 +2164,7 @@ object Warehouse {
             "(or a merge with a tombstone + fresh row)")
       }
       val touchedKeys = overlapClosure(mapping, partTuplesOf(
-        scanSnapshot(spark, fs, path, snap, bounds).filter(pred), partCols))
+        scanSnapshot(spark, path, snap, bounds).filter(pred), partCols))
       if (touchedKeys.isEmpty) return 0L
       val touched = mapping.filter { case (k, _) => touchedKeys(k) }
       val touchedRows = readMapped(spark, path, touched, partCols, snap.dvs)
@@ -3983,19 +4006,16 @@ object Warehouse {
     snap.layout
   }
 
-  /** Every data file of the (possibly time-traveled) snapshot WHEN no
-    * partition chain needs a read-time fold — the eligibility gate
-    * for metadata-only aggregate answers (a fold changes row
-    * visibility, so per-file statistics cannot stand in for folded
-    * rows). None when any chain folds; Some(parquet paths) otherwise.
-    * Driver cost: one manifest read + one FS listing per (partition,
-    * link) — the same metadata bound as [[partitionStats]].
+  /** Every data file of `snap` WHEN no partition chain needs a
+    * read-time fold — the eligibility gate for metadata-only aggregate
+    * answers (a fold changes row visibility, so per-file statistics
+    * cannot stand in for folded rows). None when any chain folds;
+    * Some(parquet paths, deletion-vector sidecar dirs) otherwise.
+    * Driver cost: one FS listing per (partition, link), no manifest
+    * read ([[liveFiles]]).
     */
   private[graft] def foldFreeFiles(spark: SparkSession, path: String,
-      versionAsOf: Option[Long]): Option[(Seq[String], Seq[String])] = {
-    val fs = fsOf(spark, path)
-    val snap = resolve(fs, path, versionAsOf)
-    val (mapping, dvs) = (snap.mapping, snap.dvs)
+      snap: Snapshot): Option[(Seq[String], Seq[String])] =
     // active deletion vectors make footer row counts and raw file
     // reads over-deliver deleted rows. Their sidecar DIRS ride along
     // (second element): a caller whose partials are pure row COUNTS
@@ -4004,53 +4024,37 @@ object Warehouse {
     // files drop out of a live-file join) — anything else (MIN/MAX, a
     // per-column null-dependent count) must keep treating a non-empty
     // dv list as "take the exact scan". (The LIMIT footer cap handles
-    // DVs separately: readForScan inflates its target by the
+    // DVs separately: scanSnapshot inflates its target by the
     // manifest's total delete count instead.)
-    if (mapping.isEmpty || mapping.values.exists(needsFold)) None
-    else Some((for {
-      (key, chain) <- mapping.toSeq.sorted
-      b <- chainOf(chain)
-      st <- fs.listStatus(new HPath(s"$path/data/batch=$b/$key")).toSeq
-      if st.isFile && st.getPath.getName.endsWith(".parquet")
-    } yield st.getPath.toString,
-      dvs.map { case (id, _) => dvDir(path, id) }))
-  }
+    if (snap.mapping.isEmpty || snap.mapping.values.exists(needsFold)) None
+    else Some((liveFiles(fsOf(spark, path), path, snap).flatMap(_._2)
+      .map(_.getPath.toString),
+      snap.dvs.map { case (id, _) => dvDir(path, id) }))
 
-  /** UPPER-BOUND row count of the (possibly time-traveled) snapshot
-    * from parquet FOOTER metadata — the `numRows` the DSv2 connector
-    * reports so Catalyst's CBO/AQE see warehouse cardinality (a small
-    * dimension plans as the broadcast side on ROW statistics, not just
-    * byte guesses). Exact on fold-free tables; delta chains count
-    * every link's rows (superseded versions and tombstones included),
-    * and active deletion vectors are NOT subtracted (their entries may
-    * also reference already-rewritten files, so subtraction could
-    * under-count) — both make it an OVER-estimate, the safe
-    * direction: it can only miss a broadcast, never under-plan one. None above `maxFiles` footer
-    * reads — planning cost stays bounded whatever the table size (the
-    * tables where row stats change a join plan are exactly the small
-    * ones), and None on empty/corrupt listings (statistics are an
-    * optimization layer; absence is always safe).
+  /** `snap`'s (bytes, UPPER-BOUND row count) off ONE listing of its
+    * live files — the statistics the DSv2 connector reports so
+    * Catalyst's broadcast decision, CBO and AQE see warehouse size and
+    * cardinality. Rows come from parquet FOOTERS: exact on fold-free
+    * tables; delta chains count every link's rows and active deletion
+    * vectors are NOT subtracted (their entries may reference
+    * rewritten files) — an OVER-estimate, which can only miss a
+    * broadcast. Rows are None above `maxFiles` footer reads (bounded
+    * planning cost; row stats matter for the small tables) and on a
+    * corrupt footer; None altogether when the listing fails.
     */
-  def rowCountEstimate(spark: SparkSession, path: String,
-      versionAsOf: Option[Long], maxFiles: Int = 1024): Option[Long] = {
-    val fs = fsOf(spark, path)
-    val mapping =
-      try resolve(fs, path, versionAsOf).mapping
-      catch { case _: NoCommittedVersion => return None }
-    if (mapping.isEmpty) return Some(0L)
-    try {
-      val files = for {
-        (key, chain) <- mapping.toSeq
-        b <- chainOf(chain)
-        st <- fs.listStatus(new HPath(s"$path/data/batch=$b/$key")).toSeq
-        if st.isFile && st.getPath.getName.endsWith(".parquet")
-      } yield st.getPath
+  private[graft] def sizeEstimate(spark: SparkSession, path: String,
+      snap: Snapshot, maxFiles: Int = 1024): Option[(Long, Option[Long])] = {
+    val files =
+      try liveFiles(fsOf(spark, path), path, snap).flatMap(_._2)
+      catch { case _: java.io.IOException => return None }
+    val rows =
       if (files.length > maxFiles) None
       else {
         val conf = spark.sparkContext.hadoopConfiguration
-        Some(files.map(ParquetFooters.rowCount(conf, _)).sum)
+        try Some(files.map(f => ParquetFooters.rowCount(conf, f.getPath)).sum)
+        catch { case _: java.io.IOException => None }
       }
-    } catch { case _: java.io.IOException => None }
+    Some((files.map(_.getLen).sum, rows))
   }
 
   /** COMMIT HISTORY — `DESCRIBE HISTORY`'s data, metadata-only: one
@@ -4108,17 +4112,27 @@ object Warehouse {
     */
   def partitionStats(spark: SparkSession, path: String): Seq[(String, String, Int, Long)] = {
     val fs = fsOf(spark, path)
-    partitionStatsOf(fs, path, resolve(fs, path).mapping)
+    partitionStatsOf(fs, path, resolve(fs, path))
   }
 
   private def partitionStatsOf(fs: FileSystem, path: String,
-      mapping: Map[String, String]): Seq[(String, String, Int, Long)] =
-    mapping.toSeq.sorted.map { case (key, chain) =>
-      val files = chainOf(chain).flatMap { b =>
-        fs.listStatus(new HPath(s"$path/data/batch=$b/$key"))
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+      snap: Snapshot): Seq[(String, String, Int, Long)] =
+    liveFiles(fs, path, snap).map { case (key, files) =>
+      (key, snap.mapping(key), files.length, files.map(_.getLen).sum)
+    }
+
+  /** `snap`'s live parquet files per partition key, in key then chain
+    * order: one FS listing per (partition, link), no manifest or data
+    * read. Behind [[partitionStats]], [[compact]]'s plan,
+    * [[foldFreeFiles]] and [[sizeEstimate]].
+    */
+  private def liveFiles(fs: FileSystem, path: String,
+      snap: Snapshot): Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])] =
+    snap.mapping.toSeq.sorted.map { case (key, chain) =>
+      key -> chainOf(chain).flatMap { b =>
+        fs.listStatus(new HPath(s"$path/data/batch=$b/$key")).toSeq
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       }
-      (key, chain, files.length, files.map(_.getLen).sum)
     }
 
   // ---------------------------------------------------------------
@@ -4344,7 +4358,7 @@ object Warehouse {
     val snap = resolve(fs, path)
     val (mapping, dvs) = (snap.mapping, snap.dvs)
     val partCols = snap.layout
-    val stats = partitionStatsOf(fs, path, mapping)
+    val stats = partitionStatsOf(fs, path, snap)
     // which live (batch, partition) links carry deletion-vector
     // entries: those partitions MATERIALIZE this pass (the DV's
     // subtraction folds into the fresh base and the vector drops)
@@ -4609,7 +4623,7 @@ object Warehouse {
     * sketch (3% FPP) — size it near rows-per-file; an undersized
     * sketch only raises the false-positive rate, never loses a row
     * (a bloom can only prove ABSENCE). Non-integral columns are
-    * skipped silently — [[readForScan]] treats a missing bloom as
+    * skipped silently — [[scanSnapshot]] treats a missing bloom as
     * unprunable, the stats-absence contract.
     *
     * Sidecar lines: "relative/file\tcol\tbase64(sketch)". Sidecar
@@ -4884,38 +4898,23 @@ object Warehouse {
     */
   def readSkipping(spark: SparkSession, path: String, statsCol: String,
                    lo: Long, hi: Long): DataFrame =
-    readForScan(spark, path, None, Map(statsCol -> LongBound(Some(lo), Some(hi))))
+    scanSnapshot(spark, path, resolve(fsOf(spark, path), path),
+      Map(statsCol -> LongBound(Some(lo), Some(hi))))
       .filter(col(statsCol) >= lit(lo) && col(statsCol) <= lit(hi))
 
   def readSkipping(spark: SparkSession, path: String, statsCol: String,
                    lo: String, hi: String): DataFrame =
-    readForScan(spark, path, None, Map(statsCol -> StrBound(Some(lo), Some(hi))))
+    scanSnapshot(spark, path, resolve(fsOf(spark, path), path),
+      Map(statsCol -> StrBound(Some(lo), Some(hi))))
       .filter(col(statsCol) >= lit(lo) && col(statsCol) <= lit(hi))
 
   def readSkipping(spark: SparkSession, path: String, statsCol: String,
                    lo: java.time.LocalDate, hi: java.time.LocalDate): DataFrame =
-    readForScan(spark, path, None,
+    scanSnapshot(spark, path, resolve(fsOf(spark, path), path),
       Map(statsCol -> LongBound(Some(lo.toEpochDay), Some(hi.toEpochDay))))
       .filter(col(statsCol) >= lit(java.sql.Date.valueOf(lo)) &&
         col(statsCol) <= lit(java.sql.Date.valueOf(hi)))
 
-  /** File-pruned (and optionally time-traveled) table read — the
-    * pruning engine behind [[readSkipping]] and the DSv2 connector's
-    * pushed filters ([[graft.sources.warehouse.WarehouseDataSource]]).
-    * Bounds over PARTITION columns drop whole partition dirs from the
-    * manifest first (safe even for delta-chained partitions — a fold
-    * never moves a row across partitions); per surviving chain-free
-    * partition, a file is OPENED unless some bound's recorded stat or
-    * bloom proves it holds no matching row — a superset of the
-    * matching files, so the caller's residual predicate gives exact
-    * results; delta-chained partitions read in full (their fold must
-    * see every version of every key before filtering — pruning
-    * pre-fold could resurrect a superseded row). `extraBounds`
-    * carries RUNTIME join-key sets (several bounds may conjoin on one
-    * column — each is independently a superset filter). The pruned
-    * FILE list is observable via the returned plan's inputFiles (the
-    * spec's assertion).
-    */
   /** The shortest prefix of `files` whose parquet footers prove at
     * least `target` rows — LIMIT pushdown's file cap. Footer row
     * counts are exact metadata, so the prefix is never an
@@ -4941,47 +4940,42 @@ object Warehouse {
     kept.toSeq
   }
 
-  /** True when the (possibly time-traveled) snapshot can serve through
-    * Spark's NATIVE parquet scan path: no fold chains (a fold needs
-    * the keyed read-time aggregation only the bridge runs), no active
-    * deletion vectors (the anti-join subtraction), and one layout
-    * generation (a mixed snapshot unions per-generation scans). One
-    * manifest read, no data access — the
+  /** True when `snap` can serve through Spark's NATIVE parquet scan
+    * path: no fold chains (a fold needs the keyed read-time aggregation
+    * only the bridge runs), no active deletion vectors (the anti-join
+    * subtraction), and one layout generation (a mixed snapshot unions
+    * per-generation scans). No I/O — the
     * [[org.apache.spark.sql.graft.WarehouseNativeScanRule]] gate.
     */
-  private[graft] def nativeScanEligible(spark: SparkSession, path: String,
-      versionAsOf: Option[Long]): Boolean = {
-    val fs = fsOf(spark, path)
-    val snap =
-      try Some(resolve(fs, path, versionAsOf))
-      catch { case _: Exception => None }
-    snap.exists { s =>
-      s.dvs.isEmpty && s.mapping.nonEmpty &&
-        !s.mapping.values.exists(needsFold) &&
-        s.mapping.keys.map(layoutColsOf).toSet.size <= 1
-    }
-  }
+  private[graft] def nativeScanEligible(snap: Snapshot): Boolean =
+    snap.dvs.isEmpty && snap.keyLayout.nonEmpty &&
+      !snap.mapping.values.exists(needsFold)
 
-  private[graft] def readForScan(spark: SparkSession, path: String,
-                   versionAsOf: Option[Long],
-                   bounds: Map[String, Bound],
-                   limit: Option[Int] = None,
-                   extraBounds: Seq[(String, Bound)] = Nil): DataFrame = {
-    val fs = fsOf(spark, path)
-    val snap = resolve(fs, path, versionAsOf)
-    versionAsOf.foreach(n =>
-      requireUnvacuumed(fs, path, snap, s"version $n of $path"))
-    scanSnapshot(spark, fs, path, snap, bounds, limit, extraBounds)
-  }
-
-  /** [[readForScan]] of an already-resolved snapshot — the DML
-    * statements' touched-partition discovery scans the snapshot the
-    * statement rewrites.
+  /** File-pruned read of one resolved snapshot — the pruning engine
+    * behind [[readSkipping]], the DSv2 connector's pushed filters
+    * ([[graft.sources.warehouse.WarehouseDataSource]], reading the
+    * snapshot its scan builder resolved, time-traveled or not) and the
+    * DML statements' touched-partition discovery (reading the snapshot
+    * the statement rewrites).
+    * Bounds over PARTITION columns drop whole partition dirs from the
+    * manifest first (safe even for delta-chained partitions — a fold
+    * never moves a row across partitions); per surviving chain-free
+    * partition, a file is OPENED unless some bound's recorded stat or
+    * bloom proves it holds no matching row — a superset of the
+    * matching files, so the caller's residual predicate gives exact
+    * results; delta-chained partitions read in full (their fold must
+    * see every version of every key before filtering — pruning
+    * pre-fold could resurrect a superseded row). `extraBounds`
+    * carries RUNTIME join-key sets (several bounds may conjoin on one
+    * column — each is independently a superset filter). The pruned
+    * FILE list is observable via the returned plan's inputFiles (the
+    * spec's assertion). No manifest read: every log read happened when
+    * `snap` was resolved.
     */
-  private def scanSnapshot(spark: SparkSession, fs: FileSystem, path: String,
-                           snap: Snapshot, bounds: Map[String, Bound],
-                           limit: Option[Int] = None,
-                           extraBounds: Seq[(String, Bound)] = Nil): DataFrame = {
+  private[graft] def scanSnapshot(spark: SparkSession, path: String,
+      snap: Snapshot, bounds: Map[String, Bound], limit: Option[Int] = None,
+      extraBounds: Seq[(String, Bound)] = Nil): DataFrame = {
+    val fs = fsOf(spark, path)
     val (fullMapping, dvs) = (snap.mapping, snap.dvs)
     require(fullMapping.nonEmpty, s"table at $path has no live partitions")
     val partCols = partColsOf(fullMapping)
@@ -5006,11 +5000,7 @@ object Warehouse {
     val mapping =
       if (partBounds.isEmpty) fullMapping
       else fullMapping.filter { case (key, _) =>
-        val kv = key.split("/").map { seg =>
-          val i = seg.indexOf('=')
-          seg.take(i) -> org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.unescapePathName(seg.drop(i + 1))
-        }.toMap
+        val kv = kvOf(key)
         partBounds.forall { case (c, b) =>
           kv.get(c).forall(b.matchesPartitionValue)
         }

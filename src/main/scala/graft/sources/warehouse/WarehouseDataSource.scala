@@ -36,15 +36,16 @@ import graft.io.{NoCommittedVersion, Warehouse}
   *    [[Warehouse.readVersion]]'s snapshot.
   *
   * Architecture: the scan is a [[V1Scan]] — the DSv2 fallback Spark's
-  * own JDBC connector ships — whose relation wraps the warehouse
-  * read plan (manifest resolution, chain folding, stats pruning all
-  * reused verbatim). A native `Batch` would have to re-implement the
-  * merge-on-read FOLD inside partition readers — a per-key argmax
-  * that genuinely needs a keyed aggregation, which scans cannot
-  * express — so the V1 bridge is the honest shape: Spark still plans
-  * pushdown/pruning against this connector's declarations, and the
-  * inner plan executes exactly like the API read path the rest of the
-  * suite verifies.
+  * own JDBC connector ships — whose relation wraps the warehouse read
+  * plan of the ONE snapshot its builder resolved (statistics,
+  * aggregate pushdown and the native splice plan from it too; chain
+  * folding and stats pruning are reused verbatim). A native `Batch`
+  * would have to re-implement the merge-on-read FOLD inside partition
+  * readers — a per-key argmax that genuinely needs a keyed
+  * aggregation, which scans cannot express — so the V1 bridge is the
+  * honest shape: Spark still plans pushdown/pruning against this
+  * connector's declarations, and the inner plan executes exactly like
+  * the API read path the rest of the suite verifies.
   */
 class WarehouseDataSource extends TableProvider with DataSourceRegister
     with StreamSinkProvider with StreamSourceProvider {
@@ -881,6 +882,12 @@ class WarehouseScanBuilder(fullSchema: StructType,
   private var aggDvDirs: Seq[String] = Nil
   private var pushedLimit: Option[Int] = None
 
+  /** The snapshot every scan this builder builds plans from (a change
+    * feed only its size); None before the table's first commit.
+    */
+  private lazy val snapshot: Option[Warehouse.Snapshot] =
+    Warehouse.snapshotForScan(SparkSession.active, conf.path, conf.versionAsOf)
+
   /** LIMIT pushdown, PARTIAL by contract (Spark re-applies its own
     * limit above): the scan stops LISTING files once parquet-footer
     * row counts prove the limit covered — `SELECT … LIMIT 10` on a
@@ -892,7 +899,7 @@ class WarehouseScanBuilder(fullSchema: StructType,
   override def pushLimit(limit: Int): Boolean = {
     // refused under pushed filters too: footer row counts include rows
     // the residual filters would drop, so a filtered limit cannot
-    // prove delivery from metadata (readForScan enforces the same)
+    // prove delivery from metadata (scanSnapshot enforces the same)
     if (conf.changeFeed || limit <= 0 || pushed.nonEmpty) false
     else { pushedLimit = Some(limit); true }
   }
@@ -912,7 +919,8 @@ class WarehouseScanBuilder(fullSchema: StructType,
     * snapshot chain needs a fold (per-file stats cannot see fold
     * visibility), when filters are present (partial file stats cannot
     * reflect them), on group-bys over NON-partition columns (footers
-    * carry no per-group split), on change feeds, on AGGREGATED
+    * carry no per-group split), on snapshots mixing layout
+    * generations, on change feeds, on AGGREGATED
     * partition columns (not physically in the files), and for MIN/MAX
     * on non-integral/date columns (binary footer stats may be
     * truncated — exact for pruning, corrupt as answers). Files whose
@@ -927,10 +935,10 @@ class WarehouseScanBuilder(fullSchema: StructType,
     import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
     import WarehouseDataSource._
     if (conf.changeFeed || pushed.nonEmpty) return false
-    val spark = SparkSession.active
-    val partCols =
-      try Warehouse.partitionColumns(spark, conf.path).toSet
-      catch { case _: Exception => return false }
+    // the scanned files' own partition columns (not the #layout
+    // header); a snapshot mixing layout generations takes the exact plan
+    val snap = snapshot.getOrElse(return false)
+    val partCols = snap.keyLayout.getOrElse(return false).toSet
     val groupFields: Seq[Option[org.apache.spark.sql.types.StructField]] =
       agg.groupByExpressions.toIndexedSeq.map {
         case nr: NamedReference if nr.fieldNames.length == 1 &&
@@ -959,7 +967,7 @@ class WarehouseScanBuilder(fullSchema: StructType,
         case _ => None
       }
     if (translated.exists(_.isEmpty)) return false
-    Warehouse.foldFreeFiles(spark, conf.path, conf.versionAsOf) match {
+    Warehouse.foldFreeFiles(SparkSession.active, conf.path, snap) match {
       // active deletion vectors: only pure row COUNTS stay
       // metadata-answerable - each live file's footer count minus its
       // deleted positions is exact (the per-file sidecar aggregation
@@ -1008,7 +1016,7 @@ class WarehouseScanBuilder(fullSchema: StructType,
   override def build(): Scan = pushedAggs match {
     case Some(aggs) =>
       new WarehouseAggScan(conf, aggs, aggFiles, pushedGroupBy, aggDvDirs)
-    case None       => new WarehouseV1Scan(pruned, conf, pushed, pushedLimit)
+    case None       => new WarehouseV1Scan(pruned, conf, snapshot, pushed, pushedLimit)
   }
 }
 
@@ -1166,8 +1174,8 @@ final case class RuntimeProbe(col: String,
     plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
     maxKeys: Int)
 
-/** The V1 bridge scan: resolves the manifest, prunes files through
-  * the pushed bounds (and, when the optimizer attached
+/** The V1 bridge scan: reads its builder's snapshot, prunes files
+  * through the pushed bounds (and, when the optimizer attached
   * [[RuntimeProbe]]s, through runtime join-key sets — the dynamic
   * file/partition pruning a fact ⋈ filtered-dim join needs at
   * 100 TB), folds chains, projects — all by composing the verified
@@ -1176,13 +1184,14 @@ final case class RuntimeProbe(col: String,
   */
 class WarehouseV1Scan(pruned: StructType,
                       conf: WarehouseDataSource.ReadConf,
+                      snapshot: Option[Warehouse.Snapshot],
                       pushed: Array[Filter],
                       limit: Option[Int] = None,
                       val runtimeProbes: Seq[RuntimeProbe] = Nil)
     extends V1Scan with SupportsReportStatistics {
 
   def withProbes(ps: Seq[RuntimeProbe]): WarehouseV1Scan =
-    new WarehouseV1Scan(pruned, conf, pushed, limit, ps)
+    new WarehouseV1Scan(pruned, conf, snapshot, pushed, limit, ps)
 
   /** The scan as a NATIVE logical plan — Project/Filter over Spark's
     * own parquet relation — when the snapshot is fold-free, DV-free,
@@ -1203,8 +1212,8 @@ class WarehouseV1Scan(pruned: StructType,
       : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
     // memoized per scan INSTANCE (= per optimized query, the
     // memoBounds contract): the fixed-point batch re-runs the splice
-    // rule each pass, and without the memo every ineligible table
-    // would pay a fresh manifest read per pass (review r20)
+    // rule each pass, and without the memo every eligible table would
+    // build its inner plan again per pass (review r20)
     val c = nativeMemo
     if (c != null) return c
     val r = computeNativeScanPlan(spark)
@@ -1223,7 +1232,7 @@ class WarehouseV1Scan(pruned: StructType,
     val nativeOn = spark.conf.getOption("spark.graft.warehouse.nativeScan")
       .forall(!_.equalsIgnoreCase("false"))
     if (conf.changeFeed || runtimeProbes.nonEmpty || !nativeOn ||
-        !Warehouse.nativeScanEligible(spark, conf.path, conf.versionAsOf))
+        !snapshot.exists(Warehouse.nativeScanEligible))
       return None
     val plan =
       try org.apache.spark.sql.graft.ScanBridge.analyzedPlan(
@@ -1251,29 +1260,26 @@ class WarehouseV1Scan(pruned: StructType,
 
   override def readSchema(): StructType = pruned
 
-  /** Size from the manifest's own file listing (driver-bounded
-    * metadata, no data read) — without it Spark assumes
-    * `defaultSizeInBytes` (effectively infinite) and a small
-    * warehouse DIMENSION table joined against a fact would never
-    * broadcast; with it, Catalyst's broadcast threshold applies to
-    * warehouse tables exactly as to plain parquet. Deliberately the
-    * UNPRUNED table bytes: an over-estimate can only miss a broadcast
-    * opportunity, never OOM the driver on an under-estimate.
+  /** Size and footer row count of the scanned snapshot, off one
+    * listing of its live files ([[Warehouse.sizeEstimate]]) and once
+    * per scan — without it Spark assumes `defaultSizeInBytes`
+    * (effectively infinite) and a small warehouse DIMENSION table
+    * joined against a fact would never broadcast; with it, Catalyst's
+    * broadcast threshold applies to warehouse tables exactly as to
+    * plain parquet. Deliberately the UNPRUNED bytes of the scanned
+    * snapshot: an over-estimate can only miss a broadcast opportunity,
+    * never OOM the driver on an under-estimate.
     */
+  private lazy val size: Option[(Long, Option[Long])] =
+    snapshot.flatMap(Warehouse.sizeEstimate(SparkSession.active, conf.path, _))
+
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: java.util.OptionalLong =
-      try java.util.OptionalLong.of(math.max(1L,
-        Warehouse.partitionStats(SparkSession.active, conf.path).map(_._4).sum))
-      catch { case _: Exception => java.util.OptionalLong.empty() }
-    // row cardinality from parquet footers (bounded, over-estimating
-    // on fold chains — the broadcast-safe direction), so CBO/AQE see
-    // warehouse row counts, not just bytes (judge r14 #4)
-    private lazy val rows: java.util.OptionalLong =
-      Warehouse.rowCountEstimate(SparkSession.active, conf.path,
-          conf.versionAsOf)
+    override def sizeInBytes(): java.util.OptionalLong =
+      size.fold(java.util.OptionalLong.empty())(s =>
+        java.util.OptionalLong.of(math.max(1L, s._1)))
+    override def numRows(): java.util.OptionalLong =
+      size.flatMap(_._2)
         .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
-    override def sizeInBytes(): java.util.OptionalLong = bytes
-    override def numRows(): java.util.OptionalLong = rows
   }
 
   override def description(): String =
@@ -1357,15 +1363,16 @@ class WarehouseV1Scan(pruned: StructType,
   private def scanFrame(spark: SparkSession, useProbes: Boolean): DataFrame = {
     val base =
       if (conf.changeFeed) conf.frame(spark)
-      else try Warehouse.readForScan(spark, conf.path, conf.versionAsOf,
-        WarehouseDataSource.boundsOf(pushed.toIndexedSeq), limit,
-        extraBounds =
-          if (useProbes) runtimeBoundsCached(spark) else Nil)
-      catch {
+      else snapshot match {
+        case Some(snap) =>
+          Warehouse.scanSnapshot(spark, conf.path, snap,
+            WarehouseDataSource.boundsOf(pushed.toIndexedSeq), limit,
+            extraBounds =
+              if (useProbes) runtimeBoundsCached(spark) else Nil)
         // a catalog-registered table nothing has written yet: an empty
         // snapshot with the declared schema (the first INSERT creates
         // version 1)
-        case _: NoCommittedVersion =>
+        case None =>
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pruned)
       }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeMap, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.connector.read.SupportsReportStatistics
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.io.Warehouse
 import graft.sources.warehouse.WarehouseTable
@@ -22,10 +24,10 @@ import graft.sources.warehouse.WarehouseTable
   * before Join Reorder) rewraps current-snapshot warehouse relations
   * with [[StatsReportingRelation]], whose `computeStats` serves:
   *
-  *  - `sizeInBytes` from the manifest's file listing (driver-bounded
-  *    metadata, the same source the scan-level estimate uses),
-  *  - `rowCount` from parquet footers (bounded, over-estimating on
-  *    fold chains — the broadcast-safe direction),
+  *  - `sizeInBytes` and `rowCount` from the table's own scan
+  *    ([[graft.sources.warehouse.WarehouseV1Scan.estimateStatistics]]:
+  *    one snapshot resolution, one listing of its live files, rows
+  *    from parquet footers),
   *  - per-column `ColumnStat` (NDV / nullCount / min / max / lengths)
   *    from the `_colstats` sidecar [[Warehouse.analyzeColumns]]
   *    writes (`CALL graft.system.analyze` from SQL) — the rollup join
@@ -39,7 +41,7 @@ import graft.sources.warehouse.WarehouseTable
   * consulted repeatedly within one optimization run).
   */
 class StatsReportingRelation(
-    relation: DataSourceV2Relation, tablePath: String)
+    relation: DataSourceV2Relation, table: WarehouseTable)
     extends DataSourceV2Relation(relation.table, relation.output,
       relation.catalog, relation.identifier, relation.options) {
 
@@ -81,19 +83,18 @@ class StatsReportingRelation(
   }
 
   private lazy val computed: Statistics = {
-    val spark = SparkSession.active
-    val bytes =
-      try BigInt(math.max(1L,
-        Warehouse.partitionStats(spark, tablePath).map(_._4).sum))
-      catch { case _: Exception => BigInt(conf.defaultSizeInBytes) }
-    val rows = Warehouse.rowCountEstimate(spark, tablePath, None)
-    val colStats = Warehouse.readColStats(spark, tablePath)
+    val sized =
+      try DataSourceV2Relation.transformV2Stats(table
+        .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+        .asInstanceOf[SupportsReportStatistics].estimateStatistics(),
+        None, conf.defaultSizeInBytes, output)
+      catch { case _: Exception => Statistics(conf.defaultSizeInBytes) }
+    val colStats = Warehouse.readColStats(SparkSession.active, table.tablePath)
     val attrStats = AttributeMap(output.collect {
       case a: AttributeReference if colStats.contains(a.name) =>
         a -> toColumnStat(a, colStats(a.name))
     })
-    Statistics(sizeInBytes = bytes, rowCount = rows.map(BigInt(_)),
-      attributeStats = attrStats)
+    sized.copy(attributeStats = attrStats)
   }
 
   override def computeStats(): Statistics = computed
@@ -121,8 +122,7 @@ class WarehouseCboStatsRule(spark: SparkSession) extends Rule[LogicalPlan] {
               case t: WarehouseTable => t.isCurrentSnapshot
               case _ => false
             }) =>
-          new StatsReportingRelation(r,
-            r.table.asInstanceOf[WarehouseTable].tablePath)
+          new StatsReportingRelation(r, r.table.asInstanceOf[WarehouseTable])
       }
       if (conf.joinReorderEnabled)
         org.apache.spark.sql.catalyst.optimizer.CostBasedJoinReorder(wrapped)

@@ -143,7 +143,7 @@ class ProbedDimStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   * — see [[graft.sources.warehouse.WarehouseDataSource]]), which
   * plans as `RowDataSourceScanExec`. So the honest seam is the scan's
   * own stats/bloom/partition pruning ([[graft.io.Warehouse]]
-  * `readForScan`), fed by a dim-side key probe attached here and
+  * `scanSnapshot`), fed by a dim-side key probe attached here and
   * executed when the scan plans — one small extra dim-side job,
   * exactly the shape Spark's DPP takes when exchange reuse is
   * unavailable (the subquery executes ahead of the main query).

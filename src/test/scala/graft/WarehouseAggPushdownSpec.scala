@@ -205,6 +205,42 @@ class WarehouseAggPushdownSpec extends AnyFunSuite {
       s"planning launched ${after - before} job(s) - the aggregate path must be lazy")
   }
 
+  test("after a layout evolution, aggregates group by the scanned files' own partition columns") {
+    // created on dt; region is a data column until evolveLayout moves it
+    def seeded(): String = {
+      val path = Files.createTempDirectory("graft_aggpd_layout").toString + "/t"
+      Warehouse.create(spark, path,
+        (1L to 100L).map(i => (i, s"d${i % 2}", if (i % 4 < 2) "eu" else "us"))
+          .toDF("k", "dt", "region"), "dt")
+      path
+    }
+    def byRegion(path: String): Set[(String, Long)] = {
+      WarehouseDataSource.resetAggProbe()
+      val got = spark.sql(
+        s"SELECT region, count(*) AS n FROM graft.`$path` GROUP BY region")
+        .as[(String, Long)].collect().toSet
+      assert(got == Warehouse.read(spark, path).groupBy("region").count()
+        .as[(String, Long)].collect().toSet)
+      got
+    }
+    // a header-only flip: the files still carry dt alone, so region
+    // groups through the exact plan and dt still answers from footers
+    val flipped = seeded()
+    Warehouse.evolveLayout(spark, flipped, Seq("dt", "region"), pred = _ => false)
+    assert(byRegion(flipped) == Set(("eu", 50L), ("us", 50L)))
+    assert(WarehouseDataSource.lastAggPlanned.isEmpty)
+    WarehouseDataSource.resetAggProbe()
+    assert(spark.sql(s"SELECT dt, count(*) FROM graft.`$flipped` GROUP BY dt")
+      .as[(String, Long)].collect().toSet == Set(("d0", 50L), ("d1", 50L)))
+    assert(WarehouseDataSource.lastAggPlanned.exists(_._2 == 0))
+    // a partial evolve mixes (dt) and (dt, region) keys: exact plan
+    val mixed = seeded()
+    Warehouse.evolveLayout(spark, mixed, Seq("dt", "region"),
+      pred = kv => kv("dt") == "d1")
+    assert(byRegion(mixed) == Set(("eu", 50L), ("us", 50L)))
+    assert(WarehouseDataSource.lastAggPlanned.isEmpty)
+  }
+
   test("SQL over the catalog takes the same metadata path") {
     WarehouseDataSource.resetAggProbe()
     val r = spark.sql(

@@ -50,9 +50,14 @@ object LogCountingFileSystem {
   * listing, one manifest read) and commits its successor without
   * re-reading the predecessor; INSERT resolves once for its write
   * layout and once per commit attempt; a time-travel read opens the
-  * one manifest it serves. Also pinned: a commit keeps the `#txn`,
-  * `#dv` and `#layout` headers of the snapshot its statement resolved,
-  * and a retry after a lost race carries the winner's.
+  * one manifest it serves. A connector scan resolves once too: its
+  * builder's snapshot serves the statistics, the aggregate pushdown,
+  * the native splice and the read, so a scan of the newest snapshot
+  * lists once and reads one manifest, and a `versionAsOf` scan reads
+  * one manifest and reports that version's size. Also pinned: a
+  * commit keeps the `#txn`, `#dv` and `#layout` headers of the
+  * snapshot its statement resolved, and a retry after a lost race
+  * carries the winner's.
   */
 class WarehouseLogReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -156,6 +161,57 @@ class WarehouseLogReadSpec extends AnyFunSuite {
     assert(Warehouse.read(spark, path).count() == 40L)
     assert(logReads(Warehouse.readVersion(spark, path, 2L))._2 == 1L,
       "readVersion(2) must read version 2's manifest once")
+  }
+
+  test("a connector scan lists the log once and reads one manifest; VERSION AS OF reads only its own") {
+    val path = freshTable()
+    Warehouse.updateWhere(spark, path, Seq("qty" -> lit(1L)), col("id") === 4L)
+    // the loads resolve the log for their schema; the counts below are
+    // each action's planning and execution
+    val newest = spark.read.format("graft-warehouse").load(path)
+    val v1 = spark.read.format("graft-warehouse").option("versionAsOf", "1").load(path)
+    var got: Any = null
+    def reads(body: => Any): (Long, Long) = logReads { got = body }
+    assert(reads(newest.filter(col("id") === 3L).select("name").as[String]
+      .collect().toSeq) == ((1L, 1L)), "point filter (native splice)")
+    assert(got == Seq("n3"))
+    assert(reads(newest.count()) == ((1L, 1L)), "count(*)")
+    assert(got == 40L)
+    assert(reads(newest.agg(count(lit(1)), sum("qty")).as[(Long, Long)]
+      .head()) == ((1L, 1L)), "count(*), sum(qty)")
+    // sum of 10 * id over 1..40, with id 4's qty updated from 40 to 1
+    assert(got == ((40L, 8161L)))
+    assert(reads(newest.filter(col("dt") === "p1").groupBy("dt").count()
+      .as[(String, Long)].collect().toSeq) == ((1L, 1L)),
+      "filtered partition aggregate")
+    assert(got == Seq(("p1", 20L)))
+    assert(reads(v1.agg(count(lit(1)), sum("qty")).as[(Long, Long)]
+      .head()) == ((0L, 1L)), "VERSION AS OF 1 aggregate")
+    assert(got == ((40L, 8200L)))
+  }
+
+  test("a VERSION AS OF scan reports the size of its own version's files") {
+    val path = Files.createTempDirectory("graft_logread").toString + "/t"
+    Warehouse.create(spark, path,
+      (1L to 5L).map(i => (i, s"n$i", "d0")).toDF("id", "name", "dt"), "dt")
+    val v1Bytes = Warehouse.partitionStats(spark, path).map(_._4).sum
+    Warehouse.overwrite(spark, path,
+      (1L to 50000L).map(i => (i, s"n$i", s"d${i % 7}")).toDF("id", "name", "dt"))
+    val newestBytes = Warehouse.partitionStats(spark, path).map(_._4).sum
+    assert(newestBytes > v1Bytes)
+    // the bridge's statistics are the scan's own (the native splice
+    // reports Spark's file-relation statistics instead)
+    spark.conf.set("spark.graft.warehouse.nativeScan", "false")
+    val (v1, v2) =
+      try (spark.read.format("graft-warehouse").option("versionAsOf", "1")
+          .load(path).queryExecution.optimizedPlan.stats,
+        spark.read.format("graft-warehouse").load(path)
+          .queryExecution.optimizedPlan.stats)
+      finally spark.conf.unset("spark.graft.warehouse.nativeScan")
+    assert(v1.sizeInBytes == BigInt(v1Bytes), s"v1 size ${v1.sizeInBytes}")
+    assert(v1.rowCount.contains(BigInt(5)))
+    assert(v2.sizeInBytes == BigInt(newestBytes), s"v2 size ${v2.sizeInBytes}")
+    assert(v2.rowCount.contains(BigInt(50000)))
   }
 
   test("a commit keeps the #txn, #dv and #layout headers of the snapshot its statement resolved") {
